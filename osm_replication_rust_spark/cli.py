@@ -270,64 +270,69 @@ def cmd_update(spark: SparkSession, args) -> int:
         return 0
 
     elements = read_osc_elements_dir(spark, args.diffs).persist()
-    points, gch = elements_to_engine(elements, namespace_ids=True)
-    groups = _read_groups(spark, args.store)
-    applied = run_update(
-        store,
-        points,
-        regions,
-        args.out,
-        groups=groups,
-        group_diffs=gch if groups is not None else None,
-    )
-    if args.osc_tree and applied:
-        # the reference's interchange artifact (diffs.rs generate_diff):
-        # per-region .osc.gz tree derived from the SAME classification
-        # run_update just published (tiles parquet), joined back to the
-        # original elements for full metadata/tag fidelity, written
-        # distributedly (write_region_osc_tree, no driver collect)
-        from functools import reduce
+    # released on every exit: a later in-process update over the same
+    # --diffs path would otherwise be served this stale scan
+    try:
+        points, gch = elements_to_engine(elements, namespace_ids=True)
+        groups = _read_groups(spark, args.store)
+        applied = run_update(
+            store,
+            points,
+            regions,
+            args.out,
+            groups=groups,
+            group_diffs=gch if groups is not None else None,
+        )
+        if args.osc_tree and applied:
+            # the reference's interchange artifact (diffs.rs generate_diff):
+            # per-region .osc.gz tree derived from the SAME classification
+            # run_update just published (tiles parquet), joined back to the
+            # original elements for full metadata/tag fidelity, written
+            # distributedly (write_region_osc_tree, no driver collect)
+            from functools import reduce
 
-        from .sources.osc import write_region_osc_tree
+            from .sources.osc import write_region_osc_tree
 
-        asg = None
-        for kind_dir, idc in (("tiles", "image_id"), ("tiles_groups", "group_id")):
-            frames = []
-            for s in applied:
-                p = os.path.join(args.out, f"{kind_dir}/state={s}")
-                if os.path.isdir(p):
-                    frames.append(
-                        spark.read.parquet(p).select(
-                            F.col(idc).alias("nid"),
-                            F.lit(s).cast("long").alias("state"),
-                            "region_id",
-                            "out_action",
+            asg = None
+            for kind_dir, idc in (("tiles", "image_id"), ("tiles_groups", "group_id")):
+                frames = []
+                for s in applied:
+                    p = os.path.join(args.out, f"{kind_dir}/state={s}")
+                    if os.path.isdir(p):
+                        frames.append(
+                            spark.read.parquet(p).select(
+                                F.col(idc).alias("nid"),
+                                F.lit(s).cast("long").alias("state"),
+                                "region_id",
+                                "out_action",
+                            )
                         )
-                    )
-            if frames:
-                part = reduce(lambda a, b: a.unionByName(b), frames)
-                asg = part if asg is None else asg.unionByName(part)
-        if asg is not None:
-            prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
-                F.col("kind") == "way", F.lit("w")
-            ).otherwise(F.lit("r"))
-            tagged = (
-                elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
-                .join(asg, ["nid", "state"])
-                .withColumn("action", F.col("out_action"))
-                .withColumn("region", F.col("region_id"))
-                .drop("nid", "out_action", "region_id")
-            )
-            written = write_region_osc_tree(tagged, args.osc_tree)
-            print(f"published {len(written)} region diff file(s) under {args.osc_tree}")
+                if frames:
+                    part = reduce(lambda a, b: a.unionByName(b), frames)
+                    asg = part if asg is None else asg.unionByName(part)
+            if asg is not None:
+                prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
+                    F.col("kind") == "way", F.lit("w")
+                ).otherwise(F.lit("r"))
+                tagged = (
+                    elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
+                    .join(asg, ["nid", "state"])
+                    .withColumn("action", F.col("out_action"))
+                    .withColumn("region", F.col("region_id"))
+                    .drop("nid", "out_action", "region_id")
+                )
+                written = write_region_osc_tree(tagged, args.osc_tree)
+                print(f"published {len(written)} region diff file(s) under {args.osc_tree}")
 
-    # unconditional for the same crash-window reason as follow mode:
-    # a previous run may have committed the store but died before the
-    # group rewrite; re-merging the full (idempotent) change set heals it
-    if groups is not None:
-        _merge_group_store(spark, args.store, groups, gch)
-    print(f"applied states: {applied}")
-    return 0
+        # unconditional for the same crash-window reason as follow mode:
+        # a previous run may have committed the store but died before the
+        # group rewrite; re-merging the full (idempotent) change set heals it
+        if groups is not None:
+            _merge_group_store(spark, args.store, groups, gch)
+        print(f"applied states: {applied}")
+        return 0
+    finally:
+        elements.unpersist()
 
 
 def _merge_group_store(
@@ -382,8 +387,11 @@ def cmd_read(spark: SparkSession, args) -> int:
 
         groups = _require_groups(spark, args.store)
         rows = (
-            resolve_relation_members(groups, _base_points(store))
-            .filter(F.col("group_id") == eid)
+            resolve_relation_members(
+                groups,
+                _base_points(store),
+                roots=groups.filter(F.col("group_id") == eid),
+            )
             .orderBy("depth", "member_id")
             .collect()
         )
@@ -426,36 +434,39 @@ def cmd_filter(spark: SparkSession, args) -> int:
     with opener(args.input, "rb") as f:
         rows = parse_osc_elements(f.read(), state=0)
     elements = elements_df(spark, rows).persist()
-    points, gch = elements_to_engine(elements, namespace_ids=True)
-    store = _store(spark, args.store)
-    base = _base_points(store)
-    kept_pts = classify_diff(points, base, [region], buffer=args.buffer).select(
-        F.col("image_id").alias("nid"), "out_action"
-    )
-    groups = _read_groups(spark, args.store)
-    kept = kept_pts
-    if groups is not None:
-        kept_groups = classify_group_diff(
-            gch.select("group_id", "action", "kind", "new_members"),
-            groups,
-            base,
-            [region],
-            buffer=args.buffer,
-        ).select(F.col("group_id").alias("nid"), "out_action")
-        kept = kept_pts.unionByName(kept_groups)
-    # join classification back to the ORIGINAL element rows (full
-    # metadata/tags fidelity), override the action with out_action
-    prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
-        F.col("kind") == "way", F.lit("w")
-    ).otherwise(F.lit("r"))
-    out_rows = (
-        elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
-        .join(kept, "nid")
-        .withColumn("action", F.col("out_action"))
-        .drop("nid", "out_action")
-        .orderBy("seq")
-        .collect()
-    )
+    try:
+        points, gch = elements_to_engine(elements, namespace_ids=True)
+        store = _store(spark, args.store)
+        base = _base_points(store)
+        kept_pts = classify_diff(points, base, [region], buffer=args.buffer).select(
+            F.col("image_id").alias("nid"), "out_action"
+        )
+        groups = _read_groups(spark, args.store)
+        kept = kept_pts
+        if groups is not None:
+            kept_groups = classify_group_diff(
+                gch.select("group_id", "action", "kind", "new_members"),
+                groups,
+                base,
+                [region],
+                buffer=args.buffer,
+            ).select(F.col("group_id").alias("nid"), "out_action")
+            kept = kept_pts.unionByName(kept_groups)
+        # join classification back to the ORIGINAL element rows (full
+        # metadata/tags fidelity), override the action with out_action
+        prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
+            F.col("kind") == "way", F.lit("w")
+        ).otherwise(F.lit("r"))
+        out_rows = (
+            elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
+            .join(kept, "nid")
+            .withColumn("action", F.col("out_action"))
+            .drop("nid", "out_action")
+            .orderBy("seq")
+            .collect()
+        )
+    finally:
+        elements.unpersist()
     xml = format_osc_elements([r.asDict(recursive=True) for r in out_rows])
     with open(args.output, "w") as f:
         f.write(xml)
@@ -483,31 +494,34 @@ def cmd_bbox(spark: SparkSession, args) -> int:
     with opener(args.input, "rb") as f:
         rows = parse_osc_elements(f.read(), state=0)
     elements = elements_df(spark, rows).persist()
-    store = _store(spark, args.store)
-    bb = annotate_diff_bboxes(
-        elements,
-        _base_points(store),
-        stored_groups=_read_groups(spark, args.store),
-        namespace_ids=True,
-    )
-    prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
-        F.col("kind") == "way", F.lit("w")
-    ).otherwise(F.lit("r"))
-    out_rows = (
-        elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
-        .join(
-            bb.select(
-                F.col("element_id").alias("nid"),
-                F.struct("minlat", "maxlat", "minlon", "maxlon").alias("new_bbox"),
-            ),
-            "nid",
-            "left",
+    try:
+        store = _store(spark, args.store)
+        bb = annotate_diff_bboxes(
+            elements,
+            _base_points(store),
+            stored_groups=_read_groups(spark, args.store),
+            namespace_ids=True,
         )
-        .withColumn("bbox", F.col("new_bbox"))
-        .drop("nid", "new_bbox")
-        .orderBy("seq")
-        .collect()
-    )
+        prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
+            F.col("kind") == "way", F.lit("w")
+        ).otherwise(F.lit("r"))
+        out_rows = (
+            elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
+            .join(
+                bb.select(
+                    F.col("element_id").alias("nid"),
+                    F.struct("minlat", "maxlat", "minlon", "maxlon").alias("new_bbox"),
+                ),
+                "nid",
+                "left",
+            )
+            .withColumn("bbox", F.col("new_bbox"))
+            .drop("nid", "new_bbox")
+            .orderBy("seq")
+            .collect()
+        )
+    finally:
+        elements.unpersist()
     xml = format_osc_elements([r.asDict(recursive=True) for r in out_rows])
     if args.output.endswith(".gz"):
         with __import__("gzip").open(args.output, "wt") as f:

@@ -13,12 +13,14 @@ a staged batch computation over the full diff:
 
   stage 1  point bbox   = old coord ∪ new coord          (union + agg)
   stage 2  way bbox     = min/max over member points     (explode + join + agg)
-  stage 3  relation bbox= fixpoint over members           (bounded iterative
-           (points, ways, relations)                       join + agg)
+  stage 3  relation bbox= min/max over the points of every  (member closure
+           group in the relation's member closure          ⋈ points + agg)
 
-Cycles between relations (reference guard /root/reference/src/osmxml/bbox.rs:112-115)
-are handled by the bounded monotone iteration: unions only grow, so the
-loop converges; back-edges simply stop contributing new extent.
+bbox-union composes, so a composite's bbox is min/max over every point
+reachable through its members; ways and relations are the same
+computation (a way's closure is itself). The closure is
+operators.resolve.member_closure, whose visited set stops cycles between
+relations (reference guard src/osmxml/bbox.rs:112-115).
 Missing references contribute nothing (tolerated, reference
 /root/reference/src/osmbin.rs:427-430).
 """
@@ -27,6 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .resolve import closure_points
+
 
 def _point_aggs():
     # built lazily: Column construction needs an active SparkContext
@@ -60,11 +65,37 @@ def point_bboxes(
     return old_pts.unionByName(new_pts).groupBy(id_col).agg(*_point_aggs())
 
 
+def coord_bboxes(points: DataFrame) -> DataFrame:
+    """(image_id, minlat, maxlat, minlon, maxlon) — each point's stored
+    coord as a degenerate bbox."""
+    lat, lon = F.col("lat").cast("long"), F.col("lon").cast("long")
+    return points.select(
+        "image_id", lat.alias("minlat"), lat.alias("maxlat"), lon.alias("minlon"), lon.alias("maxlon")
+    )
+
+
+def _closure_bboxes(
+    groups: DataFrame, point_bbox: DataFrame, roots: DataFrame | None = None
+) -> DataFrame:
+    """(group_id, minlat, maxlat, minlon, maxlon) per root: min/max over
+    ``point_bbox`` (keyed ``ref``) of every point in its member closure."""
+    return (
+        closure_points(groups, roots)
+        .join(point_bbox, "ref")
+        .groupBy(F.col("root_id").alias("group_id"))
+        .agg(
+            F.min("minlat").alias("minlat"),
+            F.max("maxlat").alias("maxlat"),
+            F.min("minlon").alias("minlon"),
+            F.max("maxlon").alias("maxlon"),
+        )
+    )
+
+
 def annotate_diff_bboxes(
     elements: DataFrame,
     base: DataFrame,
     stored_groups: DataFrame | None = None,
-    max_depth: int = 20,
     namespace_ids: bool = False,
 ) -> DataFrame:
     """bbox per changed element of a parsed three-kind diff
@@ -78,9 +109,9 @@ def annotate_diff_bboxes(
 
     Returns (element_id, kind, minlat, maxlat, minlon, maxlon);
     elements none of whose geometry resolves are absent (the reference
-    emits no <bbox> child then, bbox.rs:145-163). The relation
-    fixpoint is cycle-safe (monotone union; the 7801⇄7802-style cycle
-    stops contributing, bbox.rs:112-115).
+    emits no <bbox> child then, bbox.rs:145-163). The member closure is
+    cycle-safe (the 7801⇄7802-style cycle stops contributing,
+    bbox.rs:112-115).
 
     Deviation (documented): for an element id occurring MORE THAN ONCE
     in one diff the reference emits a per-occurrence running bbox in
@@ -88,10 +119,9 @@ def annotate_diff_bboxes(
     bbox for every occurrence — identical for the last occurrence,
     which is the one the *_modified map carries forward.
 
-    Scale: ``stored_groups`` is pruned to the member-closure of the
-    changed elements (iterative semi-joins, ``max_depth`` bound) before
-    the fixpoint, so the expensive stages touch only the diff's
-    neighbourhood, never the whole store."""
+    Scale: the member closure runs from the changed composites only
+    (``roots``), so its pairs and the point join's rows stay in the
+    diff's neighbourhood; the store is scanned, never closed over."""
     from ..sources.osc import elements_to_engine
 
     points, gch = elements_to_engine(elements, namespace_ids=namespace_ids)
@@ -114,86 +144,29 @@ def annotate_diff_bboxes(
         .agg(F.collect_list("m").alias("members"))
     )
 
-    # resolution universe: changed composites + the stored groups their
-    # members transitively reference (pruned reachability, not the store)
-    resolution = eff_changed
+    # resolution universe: the changed composites (effective members)
+    # plus every other stored group, reached only through the closure
+    universe = eff_changed
     if stored_groups is not None:
-        frontier = (
-            _member_edges(eff_changed)
-            .filter(F.col("ref_type") == "group")
-            .select(F.col("ref").alias("group_id"))
-            .distinct()
-            .join(eff_changed.select("group_id"), "group_id", "left_anti")
+        universe = universe.unionByName(
+            stored_groups.join(
+                eff_changed.select("group_id"), "group_id", "left_anti"
+            ).select("group_id", "kind", "members")
         )
-        seen = frontier
-        pinned = []  # per-iteration caches, released once resolution is cut
-        for _ in range(max_depth):
-            if frontier.isEmpty():
-                break
-            hit = stored_groups.join(frontier, "group_id", "left_semi").select(
-                "group_id", "kind", "members"
-            ).persist()
-            pinned.append(hit)
-            resolution = resolution.unionByName(hit)
-            frontier = (
-                _member_edges(hit)
-                .filter(F.col("ref_type") == "group")
-                .select(F.col("ref").alias("group_id"))
-                .distinct()
-                .join(seen, "group_id", "left_anti")
-                .join(eff_changed.select("group_id"), "group_id", "left_anti")
-                .persist()
-            )
-            pinned.append(frontier)
-            seen = seen.unionByName(frontier)
-        if pinned:
-            # cut the fixpoint-deep union lineage, then release every
-            # per-iteration cache — long-lived sessions (the streaming
-            # path calls this per micro-batch) must not accumulate RDDs
-            resolution = resolution.localCheckpoint(eager=True)
-            for df in pinned:
-                df.unpersist()
+    # a reached point's extent: its changed-node bbox (old ∪ new) and
+    # its stored coord; min/max compose, so no per-point pre-aggregate
+    resolver = pb.unionByName(coord_bboxes(base)).withColumnRenamed("image_id", "ref")
+    gb = _closure_bboxes(universe, resolver, roots=eff_changed)
 
-    # point resolver: changed-node bboxes ∪ stored coords of every
-    # referenced point (degenerate bboxes), referenced set only
-    refs = (
-        _member_edges(resolution)
-        .filter(F.col("ref_type") == "image")
-        .select(F.col("ref").alias("image_id"))
-        .distinct()
-    )
-    stored_pts = base.join(refs, "image_id", "left_semi").select(
-        "image_id",
-        F.col("lat").cast("long").alias("minlat"),
-        F.col("lat").cast("long").alias("maxlat"),
-        F.col("lon").cast("long").alias("minlon"),
-        F.col("lon").cast("long").alias("maxlon"),
-    )
-    resolver = (
-        pb.unionByName(stored_pts)
-        .groupBy("image_id")
-        .agg(
-            F.min("minlat").alias("minlat"),
-            F.max("maxlat").alias("maxlat"),
-            F.min("minlon").alias("minlon"),
-            F.max("maxlon").alias("maxlon"),
-        )
-    )
-
-    gb = group_bboxes(resolution, resolver).join(
-        eff_changed.select("group_id").distinct(), "group_id", "inner"
-    )
-    nodes_out = points.select(F.col("image_id").alias("element_id")).distinct().join(
-        pb.withColumnRenamed("image_id", "element_id"), "element_id", "inner"
-    ).select(
-        "element_id",
+    nodes_out = pb.select(  # pb holds exactly the changed nodes with a coord
+        F.col("image_id").alias("element_id"),
         F.lit("node").alias("kind"),
         "minlat",
         "maxlat",
         "minlon",
         "maxlon",
     )
-    comps_out = gb.select(
+    comps_out = eff_changed.select("group_id", "kind").join(gb, "group_id").select(
         F.col("group_id").alias("element_id"),
         F.when(F.col("kind") == "way", "way").otherwise("relation").alias("kind"),
         "minlat",
@@ -204,106 +177,26 @@ def annotate_diff_bboxes(
     return nodes_out.unionByName(comps_out)
 
 
-def _member_edges(groups: DataFrame) -> DataFrame:
-    """(group_id, kind, ref, ref_type) — the exploded membership edge list
-    (analog of way node-refs and relation members,
-    /root/reference/src/osm.rs:49-114)."""
-    return groups.select(
-        "group_id",
-        "kind",
-        F.explode("members").alias("m"),
-    ).select(
-        "group_id",
-        "kind",
-        F.col("m.ref").alias("ref"),
-        F.col("m.type").alias("ref_type"),
-    )
-
-
 def group_bboxes(
     groups: DataFrame,
     point_bbox: DataFrame,
     point_id_col: str = "image_id",
-    max_iters: int = 20,
 ) -> DataFrame:
-    """bboxes of composite groups (ways + relations) from member bboxes.
+    """bboxes of composite groups (ways + relations) from member bboxes:
+    min/max over the point bboxes of every group in the member closure.
 
     Returns (group_id, kind, minlat, maxlat, minlon, maxlon); groups none
     of whose members resolve are absent (reference emits no bbox child in
-    that case, /root/reference/src/osmxml/bbox.rs:145-163).
-
-    Every join discriminates on ref_type (image vs group) so an id
-    collision across the two namespaces cannot pollute a bbox; the
-    fixpoint loop runs until the convergence signature stabilises
-    (max_iters is a safety bound well above any real member-chain depth,
-    not the expected iteration count).
+    that case, src/osmxml/bbox.rs:145-163). Point refs
+    join ``point_bbox`` and group refs walk the closure, so an id
+    collision across the two namespaces cannot pollute a bbox.
     """
-    edges = _member_edges(groups).persist()
     pt = point_bbox.select(
         F.col(point_id_col).alias("ref"), "minlat", "maxlat", "minlon", "maxlon"
     )
-
-    bbox_aggs = [
-        F.min("minlat").alias("minlat"),
-        F.max("maxlat").alias("maxlat"),
-        F.min("minlon").alias("minlon"),
-        F.max("maxlon").alias("maxlon"),
-    ]
-    bb_cols = ["group_id", "minlat", "maxlat", "minlon", "maxlon"]
-
-    # stage 2: ways (point members only; group-typed refs in a way are
-    # not a thing in the data model, and the filter enforces it)
-    way_edges = edges.filter(
-        (F.col("kind") == "way") & (F.col("ref_type") == "image")
-    )
-    way_bbox = (
-        way_edges.join(pt, "ref", "inner").groupBy("group_id").agg(*bbox_aggs)
-    )
-
-    # stage 3: relations — bounded monotone fixpoint. The iteration only
-    # grows bboxes (mins decrease, maxs increase) and only adds rows, so
-    # a single aggregate signature detects convergence in one job
-    # instead of two exceptAll shuffles.
-    rel_pt = (
-        edges.filter((F.col("kind") == "relation") & (F.col("ref_type") == "image"))
-        .join(pt, "ref", "inner")
-        .select(*bb_cols)
-        .persist()
-    )
-    rel_gp = edges.filter(
-        (F.col("kind") == "relation") & (F.col("ref_type") == "group")
-    ).persist()
-    group_resolved = way_bbox  # (group_id, bbox) resolvable as 'group' refs
-    rel_bbox = None
-    prev_sig = None
-    for _ in range(max_iters):
-        via_groups = rel_gp.join(
-            group_resolved.select(
-                F.col("group_id").alias("ref"), "minlat", "maxlat", "minlon", "maxlon"
-            ),
-            "ref",
-            "inner",
-        ).select(*bb_cols)
-        new_rel = (
-            rel_pt.unionByName(via_groups).groupBy("group_id").agg(*bbox_aggs)
-        ).localCheckpoint(eager=True)  # truncate the growing lineage
-        sig = new_rel.agg(
-            F.count(F.lit(1)),
-            F.sum("minlat"),
-            F.sum("maxlat"),
-            F.sum("minlon"),
-            F.sum("maxlon"),
-        ).collect()[0]
-        rel_bbox = new_rel
-        if tuple(sig) == prev_sig:
-            break
-        prev_sig = tuple(sig)
-        group_resolved = way_bbox.unionByName(rel_bbox)
-
-    ways = groups.select("group_id", "kind").join(way_bbox, "group_id", "inner")
-    rels = groups.select("group_id", "kind").join(
-        rel_bbox if rel_bbox is not None else way_bbox.limit(0), "group_id", "inner"
-    )
-    return ways.filter(F.col("kind") == "way").unionByName(
-        rels.filter(F.col("kind") == "relation")
+    bb = _closure_bboxes(groups, pt)
+    return (
+        groups.select("group_id", "kind")
+        .filter(F.col("kind").isin("way", "relation"))
+        .join(bb, "group_id")
     )

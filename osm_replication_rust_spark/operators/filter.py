@@ -19,8 +19,10 @@ implement the flattened one-pass join (scale path) and a literal
 cascade (test oracle) and assert they agree.
 
 Existential membership (reference P4/P5):
-  way ∈ poly      ⇔ ∃ member point ∈ poly         (left semi join)
-  relation ∈ poly ⇔ ∃ member ∈ poly, recursively  (iterative semi join)
+  way ∈ poly      ⇔ ∃ member point ∈ poly
+  relation ∈ poly ⇔ ∃ member ∈ poly, recursively
+Both are one aggregate over member closure ⋈ point assignments
+(operators.resolve.member_closure; a way's closure is itself).
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geometry import BUFFER_DECIMICRO, MultiPolygon
 from ..functions.coords import DEFAULT_RES
+from .resolve import closure_points, member_edges
 from .spatial_join import assign_regions
 
 
@@ -152,84 +155,31 @@ def cascade_classify(
 def groups_in_regions_buffered(
     groups: DataFrame,
     member_assignments: DataFrame,
-    max_iters: int = 20,
 ) -> DataFrame:
     """(group_id, kind, region_id, in_poly, in_buffer) for every group
     with >=1 member matching the region's buffered polygon.
 
     ``member_assignments`` is (image_id, region_id, in_poly, in_buffer)
-    — per-point results of assign_regions. Ways resolve directly;
-    relations OR-propagate (in_poly, in_buffer) up group->group edges to
-    a monotone fixpoint (booleans only grow, so the loop converges;
-    cycles stop contributing — reference guard
-    /root/reference/src/osmxml/filter.rs:159-169). Missing members
+    — per-point results of assign_regions. A group's flags are the OR
+    (max) over the points of every group in its member closure; cycles
+    stop contributing (reference guard
+    src/osmxml/filter.rs:159-169). Missing members
     contribute nothing."""
-    edges = groups.select(
-        "group_id", "kind", F.explode("members").alias("m")
-    ).select(
-        "group_id", "kind", F.col("m.ref").alias("ref"), F.col("m.type").alias("ref_type")
-    ).persist()
-
     pt = member_assignments.select(
         F.col("image_id").alias("ref"), "region_id", "in_poly", "in_buffer"
     )
-    flag_aggs = [
-        F.max("in_poly").alias("in_poly"),
-        F.max("in_buffer").alias("in_buffer"),
-    ]
-    cols = ["group_id", "region_id", "in_poly", "in_buffer"]
-
-    way_flags = (
-        edges.filter((F.col("kind") == "way") & (F.col("ref_type") == "image"))
-        .join(pt, "ref", "inner")
-        .groupBy("group_id", "region_id")
-        .agg(*flag_aggs)
-        .persist()
+    flags = (
+        closure_points(groups)
+        .join(pt, "ref")
+        .groupBy(F.col("root_id").alias("group_id"), "region_id")
+        .agg(F.max("in_poly").alias("in_poly"), F.max("in_buffer").alias("in_buffer"))
     )
-
-    rel_pt = (
-        edges.filter((F.col("kind") == "relation") & (F.col("ref_type") == "image"))
-        .join(pt, "ref", "inner")
-        .select(*cols)
-        .persist()
+    kinds = (
+        groups.select("group_id", "kind")
+        .distinct()
+        .filter(F.col("kind").isin("way", "relation"))
     )
-    rel_gp = edges.filter(
-        (F.col("kind") == "relation") & (F.col("ref_type") == "group")
-    ).persist()
-
-    resolved = way_flags  # groups resolvable as 'group' refs
-    rel_flags = None
-    prev_sig = None
-    for _ in range(max_iters):
-        via_groups = rel_gp.join(
-            resolved.select(
-                F.col("group_id").alias("ref"), "region_id", "in_poly", "in_buffer"
-            ),
-            "ref",
-            "inner",
-        ).select(*cols)
-        new_rel = (
-            rel_pt.unionByName(via_groups)
-            .groupBy("group_id", "region_id")
-            .agg(*flag_aggs)
-        ).localCheckpoint(eager=True)
-        sig = new_rel.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("in_poly").cast("long")),
-            F.sum(F.col("in_buffer").cast("long")),
-        ).collect()[0]
-        rel_flags = new_rel
-        if tuple(sig) == prev_sig:
-            break
-        prev_sig = tuple(sig)
-        resolved = way_flags.unionByName(rel_flags)
-
-    kinds = groups.select("group_id", "kind").distinct()
-    ways = way_flags.join(kinds.filter(F.col("kind") == "way"), "group_id")
-    rels = (
-        rel_flags if rel_flags is not None else way_flags.limit(0)
-    ).join(kinds.filter(F.col("kind") == "relation"), "group_id")
-    return ways.unionByName(rels).select(
+    return flags.join(kinds, "group_id").select(
         "group_id", "kind", "region_id", "in_poly", "in_buffer"
     )
 
@@ -316,9 +266,9 @@ def classify_group_diff(
     # only member points actually referenced by a changed group need the
     # (expensive) region assignment: semi-join the store first
     refs = (
-        eff_groups.select(F.explode("members").alias("m"))
-        .filter(F.col("m.type") == "image")
-        .select(F.col("m.ref").alias("image_id"))
+        member_edges(eff_groups)
+        .filter(F.col("ref_type") == "image")
+        .select(F.col("ref").alias("image_id"))
         .distinct()
     )
     member_pts = base.join(refs, "image_id", "left_semi")
@@ -353,51 +303,18 @@ def classify_group_diff(
 def groups_in_regions(
     groups: DataFrame,
     member_regions: DataFrame,
-    max_iters: int = 5,
 ) -> DataFrame:
     """(group_id, region_id) for every group with ≥1 member in the region.
 
     ``member_regions`` is (image_id, region_id) — the in-polygon point
-    assignments. Ways resolve directly (semi join); relations iterate to
-    a bounded fixpoint over group→group edges; cycles stop contributing
-    (reference guard /root/reference/src/osmxml/filter.rs:159-169).
-    Missing members contribute nothing."""
-    edges = groups.select(
-        "group_id", "kind", F.explode("members").alias("m")
-    ).select("group_id", "kind", F.col("m.ref").alias("ref"), F.col("m.type").alias("ref_type"))
-
+    assignments. A group is in a region when any point of any group in
+    its member closure is; cycles stop contributing (reference guard
+    src/osmxml/filter.rs:159-169). Missing members
+    contribute nothing."""
     pt = member_regions.select(F.col("image_id").alias("ref"), "region_id")
-
-    resolved = (
-        edges.filter(F.col("ref_type") == "image")
-        .join(pt, "ref", "inner")
-        .select("group_id", "region_id")
+    return (
+        closure_points(groups)
+        .join(pt, "ref")
+        .select(F.col("root_id").alias("group_id"), "region_id")
         .distinct()
-        .persist()
     )
-    group_edges = edges.filter(F.col("ref_type") == "group").select(
-        "group_id", F.col("ref").alias("child_id")
-    ).persist()
-
-    # one action per round: the previous round's count is carried in a
-    # Python variable instead of re-counting the persisted frame
-    prev_count = resolved.count()
-    for _ in range(max_iters):
-        via_children = (
-            group_edges.join(
-                resolved.select(F.col("group_id").alias("child_id"), "region_id"),
-                "child_id",
-                "inner",
-            )
-            .select("group_id", "region_id")
-            .distinct()
-        )
-        new_resolved = resolved.unionByName(via_children).distinct().persist()
-        new_count = new_resolved.count()
-        resolved.unpersist()
-        resolved = new_resolved
-        if new_count == prev_count:
-            break
-        prev_count = new_count
-    group_edges.unpersist()
-    return resolved

@@ -357,9 +357,9 @@ def knn_cell_ring(
     best: DataFrame | None = None  # carried top-k rows of uncertified queries
     r = 1
     prev_r = -1
-    # remaining-query count carried in Python (like groups_in_regions'
-    # fixpoint): the certification aggregate below is the round's ONE
-    # action — no separate per-round isEmpty() pass over the plan
+    # remaining-query count carried in Python: the certification
+    # aggregate below is the round's ONE action — no separate per-round
+    # isEmpty() pass over the plan
     n_remaining = remaining.count()
     for _ in range(max_rounds):
         if n_remaining == 0:
@@ -429,8 +429,7 @@ def knn_cell_ring(
         out = out.unionByName(rdf)
     # Materialize the (small: <= |queries| x k rows) result eagerly and
     # cut lineage, then release every per-round cache — a long-lived
-    # session calling knn per batch must not pin block-manager storage
-    # (same discipline as annotate_diff_bboxes).
+    # session calling knn per batch must not pin block-manager storage.
     if release_caches:
         out = out.localCheckpoint(eager=True)
         for df in cached:

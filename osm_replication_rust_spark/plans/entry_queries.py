@@ -4851,11 +4851,11 @@ def multimodal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _group_bbox_oracle() -> str:
-    """DuckDB twin of the A3 fixpoint: a recursive CTE computes the
+    """DuckDB twin of A3 group_bboxes: a recursive CTE computes the
     transitive image-closure of every group (UNION dedup terminates the
-    2-cycle), then min/max over reachable points — provably equal to the
-    monotone bbox iteration because bbox-union composes to min/max over
-    all transitively reachable members. Fixture literals are emitted
+    2-cycle), then min/max over reachable points — the same
+    decomposition group_bboxes runs (member closure ⋈ point bboxes ->
+    min/max), valid because bbox-union composes. Fixture literals are emitted
     from the same deterministic generator the Spark query uses."""
     from ..datagen.synth import gen_groups, gen_images
 
@@ -6922,13 +6922,15 @@ def clip_to_tiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _relation_closure_oracle(max_depth: int = 5) -> str:
+def _relation_closure_oracle() -> str:
     """DuckDB twin of S10 resolve_relation_members: min-depth transitive
-    image closure via a bounded recursive CTE (depth in the tuple keeps
-    the 2-cycle finite under UNION dedup; min(depth) == the BFS
-    first-visit depth the frontier iteration assigns, because the
-    shortest bounded path IS the BFS level)."""
+    image closure via a recursive CTE (depth in the tuple keeps the
+    2-cycle finite under UNION dedup; min(depth) == the BFS first-visit
+    depth member_closure assigns, because the shortest path IS the BFS
+    level). The depth bound is the number of distinct groups: a
+    shortest path visits each group at most once, so it is never cut."""
     _, groups_pdf, pts = _closure_fixture_pts()
+    max_depth = groups_pdf["group_id"].nunique()
     rows = []
     for g in groups_pdf.itertuples():
         for m in g.members:
@@ -6970,7 +6972,7 @@ def _relation_closure_oracle(max_depth: int = 5) -> str:
 def relation_closure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S10: relation_full recursive closure
     (/root/reference/src/osm.rs:219-246) through the real operator —
-    bounded-depth, cycle-safe (the fixture contains the 2-cycle pair
+    unbounded depth, cycle-safe (the fixture contains the 2-cycle pair
     and a missing ref); depth = BFS first-visit level."""
     from ..datagen.synth import gen_groups, gen_images
     from ..operators.resolve import resolve_relation_members

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.coords import unpack_lat, unpack_lon
 from ..functions.geometry import BUFFER_DECIMICRO, MultiPolygon
-from ..operators.bbox import group_bboxes, point_bboxes
+from ..operators.bbox import coord_bboxes, group_bboxes, point_bboxes
 from ..operators.filter import classify_diff, classify_group_diff
 from ..operators.merge import TableStore
 
@@ -101,20 +101,12 @@ def run_update(
                 gbatch.select("group_id"), "group_id", "left_semi"
             )
             # member bbox source: changed-point bboxes (old ∪ new) plus
-            # degenerate bboxes of untouched stored points — the batch
-            # view the reference's running maps present to the way/
-            # relation passes (/root/reference/src/osmxml/bbox.rs:61-84)
-            untouched = base.join(
-                batch.select("image_id").distinct(), "image_id", "left_anti"
-            ).select(
-                "image_id",
-                F.col("lat").cast("long").alias("minlat"),
-                F.col("lat").cast("long").alias("maxlat"),
-                F.col("lon").cast("long").alias("minlon"),
-                F.col("lon").cast("long").alias("maxlon"),
-            )
-            member_bbox = bbox.unionByName(untouched)
-            gbx = group_bboxes(changed_groups, member_bbox)
+            # stored coords as degenerate bboxes — the batch view the
+            # reference's running maps present to the way/relation
+            # passes (src/osmxml/bbox.rs:61-84). A
+            # changed point's stored coord already lies in its bbox, so
+            # min/max needs no anti-join of the store against the batch
+            gbx = group_bboxes(changed_groups, bbox.unionByName(coord_bboxes(base)))
             gbx.write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"bbox_groups/state={state}")
             )

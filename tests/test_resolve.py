@@ -367,3 +367,30 @@ def test_line_interpolate(spark):
 
     with pytest.raises(ValueError):
         line_interpolate(mk(ways), pts, t=1.5)
+
+
+def test_relation_closure_seven_deep_chain(spark):
+    """A relation chain deeper than any fixed bound: every member of the
+    way at the bottom resolves, at depth = chain length + 1."""
+    points = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["q1", "q2", "q3"], "lat": [1, 2, 3], "lon": [1, 2, 3]})
+    )
+    rows = [("d7", "way", [
+        {"ref": "q1", "type": "image", "role": ""},
+        {"ref": "q2", "type": "image", "role": ""},
+    ])]
+    for i in range(7):
+        members = [{"ref": f"d{i + 1}", "type": "group", "role": ""}]
+        if i == 0:
+            members.append({"ref": "q3", "type": "image", "role": ""})
+        rows.append((f"d{i}", "relation", members))
+    groups = spark.createDataFrame(
+        rows,
+        "group_id string, kind string, members array<struct<ref:string,type:string,role:string>>",
+    )
+    got = {
+        (r.member_id, r.depth)
+        for r in resolve_relation_members(groups, points).collect()
+        if r.group_id == "d0"
+    }
+    assert got == {("q3", 1), ("q1", 8), ("q2", 8)}
