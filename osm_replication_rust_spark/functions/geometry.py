@@ -198,13 +198,16 @@ def points_in_buffered_polygon(
     lat: np.ndarray,
     mp: MultiPolygon,
     buffer: int = BUFFER_DECIMICRO,
+    inside: np.ndarray | None = None,
 ) -> np.ndarray:
     """Membership in buffer(polygon, buffer): inside, or within ``buffer``
     of any ring segment (covers points in holes near the hole boundary and
-    points just outside the outer ring)."""
+    points just outside the outer ring). ``inside``: the caller's
+    ``points_in_polygon`` of the same points, which is then not
+    computed again."""
     lon = np.asarray(lon, dtype=np.int64)
     lat = np.asarray(lat, dtype=np.int64)
-    out = points_in_polygon(lon, lat, mp)
+    out = points_in_polygon(lon, lat, mp) if inside is None else inside.copy()
     minx, miny, maxx, maxy = mp.bbox
     near = (
         (lon >= minx - buffer)
@@ -285,6 +288,7 @@ def points_in_buffered_polygon_8seg(
     mp: MultiPolygon,
     buffer: int = BUFFER_DECIMICRO,
     quad_segs: int = 8,
+    inside: np.ndarray | None = None,
 ) -> np.ndarray:
     """GEOS-style ``buffer(d, quad_segs)`` membership (the reference's
     exact construction, /root/reference/src/osmxml/filter.rs:44-56):
@@ -300,10 +304,11 @@ def points_in_buffered_polygon_8seg(
     inside the polygon or the adjacent edge bands, so membership differs
     from GEOS only by chord PHASE within the same sagitta band.
     :func:`buffer_sliver_mask` enumerates exactly the points where this
-    mode and the exact-distance mode can disagree."""
+    mode and the exact-distance mode can disagree. ``inside``: as in
+    :func:`points_in_buffered_polygon`."""
     lon = np.asarray(lon, dtype=np.int64)
     lat = np.asarray(lat, dtype=np.int64)
-    out = points_in_polygon(lon, lat, mp)
+    out = points_in_polygon(lon, lat, mp) if inside is None else inside.copy()
     minx, miny, maxx, maxy = mp.bbox
     near = (
         (lon >= minx - buffer)

@@ -6,28 +6,45 @@ nested loop, one full diff pass per region
 (/root/reference/src/diffs.rs:113-131). At 10^12 rows that is a
 non-starter; we discretize each region into grid cells ONCE on the
 driver (regions are small: a `.poly` hierarchy is tens-to-thousands of
-polygons) and broadcast the (region_id, cell, kind) table, turning the
+polygons) and broadcast the (region_id, cell, class) table, turning the
 spatial join into a single equi-join + exact refine of boundary cells.
 
-Cell classification:
-- ``full``     — cell entirely inside the polygon: membership decided by
-                 the join alone, no per-point geometry (the fast path —
-                 for a large region almost all covered cells are full).
-- ``partial``  — cell touches the (buffered) boundary: points joined to
-                 these cells go through the exact int64 point-in-polygon
-                 refine (an Arrow-batched numpy kernel).
-Cells entirely outside the buffered polygon are simply absent, so
-non-matching points never leave the hash join (partition-pruning analog).
+Cell classes, exact per cell of side ``edge = 2**res``:
+- ``FULL``        — the whole cell lies inside the polygon: in_poly and
+                    in_buffer, decided by the join alone (for a large
+                    region almost all covered cells are full).
+- ``BUFFER_ONLY`` — the whole cell lies outside the polygon and within
+                    the buffer: in_poly=False, in_buffer=True, decided by
+                    the join alone.
+- ``STRADDLING``  — the cell may meet a ring or the buffer's outer edge:
+                    its points go through the exact int64
+                    point-in-polygon refine (an Arrow-batched numpy
+                    kernel). The only class that reaches Python.
+- ``ABSENT``      — the whole cell lies outside the buffer; it is left
+                    out of the cover, so non-matching points never leave
+                    the hash join (partition-pruning analog).
 
-Conservativeness: a cell is marked partial if it lies within the
-bbox (expanded by buffer + one cell) of ANY polygon edge. Cells not
-near any edge are uniformly inside/outside both the polygon and its
-buffer, so a single center-point test classifies them exactly.
+The classifier (:func:`classify_cells`): every point of a cell lies
+within the half-diagonal ``h = edge·√2/2`` of the cell centre ``c``. If
+``d = distance_to_boundary(c) > h + eps`` no ring meets the cell, so the
+whole cell is inside or outside the polygon as its centre is
+(``points_in_polygon``), and an outside cell's points lie between
+``d - h`` and ``d + h`` from the polygon: ``d + h + eps <= buffer``
+makes it buffer-only and ``d - h - eps > buffer`` absent. ``eps`` covers
+the float64 rounding of the distance (well under one decimicro).
+
+Probe resolution (:func:`build_cover`): a finer grid straddles less area
+but has more cells. The cover is built coarse to fine from ``res``; a
+child of a settled (full or buffer-only) cell inherits its class, so
+only the straddling cells of one level are split and classified at the
+next. ``assign_regions`` probes the finest level down to
+``PROBE_FINEST_RES`` whose cover has at most ``PROBE_MAX_ROWS`` rows.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from ..functions.coords import (
     DEFAULT_RES,
@@ -36,69 +53,167 @@ from ..functions.coords import (
     Y_STRIDE,
     cell_edge,
 )
-from ..functions.geometry import MultiPolygon, points_in_polygon
+from ..functions.geometry import MultiPolygon, distance_to_boundary, points_in_polygon
+
+ABSENT, FULL, BUFFER_ONLY, STRADDLING = 0, 1, 2, 3
+
+#: margin (decimicro) for the float64 rounding of distance_to_boundary
+_EPS = 1.0
+
+#: finest probe level: cell ids need cell_x < Y_STRIDE (functions/coords)
+PROBE_FINEST_RES = 16
+
+#: row budget of the probe cover, the broadcast hash table every task
+#: probes. The fixture hierarchy fits at res 17 (44,476 rows).
+PROBE_MAX_ROWS = 65_536
+
+_QUAD_X = np.array([0, 1, 0, 1], dtype=np.int64)
+_QUAD_Y = np.array([0, 0, 1, 1], dtype=np.int64)
+
+
+def classify_cells(
+    mp: MultiPolygon, cx: np.ndarray, cy: np.ndarray, res: int, buffer: int
+) -> np.ndarray:
+    """Exact class (ABSENT / FULL / BUFFER_ONLY / STRADDLING, int8) of
+    each grid cell ``(cx, cy)`` at ``res`` against ``buffer(mp, buffer)``
+    — see the module docstring."""
+    edge = cell_edge(res)
+    ctr_lon = (cx << res) + edge // 2 - LON_OFFSET
+    ctr_lat = (cy << res) + edge // 2 - LAT_OFFSET
+    h = edge * np.sqrt(0.5) + _EPS
+    d = distance_to_boundary(ctr_lon, ctr_lat, mp)
+    out = np.full(cx.shape, STRADDLING, dtype=np.int8)
+    clear = np.nonzero(d > h)[0]
+    inside = points_in_polygon(ctr_lon[clear], ctr_lat[clear], mp)
+    dc = d[clear]
+    out[clear[inside]] = FULL
+    out[clear[~inside & (dc + h <= buffer)]] = BUFFER_ONLY
+    out[clear[~inside & (dc - h > buffer)]] = ABSENT
+    return out
+
+
+def _grid_bounds(mp: MultiPolygon, res: int, buffer: int) -> tuple[int, int, int, int]:
+    """Inclusive cell range ``(cx0, cx1, cy0, cy1)`` at ``res`` of the
+    buffered bbox of ``mp``: cells outside it are absent."""
+    minx, miny, maxx, maxy = mp.bbox
+    return (
+        (minx - buffer + LON_OFFSET) >> res,
+        (maxx + buffer + LON_OFFSET) >> res,
+        (miny - buffer + LAT_OFFSET) >> res,
+        (maxy + buffer + LAT_OFFSET) >> res,
+    )
+
+
+class _RegionCover:
+    """One region's cover while it is refined coarse to fine: the cells
+    settled so far, each at the level it was classified, and the
+    straddling cells of the current level ``res``."""
+
+    def __init__(self, mp: MultiPolygon, res: int, buffer: int, settled: list, cx, cy):
+        """Classify the cells ``(cx, cy)`` at ``res`` that meet the
+        buffered bbox; ``settled`` holds the coarser cells decided so far."""
+        self.mp, self.res, self.buffer = mp, res, buffer
+        cx0, cx1, cy0, cy1 = _grid_bounds(mp, res, buffer)
+        keep = (cx >= cx0) & (cx <= cx1) & (cy >= cy0) & (cy <= cy1)
+        cx, cy = cx[keep], cy[keep]
+        cls = classify_cells(mp, cx, cy, res, buffer)
+        done = (cls == FULL) | (cls == BUFFER_ONLY)
+        self.settled = settled + [(res, cx[done], cy[done], cls[done])]
+        self.open_x, self.open_y = cx[cls == STRADDLING], cy[cls == STRADDLING]
+
+    @classmethod
+    def top(cls, mp: MultiPolygon, res: int, buffer: int) -> _RegionCover:
+        """Every cell at ``res`` of the buffered bbox, classified."""
+        cx0, cx1, cy0, cy1 = _grid_bounds(mp, res, buffer)
+        gy, gx = np.mgrid[cy0 : cy1 + 1, cx0 : cx1 + 1]
+        return cls(mp, res, buffer, [], gx.ravel().astype(np.int64), gy.ravel().astype(np.int64))
+
+    def split(self) -> _RegionCover:
+        """The same cover one level finer: the straddling cells' children
+        classified, the settled cells kept."""
+        return _RegionCover(
+            self.mp,
+            self.res - 1,
+            self.buffer,
+            self.settled,
+            ((self.open_x << 1)[:, None] + _QUAD_X).ravel(),
+            ((self.open_y << 1)[:, None] + _QUAD_Y).ravel(),
+        )
+
+    def n_rows(self) -> int:
+        n = sum(len(cx) << (2 * (lvl - self.res)) for lvl, cx, _, _ in self.settled)
+        return n + len(self.open_x)
+
+    def cells(self) -> tuple[np.ndarray, np.ndarray]:
+        """(cell id, class) of every non-absent cell at this level."""
+        ids, classes = [], []
+        for lvl, cx, cy, cls in self.settled:
+            k = lvl - self.res
+            off = np.arange(1 << k, dtype=np.int64)
+            ex = (cx << k)[:, None, None] + off[None, None, :]
+            ey = (cy << k)[:, None, None] + off[None, :, None]
+            ids.append((ey * Y_STRIDE + ex).ravel())
+            classes.append(np.repeat(cls, 1 << (2 * k)))
+        ids.append(self.open_y * Y_STRIDE + self.open_x)
+        classes.append(np.full(len(self.open_x), STRADDLING, dtype=np.int8))
+        return np.concatenate(ids), np.concatenate(classes)
+
+
+def build_cover(
+    regions: list[MultiPolygon],
+    res: int = DEFAULT_RES,
+    buffer: int = 0,
+    finest: int | None = None,
+) -> tuple[int, pd.DataFrame]:
+    """Cover of every region at the finest level from ``res`` down to
+    ``finest`` (default: ``res`` only) whose rows fit ``PROBE_MAX_ROWS``;
+    ``res`` itself when no finer level fits. Returns ``(level, frame)``
+    with one frame row per (region, non-absent cell):
+    ``region_id, region_idx`` (dense index into ``regions``), ``cell``,
+    ``full`` (decided by the join alone: FULL or BUFFER_ONLY) and
+    ``in_poly`` (FULL)."""
+    covers = [_RegionCover.top(mp, res, buffer) for mp in regions]
+    level = res
+    while level > (res if finest is None else finest):
+        finer = [c.split() for c in covers]
+        if sum(c.n_rows() for c in finer) > PROBE_MAX_ROWS:
+            break
+        covers, level = finer, level - 1
+    parts = []
+    for i, c in enumerate(covers):
+        cell, cls = c.cells()
+        parts.append(
+            pd.DataFrame(
+                {
+                    "region_id": c.mp.region_id,
+                    "region_idx": np.full(len(cell), i, dtype=np.int32),
+                    "cell": cell,
+                    "full": cls != STRADDLING,
+                    "in_poly": cls == FULL,
+                }
+            )
+        )
+    cols = ["region_id", "region_idx", "cell", "full", "in_poly"]
+    frame = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=cols)
+    return level, frame
 
 
 def cover_cells(
     mp: MultiPolygon, res: int = DEFAULT_RES, buffer: int = 0
 ) -> list[tuple[int, bool]]:
-    """Covering cells of ``buffer(mp, buffer)``.
+    """Covering cells of ``buffer(mp, buffer)`` at ``res``.
 
     Returns ``[(cell_id, full)]`` where ``full=True`` means the cell is
-    entirely inside the *unbuffered* polygon.
-    """
-    edge = cell_edge(res)
-    minx, miny, maxx, maxy = mp.bbox
-    cx0 = (minx - buffer + LON_OFFSET) >> res
-    cx1 = (maxx + buffer + LON_OFFSET) >> res
-    cy0 = (miny - buffer + LAT_OFFSET) >> res
-    cy1 = (maxy + buffer + LAT_OFFSET) >> res
-
-    nx = cx1 - cx0 + 1
-    ny = cy1 - cy0 + 1
-    # partial mask over the local cell grid: a cell is partial iff it
-    # intersects some edge's bbox expanded by exactly `buffer` — then any
-    # untouched cell has distance > buffer from every edge, so it is
-    # uniformly inside/outside both the polygon and its buffer, and the
-    # center test below classifies it exactly. (>> res of the expanded
-    # bounds already yields the intersecting-cell index range.)
-    partial = np.zeros((ny, nx), dtype=bool)
-    margin = buffer
-    ex1, ey1, ex2, ey2 = mp.edges()
-    for x1, y1, x2, y2 in zip(ex1, ey1, ex2, ey2):
-        gx0 = max((min(x1, x2) - margin + LON_OFFSET) >> res, cx0)
-        gx1 = min((max(x1, x2) + margin + LON_OFFSET) >> res, cx1)
-        gy0 = max((min(y1, y2) - margin + LAT_OFFSET) >> res, cy0)
-        gy1 = min((max(y1, y2) + margin + LAT_OFFSET) >> res, cy1)
-        if gx1 >= gx0 and gy1 >= gy0:
-            partial[gy0 - cy0 : gy1 - cy0 + 1, gx0 - cx0 : gx1 - cx0 + 1] = True
-
-    # classify non-partial cells by their center point (exactly inside or
-    # exactly outside the buffered polygon — see module docstring)
-    free_y, free_x = np.nonzero(~partial)
-    out: list[tuple[int, bool]] = []
-    if free_y.size:
-        ctr_lon = ((free_x + cx0) << res) + edge // 2 - LON_OFFSET
-        ctr_lat = ((free_y + cy0) << res) + edge // 2 - LAT_OFFSET
-        inside = points_in_polygon(ctr_lon, ctr_lat, mp)
-        for fx, fy in zip(free_x[inside], free_y[inside]):
-            out.append((int((fy + cy0) * Y_STRIDE + (fx + cx0)), True))
-
-    py, px = np.nonzero(partial)
-    for fx, fy in zip(px, py):
-        out.append((int((fy + cy0) * Y_STRIDE + (fx + cx0)), False))
-    return out
+    entirely inside the *unbuffered* polygon (class FULL)."""
+    cell, cls = _RegionCover.top(mp, res, buffer).cells()
+    return list(zip(cell.tolist(), (cls == FULL).tolist()))
 
 
 def cover_rows(
     regions: list[MultiPolygon], res: int = DEFAULT_RES, buffer: int = 0
 ) -> list[dict]:
-    """Rows for the broadcastable cover DataFrame."""
-    rows = []
-    for mp in regions:
-        for cell, full in cover_cells(mp, res, buffer):
-            rows.append({"region_id": mp.region_id, "cell": cell, "full": full})
-    return rows
+    """Rows of :func:`build_cover` at ``res``, as dicts."""
+    return build_cover(regions, res, buffer)[1].to_dict("records")
 
 
 def hex_bin(df, x: str = "lon", y: str = "lat", a: int = 1_000_000, b: int = 866_025):

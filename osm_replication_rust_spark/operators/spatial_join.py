@@ -5,15 +5,31 @@ the reference's per-element polygon filter
 (/root/reference/src/osmxml/filter.rs:118-192, driven per-region by
 /root/reference/src/diffs.rs:113-131). Shape:
 
-1. encode each point's cell id — pure JVM integer arithmetic
-   (functions/coords.cell_id), stays in whole-stage codegen;
-2. equi-join against the broadcast (region_id, cell, full) cover table
-   (operators/cells.py) — a broadcast hash join, NO shuffle of the big
-   side; non-matching points are eliminated inside the join;
-3. rows landing in ``full`` cells are decided by the join alone;
-4. rows landing in ``partial`` (boundary) cells go through ONE
-   Arrow-batched numpy kernel that computes exact int64
-   point-in-polygon and buffered membership per region.
+1. drop points outside the union of the regions' buffered bboxes (a
+   range filter, which a parquet scan can push down) and encode each
+   remaining point's cell id at the probe level — pure JVM integer
+   arithmetic (functions/coords.cell_id), stays in whole-stage codegen;
+2. equi-join against the broadcast (region_id, region_idx, cell, full,
+   in_poly) cover table (operators/cells.py) — a broadcast hash join, NO
+   shuffle of the big side; points in absent cells are eliminated inside
+   the join;
+3. rows landing in ``full`` or ``buffer_only`` cells are decided by the
+   join alone (``in_poly`` from the cover, ``in_buffer`` true);
+4. rows landing in ``straddling`` cells go through ONE Arrow-batched
+   numpy kernel (or, with strategy='expr', compiled JVM expressions)
+   that computes exact int64 point-in-polygon and buffered membership
+   per region.
+
+Probe level: ``assign_regions`` joins at the finest level from ``res``
+down to ``cells.PROBE_FINEST_RES`` whose cover fits
+``cells.PROBE_MAX_ROWS`` rows. The output does not depend on the level;
+the refined rows do: on the fixture hierarchy with the 0.1° buffer the
+probe is res 17 (44,476 cover rows), whose straddling cells cover about
+6.5x less area than res 20's.
+
+Cache: the cover (pandas, per regions content, res and buffer) and the
+membership UDF with its geometry broadcast (per SparkContext as well)
+are built once and reused by every later call — see ``_JoinCache``.
 
 Scale notes (100 TB / 1000 executors):
 - the big side is never shuffled: cell encode is a map, the join is
@@ -21,14 +37,20 @@ Scale notes (100 TB / 1000 executors):
 - region skew is irrelevant (broadcast side); *point* skew (mega-cells)
   doesn't matter either because there is no shuffle by cell — cells are
   only a join key into the broadcast table.
-- the broadcast cover table grows with region count x resolution; keep
-  res coarse enough that it stays ~10^5-10^6 rows (tune res per region
-  size; finer res = fewer partial rows to refine but bigger broadcast).
+- the broadcast cover table grows with region count x resolution; the
+  probe's row budget keeps it bounded, trading refine rows for
+  broadcast size.
 """
 
 from __future__ import annotations
 
+import hashlib
+import threading
+from collections import OrderedDict
+
+import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,9 +60,10 @@ from ..functions.geometry import (
     BUFFER_DECIMICRO,
     MultiPolygon,
     points_in_buffered_polygon,
+    points_in_buffered_polygon_8seg,
     points_in_polygon,
 )
-from .cells import cover_rows
+from .cells import PROBE_FINEST_RES, build_cover
 
 _COVER_SCHEMA = T.StructType(
     [
@@ -48,8 +71,106 @@ _COVER_SCHEMA = T.StructType(
         T.StructField("region_idx", T.IntegerType(), False),
         T.StructField("cell", T.LongType(), False),
         T.StructField("full", T.BooleanType(), False),
+        T.StructField("in_poly", T.BooleanType(), False),
     ]
 )
+
+
+def _regions_key(regions: list[MultiPolygon]) -> bytes:
+    """Digest of the regions' ids and ring coordinates: equal regions
+    built by different callers share one cache entry."""
+    h = hashlib.blake2b(digest_size=16)
+    for mp in regions:
+        h.update(mp.region_id.encode() + b"\0")
+        for ring in mp.rings:
+            coords = np.ascontiguousarray(ring.coords, dtype=np.int64)
+            h.update(b"h" if ring.hole else b"r")
+            h.update(len(coords).to_bytes(8, "little") + coords.tobytes())
+    return h.digest()
+
+
+class _JoinCache:
+    """What ``assign_regions`` derives from the regions alone, kept
+    across calls so a long-lived process (``update --follow``, a
+    benchmark loop) builds it once:
+
+    - covers as pandas frames, keyed by (regions, res, buffer) — plain
+      data, valid for any session;
+    - per SparkContext: the membership UDF with its geometry broadcast,
+      keyed by (regions, buffer, buffer_mode), and each session's cover
+      DataFrame made from the pandas frame. A new context (the session
+      was stopped and started again) drops them all.
+
+    Each table keeps the ``CAPACITY`` most recently used entries. An
+    evicted broadcast is dropped, not destroyed, since a plan built
+    earlier may still run it; it is freed with its SparkContext."""
+
+    CAPACITY = 32
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._covers: OrderedDict = OrderedDict()
+        self._live: OrderedDict = OrderedDict()
+        self._sc: SparkContext | None = None
+
+    def _lookup(self, table: OrderedDict, key, build):
+        if key in table:
+            table.move_to_end(key)
+            return table[key]
+        value = table[key] = build()
+        if len(table) > self.CAPACITY:
+            table.popitem(last=False)
+        return value
+
+    def _cover(self, regions: list[MultiPolygon], res: int, buffer: int) -> pd.DataFrame:
+        key = ("cover", _regions_key(regions), res, buffer)
+        return self._lookup(self._covers, key, lambda: build_cover(regions, res, buffer)[1])
+
+    def _live_lookup(self, spark: SparkSession, key, build):
+        if spark.sparkContext is not self._sc:
+            self._live.clear()
+            self._sc = spark.sparkContext
+        return self._lookup(self._live, key, build)
+
+    def probe_res(self, regions: list[MultiPolygon], res: int, buffer: int) -> int:
+        """The probe level of ``build_cover`` from ``res`` down to
+        PROBE_FINEST_RES; its frame is kept as the cover at that level."""
+        rkey = _regions_key(regions)
+
+        def build():
+            level, frame = build_cover(regions, res, buffer, PROBE_FINEST_RES)
+            self._lookup(self._covers, ("cover", rkey, level, buffer), lambda: frame)
+            return level
+
+        with self._lock:
+            return self._lookup(self._covers, ("probe", rkey, res, buffer), build)
+
+    def cover_df(
+        self, spark: SparkSession, regions: list[MultiPolygon], res: int, buffer: int
+    ) -> DataFrame:
+        # via pandas -> Arrow: a columnar local relation, not a Python RDD
+        with self._lock:
+            return self._live_lookup(
+                spark,
+                ("cover_df", spark, _regions_key(regions), res, buffer),
+                lambda: spark.createDataFrame(
+                    self._cover(regions, res, buffer), schema=_COVER_SCHEMA
+                ),
+            )
+
+    def membership_udf(
+        self, spark: SparkSession, regions: list[MultiPolygon], buffer: int, buffer_mode: str
+    ):
+        sc = spark.sparkContext
+        with self._lock:
+            return self._live_lookup(
+                spark,
+                ("udf", _regions_key(regions), buffer, buffer_mode),
+                lambda: _membership_udf(sc.broadcast(list(regions)), buffer, buffer_mode),
+            )
+
+
+_CACHE = _JoinCache()
 
 
 def cover_df(
@@ -58,36 +179,25 @@ def cover_df(
     res: int = DEFAULT_RES,
     buffer: int = 0,
 ) -> DataFrame:
-    """Covering cells of every region, with a dense integer region index:
-    the refine kernel keys on the int (vectorized batch grouping), the
-    string region_id rides along only for the final output."""
-    idx = {mp.region_id: i for i, mp in enumerate(regions)}
-    rows = [
-        {**r, "region_idx": idx[r["region_id"]]} for r in cover_rows(regions, res, buffer)
-    ]
-    # via pandas -> Arrow: a columnar local relation, not a Python RDD
-    pdf = pd.DataFrame(rows, columns=["region_id", "region_idx", "cell", "full"])
-    return spark.createDataFrame(pdf, schema=_COVER_SCHEMA)
+    """Covering cells of every region at ``res`` (``cells.build_cover``),
+    with a dense integer region index: the refine kernel keys on the int
+    (vectorized batch grouping), the string region_id rides along only
+    for the final output. ``full`` marks the cells decided by the join
+    alone, ``in_poly`` those inside the polygon."""
+    return _CACHE.cover_df(spark, regions, res, buffer)
 
 
-def _membership_udf(
-    spark: SparkSession,
-    regions: list[MultiPolygon],
-    buffer: int,
-    buffer_mode: str = "exact",
-):
-    """Arrow-batched membership kernel. The region geometries ride a Spark
-    broadcast variable (pickled once per executor, not per task); the
-    batch is grouped by the dense integer region index (numpy sort-based
-    grouping — no python string comparisons in the hot path).
+def _membership_udf(geo_bc, buffer: int, buffer_mode: str = "exact"):
+    """Arrow-batched membership kernel. The region geometries ride the
+    Spark broadcast ``geo_bc`` (pickled once per executor, not per
+    task); the batch is grouped by the dense integer region index (numpy
+    sort-based grouping — no python string comparisons in the hot path).
 
     ``buffer_mode``: 'exact' tests distance <= buffer (the default);
     '8seg' reproduces the reference's GEOS buffer(d, quad_segs=8)
     chord-approximated region (functions.geometry.
     points_in_buffered_polygon_8seg) — see buffer_sliver_mask for the
     quantified difference."""
-    from ..functions.geometry import points_in_buffered_polygon_8seg
-
     if buffer_mode not in ("exact", "8seg"):
         raise ValueError(f"buffer_mode must be exact|8seg, got {buffer_mode!r}")
     buffered_fn = (
@@ -95,7 +205,6 @@ def _membership_udf(
         if buffer_mode == "exact"
         else points_in_buffered_polygon_8seg
     )
-    geo_bc = spark.sparkContext.broadcast(list(regions))
 
     schema = T.StructType(
         [
@@ -106,8 +215,6 @@ def _membership_udf(
 
     @F.pandas_udf(schema)
     def member(region_idx: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
         geos = geo_bc.value
         ridx = region_idx.to_numpy("int64")
         lon_np = lon.to_numpy("int64")
@@ -117,12 +224,10 @@ def _membership_udf(
         for rix in np.unique(ridx):
             mp = geos[rix]
             ii = np.nonzero(ridx == rix)[0]
-            inp = points_in_polygon(lon_np[ii], lat_np[ii], mp)
+            x, y = lon_np[ii], lat_np[ii]
+            inp = points_in_polygon(x, y, mp)
             out_poly[ii] = inp
-            if buffer:
-                out_buf[ii] = inp | buffered_fn(lon_np[ii], lat_np[ii], mp, buffer)
-            else:
-                out_buf[ii] = inp
+            out_buf[ii] = buffered_fn(x, y, mp, buffer, inside=inp) if buffer else inp
         return pd.DataFrame({"in_poly": out_poly, "in_buffer": out_buf})
 
     # deterministic in truth, but marked nondeterministic ON PURPOSE:
@@ -168,6 +273,10 @@ def assign_regions(
     row per (point, matching region); points matching nothing produce no
     rows (they were 'dropped' in reference terms).
 
+    ``res``: the coarsest cell level probed; the join runs at the finest
+    level from ``res`` down to 16 whose cover fits the row budget (see
+    the module docstring). The output is the same at every level.
+
     ``strategy``: how boundary-cell rows are refined —
     - 'udf'  : Arrow-batched numpy kernel (vectorized over the batch)
     - 'expr' : geometry compiled to Catalyst expressions (pure JVM;
@@ -205,21 +314,32 @@ def assign_regions(
     if strategy == "auto":
         strategy = _auto_strategy(spark)
 
-    pts = points.withColumn("_cell", cell_id(lon, lat, res)).withColumn(
+    probe = _CACHE.probe_res(regions, res, buffer)
+    if regions:
+        # a point outside the regions' buffered bbox matches no cover
+        # cell: four comparisons drop it before the hash probe
+        bboxes = [mp.bbox for mp in regions]
+        minx, miny = (min(b[i] for b in bboxes) - buffer for i in (0, 1))
+        maxx, maxy = (max(b[i] for b in bboxes) + buffer for i in (2, 3))
+        points = points.filter(lon.between(minx, maxx) & lat.between(miny, maxy))
+    pts = points.withColumn("_cell", cell_id(lon, lat, probe)).withColumn(
         "_lon", lon.cast("long")
     ).withColumn("_lat", lat.cast("long"))
 
-    cov = cover_df(spark, regions, res, buffer)
+    cov = cover_df(spark, regions, probe, buffer)
     joined = pts.join(F.broadcast(cov), pts["_cell"] == cov["cell"], "inner")
 
-    full = joined.filter(F.col("full")).select(
+    # the 8seg buffer is a little smaller than the exact one near convex
+    # corners, so under it buffer-only cells still go through refine
+    decided = F.col("full") if buffer_mode == "exact" else F.col("in_poly")
+    full = joined.filter(decided).select(
         *keep_cols,
         F.col("region_id"),
-        F.lit(True).alias("in_poly"),
+        F.col("in_poly"),
         F.lit(True).alias("in_buffer"),
     )
 
-    boundary = joined.filter(~F.col("full"))
+    boundary = joined.filter(~decided)
     if strategy == "expr" and buffer_mode != "exact":
         raise ValueError("buffer_mode='8seg' requires the 'udf' strategy")
     if strategy == "expr":
@@ -233,7 +353,7 @@ def assign_regions(
             .select(*keep_cols, F.col("region_id"), "in_poly", "in_buffer")
         )
     else:
-        member = _membership_udf(spark, regions, buffer, buffer_mode)
+        member = _CACHE.membership_udf(spark, regions, buffer, buffer_mode)
         partial = (
             boundary.withColumn(
                 "_m", member(F.col("region_idx"), F.col("_lon"), F.col("_lat"))

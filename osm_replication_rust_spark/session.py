@@ -29,6 +29,28 @@ def _active_processor_flag(master: str) -> str:
     return f" -XX:ActiveProcessorCount={m.group(1)}"
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the memory this process may use — its cgroup's limit
+    when one is set, else the host's MemTotal — capped at 24g. The rest
+    is left to the JVM's off-heap memory, the Python workers and the
+    driver process."""
+    limits = []
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            pass
+    try:
+        with open("/proc/meminfo") as f:
+            limits += [int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemTotal:")]
+    except OSError:
+        pass
+    if not limits:
+        return "24g"
+    return f"{min(min(limits) // 4 >> 20, 24 << 10)}m"
+
+
 def get_spark(
     app_name: str = "osm_replication_rust_spark",
     cpus: int | None = None,
@@ -72,6 +94,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # pyspark's worker daemon without the per-task re-read of
+        # pyspark.zip's directory (see worker_daemon)
+        .config("spark.python.daemon.module", "osm_replication_rust_spark.worker_daemon")
         # big Arrow batches: the geometry kernels are O(rows) numpy with
         # per-batch fixed cost — 256k batches measured 29M rows/s vs
         # 22M at 64k vs ~6M at the 10k default (flagship refine, 32
@@ -86,7 +111,10 @@ def get_spark(
         # resident; cost is a few hundred MB of driver/executor
         # metaspace at worst, independent of data scale.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # only meaningful under local-cluster / a real cluster manager
         .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "4g"))
         .config("spark.ui.enabled", "false")

@@ -2,9 +2,13 @@
 reproduce exact polygon membership for arbitrary points."""
 
 import numpy as np
+import pytest
 
 from osm_replication_rust_spark.datagen.synth import fixture_regions
 from osm_replication_rust_spark.functions.coords import (
+    LAT_OFFSET,
+    LON_OFFSET,
+    Y_STRIDE,
     cell_id_from_xy,
     cell_ring_offsets,
     cell_disk_offsets,
@@ -14,7 +18,17 @@ from osm_replication_rust_spark.functions.geometry import (
     points_in_buffered_polygon,
     points_in_polygon,
 )
-from osm_replication_rust_spark.operators.cells import cover_cells
+from osm_replication_rust_spark.operators.cells import (
+    ABSENT,
+    BUFFER_ONLY,
+    FULL,
+    PROBE_FINEST_RES,
+    PROBE_MAX_ROWS,
+    STRADDLING,
+    build_cover,
+    classify_cells,
+    cover_cells,
+)
 
 RES = 20
 BUF = 1_000_000
@@ -48,6 +62,78 @@ def test_full_cells_dominate_for_big_region():
     cover = cover_cells(mp, 18, BUF)
     full = sum(1 for _, f in cover if f)
     assert full / len(cover) > 0.55
+
+
+@pytest.mark.parametrize("buffer", [0, BUF])
+@pytest.mark.parametrize("res", [17, 20])
+def test_exact_cell_classes_agree_with_kernels(res, buffer):
+    """Seeded property test of cells.classify_cells: in sampled cells of
+    every decided class, the 4 corners and random interior points get
+    the class's answer from points_in_polygon / points_in_buffered_polygon.
+    Every cell holding a ring vertex straddles; region A's hole ring is
+    absent at buffer 0 and buffer-only inside at 0.1°."""
+    rng = np.random.default_rng(31 + res + buffer % 97)
+    edge = 1 << res
+    seen = set()
+    for mp in fixture_regions():
+        minx, miny, maxx, maxy = mp.bbox
+        cx0, cy0 = cell_xy(minx - buffer - 2 * edge, miny - buffer - 2 * edge, res)
+        cx1, cy1 = cell_xy(maxx + buffer + 2 * edge, maxy + buffer + 2 * edge, res)
+        gy, gx = np.mgrid[cy0 : cy1 + 1, cx0 : cx1 + 1]
+        gx, gy = gx.ravel().astype(np.int64), gy.ravel().astype(np.int64)
+        cls = classify_cells(mp, gx, gy, res, buffer)
+        seen |= set(cls.tolist())
+
+        verts = np.vstack([r.coords for r in mp.rings])
+        vx, vy = cell_xy(verts[:, 0], verts[:, 1], res)
+        at_vertex = np.isin(gy * Y_STRIDE + gx, vy * Y_STRIDE + vx)
+        assert (cls[at_vertex] == STRADDLING).all(), mp.region_id
+
+        for kind in (FULL, BUFFER_ONLY, ABSENT):
+            idx = np.nonzero(cls == kind)[0]
+            idx = rng.choice(idx, size=min(len(idx), 60), replace=False)
+            x0 = (gx[idx] << res) - LON_OFFSET
+            y0 = (gy[idx] << res) - LAT_OFFSET
+            ox = np.concatenate([[0, edge - 1, 0, edge - 1], rng.integers(0, edge, 12)])
+            oy = np.concatenate([[0, 0, edge - 1, edge - 1], rng.integers(0, edge, 12)])
+            lon = (x0[:, None] + ox[None, :]).ravel()
+            lat = (y0[:, None] + oy[None, :]).ravel()
+            inp = points_in_polygon(lon, lat, mp)
+            inb = points_in_buffered_polygon(lon, lat, mp, buffer)
+            if kind == FULL:
+                assert inp.all(), mp.region_id
+            elif kind == BUFFER_ONLY:
+                assert not inp.any() and inb.all(), mp.region_id
+            else:
+                assert not inb.any(), mp.region_id
+
+        if mp.region_id == "A":
+            hx0, hy0 = cell_xy(2_000_000, 2_000_000, res)
+            hx1, hy1 = cell_xy(4_000_000, 4_000_000, res)
+            in_hole = (gx > hx0) & (gx < hx1) & (gy > hy0) & (gy < hy1)
+            assert in_hole.any() and not (cls[in_hole] == FULL).any()
+            if in_hole.sum() > 4:  # a hole wider than two cells
+                want = ABSENT if buffer == 0 else BUFFER_ONLY
+                assert (cls[in_hole] == want).any()
+    # a buffer-only cell needs a cell diagonal shorter than the buffer
+    assert seen >= {FULL, ABSENT, STRADDLING} | ({BUFFER_ONLY} if edge * 1.5 < buffer else set())
+
+
+def test_probe_cover_fits_budget_and_refines_less():
+    """The probe level is the finest that fits PROBE_MAX_ROWS; a finer
+    level straddles less area than res 20."""
+    regions = fixture_regions()
+    level, frame = build_cover(regions, RES, BUF, PROBE_FINEST_RES)
+    assert PROBE_FINEST_RES <= level < RES and len(frame) <= PROBE_MAX_ROWS
+    if level > PROBE_FINEST_RES:
+        assert len(build_cover(regions, level - 1, BUF)[1]) > PROBE_MAX_ROWS
+    coarse = build_cover(regions, RES, BUF)[1]
+
+    def straddling_area(f, res):
+        return int((~f["full"]).sum()) << (2 * res)
+
+    assert straddling_area(frame, level) * 3 < straddling_area(coarse, RES)
+    assert (frame["in_poly"] <= frame["full"]).all()
 
 
 def test_ring_offsets():

@@ -134,3 +134,86 @@ def test_hilbert_prefilter_is_lossless_and_prunes(spark, regions, images_pdf):
         assign_regions(pruned, regions, keep_cols=["image_id"], buffer=BUF).collect()
     )
     assert a == b and len(a) > 0
+
+
+def _buffer_edge_points(regions, buffer=BUF, seed=5):
+    """Points where a join-decided class can be wrong: around every ring
+    vertex at 0.985-1.005 buffer widths in all directions (the band where
+    the exact and the 8-segment buffers differ), plus the 4 corners of
+    every buffer-only cell of the probe cover — a few of which lie
+    outside the 8-segment buffer."""
+    from osm_replication_rust_spark.functions.coords import LAT_OFFSET, LON_OFFSET, Y_STRIDE
+    from osm_replication_rust_spark.operators.cells import PROBE_FINEST_RES, build_cover
+
+    rng = np.random.default_rng(seed)
+    lon, lat = [], []
+    for mp in regions:
+        verts = np.vstack([r.coords for r in mp.rings])
+        v = verts[rng.integers(0, len(verts), 400)]
+        ang = rng.uniform(0, 2 * np.pi, 400)
+        rad = buffer * rng.uniform(0.985, 1.005, 400)
+        lon.append((v[:, 0] + rad * np.cos(ang)).astype(np.int64))
+        lat.append((v[:, 1] + rad * np.sin(ang)).astype(np.int64))
+    level, cover = build_cover(regions, 20, buffer, PROBE_FINEST_RES)
+    cell = cover.loc[cover["full"] & ~cover["in_poly"], "cell"].to_numpy()
+    x0 = (cell % Y_STRIDE << level) - LON_OFFSET
+    y0 = (cell // Y_STRIDE << level) - LAT_OFFSET
+    top = (1 << level) - 1
+    for dx, dy in ((0, 0), (top, 0), (0, top), (top, top)):
+        lon.append(x0 + dx)
+        lat.append(y0 + dy)
+    return np.concatenate(lon), np.concatenate(lat)
+
+
+def test_assign_regions_buffer_edge_both_buffer_modes(spark, regions):
+    """The join-decided classes agree with the numpy kernels where the
+    buffer ends, under the exact buffer and under the 8-segment one
+    (whose buffer-only cells must still be refined)."""
+    import pandas as pd
+
+    from osm_replication_rust_spark.functions.geometry import (
+        points_in_buffered_polygon_8seg,
+    )
+
+    lon, lat = _buffer_edge_points(regions)
+    df = spark.createDataFrame(pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    for mode, kernel in (
+        ("exact", points_in_buffered_polygon),
+        ("8seg", points_in_buffered_polygon_8seg),
+    ):
+        want = {}
+        for mp in regions:
+            inp = points_in_polygon(lon, lat, mp)
+            inb = inp | kernel(lon, lat, mp, BUF)
+            for i in np.nonzero(inb)[0]:
+                want[(int(i), mp.region_id)] = (bool(inp[i]), True)
+        got = {
+            (r.pid, r.region_id): (r.in_poly, r.in_buffer)
+            for r in assign_regions(
+                df, regions, keep_cols=["pid"], buffer=BUF, buffer_mode=mode
+            ).collect()
+        }
+        assert got == want, mode
+
+
+def test_repeated_calls_reuse_one_broadcast(spark, regions, images_pdf, monkeypatch):
+    """N assign_regions calls on the same regions build the geometry
+    broadcast at most once: neither the broadcasts nor the pickled files
+    in the context's temp dir grow with N."""
+    import os
+
+    sc = spark.sparkContext
+    made = []
+    real_broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda v: made.append(v) or real_broadcast(v))
+    df = spark.createDataFrame(images_pdf[["image_id", "phash"]]).select(
+        "image_id",
+        unpack_lat(F.col("phash")).alias("lat"),
+        unpack_lon(F.col("phash")).alias("lon"),
+    )
+    n = assign_regions(df, regions, keep_cols=["image_id"], buffer=BUF).count()
+    files = len(os.listdir(sc._temp_dir))
+    for _ in range(5):
+        assert assign_regions(df, regions, keep_cols=["image_id"], buffer=BUF).count() == n
+    assert len(made) <= 1
+    assert len(os.listdir(sc._temp_dir)) == files
