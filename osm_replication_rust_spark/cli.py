@@ -27,6 +27,7 @@ region publish path is sources.osc.write_region_osc_tree (used by
 from __future__ import annotations
 
 import argparse
+import glob
 import os
 import sys
 
@@ -51,8 +52,6 @@ def _heal_groups_link(store_dir: str) -> None:
     swap in _publish_groups, groups.parquet is missing but a versioned
     sibling exists — re-point the link at the newest version so no
     merge output is ever silently lost."""
-    import glob
-
     dst = _groups_path(store_dir)
     if os.path.lexists(dst):
         return
@@ -79,7 +78,6 @@ def _publish_groups(spark: SparkSession, store_dir: str, groups: DataFrame) -> N
     directory in place — a crash mid-write leaves the old version
     intact and readable, same manifest-pointer discipline as
     TableStore."""
-    import glob
     import shutil
 
     dst = _groups_path(store_dir)
@@ -298,7 +296,9 @@ def cmd_update(spark: SparkSession, args) -> int:
                 frames = []
                 for s in applied:
                     p = os.path.join(args.out, f"{kind_dir}/state={s}")
-                    if os.path.isdir(p):
+                    # a state that classified to zero rows leaves only
+                    # _SUCCESS (no region_id= partition): nothing to read
+                    if glob.glob(os.path.join(p, "region_id=*")):
                         frames.append(
                             spark.read.parquet(p).select(
                                 F.col(idc).alias("nid"),

@@ -43,6 +43,13 @@ DIFF_2 = b"""<?xml version="1.0" encoding="UTF-8"?>
 """
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs persisted now. Compared as sets: an RDD an
+    earlier test persisted may be unpersisted by the ContextCleaner
+    during a call, while a cache the call leaks is a new id."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
 def _land(root, state, payload):
     path = os.path.join(root, "000", "000", f"{state:03d}.osc.gz")
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -61,7 +68,7 @@ def test_second_update_in_process_applies_new_diff(spark, tmp_path):
     argv = ["update", "--store", store, "--polygons", polys, "--diffs", diffs, "--out", out]
 
     assert cli.main(["import", str(osm), "--store", store]) == 0
-    n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = persisted_rdd_ids(spark)
 
     def ids():
         return {r.image_id for r in cli._store(spark, store).current().select("image_id").collect()}
@@ -70,13 +77,13 @@ def test_second_update_in_process_applies_new_diff(spark, tmp_path):
     assert cli.main(argv) == 0
     assert cli._store(spark, store).last_state() == 1
     assert ids() == {"n1", "n2", "n3", "n4"}
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0
+    assert persisted_rdd_ids(spark) <= before
 
     _land(diffs, 2, DIFF_2)
     assert cli.main(argv) == 0
     assert cli._store(spark, store).last_state() == 2
     assert ids() == {"n1", "n2", "n3", "n4", "n5"}
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0
+    assert persisted_rdd_ids(spark) <= before
 
     # state 2's changed groups were annotated and published too
     bb = spark.read.parquet(os.path.join(out, "bbox_groups", "state=2"))
@@ -87,9 +94,9 @@ def test_second_update_in_process_applies_new_diff(spark, tmp_path):
 
 
 def test_bbox_and_filter_release_their_caches(spark, tmp_path):
-    """``bbox`` and ``filter`` leave the cached-block count where they
-    found it, and a relation's bbox reaches through a chain whose way
-    changed in the same diff."""
+    """``bbox`` and ``filter`` leave no new cached RDD behind, and a
+    relation's bbox reaches through a chain whose way changed in the
+    same diff."""
     from osm_replication_rust_spark.sources.osc import parse_osc_elements
 
     store = str(tmp_path / "store")
@@ -100,11 +107,11 @@ def test_bbox_and_filter_release_their_caches(spark, tmp_path):
     diff.write_bytes(DIFF_2)
     polys = str(tmp_path / "polys")
     write_region_dir(fixture_regions(), polys)
-    n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = persisted_rdd_ids(spark)
 
     out = str(tmp_path / "annotated.osc")
     assert cli.main(["bbox", str(diff), out, "--store", store]) == 0
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0
+    assert persisted_rdd_ids(spark) <= before
     with open(out, "rb") as f:
         got = {(r["kind"], r["element_id"]): r["bbox"] for r in parse_osc_elements(f.read(), state=1)}
     # w10 = n1, n2 and the created n5; r21 -> r20 -> {w10, n3}
@@ -113,7 +120,7 @@ def test_bbox_and_filter_release_their_caches(spark, tmp_path):
 
     poly = os.path.join(polys, "A.poly")
     assert cli.main(["filter", str(diff), str(tmp_path / "a.osc"), "--poly", poly, "--store", store]) == 0
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0
+    assert persisted_rdd_ids(spark) <= before
     with open(tmp_path / "a.osc", "rb") as f:
         kept = {(r["kind"], r["element_id"]) for r in parse_osc_elements(f.read(), state=1)}
     assert {("node", "5"), ("way", "10")} <= kept
