@@ -4,7 +4,10 @@ of the reference can run the same operations against this engine:
 - ``import``  <- osmbin --import   (/root/reference/src/bin/osmbin.rs:38-41)
                  and osmxml .osm import (/root/reference/src/bin/osmxml.rs:29-31)
 - ``update``  <- update            (/root/reference/src/bin/update.rs:27-56,
-                                    incl. the update.lock advisory lock)
+                                    incl. the update.lock advisory lock;
+                                    applies only the diffs above the
+                                    store's cursor, like the reference's
+                                    local state.txt, update.rs:39-74)
 - ``read``    <- osmbin --read     (/root/reference/src/bin/osmbin.rs:43-71,
                                     incl. way_full / relation_full closures)
 - ``check``   <- osmbin --check    (/root/reference/src/bin/osmbin.rs:73-79)
@@ -15,7 +18,8 @@ of the reference can run the same operations against this engine:
 
 Store layout (one directory):
   <store>/points/        TableStore (hash-bucketed snapshots + manifest;
-                         footprint packed in phash per FIXTURES.md §1)
+                         footprint packed in phash per FIXTURES.md §1;
+                         the manifest's groups_state is the diff cursor)
   <store>/groups.parquet ways/relations (group_id, kind, members)
 
 The ``filter`` extract collects the (small) single-region result to
@@ -28,6 +32,7 @@ from __future__ import annotations
 
 import argparse
 import glob
+import gzip
 import os
 import sys
 
@@ -130,6 +135,31 @@ def _base_points(store) -> DataFrame:
     )
 
 
+def _read_elements_file(spark: SparkSession, path: str) -> DataFrame:
+    """One .osc[.gz] / .osm[.gz] file -> ELEMENT_SCHEMA rows at state 0
+    (the parser sniffs gzip itself)."""
+    from .sources.osc import elements_df, parse_osc_elements
+
+    with open(path, "rb") as f:
+        return elements_df(spark, parse_osc_elements(f.read(), state=0))
+
+
+def _with_nid(elements: DataFrame) -> DataFrame:
+    """Add the store's kind-prefixed id (n/w/r + element_id) as ``nid``,
+    the key the classification outputs join back on."""
+    from .sources.osc import _ns_prefix
+
+    return elements.withColumn(
+        "nid", F.concat(_ns_prefix(F.col("kind")), F.col("element_id"))
+    )
+
+
+def _write_text(path: str, text: str) -> None:
+    """Write ``text`` to ``path``, gzipped when the name ends in .gz."""
+    with (gzip.open(path, "wt") if path.endswith(".gz") else open(path, "w")) as f:
+        f.write(text)
+
+
 def _osm_xml_to_engine(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -137,13 +167,10 @@ def _osm_xml_to_engine(
     pbf_to_engine (reference osmxml import, /root/reference/src/bin/
     osmxml.rs:29-31): bare elements parse as 'modify', so the change
     model's new_* columns ARE the element attributes."""
-    from .sources.osc import elements_df, elements_to_engine, parse_osc_elements
+    from .sources.osc import elements_to_engine
 
-    opener = __import__("gzip").open if path.endswith(".gz") else open
-    with opener(path, "rb") as f:
-        rows = parse_osc_elements(f.read(), state=0)
     points, gch = elements_to_engine(
-        elements_df(spark, rows), namespace_ids=True
+        _read_elements_file(spark, path), namespace_ids=True
     )
     init = points.select(
         "image_id",
@@ -197,142 +224,100 @@ def _acquire_update_lock(store_dir: str):
 
 
 def cmd_update(spark: SparkSession, args) -> int:
+    """Apply the diffs the store has not consumed yet. The manifest's
+    ``groups_state`` is the one cursor: the scan opens only files above
+    it, and it advances once the call's group merge has published. A
+    crash between the point commit and the group merge leaves the
+    cursor behind ``last_state``; the next call re-reads that window,
+    ``run_update`` skips its committed states, and the group merge
+    heals them."""
     from .plans.pipeline import run_update
     from .sources.osc import elements_to_engine, read_osc_elements_dir
     from .sources.poly import regions_from_dir
 
-    _update_lock = _acquire_update_lock(args.store)  # noqa: F841 — held for scope
-    if args.follow and args.osc_tree:
-        raise SystemExit(
-            "update: --osc-tree is not supported with --follow yet; "
-            "run a batch `update --osc-tree` pass for the tree publish"
-        )
-    regions = regions_from_dir(args.polygons)
-    store = _store(spark, args.store)
+    # held for the whole call, released on every exit (a crash too)
+    with _acquire_update_lock(args.store):
+        regions = regions_from_dir(args.polygons)
+        store = _store(spark, args.store)
 
-    if getattr(args, "diffs_url", None):
-        # S12: fetch the replication window (store state -> remote
-        # head, optionally clamped) into the diffs dir BEFORE either
-        # consumption path — the batch scan below or the --follow
-        # stream (which picks the new files up as an availableNow
-        # pass). Driver-side tiny-file I/O; re-fetch after a crash is
-        # harmless (idempotent apply), so the walk needs no durable
-        # fetch cursor beyond the store's own applied state.
-        from .sources.replication import fetch_new_diffs
+        if args.diffs_url:
+            # S12: fetch the replication window (store state -> remote
+            # head, optionally clamped) into the diffs dir before the scan.
+            # Driver-side tiny-file I/O; re-fetch after a crash is harmless
+            # (idempotent apply), so the walk needs no cursor of its own.
+            from .sources.replication import fetch_new_diffs
 
-        fetched = fetch_new_diffs(
-            store.last_state() or 0, args.diffs_url, args.diffs,
-            max_state=getattr(args, "max_state", None),
-        )
-        print(f"fetched {len(fetched)} diff(s) from {args.diffs_url}")
+            fetched = fetch_new_diffs(
+                store.last_state() or 0, args.diffs_url, args.diffs,
+                max_state=args.max_state,
+            )
+            print(f"fetched {len(fetched)} diff(s) from {args.diffs_url}")
 
-    if args.follow:
-        # streaming mode: the file-stream source + checkpoint gives
-        # exactly-once file processing across CLI restarts; the
-        # idempotent state-keyed store makes re-delivered batches
-        # no-ops on top of that
-        from .sources.osc import stream_osc_elements
-
-        def per_batch(batch_elements: DataFrame, epoch_id: int) -> None:
-            if batch_elements.isEmpty():
-                return
-            pts, gch_b = elements_to_engine(batch_elements, namespace_ids=True)
-            grp = _read_groups(spark, args.store)
-            applied_b = run_update(
+        after = store.groups_state()
+        elements = read_osc_elements_dir(spark, args.diffs, after=after).persist()
+        # released on every exit: a later in-process update would otherwise
+        # be served this stale scan
+        try:
+            points, gch = elements_to_engine(elements, namespace_ids=True)
+            groups = _read_groups(spark, args.store)
+            applied = run_update(
                 store,
-                pts,
+                points,
                 regions,
                 args.out,
-                groups=grp,
-                group_diffs=gch_b if grp is not None else None,
+                groups=groups,
+                group_diffs=gch if groups is not None else None,
             )
-            # group merge runs UNCONDITIONALLY (not gated on applied_b):
-            # upsert/delete re-application is a no-op, so replaying a
-            # batch after a crash between the store commit and this
-            # merge still converges — the gate would skip it forever
-            if grp is not None:
-                _merge_group_store(spark, args.store, grp, gch_b)
-            print(f"epoch {epoch_id}: applied {applied_b}")
+            if args.osc_tree and applied:
+                _publish_osc_tree(spark, elements, applied, args.out, args.osc_tree)
+            # the window may hold states whose points a crashed call already
+            # committed (cursor < last_state): merging them again heals it
+            if groups is not None and (applied or after < (store.last_state() or 0)):
+                _merge_group_store(spark, args.store, groups, gch)
+            store.set_groups_state(store.last_state() or 0)
+            print(f"applied states: {applied}")
+            return 0
+        finally:
+            elements.unpersist()
 
-        q = (
-            stream_osc_elements(spark, args.diffs)
-            .writeStream.foreachBatch(per_batch)
-            .option(
-                "checkpointLocation", os.path.join(args.store, "stream_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
+
+def _publish_osc_tree(
+    spark: SparkSession, elements: DataFrame, applied: list[int], out_dir: str, tree: str
+) -> None:
+    """The reference's interchange artifact (diffs.rs generate_diff): the
+    per-region .osc.gz tree derived from the SAME classification
+    run_update just published (tiles parquet), joined back to the
+    original elements for full metadata/tag fidelity, written
+    distributedly (write_region_osc_tree, no driver collect)."""
+    from functools import reduce
+
+    from .sources.osc import write_region_osc_tree
+
+    frames = [
+        spark.read.parquet(p).select(
+            F.col(idc).alias("nid"),
+            F.lit(s).cast("long").alias("state"),
+            "region_id",
+            "out_action",
         )
-        q.awaitTermination()
-        print(f"follow pass done; store at state {store.last_state()}")
-        return 0
-
-    elements = read_osc_elements_dir(spark, args.diffs).persist()
-    # released on every exit: a later in-process update over the same
-    # --diffs path would otherwise be served this stale scan
-    try:
-        points, gch = elements_to_engine(elements, namespace_ids=True)
-        groups = _read_groups(spark, args.store)
-        applied = run_update(
-            store,
-            points,
-            regions,
-            args.out,
-            groups=groups,
-            group_diffs=gch if groups is not None else None,
-        )
-        if args.osc_tree and applied:
-            # the reference's interchange artifact (diffs.rs generate_diff):
-            # per-region .osc.gz tree derived from the SAME classification
-            # run_update just published (tiles parquet), joined back to the
-            # original elements for full metadata/tag fidelity, written
-            # distributedly (write_region_osc_tree, no driver collect)
-            from functools import reduce
-
-            from .sources.osc import write_region_osc_tree
-
-            asg = None
-            for kind_dir, idc in (("tiles", "image_id"), ("tiles_groups", "group_id")):
-                frames = []
-                for s in applied:
-                    p = os.path.join(args.out, f"{kind_dir}/state={s}")
-                    # a state that classified to zero rows leaves only
-                    # _SUCCESS (no region_id= partition): nothing to read
-                    if glob.glob(os.path.join(p, "region_id=*")):
-                        frames.append(
-                            spark.read.parquet(p).select(
-                                F.col(idc).alias("nid"),
-                                F.lit(s).cast("long").alias("state"),
-                                "region_id",
-                                "out_action",
-                            )
-                        )
-                if frames:
-                    part = reduce(lambda a, b: a.unionByName(b), frames)
-                    asg = part if asg is None else asg.unionByName(part)
-            if asg is not None:
-                prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
-                    F.col("kind") == "way", F.lit("w")
-                ).otherwise(F.lit("r"))
-                tagged = (
-                    elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
-                    .join(asg, ["nid", "state"])
-                    .withColumn("action", F.col("out_action"))
-                    .withColumn("region", F.col("region_id"))
-                    .drop("nid", "out_action", "region_id")
-                )
-                written = write_region_osc_tree(tagged, args.osc_tree)
-                print(f"published {len(written)} region diff file(s) under {args.osc_tree}")
-
-        # unconditional for the same crash-window reason as follow mode:
-        # a previous run may have committed the store but died before the
-        # group rewrite; re-merging the full (idempotent) change set heals it
-        if groups is not None:
-            _merge_group_store(spark, args.store, groups, gch)
-        print(f"applied states: {applied}")
-        return 0
-    finally:
-        elements.unpersist()
+        for kind_dir, idc in (("tiles", "image_id"), ("tiles_groups", "group_id"))
+        for s in applied
+        for p in [os.path.join(out_dir, f"{kind_dir}/state={s}")]
+        # a state that classified to zero rows leaves only _SUCCESS
+        # (no region_id= partition): nothing to read
+        if glob.glob(os.path.join(p, "region_id=*"))
+    ]
+    if not frames:
+        return
+    tagged = (
+        _with_nid(elements)
+        .join(reduce(DataFrame.unionByName, frames), ["nid", "state"])
+        .withColumn("action", F.col("out_action"))
+        .withColumn("region", F.col("region_id"))
+        .drop("nid", "out_action", "region_id")
+    )
+    written = write_region_osc_tree(tagged, tree)
+    print(f"published {len(written)} region diff file(s) under {tree}")
 
 
 def _merge_group_store(
@@ -340,7 +325,8 @@ def _merge_group_store(
 ) -> None:
     """Merge way/relation changes into <store>/groups.parquet.
 
-    The winner per group is picked across ALL states in the change set:
+    ``gch`` is the group changes of the call's diff window. The winner
+    per group is picked across ALL states in the window:
     ``seq`` restarts at 0 in every diff file, so ordering by seq alone
     would let an older state's change beat a newer one — the order key
     is (state, seq) packed into one column."""
@@ -418,22 +404,14 @@ def cmd_check(spark: SparkSession, args) -> int:
 
 def cmd_filter(spark: SparkSession, args) -> int:
     from .operators.filter import classify_diff, classify_group_diff
-    from .sources.osc import (
-        elements_df,
-        elements_to_engine,
-        format_osc_elements,
-        parse_osc_elements,
-    )
+    from .sources.osc import elements_to_engine, format_osc_elements
     from .sources.poly import parse_poly
 
     with open(args.poly) as f:
         region = parse_poly(
             f.read(), region_id=os.path.splitext(os.path.basename(args.poly))[0]
         )
-    opener = __import__("gzip").open if args.input.endswith(".gz") else open
-    with opener(args.input, "rb") as f:
-        rows = parse_osc_elements(f.read(), state=0)
-    elements = elements_df(spark, rows).persist()
+    elements = _read_elements_file(spark, args.input).persist()
     try:
         points, gch = elements_to_engine(elements, namespace_ids=True)
         store = _store(spark, args.store)
@@ -454,11 +432,8 @@ def cmd_filter(spark: SparkSession, args) -> int:
             kept = kept_pts.unionByName(kept_groups)
         # join classification back to the ORIGINAL element rows (full
         # metadata/tags fidelity), override the action with out_action
-        prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
-            F.col("kind") == "way", F.lit("w")
-        ).otherwise(F.lit("r"))
         out_rows = (
-            elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
+            _with_nid(elements)
             .join(kept, "nid")
             .withColumn("action", F.col("out_action"))
             .drop("nid", "out_action")
@@ -467,9 +442,9 @@ def cmd_filter(spark: SparkSession, args) -> int:
         )
     finally:
         elements.unpersist()
-    xml = format_osc_elements([r.asDict(recursive=True) for r in out_rows])
-    with open(args.output, "w") as f:
-        f.write(xml)
+    _write_text(
+        args.output, format_osc_elements([r.asDict(recursive=True) for r in out_rows])
+    )
     print(f"wrote {len(out_rows)} elements to {args.output}")
     return 0
 
@@ -484,16 +459,9 @@ def cmd_bbox(spark: SparkSession, args) -> int:
     is operators.bbox.annotate_diff_bboxes itself, which ``update``
     uses inline."""
     from .operators.bbox import annotate_diff_bboxes
-    from .sources.osc import (
-        elements_df,
-        format_osc_elements,
-        parse_osc_elements,
-    )
+    from .sources.osc import format_osc_elements
 
-    opener = __import__("gzip").open if args.input.endswith(".gz") else open
-    with opener(args.input, "rb") as f:
-        rows = parse_osc_elements(f.read(), state=0)
-    elements = elements_df(spark, rows).persist()
+    elements = _read_elements_file(spark, args.input).persist()
     try:
         store = _store(spark, args.store)
         bb = annotate_diff_bboxes(
@@ -502,11 +470,8 @@ def cmd_bbox(spark: SparkSession, args) -> int:
             stored_groups=_read_groups(spark, args.store),
             namespace_ids=True,
         )
-        prefix = F.when(F.col("kind") == "node", F.lit("n")).when(
-            F.col("kind") == "way", F.lit("w")
-        ).otherwise(F.lit("r"))
         out_rows = (
-            elements.withColumn("nid", F.concat(prefix, F.col("element_id")))
+            _with_nid(elements)
             .join(
                 bb.select(
                     F.col("element_id").alias("nid"),
@@ -522,13 +487,9 @@ def cmd_bbox(spark: SparkSession, args) -> int:
         )
     finally:
         elements.unpersist()
-    xml = format_osc_elements([r.asDict(recursive=True) for r in out_rows])
-    if args.output.endswith(".gz"):
-        with __import__("gzip").open(args.output, "wt") as f:
-            f.write(xml)
-    else:
-        with open(args.output, "w") as f:
-            f.write(xml)
+    _write_text(
+        args.output, format_osc_elements([r.asDict(recursive=True) for r in out_rows])
+    )
     n_bb = sum(1 for r in out_rows if r["bbox"] is not None)
     print(f"wrote {len(out_rows)} elements ({n_bb} bbox-annotated) to {args.output}")
     return 0
@@ -621,18 +582,17 @@ def build_parser() -> argparse.ArgumentParser:
     upd = sub.add_parser("update", help="apply a replication diff tree")
     upd.add_argument("--store", required=True)
     upd.add_argument("--polygons", required=True, help="region .poly directory")
-    upd.add_argument("--diffs", required=True, help=".osc[.gz] directory")
+    upd.add_argument(
+        "--diffs",
+        required=True,
+        help="replication tree of AAA/BBB/CCC.osc[.gz] diffs; only states "
+        "above the store's cursor are read",
+    )
     upd.add_argument("--out", required=True, help="tile/bbox/metrics output dir")
     upd.add_argument(
         "--osc-tree",
         default=None,
         help="also publish the reference's per-region .osc.gz diff tree here",
-    )
-    upd.add_argument(
-        "--follow",
-        action="store_true",
-        help="streaming mode: process the diff tree via a checkpointed "
-        "file stream (exactly-once across restarts; availableNow pass)",
     )
     upd.add_argument(
         "--diffs-url",

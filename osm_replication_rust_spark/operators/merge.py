@@ -16,7 +16,8 @@ on Spark terms:
   per-partition lineage counts), published with tmp + atomic rename.
   ``apply_batch`` is a no-op for already-applied states, so a killed and
   restarted job never double-applies (exactly-once-ish, reference
-  /root/reference/src/update.rs:40-47).
+  /root/reference/src/update.rs:40-47). The manifest's ``groups_state``
+  is ``update``'s diff cursor (the reference's local state.txt).
 """
 
 from __future__ import annotations
@@ -157,6 +158,17 @@ class TableStore:
 
     def last_state(self) -> int | None:
         return self.manifest()["last_state"]
+
+    def groups_state(self) -> int:
+        """The diff cursor: the newest state whose group changes are
+        merged too (0 on a store that never recorded one). ``update``
+        reads only the diffs above it."""
+        return self.manifest().get("groups_state", 0)
+
+    def set_groups_state(self, state: int) -> None:
+        man = self.manifest()
+        man["groups_state"] = state
+        self._publish_manifest(man)
 
     def _publish_manifest(self, man: dict) -> None:
         # tmp + atomic rename, the reference's publish pattern

@@ -91,8 +91,8 @@ def _regions_key(regions: list[MultiPolygon]) -> bytes:
 
 class _JoinCache:
     """What ``assign_regions`` derives from the regions alone, kept
-    across calls so a long-lived process (``update --follow``, a
-    benchmark loop) builds it once:
+    across calls so a long-lived process (repeated in-process
+    ``update`` calls, a benchmark loop) builds it once:
 
     - covers as pandas frames, keyed by (regions, res, buffer) — plain
       data, valid for any session;

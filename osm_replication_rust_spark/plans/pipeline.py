@@ -53,11 +53,13 @@ def run_update(
     /root/reference/src/osmxml/filter.rs:237-299) into
     ``tiles_groups/state=N`` and annotated with member-closure bboxes
     (/root/reference/src/osmxml/bbox.rs:145-164) into
-    ``bbox_groups/state=N``, next to the point artifacts."""
-    states = [
-        r["state"]
-        for r in diffs.select("state").distinct().orderBy("state").collect()
-    ]
+    ``bbox_groups/state=N``, next to the point artifacts. A state is
+    applied when it changes any element kind, so a diff of ways and
+    relations alone still advances the store."""
+    changed = diffs.select("state")
+    if groups is not None and group_diffs is not None:
+        changed = changed.unionByName(group_diffs.select("state"))
+    states = [r["state"] for r in changed.distinct().orderBy("state").collect()]
     last = store.last_state() or 0
     applied = []
     for state in states:

@@ -3,25 +3,27 @@
 The reference parses `.osc[.gz]` files event-by-event
 (/root/reference/src/osmxml.rs:382-785: <create>/<modify>/<delete>
 wrapper elements, element attributes, optional <bbox> children). Our
-engine's change batches are DataFrames; this source turns a directory
-of XML diffs into that DataFrame distributedly:
+engine's change batches are DataFrames; this source turns the pending
+files of a replication tree into that DataFrame distributedly:
 
-  binaryFile scan (one row per file) -> mapInPandas parse (stdlib
-  ElementTree per file, gzip-sniffed) -> change rows.
+  driver listing (state from the path, only states above the caller's
+  cursor) -> binaryFile scan of those files -> mapInPandas parse
+  (stdlib ElementTree per file, gzip-sniffed) -> element rows.
 
-So the *parse* scales with the number of files (each task parses whole
-files — diffs are small and line-oriented work poorly for XML), while
-everything downstream is ordinary set-based work. The state number is
-recovered from the filename (the reference's 3/3/3 sharded layout,
-/root/reference/src/update.rs:76-82).
+So the *parse* scales with the number of new files (each task parses
+whole files — diffs are small and line-oriented work poorly for XML),
+while everything downstream is ordinary set-based work. The state
+number is recovered from the filename (the reference's 3/3/3 sharded
+layout, /root/reference/src/update.rs:76-82).
 
-Writer: ``format_osc`` emits the action-grouped XML shape
-(/root/reference/src/osmxml.rs:72-101 write_action_start) for
-interop/round-trip tests.
+Writers: ``format_osc_elements`` emits the action-grouped XML shape
+(/root/reference/src/osmxml.rs:72-101 write_action_start);
+``write_region_osc_tree`` publishes it per region and state.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import gzip
 import io
 import os
@@ -33,11 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.coords import coord_to_decimicro_py, pack_footprint
-
-CHANGE_SCHEMA = (
-    "state long, seq long, action string, image_id string, "
-    "new_lat long, new_lon long, new_caption string, new_phash long"
-)
 
 #: full three-kind element schema (node/way/relation with optional
 #: <bbox> child), the faithful relational image of the reference's
@@ -69,38 +66,6 @@ _META_INT = {"version", "uid", "changeset"}
 
 _ACTIONS = ("create", "modify", "delete")
 _KINDS = ("node", "way", "relation")
-
-
-def parse_osc_bytes(data: bytes, state: int) -> list[dict]:
-    """One .osc[.gz] payload -> change rows (document order = seq)."""
-    if data[:2] == b"\x1f\x8b":  # gzip magic, like the reference's sniffing
-        data = gzip.decompress(data)
-    root = ET.parse(io.BytesIO(data)).getroot()
-    rows: list[dict] = []
-    seq = 0
-    for group in root:
-        if group.tag not in _ACTIONS:
-            continue
-        for el in group:
-            if el.tag != "node":  # engine model: point elements
-                continue
-            lat = el.get("lat")
-            lon = el.get("lon")
-            tags = {t.get("k"): t.get("v") for t in el.findall("tag")}
-            rows.append(
-                {
-                    "state": state,
-                    "seq": seq,
-                    "action": group.tag,
-                    "image_id": el.get("id"),
-                    "new_lat": coord_to_decimicro_py(float(lat)) if lat else None,
-                    "new_lon": coord_to_decimicro_py(float(lon)) if lon else None,
-                    "new_caption": tags.get("caption"),
-                    "new_phash": int(tags["phash"]) if "phash" in tags else None,
-                }
-            )
-            seq += 1
-    return rows
 
 
 def parse_osc_elements(data: bytes, state: int) -> list[dict]:
@@ -189,32 +154,30 @@ def state_from_path(path: str) -> int:
     return int(c)
 
 
-def read_osc_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed scan of a diff directory into the change DataFrame."""
-    files = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.osc*"
-    ).option("recursiveFileLookup", "true").load(path)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                out.extend(parse_osc_bytes(bytes(content), state_from_path(p)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "state", "seq", "action", "image_id",
-                    "new_lat", "new_lon", "new_caption", "new_phash",
-                ],
-            )
-
-    return files.select("path", "content").mapInPandas(parse, CHANGE_SCHEMA)
-
-
-def _osc_files_to_elements(files: DataFrame) -> DataFrame:
-    """(path, content) binary-file rows -> ELEMENT_SCHEMA elements.
-    Shared by the batch scan and the streaming source — identical
-    parse, identical plan shape (one mapInPandas stage)."""
+def read_osc_elements_dir(
+    spark: SparkSession, path: str, after: int = 0
+) -> DataFrame:
+    """Distributed three-kind scan (ELEMENT_SCHEMA) of the diffs under
+    ``path`` whose state is above ``after``: the tree is listed on the
+    driver, so files at or below the cursor are never opened. Hidden
+    names (leading ``.`` or ``_``, e.g. a publisher's tmp file) are
+    skipped as Spark's own file listing skips them. An empty frame
+    when no file qualifies."""
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"diff directory {path} does not exist")
+    pending = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [n for n in dirs if not n.startswith((".", "_"))]
+        for n in files:
+            p = os.path.join(d, n)
+            if (
+                fnmatch.fnmatch(n, "*.osc*")
+                and not n.startswith((".", "_"))
+                and state_from_path(p) > after
+            ):
+                pending.append(p)
+    if not pending:
+        return spark.createDataFrame([], ELEMENT_SCHEMA)
     cols = [
         "state", "seq", "action", "kind", "element_id",
         "new_lat", "new_lon",
@@ -229,39 +192,8 @@ def _osc_files_to_elements(files: DataFrame) -> DataFrame:
                 out.extend(parse_osc_elements(bytes(content), state_from_path(p)))
             yield pd.DataFrame(out, columns=cols)
 
+    files = spark.read.format("binaryFile").load(pending)
     return files.select("path", "content").mapInPandas(parse, ELEMENT_SCHEMA)
-
-
-def read_osc_elements_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed three-kind scan of a diff directory (ELEMENT_SCHEMA):
-    same binaryFile -> mapInPandas shape as read_osc_dir, but ways and
-    relations come through with their member lists and optional bbox."""
-    files = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.osc*"
-    ).option("recursiveFileLookup", "true").load(path)
-    return _osc_files_to_elements(files)
-
-
-def stream_osc_elements(spark: SparkSession, path: str) -> DataFrame:
-    """STREAMING three-kind element source over a replication tree:
-    the binaryFile file-stream source discovers new .osc[.gz] files as
-    they land (checkpointed — each file is processed exactly once
-    across restarts), parsed by the same mapInPandas stage as the
-    batch scan. The streaming face of the reference's minutely
-    download loop (/root/reference/src/update.rs:74-144), minus the
-    HTTP fetch (S12, out of engine scope)."""
-    files = (
-        spark.readStream.format("binaryFile")
-        # the binaryFile source's fixed schema; file streams require it
-        # spelled out (no inference on streaming sources)
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.osc*")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
-    return _osc_files_to_elements(files)
 
 
 def _xml_escape(v: str) -> str:
@@ -386,8 +318,9 @@ def elements_to_engine(
     """Split a three-kind element frame into the engine's two change
     models (all JVM-side):
 
-    - point changes (CHANGE_SCHEMA shape): node rows, caption/phash
-      lifted out of the tag map;
+    - point changes (state, seq, action, image_id, new_lat, new_lon,
+      version, new_caption, new_phash): node rows, caption/phash
+      lifted out of the tag list;
     - group changes (group_id, action, kind, new_members): way/relation
       rows with member types mapped into the engine's namespace
       (node -> 'image'; way/relation -> 'group' — the engine
@@ -449,56 +382,6 @@ def elements_to_engine(
         ).alias("new_members"),
     )
     return points, groups
-
-
-def format_osc(rows: list[dict]) -> str:
-    """Change rows -> action-grouped OsmChange XML (wrapper opens/closes
-    when the action changes between consecutive rows, exactly the
-    reference writer's grouping rule)."""
-    out = ['<?xml version="1.0" encoding="UTF-8"?>', '<osmChange version="0.6">']
-    current = None
-    for r in sorted(rows, key=lambda r: r["seq"]):
-        if r["action"] != current:
-            if current is not None:
-                out.append(f"</{current}>")
-            current = r["action"]
-            out.append(f"<{current}>")
-        attrs = f' id="{r["image_id"]}"'
-        if r.get("new_lat") is not None:
-            attrs += f' lat="{r["new_lat"] / 1e7:.7f}" lon="{r["new_lon"] / 1e7:.7f}"'
-        tags = ""
-        if r.get("new_caption") is not None:
-            cap = (
-                str(r["new_caption"]).replace("&", "&amp;").replace("<", "&lt;").replace('"', "&quot;")
-            )
-            tags += f'<tag k="caption" v="{cap}"/>'
-        if r.get("new_phash") is not None:
-            tags += f'<tag k="phash" v="{r["new_phash"]}"/>'
-        if tags:
-            out.append(f"<node{attrs}>{tags}</node>")
-        else:
-            out.append(f"<node{attrs}/>")
-    if current is not None:
-        out.append(f"</{current}>")
-    out.append("</osmChange>")
-    return "\n".join(out) + "\n"
-
-
-def write_osc_tree(changes_pdf: pd.DataFrame, root: str, gz: bool = True) -> list[str]:
-    """Write per-state diffs into the reference's 3/3/3 sharded tree."""
-    paths = []
-    for state, grp in changes_pdf.groupby("state"):
-        split = _shard(state)
-        d = os.path.join(root, os.path.dirname(split))
-        os.makedirs(d, exist_ok=True)
-        p = os.path.join(root, split + ".osc" + (".gz" if gz else ""))
-        payload = format_osc(grp.to_dict("records")).encode()
-        if gz:
-            payload = gzip.compress(payload, mtime=0)  # deterministic bytes
-        with open(p, "wb") as f:
-            f.write(payload)
-        paths.append(p)
-    return paths
 
 
 def _shard(state: int) -> str:

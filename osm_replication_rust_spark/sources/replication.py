@@ -17,7 +17,8 @@ Protocol (observable behavior parity):
 This is DRIVER-side I/O (a handful of small files per polling cycle),
 deliberately not distributed: the heavy lifting — parsing and applying
 the fetched diffs — happens in the Spark pipeline that consumes the
-downloaded tree (cli.py update / --follow streaming).
+downloaded tree (cli.py update, which reads only the states above the
+store's cursor).
 """
 
 from __future__ import annotations

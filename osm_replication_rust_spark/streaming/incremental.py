@@ -1,30 +1,22 @@
-"""Structured-Streaming face of the incremental pipeline.
+"""Structured-Streaming operators.
 
 The reference's replication loop is micro-batch by construction (one
-minutely .osc diff per state, /root/reference/src/update.rs:74-144), so
-the natural Spark mapping is:
+minutely .osc diff per state, /root/reference/src/update.rs:74-144).
+Diffs are applied by the one batch driver, ``cli.py update``, which
+reads only the states above the store's cursor; this module holds the
+watermarked streaming operators beside it:
 
-- a diff *stream* (files arriving in a directory, or a rate/Kafka
-  source) processed with ``foreachBatch`` — each micro-batch runs the
-  same set-based stages as plans/pipeline.run_update and commits through
-  the idempotent TableStore (exactly-once via state-keyed MERGE);
-- watermarked windowed aggregation for the observability stream
-  (events/sec, changes per region per window) — the reference's
-  stats counters (/root/reference/src/osmbin.rs:66-77) as a live query.
-
-No watermark is needed for the diff path itself: event-time == state
-sequence and states are strictly ordered (reference guarantees
-sequential processing; we keep that contract).
+- windowed aggregation for the observability stream (events/sec,
+  changes per region per window) — the reference's stats counters
+  (/root/reference/src/osmbin.rs:66-77) as a live query;
+- stream-stream interval joins, stateful sessions, trajectory segments
+  and speed screens, streaming dedup and rasterization.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.geometry import MultiPolygon
-from ..operators.filter import classify_diff
-from ..operators.merge import TableStore
 
 
 def windowed_change_stats(events: DataFrame, window: str = "5 minutes") -> DataFrame:
@@ -228,32 +220,6 @@ def stateful_sessions(
         _SESSION_STATE_SCHEMA,
         "append",
         GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def stream_update(
-    diff_stream: DataFrame,
-    store: TableStore,
-    regions: list[MultiPolygon],
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Run the incremental update as a streaming query: each micro-batch
-    may contain one or more states; they are applied in order through
-    the idempotent store (re-delivered batches are no-ops). Returns the
-    StreamingQuery handle."""
-    from ..plans.pipeline import run_update
-
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        run_update(store, batch_df, regions, out_dir)
-
-    return (
-        diff_stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
     )
 
 

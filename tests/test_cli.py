@@ -1,5 +1,6 @@
 """CLI end-to-end: import an .osm.pbf, replay diffs through `update`
-(including `--follow` and `--osc-tree`), `read`, `check`, a
+(including `--osc-tree`, the store cursor that keeps applied diffs
+unread, and the group-merge crash heal), `read`, `check`, a
 single-region `filter` extract, `bbox`, `maintain` and the groups
 publish/heal path (the reference's src/bin/{osmbin,update,osmxml}.rs
 surfaces).
@@ -68,7 +69,6 @@ STANDIN_POLY = [
     (-629_500_000, 179_800_000),
     (-629_500_000, 178_500_000),
 ]
-# both diffs change nodes: a diff without node changes applies no state
 STANDIN_OSC_1 = b"""<?xml version="1.0" encoding="UTF-8"?>
 <osmChange version="0.6">
 <create><node id="2619283348" version="1" lat="17.9120000" lon="-62.8150000"/></create>
@@ -264,35 +264,92 @@ def test_cli_update_publishes_region_osc_tree(spark, inputs, tmp_path):
     assert os.path.exists(link)
 
 
-def test_cli_update_follow_streaming(spark, inputs, tmp_path):
-    """`update --follow`: checkpointed file-stream processing — a second
-    CLI invocation resumes from the stream checkpoint and processes
-    ONLY the newly-landed diff file."""
-    store = str(tmp_path / "store")
-    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
-    diffs = tmp_path / "minute" / "000" / "000"
-    diffs.mkdir(parents=True)
+def _update_argv(tmp_path, inputs, store):
+    """`update` argv over tmp_path/minute with the inputs' region."""
     polys = tmp_path / "polys"
     polys.mkdir()
     shutil.copy(inputs["poly"], polys / "saint_barthelemy.poly")
-    argv = [
-        "update", "--follow",
+    (tmp_path / "minute" / "000" / "000").mkdir(parents=True)
+    return [
+        "update",
         "--store", store,
         "--polygons", str(polys),
         "--diffs", str(tmp_path / "minute"),
         "--out", str(tmp_path / "out"),
     ]
+
+
+def test_cli_update_reads_only_pending_diffs(spark, inputs, tmp_path):
+    """Plain `update --osc-tree` over two landings: the second call
+    reads only the newly-landed diff. The applied 001.osc.gz is
+    overwritten with bytes that are not XML first, so re-reading it
+    would fail the call."""
+    store = str(tmp_path / "store")
+    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
+    argv = _update_argv(tmp_path, inputs, store) + ["--osc-tree", str(tmp_path / "tree")]
+    diffs = tmp_path / "minute" / "000" / "000"
     shutil.copy(inputs["osc1"], diffs / "001.osc.gz")
     assert cli.main(argv) == 0
     st = cli._store(spark, store)
     assert st.last_state() == 1
-    # second file lands; restart resumes from the checkpoint
+    (diffs / "001.osc.gz").write_bytes(b"not xml, not gzip")
     shutil.copy(inputs["osc2"], diffs / "002.osc.gz")
     assert cli.main(argv) == 0
     assert cli._store(spark, store).last_state() == 2
     # both states' artifacts exist; state 1 applied once (v1 snapshot dir)
     assert os.path.isdir(os.path.join(store, "points", "v1"))
     assert os.path.isdir(os.path.join(store, "points", "v2"))
+
+
+def _group_rows(spark, store):
+    """group_id -> member refs of the store's groups table."""
+    return {
+        r.group_id: [m.ref for m in r.members]
+        for r in cli._read_groups(spark, store).collect()
+    }
+
+
+def test_cli_update_heals_group_merge_crash(spark, inputs, tmp_path, monkeypatch):
+    """A call that dies after its point commit but before its group
+    merge publishes leaves the cursor behind: the next call re-reads
+    that state and merges its group changes."""
+    from osm_replication_rust_spark.sources.osc import parse_osc_elements
+
+    store = str(tmp_path / "store")
+    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
+    before = _group_rows(spark, store)
+    argv = _update_argv(tmp_path, inputs, store)
+    shutil.copy(inputs["osc1"], tmp_path / "minute" / "000" / "000" / "001.osc.gz")
+
+    real_merge = cli._merge_group_store
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before the group merge")
+
+    monkeypatch.setattr(cli, "_merge_group_store", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cli.main(argv)
+    monkeypatch.setattr(cli, "_merge_group_store", real_merge)
+    assert cli._store(spark, store).last_state() == 1
+    assert _group_rows(spark, store) == before
+
+    assert cli.main(argv) == 0
+    st = cli._store(spark, store)
+    assert st.last_state() == 1 and st.groups_state() == 1
+    # the group store now holds the diff's last word on every way/relation
+    with open(inputs["osc1"], "rb") as f:
+        rows = parse_osc_elements(f.read(), state=1)
+    prefix = {"node": "n", "way": "w", "relation": "r"}
+    want = {}
+    for r in rows:
+        if r["kind"] != "node":
+            gid = prefix[r["kind"]] + r["element_id"]
+            want[gid] = None if r["action"] == "delete" else [
+                prefix[m["type"]] + m["ref"] for m in r["members"]
+            ]
+    assert want
+    got = _group_rows(spark, store)
+    assert {g: got.get(g) for g in want} == want
 
 
 def test_cli_read_bare_numeric_id(spark, store_dir, capsys):

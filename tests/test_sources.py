@@ -8,11 +8,12 @@ from pyspark.sql import functions as F
 
 from osm_replication_rust_spark.datagen.synth import fixture_regions, gen_diffs, gen_images
 from osm_replication_rust_spark.sources.osc import (
-    format_osc,
-    parse_osc_bytes,
-    read_osc_dir,
+    _shard,
+    elements_to_engine,
+    format_osc_elements,
+    parse_osc_elements,
+    read_osc_elements_dir,
     state_from_path,
-    write_osc_tree,
 )
 from osm_replication_rust_spark.sources.poly import (
     format_poly,
@@ -75,45 +76,65 @@ def test_state_from_path():
     assert state_from_path("/x/42.osc") == 42
 
 
+def _node_change(state, seq, action, eid, lat, lon, caption=None, phash=None):
+    """A point change as an ELEMENT_SCHEMA row (caption/phash as tags)."""
+    tags = [{"k": "caption", "v": caption}] if caption is not None else []
+    if phash is not None:
+        tags.append({"k": "phash", "v": str(phash)})
+    return dict(state=state, seq=seq, action=action, kind="node", element_id=eid,
+                new_lat=lat, new_lon=lon, tags=tags or None, members=None, bbox=None)
+
+
 def test_osc_roundtrip():
     rows = [
-        dict(state=7, seq=0, action="create", image_id="img1",
-             new_lat=12_345_678, new_lon=-23_456_789, new_caption='a "quoted" <cap>', new_phash=99),
-        dict(state=7, seq=1, action="create", image_id="img2",
-             new_lat=1, new_lon=2, new_caption=None, new_phash=None),
-        dict(state=7, seq=2, action="modify", image_id="img1",
-             new_lat=5, new_lon=6, new_caption="x", new_phash=None),
-        dict(state=7, seq=3, action="delete", image_id="img2",
-             new_lat=None, new_lon=None, new_caption=None, new_phash=None),
+        _node_change(7, 0, "create", "img1", 12_345_678, -23_456_789, 'a "quoted" <cap>', 99),
+        _node_change(7, 1, "create", "img2", 1, 2),
+        _node_change(7, 2, "modify", "img1", 5, 6, "x"),
+        _node_change(7, 3, "delete", "img2", None, None),
     ]
-    xml = format_osc(rows)
+    xml = format_osc_elements(rows)
     assert xml.count("<create>") == 1 and xml.count("<modify>") == 1
-    back = parse_osc_bytes(xml.encode(), 7)
+    back = parse_osc_elements(xml.encode(), 7)
     assert len(back) == 4
-    assert back[0]["image_id"] == "img1" and back[0]["new_lat"] == 12_345_678
-    assert back[0]["new_caption"] == 'a "quoted" <cap>'
+    assert back[0]["element_id"] == "img1" and back[0]["new_lat"] == 12_345_678
+    assert back[0]["tags"][0] == {"k": "caption", "v": 'a "quoted" <cap>'}
     assert back[3]["action"] == "delete" and back[3]["new_lat"] is None
 
 
 def test_read_osc_dir_and_pipeline(spark, regions, images_pdf, tmp_path):
     """File-driven end to end: diffs written as sharded .osc.gz, read
     back distributedly, driven through the update pipeline."""
+    import gzip
+    import json
+
+    import pandas as pd
+
     from osm_replication_rust_spark.operators.merge import TableStore
     from osm_replication_rust_spark.plans.pipeline import run_update
 
-    diffs_pdf = gen_diffs(images_pdf.iloc[:200], n_batches=2)
-    paths = write_osc_tree(diffs_pdf, str(tmp_path / "osc"))
-    assert all(p.endswith(".osc.gz") for p in paths)
+    def opt(v, cast=lambda v: v):
+        return None if pd.isna(v) else cast(v)
 
-    changes = read_osc_dir(spark, str(tmp_path / "osc"))
+    diffs_pdf = gen_diffs(images_pdf.iloc[:200], n_batches=2)
+    root = tmp_path / "osc"
+    for state, grp in diffs_pdf.groupby("state"):
+        rows = [
+            _node_change(int(state), int(r.seq), r.action, r.image_id,
+                         opt(r.new_lat, int), opt(r.new_lon, int),
+                         opt(r.new_caption), opt(r.new_phash, int))
+            for r in grp.itertuples()
+        ]
+        path = root / (_shard(state) + ".osc.gz")
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(gzip.compress(format_osc_elements(rows).encode()))
+
+    changes, _ = elements_to_engine(read_osc_elements_dir(spark, str(root)))
     got = changes.orderBy("state", "seq").collect()
     want = diffs_pdf.sort_values(["state", "seq"])
     assert len(got) == len(want)
     assert [r.image_id for r in got] == list(want.image_id)
     assert [r.action for r in got] == list(want.action)
     # lat/lon survive the float-degree round trip exactly (decimicro)
-    import pandas as pd
-
     w_lat = [None if pd.isna(v) else int(v) for v in want.new_lat]
     assert [r.new_lat for r in got] == w_lat
 
@@ -121,7 +142,6 @@ def test_read_osc_dir_and_pipeline(spark, regions, images_pdf, tmp_path):
     store.init(spark.createDataFrame(images_pdf[["image_id", "caption", "phash"]].iloc[:200]))
     applied = run_update(store, changes, regions, str(tmp_path / "out"))
     assert applied == [1, 2]
-    import json, os
 
     m1 = json.load(open(tmp_path / "out/metrics/state=1.json"))
     assert m1["tile_rows"] == m1["kept"] + m1["forced_delete"]

@@ -1,7 +1,6 @@
 """Structured Streaming: windowed stats over the events stream driven to
-completion with a memory sink; foreachBatch incremental update."""
-
-import os
+completion with a memory sink; stateful, join, dedup and raster
+streaming operators against their batch twins."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,35 +39,6 @@ def test_windowed_stats_stream_matches_batch(spark, sf_dir, tmp_path):
         q.stop()
     assert got == want
     assert len(got) > 10
-
-
-def test_stream_update_foreachbatch(spark, regions, images_pdf, tmp_path):
-    """Drive the incremental MERGE pipeline through a streaming query;
-    re-delivery is a no-op thanks to the idempotent store."""
-    from osm_replication_rust_spark.datagen.synth import gen_diffs
-    from osm_replication_rust_spark.operators.merge import TableStore
-    from osm_replication_rust_spark.streaming.incremental import stream_update
-
-    base = spark.createDataFrame(images_pdf[["image_id", "caption", "phash"]].iloc[:200])
-    diffs_pdf = gen_diffs(images_pdf.iloc[:200], n_batches=2)
-    diff_dir = str(tmp_path / "diffs")
-    spark.createDataFrame(diffs_pdf).write.parquet(diff_dir)
-
-    store = TableStore(spark, str(tmp_path / "tbl"))
-    store.init(base)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(diff_dir).schema
-    ).parquet(diff_dir)
-    q = stream_update(
-        stream, store, regions, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert store.last_state() == 2
-    assert os.path.exists(str(tmp_path / "out/tiles/state=2"))
 
 
 def test_stateful_sessions(spark, tmp_path):

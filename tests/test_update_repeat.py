@@ -124,3 +124,39 @@ def test_bbox_and_filter_release_their_caches(spark, tmp_path):
     with open(tmp_path / "a.osc", "rb") as f:
         kept = {(r["kind"], r["element_id"]) for r in parse_osc_elements(f.read(), state=1)}
     assert {("node", "5"), ("way", "10")} <= kept
+
+
+DIFF_RELATIONS_ONLY = b"""<?xml version="1.0" encoding="UTF-8"?>
+<osmChange version="0.6">
+<modify>
+  <relation id="20" version="2">
+    <member type="way" ref="10" role="outer"/>
+    <member type="node" ref="3" role=""/>
+    <member type="node" ref="2" role="label"/>
+  </relation>
+</modify>
+</osmChange>
+"""
+
+
+def test_relation_only_diff_applies_its_state(spark, tmp_path):
+    """A diff that changes no node still advances the store: its state
+    is committed, its group bboxes are published and the relation is
+    merged into the groups table."""
+    store = str(tmp_path / "store")
+    osm = tmp_path / "base.osm"
+    osm.write_bytes(STORE_OSM)
+    polys = str(tmp_path / "polys")
+    write_region_dir(fixture_regions(), polys)
+    diffs = str(tmp_path / "diffs")
+    out = str(tmp_path / "out")
+    assert cli.main(["import", str(osm), "--store", store]) == 0
+
+    _land(diffs, 1, DIFF_RELATIONS_ONLY)
+    assert cli.main(["update", "--store", store, "--polygons", polys, "--diffs", diffs, "--out", out]) == 0
+    assert cli._store(spark, store).last_state() == 1
+    bb = spark.read.parquet(os.path.join(out, "bbox_groups", "state=1"))
+    assert {r.group_id for r in bb.collect()} == {"r20"}
+    groups = spark.read.parquet(os.path.join(store, "groups.parquet"))
+    r20 = groups.filter(F.col("group_id") == "r20").collect()[0]
+    assert [m.ref for m in r20.members] == ["w10", "n3", "n2"]
