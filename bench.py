@@ -25,32 +25,13 @@ from osm_replication_rust_spark.datagen.synth import fixture_regions  # noqa: E4
 from osm_replication_rust_spark.operators.spatial_join import assign_regions  # noqa: E402
 from osm_replication_rust_spark.session import get_spark  # noqa: E402
 
-# catalog queries worth timing (mix of relational, geometry, window,
-# dedup, similarity, streaming-shaped)
+# catalog queries worth timing (the engine's scan-shaped rows: the
+# spatial join, the geo codecs, bbox aggregation and the MERGE)
 BENCH_QUERIES = [
-    "q01_pricing_summary",
-    "q03_shipping",
     "spatial_join_tiles",
     "footprint_roundtrip",
     "bbox_agg",
-    "knn",
-    "topk_per_group",
-    "dedup_last_writer",
-    "ngram_jaccard",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "cosine_topk",
-    "ivf_topk",
-    "asof_join",
-    "rollup_revenue",
-    "stream_window_stats",
     "merge_upsert",
-    "rasterize_density",
-    "tile_pyramid",
-    "zonal_stats",
-    "text_features",
-    "clip_to_tiles",
-    "stream_rasterize",
 ]
 
 

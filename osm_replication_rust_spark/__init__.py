@@ -10,9 +10,8 @@ as set-based DataFrame operators over parquet/Iceberg-shaped tables:
   join + exact point-in-polygon refine (reference src/osmxml/filter.rs)
 - incremental replication via idempotent MERGE + checkpoint manifests
   (reference src/update.rs, src/osmbin.rs)
-
-plus the large-scale training-data operators (dedup, ANN, text quality,
-multimodal plumbing) a 100 TB pipeline needs.
+- point tiling to the region hierarchy (``assign_regions``)
+- OSM sources: PBF import, OsmChange diffs, ``.poly`` region trees
 
 Nothing here is a port: the reference is a single-process streaming Rust
 engine; this package declares logical plans with the DataFrame API and

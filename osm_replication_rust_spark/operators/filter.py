@@ -98,7 +98,9 @@ def cascade_classify(
     """Literal re-expression of the reference's recursive fan-out
     (/root/reference/src/diffs.rs:168-191): each child filters its
     PARENT'S output rows (with the parent's possibly-overridden action).
-    Used as the semantics oracle for :func:`classify_diff`."""
+    Used as the semantics oracle for :func:`classify_diff` on small
+    inputs: nothing is cached, so each region's plan recomputes its
+    ancestors' joins and no persisted frame outlives the call."""
     eff = effective_changes(changes, base).select(
         "image_id", "action", "eff_lat", "eff_lon"
     )
@@ -126,7 +128,7 @@ def cascade_classify(
             F.when(F.col("in_poly"), F.col("action"))
             .otherwise(F.lit("delete"))
             .alias("action"),
-        ).persist()
+        )
         outputs.append(
             mine.select(
                 "image_id",

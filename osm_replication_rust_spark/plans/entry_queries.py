@@ -1,6 +1,8 @@
-"""The engine's query catalog: every operator exposed through the driver
-contract, each as (PySpark callable, DuckDB oracle SQL) built from shared
-definitions so the arithmetic matches bit-for-bit.
+"""The engine's query catalog: the flagship tile assignment plus the
+engine's own operators (codecs, bbox, spatial join, filter, merge,
+closure, OsmChange/.poly/PBF sources) exposed through the driver
+contract, each as (PySpark callable, DuckDB oracle SQL) built from
+shared definitions so the arithmetic matches bit-for-bit.
 
 Query keys map to SURVEY.md §2 operator ids in each docstring.
 """
@@ -8,23 +10,15 @@ Query keys map to SURVEY.md §2 operator ids in each docstring.
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import coords as C
-from ..functions import geometry as G
 from ..functions.geometry import MultiPolygon
 from ..datagen.synth import fixture_regions
-from ..operators.iou import sql_iou_exprs
-from ..operators.knn import IDW_SCALE_K
 from ..operators.spatial_join import assign_regions
-
-#: bbox_intersects IoU fold: threshold 1/10, parity-split user boxes
-_IOU_MIN = (1, 10)
-_IOU_INTER, _IOU_UNI, _IOU_IOU = sql_iou_exprs("a", "b")
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
@@ -52,66 +46,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-@functools.lru_cache(maxsize=None)
-def _rg_count(sf_dir: str, name: str) -> int:
-    """Effective scan parallelism of a parquet table: its total ROW
-    GROUP count (a split without a row-group midpoint reads zero rows,
-    so the split count overstates parallelism on coarse layouts; at
-    production scale row groups >> cores and callers' rebalances
-    become no-ops). Footer-only read, driver-side, cached."""
-    import glob as _glob
-    import pyarrow.parquet as _pq
-
-    path = f"{sf_dir}/{name}.parquet"
-    files = [path] if os.path.isfile(path) else _glob.glob(f"{path}/*.parquet")
-    if not files:
-        return 1 << 30  # unknown layout: never force an exchange
-    try:
-        return sum(_pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    except Exception:  # noqa: BLE001 - unreadable footer: assume fine layout
-        return 1 << 30
-
-
-def _rebalance(
-    spark: SparkSession,
-    df: DataFrame,
-    key: str | tuple[str, ...] | None = None,
-    eff: int | None = None,
-) -> DataFrame:
-    """Spread a narrow scan across the cluster before EXPENSIVE per-row
-    map work (string expressions, Arrow kernels). The testdata parquet
-    is one row group per file, so Spark's split planner yields ONE scan
-    partition and a map-heavy projection serializes on a single core
-    (measured: 12 s single-task vs sub-second spread for
-    text_features). At 100 TB a scan arrives in thousands of splits and
-    this is a no-op (partitions >= parallelism); the exchange only
-    fires when the scan under-parallelizes, and moves just the input
-    columns, never the computed ones.
-
-    ``key``: hash-distribute on this (unique, deterministic) column
-    instead of round-robin. Keyless ``repartition(n)`` pays a local
-    sort of its input first (sortBeforeRepartition, needed for
-    deterministic retries) — on the one fat scan partition that sort
-    is single-threaded dead time, and a deterministic key sidesteps
-    the retry hazard by construction (guide §2.5). A unique id hashes
-    evenly over any partition count. Passing the DOWNSTREAM clustering
-    key (e.g. a window's partition key) is doubly effective: the
-    exchange both spreads the scan and already satisfies the window's
-    required distribution, so no second exchange fires AND map-side
-    WindowGroupLimit filtering stays exact (guide §2.4 — two
-    operations keyed the same way share one exchange)."""
-    par = spark.sparkContext.defaultParallelism
-    # ``eff``: the caller's better estimate of real scan parallelism
-    # (e.g. _rg_count — the split count lies when a file has fewer row
-    # groups than byte-range splits)
-    if (eff if eff is not None else df.rdd.getNumPartitions()) >= par:
-        return df
-    if key is not None:
-        keys = (key,) if isinstance(key, str) else tuple(key)
-        return df.repartition(par, *[F.col(k) for k in keys])
-    return df.repartition(par)
-
-
 # ---------------------------------------------------------------------------
 # flagship: spatial join / tiling (S4+S5, P2, P3, J3, O1)
 # ---------------------------------------------------------------------------
@@ -131,100 +65,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# relational core (scan/filter/agg/join surface the reference exercises
-# through its streaming passes; expressed over the driver star schema)
+# scalar geo codecs (F1/F3) and bbox aggregation (A1/A2)
 # ---------------------------------------------------------------------------
-
-#: histogram sketch range for the q01 median column: l_extendedprice at
-#: any SF stays well under 110592 = 432 * 256 (TPC-H price formula tops
-#: out ~104k); 256 integer-width bins -> median within 432 of exact
-_Q01_HIST = (0, 110592, 256)
-
-
-def _fill_q01_oracle() -> None:
-    from ..operators.sketch import sql_hist_quantile
-
-    med = sql_hist_quantile(
-        "lineitem",
-        "l_extendedprice",
-        0.5,
-        *_Q01_HIST,
-        group_exprs=["l_returnflag", "l_linestatus"],
-        est_col="price_p50_est",
-        where="l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'",
-    )
-    _ORACLES["q01_pricing_summary"] = f"""
-    WITH med AS ({med}
-    )
-    SELECT a.l_returnflag, a.l_linestatus,
-           a.sum_qty, a.sum_base, a.sum_disc, a.sum_charge, a.avg_qty, a.n,
-           med.price_p50_est
-    FROM (
-      SELECT l_returnflag, l_linestatus,
-             sum(l_quantity)                                       AS sum_qty,
-             sum(l_extendedprice)                                  AS sum_base,
-             sum(l_extendedprice * (1 - l_discount))               AS sum_disc,
-             sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS sum_charge,
-             avg(l_quantity)                                       AS avg_qty,
-             count(*)                                              AS n
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      GROUP BY l_returnflag, l_linestatus
-    ) a
-    JOIN med USING (l_returnflag, l_linestatus)
-    ORDER BY a.l_returnflag, a.l_linestatus
-    """
-
-
-@register(
-    "q01_pricing_summary",
-    None,  # filled below (_fill_q01_oracle — shares the histogram twin)
-)
-def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1-style multi-agg (hash agg, partial+final) with pushdown
-    filter, plus the bounded-bin histogram-quantile sketch: each
-    pricing-summary group carries the approximate MEDIAN extended price
-    (price_p50_est) from a 256-bin equi-width histogram — per-group agg
-    state capped at n_bins counters however many rows, exact integer
-    cumulative counts, one shared interpolation so the DuckDB twin
-    emits bit-identical doubles. The exact percentile alternative sorts
-    (or carries QuantileSummaries state for) every group member."""
-    from ..operators.sketch import hist_bins, hist_quantile
-
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    agg = (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base"),
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc"),
-            F.sum(
-                F.col("l_extendedprice")
-                * (1 - F.col("l_discount"))
-                * (1 + F.col("l_tax"))
-            ).alias("sum_charge"),
-            F.avg("l_quantity").alias("avg_qty"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    bins = hist_bins(
-        li, "l_extendedprice", *_Q01_HIST, group_cols=["l_returnflag", "l_linestatus"]
-    )
-    med = hist_quantile(
-        bins, 0.5, *_Q01_HIST,
-        group_cols=["l_returnflag", "l_linestatus"],
-        out_col="price_p50_est",
-    )
-    return (
-        agg.join(F.broadcast(med), ["l_returnflag", "l_linestatus"])
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-_fill_q01_oracle()
-
 
 # fixed probe bbox for the gated Hilbert range-cover columns: sits
 # inside the derived ±2.2° footprint band so both branches of the
@@ -433,452 +275,8 @@ def sql_buffer_dist(mp: MultiPolygon, lon: str, lat: str, buffer: int) -> str:
     return "(" + " OR ".join(terms) + ")"
 
 
-#: DBSCAN gate fixture: 1000 points on quadratic/cubic mixed keys (the
-#: standard derived_lat/lon(event_id) pair is a 1-D lattice — every
-#: point has many near neighbors and DBSCAN degenerates to one giant
-#: cluster; the nonlinear keys scatter points ~uniformly). At eps =
-#: 1.5e6 decimicro / min_pts 3 the labeling is genuinely mixed:
-#: 873 cores / 49 clusters / 67 border / 60 noise, max cluster 134
-#: (closure ~50k tuples — affordable for the oracle's reachability CTE)
-_DBSCAN_EPS = 1_500_000
-_DBSCAN_MIN_PTS = 3
-_DBSCAN_RES = 21
-_DBSCAN_N = 1000
-_DBSCAN_KLAT = "(point_id * point_id) % 999983"
-_DBSCAN_KLON = "(point_id * point_id * point_id + 5) % 999979"
-
-
-def _sql_dbscan_ctes() -> str:
-    """The DBSCAN oracle twin as a reusable CTE block (requires WITH
-    RECURSIVE in the enclosing query): quadratic eps-disk pair set
-    (incl. the self pair — self counts, the eps_neighbor_counts
-    contract), core detection, reachability closure over core-core
-    pairs (min reachable core id == the component label), the
-    deterministic min-labeled-core border rule, and the global
-    counts + full-labeling md5 signature."""
-    klat = _DBSCAN_KLAT.replace("point_id", "i")
-    klon = _DBSCAN_KLON.replace("point_id", "i")
-    return f"""
-    dp AS (
-      SELECT i AS point_id,
-             {C.sql_derived_lat(klat)} AS lat,
-             {C.sql_derived_lon(klon)} AS lon
-      FROM range(0, {_DBSCAN_N}) t(i)
-    ),
-    dd AS (
-      SELECT a.point_id AS pa, b.point_id AS pb
-      FROM dp a JOIN dp b
-        ON (a.lat - b.lat) * (a.lat - b.lat)
-           + (a.lon - b.lon) * (a.lon - b.lon)
-           <= CAST({_DBSCAN_EPS} AS BIGINT) * {_DBSCAN_EPS}
-    ),
-    dcore AS (
-      SELECT pa FROM dd GROUP BY pa HAVING count(*) >= {_DBSCAN_MIN_PTS}
-    ),
-    dcp AS (
-      SELECT pa, pb FROM dd
-      WHERE pa IN (SELECT pa FROM dcore) AND pb IN (SELECT pa FROM dcore)
-    ),
-    dreach(id, rt) AS (
-      SELECT pa, pa FROM dcp
-      UNION
-      SELECT c.pa, dreach.rt FROM dcp c JOIN dreach ON dreach.id = c.pb
-    ),
-    dlab AS (SELECT id, min(rt) AS cluster FROM dreach GROUP BY id),
-    dbord AS (
-      SELECT dd.pa AS id, min(l.cluster) AS cluster
-      FROM dd JOIN dlab l ON l.id = dd.pb
-      WHERE dd.pa NOT IN (SELECT pa FROM dcore)
-      GROUP BY dd.pa
-    ),
-    dall AS (
-      SELECT dp.point_id,
-             dl.id IS NOT NULL AS is_core,
-             COALESCE(dl.cluster, db2.cluster) AS cluster
-      FROM dp
-      LEFT JOIN dlab dl ON dl.id = dp.point_id
-      LEFT JOIN dbord db2 ON db2.id = dp.point_id
-    ),
-    dglob AS (
-      SELECT CAST(SUM(CASE WHEN is_core THEN 1 ELSE 0 END) AS BIGINT)
-               AS dbscan_n_core,
-             CAST(COUNT(DISTINCT cluster) AS BIGINT) AS dbscan_n_clusters,
-             CAST(SUM(CASE WHEN cluster IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS dbscan_n_noise,
-             md5(string_agg(
-               point_id || ':' || COALESCE(CAST(cluster AS VARCHAR), 'n'),
-               ',' ORDER BY point_id)) AS dbscan_sig
-      FROM dall
-    )"""
-
-
 _EV_LAT = C.sql_derived_lat("event_id")
 _EV_LON = C.sql_derived_lon("event_id")
-
-#: fixed-radius parameters shared by the knn row's n_eps column and the
-#: pip_polygon row's IDW fold: 0.5 deg radius, counted at res 23
-#: (cell edge 2^23 >= eps -> 3x3 disk)
-_KNN_EPS = 5_000_000
-_KNN_EPS_RES = 23
-#: hex binning fold on the pip_polygon row: circumradius 0.025 deg
-_HEX_GATE_SIZE = 250_000.0
-_HEX_Q_SQL, _HEX_R_SQL = C.sql_hex_cell("hp.lon", "hp.lat", _HEX_GATE_SIZE)
-#: skyline fold on the pip_polygon row: 5 deg grid buckets (~36 occupied
-#: over the fixture's +-90 deg lat span) — correctness is
-#: bucket-invariant (tested), the width only sizes the carry
-_SKY_BUCKET_W = 50_000_000
-#: point-pattern folds on the pip_polygon row: Ripley radii 0.15/0.3/
-#: 0.6 deg and variogram lag grid 4 x 0.2 deg over the SAME dp
-#: fixture, both at res 23 (cell edge 2^23 covers the max radius ->
-#: 3x3 disk)
-_RIPLEY_RADII = (1_500_000, 3_000_000, 6_000_000)
-_VG_LAG_W, _VG_NBINS = 2_000_000, 4
-_PP_RES = 23
-
-
-@register(
-    "pip_polygon",
-    f"""
-    WITH RECURSIVE
-    {_sql_dbscan_ctes()},
-    pip AS (
-      SELECT event_id FROM events
-      WHERE {sql_raycast(fixture_regions()[5], _EV_LON, _EV_LAT)}
-    ),
-    ipts AS (
-      SELECT event_id, {_EV_LAT} AS lat, {_EV_LON} AS lon FROM events
-    ),
-    idwd AS (
-      -- IDW with quantized integer weights wq = K // max(dist2, 1)
-      -- (operators/knn.idw_interpolate): exact HUGEINT sums, ONE
-      -- shared division; queries are the pip points themselves
-      SELECT q.event_id,
-             (q.lat - s.lat) * (q.lat - s.lat)
-             + (q.lon - s.lon) * (q.lon - s.lon) AS dist2,
-             s.event_id % 97 + 1 AS pv
-      FROM (SELECT p.event_id, i.lat, i.lon
-            FROM pip p JOIN ipts i USING (event_id)) q, ipts s
-    ),
-    iagg AS (
-      SELECT event_id,
-             CAST(COALESCE(SUM(CASE WHEN dist2 <= CAST({_KNN_EPS} AS BIGINT)
-                                         * {_KNN_EPS} THEN 1 END), 0)
-                  AS BIGINT) AS n_idw,
-             SUM(CASE WHEN dist2 <= CAST({_KNN_EPS} AS BIGINT) * {_KNN_EPS}
-                 THEN CAST(pv * ({IDW_SCALE_K} // greatest(dist2, 1))
-                           AS HUGEINT) END) AS idw_num,
-             SUM(CASE WHEN dist2 <= CAST({_KNN_EPS} AS BIGINT) * {_KNN_EPS}
-                 THEN CAST({IDW_SCALE_K} // greatest(dist2, 1)
-                           AS HUGEINT) END) AS idw_den
-      FROM idwd GROUP BY event_id
-    ),
-    skyl AS (
-      -- brute NOT-EXISTS skyline twin (operators/relational.
-      -- pareto_frontier): q dominates p iff q <= p on both axes with
-      -- at least one strict; exact duplicates dominate nothing
-      SELECT p.point_id,
-             CAST(CASE WHEN EXISTS (
-               SELECT 1 FROM dp q
-               WHERE q.lat <= p.lat AND q.lon <= p.lon
-                 AND (q.lat < p.lat OR q.lon < p.lon)
-             ) THEN 0 ELSE 1 END AS BIGINT) AS sky
-      FROM dp p
-    ),
-    skyg AS (
-      SELECT CAST(SUM(sky) AS BIGINT) AS sky_n,
-             md5(string_agg(point_id || ':' || sky, ',' ORDER BY point_id))
-               AS sky_sig
-      FROM skyl
-    ),
-    ppd AS (
-      -- ordered i != j pair set of the dp fixture with exact d2 and
-      -- the deterministic sample surface z = point_id % 97 + 1 — the
-      -- brute twin of the engine's single-cell-join candidate pass
-      -- (operators/knn.ripley_k / semivariogram)
-      SELECT (a.lat - b.lat) * (a.lat - b.lat)
-             + (a.lon - b.lon) * (a.lon - b.lon) AS d2,
-             ((a.point_id % 97 + 1) - (b.point_id % 97 + 1))
-             * ((a.point_id % 97 + 1) - (b.point_id % 97 + 1)) AS dz2
-      FROM dp a JOIN dp b ON a.point_id != b.point_id
-    ),
-    ppg AS (
-      SELECT
-        {', '.join(
-            f"CAST(COALESCE(SUM(CASE WHEN d2 <= CAST({r} AS BIGINT) * {r} "
-            f"THEN 1 END), 0) AS BIGINT) AS rip_n_{i}"
-            for i, r in enumerate(_RIPLEY_RADII)
-        )},
-        {', '.join(
-            f"CAST(COALESCE(SUM(CASE WHEN d2 >= CAST({(b * _VG_LAG_W) ** 2} "
-            f"AS BIGINT) AND d2 < CAST({((b + 1) * _VG_LAG_W) ** 2} AS BIGINT) "
-            f"THEN 1 END), 0) AS BIGINT) AS vg_n_{b}, "
-            f"CAST(COALESCE(SUM(CASE WHEN d2 >= CAST({(b * _VG_LAG_W) ** 2} "
-            f"AS BIGINT) AND d2 < CAST({((b + 1) * _VG_LAG_W) ** 2} AS BIGINT) "
-            f"THEN dz2 END), 0) AS BIGINT) AS vg_num_{b}"
-            for b in range(_VG_NBINS)
-        )}
-      FROM ppd
-    ),
-    ppk AS (
-      SELECT CAST({_DBSCAN_N} AS BIGINT) AS rip_pts, ppg.*,
-        {', '.join(
-            f"(1.0 * CAST(rip_n_{i} AS DOUBLE)) "
-            f"/ (CAST({_DBSCAN_N} AS DOUBLE) * CAST({_DBSCAN_N - 1} AS DOUBLE)) "
-            f"AS rip_k_{i}"
-            for i in range(len(_RIPLEY_RADII))
-        )},
-        {', '.join(
-            f"CASE WHEN vg_n_{b} > 0 THEN CAST(vg_num_{b} AS DOUBLE) "
-            f"/ (2.0 * CAST(vg_n_{b} AS DOUBLE)) END AS vg_g_{b}"
-            for b in range(_VG_NBINS)
-        )}
-      FROM ppg
-    ),
-    rtp AS (
-      -- R-tree full-hierarchy assignment twin (operators/rtree.
-      -- assign_regions_rtree): same raycast truth per region
-      {" UNION ALL ".join(
-          f"SELECT event_id, '{mp.region_id}' AS region_id FROM events "
-          f"WHERE {sql_raycast(mp, _EV_LON, _EV_LAT)}"
-          for mp in fixture_regions()
-      )}
-    ),
-    rtg AS (
-      SELECT CAST(count(*) AS BIGINT) AS rt_n,
-             md5(string_agg(CAST(event_id AS VARCHAR) || ':' || region_id,
-                            ',' ORDER BY event_id, region_id)) AS rt_sig
-      FROM rtp
-    )
-    SELECT pip.event_id AS event_id,
-           CAST(da.is_core AS BIGINT) AS dbscan_core,
-           da.cluster AS dbscan_cluster,
-           dg.dbscan_n_core, dg.dbscan_n_clusters, dg.dbscan_n_noise,
-           dg.dbscan_sig,
-           CASE WHEN ia.idw_den IS NOT NULL AND ia.idw_den != 0
-                THEN CAST(ia.idw_num AS DOUBLE) / CAST(ia.idw_den AS DOUBLE)
-           END AS idw,
-           ia.n_idw AS n_idw,
-           CAST(COALESCE(ia.idw_den, 0) AS VARCHAR) AS idw_den_str,
-           {_HEX_Q_SQL} AS hex_q,
-           {_HEX_R_SQL} AS hex_r,
-           sl.sky AS sky,
-           sg.sky_n AS sky_n,
-           sg.sky_sig AS sky_sig,
-           rg.rt_n, rg.rt_sig,
-           pk.*
-    FROM pip
-    LEFT JOIN dall da ON da.point_id = pip.event_id
-    CROSS JOIN dglob dg
-    JOIN iagg ia ON ia.event_id = pip.event_id
-    JOIN ipts hp ON hp.event_id = pip.event_id
-    LEFT JOIN skyl sl ON sl.point_id = pip.event_id
-    CROSS JOIN skyg sg
-    CROSS JOIN rtg rg
-    CROSS JOIN ppk pk
-    ORDER BY pip.event_id
-    """,
-)
-def pip_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2: exact point-in-polygon (pentagon fixture: non-rectilinear
-    edges) through the engine's Arrow kernel; oracle = generated
-    ray-cast SQL over the same edges. PLUS distributed DBSCAN
-    (operators/knn.dbscan — eps-disk pair join + pointer-doubling
-    components + deterministic border/noise rules) over the 1000-point
-    mixed-key fixture (the spatial-clustering sibling of this row's
-    spatial predicate): each pip row carries its event's is_core /
-    cluster label where the fixture covers it (NULL outside — both
-    engines identically), the global core/cluster/noise counts, and an
-    md5 signature of the ENTIRE sorted labeling — one string pinning
-    all 1000 assignments vs the oracle's quadratic pair set +
-    reachability-closure twin. (Folded here, not on the benched knn
-    row: the component loop's per-round driver actions are gate-only
-    cost.)
-
-    PLUS IDW interpolation (operators/knn.idw_interpolate) of the
-    deterministic sample surface v = event_id % 97 + 1, queried AT the
-    pip points themselves (every output row gets its own genuinely
-    distinct estimate): quantized integer weights wq = K div
-    max(dist², 1) make the estimate ONE shared division of two exact
-    decimal(38,0)/HUGEINT sums — bit-reproducible across engines and
-    orderings — with the exact Σwq carried as digits (idw_den_str)
-    behind the float. (Relocated from the benched knn row — the
-    second eps-disk join + decimal agg is gate value, not bench
-    value.)
-
-    PLUS the 2-D Pareto frontier (operators/relational.pareto_frontier
-    — grid-bucketed skyline: per-bucket running-min windows + a
-    one-row-per-bucket prefix-min carry, no O(n²) anywhere) over the
-    SAME 1000-point fixture, minimizing (lat, lon) — the south-west
-    frontier. Each pip row carries its point's sky flag where the
-    fixture covers it, the global frontier size, and an md5 over the
-    ENTIRE sorted labeling vs the oracle's brute NOT-EXISTS twin.
-
-    PLUS the two point-pattern statistics over the SAME fixture, each
-    ONE cell equi-join + ONE global aggregate (operators/knn):
-    Ripley's K at three radii (exact ordered-pair counts + K̂ as a
-    single divide of exact ints) and the empirical semivariogram over
-    a 4-bin lag grid of the z = point_id % 97 + 1 surface (bins decided
-    on exact squared thresholds — no sqrt; γ = Σdz²/(2·n) one divide)
-    vs the oracle's brute quadratic pair set."""
-    from ..operators.knn import dbscan, idw_interpolate, ripley_k, semivariogram
-    from ..operators.relational import pareto_frontier
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    pentagon = fixture_regions()[5]
-    assert pentagon.region_id == "E"
-    pip = (
-        assign_regions(ev, [pentagon], keep_cols=["event_id"], buffer=0)
-        .filter(F.col("in_poly"))
-        .select("event_id")
-    )
-    qi = pip.join(ev, "event_id").select(
-        F.col("event_id").alias("query_id"), "lat", "lon"
-    )
-    samples = ev.select("lat", "lon", (F.col("event_id") % 97 + 1).alias("v"))
-    iw = idw_interpolate(
-        qi, samples, eps=_KNN_EPS, res=_KNN_EPS_RES, v="v"
-    ).withColumnRenamed("query_id", "event_id")
-
-    dpts = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") < _DBSCAN_N)
-        .select(F.col("event_id").alias("point_id"))
-        .select(
-            "point_id",
-            # the SAME spelling as the oracle's dp CTE — single-sourced
-            C.derived_lat(F.expr(_DBSCAN_KLAT)).alias("lat"),
-            C.derived_lon(F.expr(_DBSCAN_KLON)).alias("lon"),
-        )
-    )
-    db = dbscan(
-        dpts, eps=_DBSCAN_EPS, min_pts=_DBSCAN_MIN_PTS, res=_DBSCAN_RES
-    )
-    lab_str = F.concat_ws(
-        ":",
-        F.col("point_id"),
-        F.coalesce(F.col("cluster").cast("string"), F.lit("n")),
-    )
-    dglob = db.agg(
-        F.sum(F.when(F.col("is_core"), 1).otherwise(0))
-        .cast("long")
-        .alias("dbscan_n_core"),
-        F.countDistinct("cluster").cast("long").alias("dbscan_n_clusters"),
-        F.sum(F.when(F.col("cluster").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("dbscan_n_noise"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("point_id"), lab_str.alias("s")))
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("dbscan_sig"),
-    )
-    dlabels = db.select(
-        F.col("point_id").alias("event_id"),
-        # BIGINT, not BOOLEAN: a nullable boolean converts to pandas'
-        # BooleanDtype on one engine and object on the other — the
-        # driver's dtype-sensitive compare sees them as different
-        F.col("is_core").cast("long").alias("dbscan_core"),
-        F.col("cluster").alias("dbscan_cluster"),
-    )
-    # hex binning fold (coords.hex_cell): axial hex id of every pip
-    # point — the shared-IEEE-tree cell family member next to the
-    # exact-integer square/quadkey/geohash/hilbert ids
-    hx = ev.select(
-        "event_id",
-        C.hex_cell(F.col("lon"), F.col("lat"), _HEX_GATE_SIZE).alias("_h"),
-    ).select(
-        "event_id",
-        F.col("_h.hq").alias("hex_q"),
-        F.col("_h.hr").alias("hex_r"),
-    )
-    sk = pareto_frontier(dpts, "lat", "lon", _SKY_BUCKET_W)
-    sky_str = F.concat_ws(":", F.col("point_id"), F.col("sky"))
-    skg = sk.agg(
-        F.sum("sky").cast("long").alias("sky_n"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(F.col("point_id"), sky_str.alias("s"))
-                        )
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("sky_sig"),
-    )
-    sklab = sk.select(F.col("point_id").alias("event_id"), "sky")
-    rip = ripley_k(dpts, list(_RIPLEY_RADII), res=_PP_RES).withColumnRenamed(
-        "n", "rip_pts"
-    )
-    vg = semivariogram(
-        dpts.withColumn("v", F.col("point_id") % 97 + 1),
-        lag_w=_VG_LAG_W,
-        nbins=_VG_NBINS,
-        res=_PP_RES,
-    )
-    # broadcast STR R-tree strategy (operators/rtree.py — the north
-    # rule's "broadcast R-tree" sibling of the cell-prefilter join):
-    # the FULL region hierarchy assigned via tree-walk pruning + the
-    # shared exact kernels, pinned by the global match count and an
-    # md5 over every (event, region) pair vs the raycast-UNION truth
-    from ..operators.rtree import assign_regions_rtree
-
-    rtp = (
-        assign_regions_rtree(
-            ev, fixture_regions(), keep_cols=["event_id"], buffer=0
-        )
-        .filter(F.col("in_poly"))
-        .select("event_id", "region_id")
-    )
-    rtg = rtp.agg(
-        F.count(F.lit(1)).cast("long").alias("rt_n"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("event_id"),
-                                F.col("region_id"),
-                                F.concat_ws(
-                                    ":",
-                                    F.col("event_id").cast("string"),
-                                    F.col("region_id"),
-                                ).alias("s"),
-                            )
-                        )
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("rt_sig"),
-    )
-    return (
-        pip.join(dlabels, "event_id", "left")
-        .crossJoin(F.broadcast(dglob))
-        .join(iw, "event_id")
-        .join(hx, "event_id")
-        .join(sklab, "event_id", "left")
-        .crossJoin(F.broadcast(skg))
-        .crossJoin(F.broadcast(rtg))
-        .crossJoin(F.broadcast(rip))
-        .crossJoin(F.broadcast(vg))
-        .orderBy("event_id")
-    )
 
 
 @register(
@@ -906,1829 +304,9 @@ def spatial_join_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RECT = (2_000_000, -8_000_000, 14_000_000, 6_000_000)  # lon0, lat0, lon1, lat1
-
-
-@register(
-    "bbox_intersects",
-    f"""
-    WITH bb AS (
-      SELECT user_id,
-             min({_EV_LAT}) AS minlat, max({_EV_LAT}) AS maxlat,
-             min({_EV_LON}) AS minlon, max({_EV_LON}) AS maxlon
-      FROM events GROUP BY user_id
-    ),
-    bx AS (
-      -- half-open IoU boxes (operators/iou.py): +1 on the max edges so
-      -- even a single-event user has nonzero area
-      SELECT user_id, minlon AS minx, minlat AS miny,
-             maxlon + 1 AS maxx, maxlat + 1 AS maxy
-      FROM bb
-    ),
-    ip AS (
-      SELECT a.user_id AS a_id, b.user_id AS b_id,
-             {_IOU_INTER} AS inter, {_IOU_IOU} AS iou
-      FROM bx a, bx b
-      WHERE a.user_id % 2 = 0 AND b.user_id % 2 = 1
-        AND {_IOU_INTER} > 0
-        AND {_IOU_INTER} * {_IOU_MIN[1]} >= {_IOU_MIN[0]} * {_IOU_UNI}
-    ),
-    im AS (
-      SELECT a_id, b_id, inter, iou FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY a_id ORDER BY iou DESC, b_id) AS rn
-        FROM ip
-      ) WHERE rn = 1
-    )
-    SELECT user_id,
-           {G.sql_haversine_km('(minlat + maxlat) * 0.5', '(minlon + maxlon) * 0.5',
-                               str((_RECT[1] + _RECT[3]) // 2), str((_RECT[0] + _RECT[2]) // 2))} AS hav_km,
-           im.b_id AS iou_bid,
-           im.iou AS iou,
-           CAST(im.inter AS VARCHAR) AS iou_inter
-    FROM bb LEFT JOIN im ON im.a_id = bb.user_id
-    WHERE NOT (maxlon < {_RECT[0]} OR minlon > {_RECT[2]}
-               OR maxlat < {_RECT[1]} OR minlat > {_RECT[3]})
-    ORDER BY user_id
-    """,
-)
-def bbox_intersects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3: cheap bbox-vs-rect prefilter (the reference's gate before
-    per-node tests, /root/reference/src/osmxml/filter.rs:238-244), plus
-    the geodesic refinement: haversine km from each surviving bbox's
-    center to the query rect's center (geometry.haversine_km — same
-    IEEE tree both engines, round 5) — PLUS the bbox IoU match
-    (operators/iou.py, the detection / label-matching primitive): user
-    boxes split by user_id parity, every even-user box matched to its
-    argmax-IoU odd-user box through the canonical-tile pair join;
-    exact decimal(38,0)/HUGEINT areas (global boxes pass 2^63), the
-    1/10 threshold decided by integer cross-multiplication, the iou
-    double ONE shared division — pinned vs the oracle's brute
-    cross-join twin."""
-    from ..operators.iou import iou_match
-
-    ev = _t(spark, sf_dir, "events")
-    lat = C.derived_lat(F.col("event_id"))
-    lon = C.derived_lon(F.col("event_id"))
-    bb = (
-        ev.select("user_id", lat.alias("lat"), lon.alias("lon"))
-        .groupBy("user_id")
-        .agg(
-            F.min("lat").alias("minlat"),
-            F.max("lat").alias("maxlat"),
-            F.min("lon").alias("minlon"),
-            F.max("lon").alias("maxlon"),
-        )
-    )
-    # half-open IoU boxes: +1 on the max edges (single-event users keep
-    # nonzero area); res 28 = ~26.8 deg tiles over near-global boxes
-    boxes = bb.select(
-        F.col("user_id").alias("box_id"),
-        F.col("minlon").alias("minx"),
-        F.col("minlat").alias("miny"),
-        (F.col("maxlon") + 1).alias("maxx"),
-        (F.col("maxlat") + 1).alias("maxy"),
-    )
-    par = F.pmod(F.col("box_id"), F.lit(2))
-    matched = iou_match(
-        boxes.filter(par == 0), boxes.filter(par == 1),
-        min_iou=_IOU_MIN, res=28,
-    ).select(
-        F.col("a_id").alias("user_id"),
-        F.col("b_id").alias("iou_bid"),
-        F.col("iou"),
-        F.col("inter").cast("string").alias("iou_inter"),
-    )
-    lon0, lat0, lon1, lat1 = _RECT
-    return (
-        bb.filter(
-            ~(
-                (F.col("maxlon") < lon0)
-                | (F.col("minlon") > lon1)
-                | (F.col("maxlat") < lat0)
-                | (F.col("minlat") > lat1)
-            )
-        )
-        .select(
-            "user_id",
-            G.haversine_km(
-                (F.col("minlat") + F.col("maxlat")) * 0.5,
-                (F.col("minlon") + F.col("maxlon")) * 0.5,
-                F.lit((lat0 + lat1) // 2),
-                F.lit((lon0 + lon1) // 2),
-            ).alias("hav_km"),
-        )
-        .join(matched, "user_id", "left")
-        .orderBy("user_id")
-    )
-
-
-@register(
-    "knn",
-    f"""
-    WITH pts AS (
-      SELECT event_id, {_EV_LAT} AS lat, {_EV_LON} AS lon FROM events
-    ),
-    q AS (SELECT event_id AS query_id, lat, lon FROM pts WHERE event_id <= 20),
-    d AS (
-      SELECT q.query_id, p.event_id AS point_id,
-             (q.lat - p.lat) * (q.lat - p.lat)
-             + (q.lon - p.lon) * (q.lon - p.lon) AS dist2
-      FROM q, pts p
-    ),
-    e AS (
-      SELECT query_id,
-             CAST(SUM(CASE WHEN dist2 <= CAST({_KNN_EPS} AS BIGINT) * {_KNN_EPS}
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_eps
-      FROM d GROUP BY query_id
-    ),
-    r AS (
-      SELECT query_id, point_id, dist2,
-             row_number() OVER (PARTITION BY query_id ORDER BY dist2, point_id) AS rank
-      FROM d
-    )
-    SELECT r.query_id, r.point_id, r.dist2, r.rank, e.n_eps
-    FROM r JOIN e ON e.query_id = r.query_id
-    WHERE rank <= 5
-    ORDER BY r.query_id, r.rank
-    """,
-)
-def knn_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6: kNN via cell-ring expansion (oracle = windowed cross join)
-    PLUS the fixed-radius sibling (operators/knn.eps_neighbor_counts,
-    DBSCAN's |N_eps| core-point primitive): each query row also carries
-    its exact eps-disk point count — one cell equi-join + one agg,
-    checked against the oracle's quadratic conditional count. (The IDW
-    interpolation fold lives on the non-benched pip_polygon row — the
-    iterative-operators lesson's sibling: a second eps-disk join +
-    decimal agg is gate value, not bench value, so the benched row
-    keeps measuring the declarative kNN plan alone.)"""
-    from ..operators.knn import eps_neighbor_counts, knn_cell_ring
-
-    pts = _t(spark, sf_dir, "events").select(
-        F.col("event_id"),
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    q = pts.filter(F.col("event_id") <= 20).select(
-        F.col("event_id").alias("query_id"), "lat", "lon"
-    )
-    ne = eps_neighbor_counts(q, pts, eps=_KNN_EPS, res=_KNN_EPS_RES)
-    return (
-        # release_caches=False: the caller (bench noop / gate collect)
-        # consumes the result immediately and the bench clears the
-        # cache between queries — skipping the eager localCheckpoint
-        # saves one whole driver-side job per invocation
-        knn_cell_ring(
-            q,
-            pts.withColumnRenamed("event_id", "point_id"),
-            k=5,
-            release_caches=False,
-        )
-        .join(ne, "query_id")
-        .orderBy("query_id", "rank")
-    )
-
-
-#: node-id modulus of the derived event graph the triangle / PageRank
-#: gates run on: endpoints are the two md5-half 32-bit words of the
-#: event id mod _GRAPH_K — uniform at ANY sf (a digit- or affine-mod
-#: construction either saturates to a complete graph at sf0.01 or
-#: collapses to a functional graph), degree-varied, triangle-rich
-#: (sf0.001: 974 edges / 126 triangles, deg 2-20; sf0.01: 7,969 edges
-#: / 71,379 triangles).
-_GRAPH_K = 211
-_PAGERANK_ITERS = 4
-#: k-core gate parameters: the peel runs on the event_id % 10 subsample
-#: so the DRIVER's sf0.01 gate is the non-trivial one (977 edges, k=6:
-#: 188 survive after 3 genuine peel rounds; the full sf0.01 graph is
-#: dense enough that any fixed k is a no-op). The oracle unrolls
-#: _KCORE_UNROLL simultaneous rounds — past-fixpoint rounds are no-ops,
-#: so the unroll just needs to be >= the fixture's peel depth.
-_KCORE_K = 6
-_KCORE_UNROLL = 10
-#: k-truss gate parameters, same subsample graph: k=4 is the
-#: discriminating choice at the DRIVER's sf0.01 (977 edges -> 12 over
-#: 3 genuine peel rounds + fixpoint confirm; k=3 stops after one peel,
-#: k=5 empties immediately); sf0.001 empties in one round. The oracle
-#: unrolls _KTRUSS_UNROLL simultaneous rounds — past-fixpoint rounds
-#: are no-ops, so the unroll just needs to be >= the peel depth.
-_KTRUSS_K = 4
-_KTRUSS_UNROLL = 6
-#: SCC gate subsample: the DIRECTED md5-half graph at event_id % 23 has
-#: a genuinely mixed census at sf0.01 (one giant 119-node SCC, a 3-SCC,
-#: 84 singletons) and the coloring algorithm retires it in 3 phases
-_SCC_MOD = 23
-
-
-def _graph_raw_edges(
-    spark: SparkSession, sf_dir: str, subsample_mod: int | None = None
-) -> DataFrame:
-    """(a, b) endpoint pairs of the derived event graph — first and
-    second 8 hex chars of md5(event_id) mod _GRAPH_K (both < 2^32,
-    non-negative: plain % agrees across engines; twin inside
-    :func:`_sql_graph_ctes`). ``subsample_mod`` keeps only events with
-    event_id % mod == 0 (the k-core gate's sparser sibling)."""
-    ev = _t(spark, sf_dir, "events")
-    if subsample_mod is not None:
-        ev = ev.filter(F.col("event_id") % subsample_mod == 0)
-    hx = F.md5(F.col("event_id").cast("string"))
-    return ev.select(
-        (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % _GRAPH_K).alias("a"),
-        (F.conv(F.substring(hx, 9, 8), 16, 10).cast("long") % _GRAPH_K).alias("b"),
-    )
-
-
-def _sql_graph_ctes() -> str:
-    """DuckDB twins of the derived event graph + triangle_counts +
-    pagerank (operators/graph.py): degree-ordered oriented wedge join
-    for triangles; the pinned integer PageRank recurrence unrolled
-    _PAGERANK_ITERS times as chained CTEs (sum() is HUGEINT in DuckDB,
-    mirroring the Spark side's decimal(38,0) carry; // == DIV on the
-    non-negative operands)."""
-    K = _GRAPH_K
-    h = "md5(CAST(event_id AS VARCHAR))"
-    scale = 10**12
-    base = (15 * scale) // 100
-    pr = [f"pr0 AS (SELECT id, CAST({scale} AS BIGINT) AS pr FROM gnodes)"]
-    for k in range(_PAGERANK_ITERS):
-        # AS MATERIALIZED: each round is referenced by the next (and the
-        # final round twice) — without it DuckDB re-inlines the whole
-        # chain per reference and the unrolled plan goes exponential
-        # (measured: k-core unroll 10 inline = minutes, materialized =
-        # 0.2 s at sf0.001)
-        pr.append(f"""pr{k + 1} AS MATERIALIZED (
-      SELECT n.id, CAST({base} + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS pr
-      FROM gnodes n LEFT JOIN (
-        SELECT e.b AS id, sum(p.pr // d.od) AS c
-        FROM dedges e JOIN pr{k} p ON p.id = e.a JOIN odeg d ON d.id = e.a
-        GROUP BY e.b) s ON s.id = n.id)""")
-    prs = ",\n    ".join(pr)
-    kc = [f"""kraw AS (SELECT ('0x' || substr({h}, 1, 8))::BIGINT % {K} AS a,
-                    ('0x' || substr({h}, 9, 8))::BIGINT % {K} AS b
-             FROM events WHERE event_id % 10 = 0),
-    kcanon AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-               FROM kraw WHERE a <> b),
-    kboth AS (SELECT a AS id, b AS o FROM kcanon
-              UNION ALL SELECT b AS id, a AS o FROM kcanon),
-    kc0 AS (SELECT DISTINCT id FROM kboth)"""]
-    for r in range(_KCORE_UNROLL):
-        kc.append(f"""kc{r + 1} AS MATERIALIZED (
-      SELECT id FROM (
-        SELECT x.id, count(*) AS c FROM kboth x
-        JOIN kc{r} s1 ON s1.id = x.id
-        JOIN kc{r} s2 ON s2.id = x.o
-        GROUP BY x.id) t WHERE c >= {_KCORE_K})""")
-    kc.append(f"""kcagg AS (
-      SELECT CAST(count(*) AS BIGINT) AS kc_n,
-             md5(COALESCE(string_agg(CAST(id AS VARCHAR), ',' ORDER BY id),
-                          '')) AS kc_sig
-      FROM kc{_KCORE_UNROLL})""")
-    # k-truss twin over the same subsample canon: per round, per-edge
-    # support as the brute common-neighbor wedge count (a DIFFERENT
-    # algorithm from the Spark side's oriented triangle-scatter — two
-    # routes to the unique fixpoint), edges kept at support >= k-2
-    kc.append("kt0 AS (SELECT a, b FROM kcanon)")
-    for r in range(_KTRUSS_UNROLL):
-        kc.append(f"""kts{r} AS MATERIALIZED (SELECT a AS id, b AS o FROM kt{r}
-               UNION ALL SELECT b AS id, a AS o FROM kt{r}),
-    kt{r + 1} AS MATERIALIZED (
-      SELECT e.a, e.b FROM kt{r} e
-      JOIN kts{r} x ON x.id = e.a
-      JOIN kts{r} y ON y.id = e.b AND y.o = x.o
-      GROUP BY e.a, e.b
-      HAVING count(*) >= {_KTRUSS_K - 2})""")
-    kc.append(f"""ktagg AS (
-      SELECT CAST(count(*) AS BIGINT) AS kt_n,
-             md5(COALESCE(string_agg(
-               CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR), ','
-               ORDER BY a, b), '')) AS kt_sig
-      FROM kt{_KTRUSS_UNROLL})""")
-    # link-prediction twin (graph.link_prediction) over the same
-    # subsample graph: brute wedge join on the shared center, non-edge
-    # filter, union size from the canonical degrees; the top candidate
-    # pins (cn DESC, u, v) through one composite integer key (all of
-    # u, v, cn < _GRAPH_K, so the encoding is strictly monotone)
-    kc.append(f"""kdeg AS (SELECT id, count(*) AS deg FROM kboth GROUP BY id),
-    lpw AS (
-      SELECT w1.o AS u, w2.o AS v, CAST(count(*) AS BIGINT) AS cn
-      FROM kboth w1 JOIN kboth w2 ON w1.id = w2.id AND w1.o < w2.o
-      GROUP BY w1.o, w2.o),
-    lp AS (
-      SELECT l.u, l.v, l.cn, du.deg + dv.deg - l.cn AS un
-      FROM lpw l
-      JOIN kdeg du ON du.id = l.u JOIN kdeg dv ON dv.id = l.v
-      WHERE NOT EXISTS (SELECT 1 FROM kcanon c WHERE c.a = l.u AND c.b = l.v)),
-    lpagg AS (
-      SELECT CAST(count(*) AS BIGINT) AS lp_n,
-             arg_min(CAST(u AS VARCHAR) || ':' || CAST(v AS VARCHAR) || ':'
-                       || CAST(cn AS VARCHAR) || ':' || CAST(un AS VARCHAR),
-                     ({_GRAPH_K} - cn) * {_GRAPH_K * _GRAPH_K}
-                       + u * {_GRAPH_K} + v) AS lp_top,
-             md5(COALESCE(string_agg(
-               CAST(u AS VARCHAR) || ':' || CAST(v AS VARCHAR) || ':'
-                 || CAST(cn AS VARCHAR) || ':' || CAST(un AS VARCHAR), ','
-               ORDER BY u, v), '')) AS lp_sig
-      FROM lp)""")
-    kcs = ",\n    ".join(kc)
-    return f"""
-    graw AS (SELECT ('0x' || substr({h}, 1, 8))::BIGINT % {K} AS a,
-                    ('0x' || substr({h}, 9, 8))::BIGINT % {K} AS b
-             FROM events),
-    gcanon AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-               FROM graw WHERE a <> b),
-    gdeg AS (SELECT id, count(*) AS deg FROM (
-               SELECT a AS id FROM gcanon UNION ALL SELECT b AS id FROM gcanon)
-             GROUP BY id),
-    gor AS (
-      SELECT CASE WHEN ord THEN a ELSE b END AS u,
-             CASE WHEN ord THEN b ELSE a END AS v,
-             CASE WHEN ord THEN db ELSE da END AS dv
-      FROM (SELECT c.a, c.b, da.deg AS da, db.deg AS db,
-                   (da.deg < db.deg OR (da.deg = db.deg AND c.a < c.b)) AS ord
-            FROM gcanon c JOIN gdeg da ON da.id = c.a
-                          JOIN gdeg db ON db.id = c.b) s),
-    gtris AS (
-      SELECT o1.u AS x, o1.v AS y, o2.v AS z
-      FROM gor o1 JOIN gor o2 ON o1.u = o2.u
-        AND (o1.dv < o2.dv OR (o1.dv = o2.dv AND o1.v < o2.v))
-      JOIN gor o3 ON o3.u = o1.v AND o3.v = o2.v),
-    gpv AS (SELECT id, count(*) AS tri FROM (
-              SELECT x AS id FROM gtris UNION ALL SELECT y AS id FROM gtris
-              UNION ALL SELECT z AS id FROM gtris) GROUP BY id),
-    gtc AS (SELECT d.id, d.deg, COALESCE(p.tri, 0) AS tri
-            FROM gdeg d LEFT JOIN gpv p ON p.id = d.id),
-    dedges AS (SELECT DISTINCT a, b FROM graw WHERE a <> b),
-    gnodes AS (SELECT DISTINCT id FROM (
-                 SELECT a AS id FROM dedges UNION ALL SELECT b AS id FROM dedges)),
-    odeg AS (SELECT a AS id, count(*) AS od FROM dedges GROUP BY a),
-    {prs},
-    {kcs},
-    tstats AS (SELECT CAST(sum(tri) // 3 AS BIGINT) AS tri_total,
-                      CAST(sum(CAST(tri AS HUGEINT)) AS VARCHAR) AS trans_num_str,
-                      CAST(sum(CAST(deg AS HUGEINT) * (deg - 1)) AS VARCHAR)
-                        AS trans_den_str,
-                      CASE WHEN sum(CAST(deg AS HUGEINT) * (deg - 1)) = 0 THEN NULL
-                           ELSE 2.0 * (CAST(sum(CAST(tri AS HUGEINT)) AS DOUBLE)
-                                       / CAST(sum(CAST(deg AS HUGEINT) * (deg - 1))
-                                              AS DOUBLE)) END AS transitivity,
-                      md5(string_agg(CAST(id AS VARCHAR) || ':' ||
-                                     CAST(deg AS VARCHAR) || ':' ||
-                                     CAST(tri AS VARCHAR), ',' ORDER BY id)) AS tri_sig
-               FROM gtc),
-    ptop AS (SELECT id AS pr_top, pr AS pr_top_val FROM pr{_PAGERANK_ITERS}
-             ORDER BY pr DESC, id LIMIT 1),
-    psig AS (SELECT md5(string_agg(CAST(id AS VARCHAR) || ':' ||
-                                   CAST(pr AS VARCHAR), ',' ORDER BY id)) AS pr_sig
-             FROM pr{_PAGERANK_ITERS}),
-    asamp AS (
-      -- degree assortativity samples: both orientations of every
-      -- canonical edge, degrees at each end (graph.assortativity)
-      SELECT du.deg AS dx, dv.deg AS dy
-      FROM (SELECT a AS u, b AS v FROM gcanon
-            UNION ALL SELECT b AS u, a AS v FROM gcanon) j
-      JOIN gdeg du ON du.id = j.u JOIN gdeg dv ON dv.id = j.v),
-    asr AS (
-      SELECT
-        CAST(COALESCE(count(*)::HUGEINT * SUM(dx::HUGEINT * dy)
-               - SUM(dx::HUGEINT) * SUM(dx::HUGEINT), 0) AS VARCHAR)
-          AS asr_num_str,
-        CAST(COALESCE(count(*)::HUGEINT * SUM(dx::HUGEINT * dx)
-               - SUM(dx::HUGEINT) * SUM(dx::HUGEINT), 0) AS VARCHAR)
-          AS asr_den_str,
-        CASE WHEN count(*)::HUGEINT * SUM(dx::HUGEINT * dx)
-               - SUM(dx::HUGEINT) * SUM(dx::HUGEINT) <> 0 THEN
-          CAST(count(*)::HUGEINT * SUM(dx::HUGEINT * dy)
-               - SUM(dx::HUGEINT) * SUM(dx::HUGEINT) AS DOUBLE)
-          / CAST(count(*)::HUGEINT * SUM(dx::HUGEINT * dx)
-               - SUM(dx::HUGEINT) * SUM(dx::HUGEINT) AS DOUBLE)
-        END AS assortativity
-      FROM asamp),
-    sccE AS (
-      -- DIRECTED subsample graph (graph.scc): a -> b as drawn
-      SELECT DISTINCT ('0x' || substr({h}, 1, 8))::BIGINT % {K} AS a,
-                      ('0x' || substr({h}, 9, 8))::BIGINT % {K} AS b
-      FROM events WHERE event_id % {_SCC_MOD} = 0
-    ),
-    sccEf AS (SELECT a, b FROM sccE WHERE a <> b),
-    sccN AS (SELECT a AS id FROM sccEf UNION SELECT b FROM sccEf),
-    sccR(s, t) AS (
-      -- full directed transitive closure (fixture-scale oracle)
-      SELECT a, b FROM sccEf
-      UNION
-      SELECT r.s, e.b FROM sccR r JOIN sccEf e ON e.a = r.t
-    ),
-    sccP AS (
-      -- mutually reachable ordered pairs
-      SELECT r1.s AS u, r1.t AS v
-      FROM sccR r1 JOIN sccR r2 ON r2.s = r1.t AND r2.t = r1.s
-    ),
-    sccId AS (
-      SELECT n.id, least(n.id, COALESCE(MIN(p.v), n.id)) AS comp
-      FROM sccN n LEFT JOIN sccP p ON p.u = n.id
-      GROUP BY n.id
-    ),
-    sccSz AS (SELECT comp, COUNT(*) AS sz FROM sccId GROUP BY comp),
-    sccagg AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS scc_n,
-             CAST(MAX(sz) AS BIGINT) AS scc_max,
-             CAST(SUM(sz) AS BIGINT) AS scc_nodes
-      FROM sccSz
-    ),
-    sccsig AS (
-      SELECT md5(string_agg(CAST(id AS VARCHAR) || ':' ||
-                            CAST(comp AS VARCHAR), ',' ORDER BY id))
-               AS scc_sig
-      FROM sccId
-    )"""
-
-
-def _graph_sig(id_col: str, parts: list[str]) -> Column:
-    """md5 of 'id:...' rows joined by ',' in id order — the MSF-sig
-    pattern: array_sort of (id, rendered-string) structs sorts
-    numerically by id, then only the strings are hashed."""
-    s = F.concat_ws(":", *[F.col(c).cast("string") for c in [id_col, *parts]])
-    return F.md5(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col(id_col).alias("i"), s.alias("s")))),
-                lambda x: x["s"],
-            ),
-        )
-    )
-
-
-@register(
-    "integrity_anti_join",
-    f"""
-    WITH RECURSIVE dang AS (
-      SELECT DISTINCT l.l_partkey AS dangling_key
-      FROM lineitem l
-      WHERE l.l_partkey NOT IN (SELECT p_partkey FROM part WHERE p_size <= 40)
-    ),{_sql_graph_ctes()}
-    SELECT d.dangling_key, t.tri_total, t.trans_num_str, t.trans_den_str,
-           t.transitivity, t.tri_sig,
-           p.pr_top, p.pr_top_val, g.pr_sig,
-           kca.kc_n, kca.kc_sig, kta.kt_n, kta.kt_sig,
-           lpa.lp_n, lpa.lp_top, lpa.lp_sig,
-           ar.asr_num_str, ar.asr_den_str, ar.assortativity,
-           sa.scc_n, sa.scc_max, sa.scc_nodes, ss.scc_sig
-    FROM dang d CROSS JOIN tstats t CROSS JOIN ptop p CROSS JOIN psig g
-    CROSS JOIN kcagg kca CROSS JOIN ktagg kta CROSS JOIN lpagg lpa
-    CROSS JOIN asr ar CROSS JOIN sccagg sa CROSS JOIN sccsig ss
-    ORDER BY d.dangling_key
-    """,
-)
-def integrity_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5: referential-integrity check as a left anti join (the
-    reference's check_database, /root/reference/src/osmbin.rs:251-363);
-    the p_size filter manufactures dangling refs deterministically.
-    PLUS the two newest graph primitives as riding constants, both
-    over the md5-derived event graph (_graph_raw_edges): per-node
-    TRIANGLE counts (operators/graph.triangle_counts, degree-ordered
-    wedge join) pinned by the global count and an md5 over every
-    (id, deg, tri) row, and fixed-point integer PAGERANK
-    (operators/graph.pagerank, _PAGERANK_ITERS rounds) pinned by the
-    top-ranked node, its exact rank, and an md5 over the entire
-    (id, pr) vector — one string each pinning all 211 node states
-    against the oracle's oriented-wedge / unrolled-recurrence twins.
-    PLUS the k-core (operators/graph.k_core, simultaneous peeling)
-    over the event_id % 10 subsample — see _KCORE_K for why the
-    subsample makes the DRIVER's sf the non-trivial gate — pinned by
-    the core size and an md5 over the surviving id set vs the
-    oracle's unrolled peel-round CTEs.
-    PLUS the k-truss (operators/graph.k_truss, simultaneous EDGE
-    peeling by triangle support) over the same subsample graph at
-    _KTRUSS_K=4 (977 -> 12 edges over 3 genuine peel rounds at
-    sf0.01), pinned by the surviving edge count and an md5 over the
-    ordered edge set — the Spark side enumerates triangles via the
-    degree-oriented wedge join and scatters them to edges, while the
-    oracle's unrolled rounds count brute common-neighbor wedges per
-    edge: two algorithms, one unique fixpoint.
-    PLUS degree assortativity (operators/graph.assortativity) over the
-    FULL event graph: Newman's r as exact decimal(38,0)/HUGEINT moments
-    with ONE shared division, the exact numerator/denominator riding
-    as digit strings behind the float — a loop-free one-aggregation
-    fold.
-    PLUS common-neighbor link prediction (operators/graph.
-    link_prediction) over the subsample graph: every non-edge pair at
-    distance 2 with its common-neighbor and union counts, pinned by
-    the candidate count, an md5 over the complete ordered
-    (u, v, cn, un) set, and the top candidate under the fully-integer
-    (cn DESC, u, v) order — min_by/arg_min over one composite key, so
-    an empty candidate set degrades to NULL instead of zero rows.
-    PLUS global transitivity (operators/graph.transitivity_stats):
-    2·Σtri / Σdeg·(deg−1) over the full-graph triangle frame, exact
-    decimal(38,0)/HUGEINT sums as digit strings behind ONE shared
-    division (the ×2 is IEEE-exact so it commutes with the rounding).
-    (Iterative ops belong on non-benched gate rows: the PR/peel loops
-    cost driver-action rounds whatever the data size.)"""
-    from ..operators.graph import (
-        assortativity,
-        k_core,
-        k_truss,
-        link_prediction,
-        pagerank,
-        scc,
-        transitivity_stats,
-        triangle_counts,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 40)
-    dang = (
-        li.select(F.col("l_partkey").alias("dangling_key"))
-        .join(part.select(F.col("p_partkey").alias("dangling_key")), "dangling_key", "left_anti")
-        .distinct()
-    )
-    raw = _graph_raw_edges(spark, sf_dir)
-    tc = triangle_counts(raw)
-    pr = pagerank(raw, iters=_PAGERANK_ITERS)
-    tstats = tc.agg(
-        F.expr("CAST(sum(tri) DIV 3 AS BIGINT)").alias("tri_total"),
-        _graph_sig("id", ["deg", "tri"]).alias("tri_sig"),
-    ).crossJoin(F.broadcast(transitivity_stats(tc)))
-    ptop = pr.orderBy(F.desc("pr"), F.asc("id")).limit(1).select(
-        F.col("id").alias("pr_top"), F.col("pr").alias("pr_top_val")
-    )
-    psig = pr.agg(_graph_sig("id", ["pr"]).alias("pr_sig"))
-    kraw = _graph_raw_edges(spark, sf_dir, subsample_mod=10)
-    kc = k_core(kraw, k=_KCORE_K)
-    kcagg = kc.agg(
-        F.count(F.lit(1)).cast("long").alias("kc_n"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.col("id"))),
-                    lambda x: x.cast("string"),
-                ),
-            )
-        ).alias("kc_sig"),
-    )
-    kt = k_truss(kraw, k=_KTRUSS_K)
-    ktagg = kt.agg(
-        F.count(F.lit(1)).cast("long").alias("kt_n"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    # struct sort = lexicographic by (a, b), the oracle's
-                    # ORDER BY a, b
-                    F.array_sort(F.collect_list(F.struct("a", "b"))),
-                    lambda s: F.concat_ws(
-                        ":", s["a"].cast("string"), s["b"].cast("string")
-                    ),
-                ),
-            )
-        ).alias("kt_sig"),
-    )
-    lp = link_prediction(kraw)
-    _lps = F.concat_ws(
-        ":",
-        F.col("u").cast("string"),
-        F.col("v").cast("string"),
-        F.col("cn").cast("string"),
-        F.col("un").cast("string"),
-    )
-    lpagg = lp.agg(
-        F.count(F.lit(1)).cast("long").alias("lp_n"),
-        F.min_by(
-            _lps,
-            (F.lit(_GRAPH_K) - F.col("cn")) * (_GRAPH_K * _GRAPH_K)
-            + F.col("u") * _GRAPH_K
-            + F.col("v"),
-        ).alias("lp_top"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("u").alias("u"),
-                                F.col("v").alias("v"),
-                                _lps.alias("s"),
-                            )
-                        )
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("lp_sig"),
-    )
-    # strongly connected components of the DIRECTED subsample graph
-    # (graph.scc, the coloring FW-BW decomposition): census + labeling
-    # signature as riding constants
-    sgraph = _graph_raw_edges(spark, sf_dir, subsample_mod=_SCC_MOD)
-    slab = scc(sgraph)
-    ssz = slab.groupBy("scc").agg(F.count(F.lit(1)).alias("_sz"))
-    sccagg = ssz.agg(
-        F.count(F.lit(1)).cast("long").alias("scc_n"),
-        F.max("_sz").cast("long").alias("scc_max"),
-        F.sum("_sz").cast("long").alias("scc_nodes"),
-    )
-    sccsig = slab.agg(_graph_sig("id", ["scc"]).alias("scc_sig"))
-    return (
-        dang.crossJoin(F.broadcast(tstats))
-        .crossJoin(F.broadcast(ptop))
-        .crossJoin(F.broadcast(psig))
-        .crossJoin(F.broadcast(kcagg))
-        .crossJoin(F.broadcast(ktagg))
-        .crossJoin(F.broadcast(lpagg))
-        .crossJoin(F.broadcast(assortativity(raw)))
-        .crossJoin(F.broadcast(sccagg))
-        .crossJoin(F.broadcast(sccsig))
-        .orderBy("dangling_key")
-    )
-
-
-#: bloom sizing for the incremental-dedup gate: 4096 bits / 3 hashes over
-#: the 500-doc historical fixture gives a measurable-but-small false
-#: positive rate (2/167 novel probes, deterministic — md5-KM slots), so
-#: the driver hash covers real TRUE/FALSE variation in every output column.
-#: At scale m_bits grows with the corpus (16 bits/key ~ 0.05% fp).
-_BLOOM_M, _BLOOM_K = 4096, 3
-
-#: JSONL round-trip hazard suffix: quote, backslash, newline, tab,
-#: BMP unicode (ü é €), an astral pair (𝄞 -> surrogate escaping), and a
-#: control byte — everything a JSON writer must escape and a reader
-#: must recover.  _SQL_JSONL_SPECIALS is the SAME string spelled in
-#: SQL (chr() composition keeps the literal quoting-proof).
-_JSONL_SPECIALS = ' "\\\n\tüé€\U0001d11e\x01'
-_SQL_JSONL_SPECIALS = (
-    "' \"' || chr(92) || chr(10) || chr(9) || chr(252) || chr(233)"
-    " || chr(8364) || chr(119070) || chr(1)"
-)
-
-#: CSV round-trip hazard suffix: comma, RFC-doubled quotes, newline,
-#: tab, semicolon, BMP unicode, and EDGE SPACES (the classic CSV
-#: reader trim hazard — Spark's read-side ignore*WhiteSpace must be
-#: disabled to round-trip).  _SQL_CSV_SPECIALS spells the same string.
-_CSV_SPECIALS = ' ,"q"\n\t;é€ '
-_SQL_CSV_SPECIALS = (
-    "' ,\"q\"' || chr(10) || chr(9) || ';' || chr(233) || chr(8364) || ' '"
-)
-
-
-def _sql_dedup_incremental() -> str:
-    from ..operators.dedup import sql_h64_md5
-    from ..operators.sketch import sql_bloom_hit_expr, sql_bloom_words
-
-    return f"""
-    WITH hist AS (SELECT doc_id, text FROM documents),
-    newb AS (
-      SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 3 = 0
-      UNION ALL
-      SELECT doc_id + 2000000 AS doc_id,
-             text || ' <novel:' || CAST(doc_id + 2000000 AS VARCHAR) || '>' AS text
-      FROM documents WHERE doc_id % 3 = 1
-    ),
-    bw AS ({sql_bloom_words('hist', 'text', _BLOOM_M, _BLOOM_K)}),
-    kp AS (SELECT text, min(doc_id) AS keeper_id FROM hist GROUP BY text),
-    jl AS (
-      -- what the JSONL round-trip MUST return (source-of-truth pins)
-      SELECT CAST(COUNT(*) AS BIGINT) AS jl_n,
-             CAST(SUM(CAST({sql_h64_md5(f"text || {_SQL_JSONL_SPECIALS}")}
-                           AS HUGEINT)) AS VARCHAR) AS jl_h64_sum
-      FROM documents WHERE doc_id % 7 = 0
-    ),
-    cs AS (
-      -- what the CSV round-trip MUST return (same source-of-truth
-      -- discipline; the file is never read here)
-      SELECT CAST(COUNT(*) AS BIGINT) AS cs_n,
-             CAST(SUM(CAST({sql_h64_md5(f"text || {_SQL_CSV_SPECIALS}")}
-                           AS HUGEINT)) AS VARCHAR) AS cs_h64_sum
-      FROM documents WHERE doc_id % 5 = 0
-    )
-    SELECT n.doc_id,
-           {sql_bloom_hit_expr('bw', 'n.text', _BLOOM_M, _BLOOM_K)} AS bloom_hit,
-           kp.keeper_id IS NOT NULL AS is_dup,
-           kp.keeper_id,
-           jl.jl_n, jl.jl_h64_sum, cs.cs_n, cs.cs_h64_sum
-    FROM newb n LEFT JOIN kp ON kp.text = n.text
-    CROSS JOIN jl
-    CROSS JOIN cs
-    ORDER BY n.doc_id
-    """
-
-
-@register("dedup_exact", _sql_dedup_incremental())
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact dedup with a bloom prefilter — the 100 TB shape
-    of "dedupe this crawl against everything previously kept": the
-    historical corpus is summarized by a bounded bloom filter
-    (sketch.bloom_words — m_bits state whatever the corpus size, a few
-    KB broadcast), each new-batch doc probes it MAP-SIDE, bloom-negative
-    docs are DEFINITELY novel and bypass the exact-verify join entirely,
-    and in a materialized pipeline bloom-negatives skip the
-    content-keyed verify join entirely — no false negatives means the
-    split form equals the plain left join (pytest pins both the
-    guarantee and the equivalence). This single-query gate runs the
-    ONE-PASS form (plain left join against the keeper map — hash-groupBy
-    min, the classic exact-dedup agg) so the new batch is scanned and
-    hashed once and NULL-text rows survive with bloom_hit NULL, exactly
-    as the oracle SQL emits them; the negatives-bypass split belongs in
-    pipelines that persist the probe output between stages
-    (test_bloom_split_plan_equals_plain_left_join keeps that plan
-    honest). False positives surface as bloom_hit=true/is_dup=false
-    rows.
-
-    Fixture: every %3==0 doc re-arrives as an exact copy (id+1e6), every
-    %3==1 doc re-arrives with novel text (id+2e6)."""
-    from ..operators.sketch import bloom_pack, bloom_probe, bloom_words
-
-    d = _t(spark, sf_dir, "documents")
-    hist = d.select("doc_id", "text")
-    nid = (F.col("doc_id") + 2_000_000).cast("long")
-    newb = d.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    ).unionByName(
-        d.filter(F.col("doc_id") % 3 == 1).select(
-            nid.alias("doc_id"),
-            F.concat(
-                F.col("text"), F.lit(" <novel:"), nid.cast("string"), F.lit(">")
-            ).alias("text"),
-        )
-    )
-    packed = bloom_pack(bloom_words(hist, "text", _BLOOM_M, _BLOOM_K))
-    probed = bloom_probe(newb, packed, "text", _BLOOM_M, _BLOOM_K)
-    keepers = hist.groupBy("text").agg(F.min("doc_id").alias("keeper_id"))
-    # JSONL corpus round-trip (the LLM-corpus interchange format):
-    # write a deterministic sample WITH planted JSON-escaping hazards
-    # (quote, backslash, newline, tab, control byte, BMP + astral
-    # unicode) as JSONL, read it back through Spark's JSON parser, and
-    # pin the global row count + content-hash sum.  The oracle computes
-    # the SAME pins straight from the parquet source — any writer or
-    # reader escaping defect breaks jl_h64_sum.  (DuckDB parsing the
-    # same file bytes is pinned in test_dedup's twin test.)
-    import tempfile
-
-    from ..operators.dedup import h64_md5
-
-    samp = d.filter(F.col("doc_id") % 7 == 0).select(
-        "doc_id", F.concat(F.col("text"), F.lit(_JSONL_SPECIALS)).alias("text")
-    )
-    jpath = tempfile.mkdtemp(prefix="spark_graft_jsonl_")
-    samp.coalesce(1).write.mode("overwrite").json(jpath)
-    back = spark.read.schema("doc_id long, text string").json(jpath)
-    jl = back.agg(
-        F.count(F.lit(1)).cast("long").alias("jl_n"),
-        F.sum(h64_md5(F.col("text")).cast("decimal(38,0)"))
-        .cast("string")
-        .alias("jl_h64_sum"),
-    )
-    # CSV corpus round-trip (the other interchange format a corpus
-    # pipeline must not corrupt): RFC-4180 quote doubling on write,
-    # multiLine + whitespace-preserving read — edge spaces, embedded
-    # newlines, commas and doubled quotes all survive or cs_h64_sum
-    # breaks against the parquet-derived pin.
-    csamp = d.filter(F.col("doc_id") % 5 == 0).select(
-        "doc_id", F.concat(F.col("text"), F.lit(_CSV_SPECIALS)).alias("text")
-    )
-    cpath = tempfile.mkdtemp(prefix="spark_graft_csv_")
-    (
-        csamp.coalesce(1)
-        .write.mode("overwrite")
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("header", "true")
-        # the WRITER also trims by default — both sides must preserve
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .csv(cpath)
-    )
-    cback = (
-        spark.read.schema("doc_id long, text string")
-        .option("header", "true")
-        .option("multiLine", "true")
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        .csv(cpath)
-    )
-    cs = cback.agg(
-        F.count(F.lit(1)).cast("long").alias("cs_n"),
-        F.sum(h64_md5(F.col("text")).cast("decimal(38,0)"))
-        .cast("string")
-        .alias("cs_h64_sum"),
-    )
-    return (
-        probed.join(keepers, "text", "left")
-        .select(
-            "doc_id",
-            "bloom_hit",
-            F.col("keeper_id").isNotNull().alias("is_dup"),
-            "keeper_id",
-        )
-        .crossJoin(F.broadcast(jl))
-        .crossJoin(F.broadcast(cs))
-        .orderBy("doc_id")
-    )
-
-
-def _sql_doc_union(max_id: int, copy_mod: int = 7) -> str:
-    """The planted-duplicate document fixture: docs < max_id plus exact
-    copies (id + 1e6) of every copy_mod-th doc."""
-    return f"""
-      SELECT doc_id, text FROM documents WHERE doc_id < {max_id}
-      UNION ALL
-      SELECT doc_id + 1000000, text FROM documents
-      WHERE doc_id % {copy_mod} = 0 AND doc_id < {max_id}
-    """
-
-
-def _sql_jaccard_pairs(fixture_sql: str, threshold: float, out_cols: str) -> str:
-    """Exact word-3-gram Jaccard pair SQL over a (doc_id, text) fixture —
-    the DuckDB twin of dedup.jaccard_from_shingles."""
-    return f"""
-    WITH u AS ({fixture_sql}),
-    toks AS (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS w FROM u),
-    sh AS (
-      SELECT DISTINCT doc_id AS id, array_to_string(w[i:i+2], ' ') AS shingle
-      FROM toks, UNNEST(generate_series(1, greatest(len(w) - 2, 1))) AS t(i)
-      WHERE length(array_to_string(w[i:i+2], ' ')) > 0
-    ),
-    sz AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b USING (shingle)
-      WHERE a.id < b.id GROUP BY a.id, b.id
-    )
-    SELECT {out_cols}
-    FROM inter
-    JOIN sz sa ON sa.id = id_a
-    JOIN sz sb ON sb.id = id_b
-    WHERE CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) >= {threshold}
-    ORDER BY id_a, id_b
-    """
-
-
-@register(
-    "ngram_jaccard",
-    _sql_jaccard_pairs(
-        _sql_doc_union(100),
-        0.5,
-        "id_a, id_b, n_common, "
-        "CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) AS jaccard",
-    ),
-)
-def ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard near-dup pairs via shingle self-join
-    (the SQL-checkable tier of the dedup suite)."""
-    from ..operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    u = d.select("doc_id", "text").unionByName(
-        d.filter(F.col("doc_id") % 7 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    # spread the docs before the shingle explode (same shape as
-    # minhash_lsh_pairs)
-    u = _rebalance(spark, u, key="doc_id", eff=_rg_count(sf_dir, "documents"))
-    return (
-        ngram_jaccard_pairs(u, "text", "doc_id", n=3, threshold=0.5)
-        .select("id_a", "id_b", "n_common", "jaccard")
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _sql_doc_union_typos(max_id: int) -> str:
-    """_sql_doc_union plus planted single-char-DELETION mutants
-    (id + 2e6) of every 5th doc — the edit-distance fold's fixture.
-    The deletion position doc_id % 20 + 1 shifts gram alignment, the
-    case the q-gram count filter (not a positional filter) exists
-    for."""
-    return f"""{_sql_doc_union(max_id)}
-      UNION ALL
-      SELECT doc_id + 2000000,
-             substring(text, 1, doc_id % 20)
-               || substring(text, doc_id % 20 + 2)
-      FROM documents WHERE doc_id % 5 = 0 AND doc_id < {max_id}
-    """
-
-
-def _dedup_components_oracle() -> str:
-    from ..operators.dedup import sql_edit_distance_pairs
-
-    u2 = _sql_doc_union_typos(100)
-    pairs = _sql_jaccard_pairs(u2, 0.5, "id_a, id_b")
-    ed = sql_edit_distance_pairs(u2, 2)
-    return f"""
-    WITH RECURSIVE und AS (
-      SELECT id_a AS a, id_b AS b FROM ({pairs})
-      UNION ALL
-      SELECT id_b, id_a FROM ({pairs})
-    ),
-    reach(id, r) AS (
-      SELECT a, a FROM und
-      UNION
-      SELECT u.a, r.r FROM und u JOIN reach r ON r.id = u.b
-    ),
-    comp AS (SELECT id, min(r) AS keeper_id FROM reach GROUP BY id),
-    ed AS ({ed}),
-    edb AS (
-      SELECT id_a AS id, id_b AS nbr, edist FROM ed
-      UNION ALL
-      SELECT id_b, id_a, edist FROM ed
-    ),
-    edm AS (
-      SELECT id, count(*) AS n_edit_nbrs, min(edist) AS min_edist
-      FROM edb GROUP BY id
-    ),
-    eds AS (
-      SELECT edm.id, edm.n_edit_nbrs, edm.min_edist,
-             min(b.nbr) AS edit_nn
-      FROM edm JOIN edb b ON b.id = edm.id AND b.edist = edm.min_edist
-      GROUP BY edm.id, edm.n_edit_nbrs, edm.min_edist
-    )
-    SELECT comp.id, comp.keeper_id,
-           COALESCE(eds.n_edit_nbrs, 0) AS n_edit_nbrs,
-           eds.min_edist, eds.edit_nn
-    FROM comp LEFT JOIN eds ON eds.id = comp.id
-    ORDER BY comp.id
-    """
-
-
-@register("dedup_components")
-def dedup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the exact near-dup pair graph ->
-    (id, keeper_id): min-label propagation to fixpoint; oracle =
-    recursive-CTE transitive closure with min over reachable ids.
-
-    Round 5: the fixture gains planted single-char-deletion mutants
-    (id + 2e6, every 5th doc) and the row carries the bounded
-    edit-distance join (operators/dedup.edit_distance_pairs — q-gram
-    count-filter banding + levenshtein verify, NEVER all-pairs) as
-    per-id neighbor stats: n_edit_nbrs / min_edist / edit_nn (argmin
-    neighbor, ties to smallest id) at max_dist=2.  The oracle twin is
-    the QUADRATIC length-filtered verify, so the gate also proves the
-    banding complete on the fixture."""
-    from ..operators.dedup import (
-        dedup_components,
-        edit_distance_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    u = d.select("doc_id", "text").unionByName(
-        d.filter(F.col("doc_id") % 7 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    u2 = u.unionByName(
-        d.filter(F.col("doc_id") % 5 == 0).select(
-            (F.col("doc_id") + 2_000_000).alias("doc_id"),
-            F.concat(
-                F.expr("substring(text, 1, doc_id % 20)"),
-                F.expr("substring(text, doc_id % 20 + 2)"),
-            ).alias("text"),
-        )
-    )
-    pairs = ngram_jaccard_pairs(u2, "text", "doc_id", n=3, threshold=0.5)
-    comp = dedup_components(pairs)
-    ed = edit_distance_pairs(u2, "text", "doc_id", max_dist=2, q=3)
-    both = ed.select(
-        F.col("id_a").alias("id"), F.col("id_b").alias("nbr"), "edist"
-    ).unionByName(
-        ed.select(F.col("id_b").alias("id"), F.col("id_a").alias("nbr"), "edist")
-    )
-    eds = (
-        both.groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_edit_nbrs"),
-            F.min(F.struct(F.col("edist"), F.col("nbr"))).alias("_m"),
-        )
-        .select(
-            "id",
-            "n_edit_nbrs",
-            F.col("_m.edist").cast("long").alias("min_edist"),
-            F.col("_m.nbr").alias("edit_nn"),
-        )
-    )
-    return (
-        comp.join(eds, "id", "left")
-        .select(
-            "id",
-            "keeper_id",
-            F.coalesce("n_edit_nbrs", F.lit(0).cast("long")).alias("n_edit_nbrs"),
-            "min_edist",
-            "edit_nn",
-        )
-        .orderBy("id")
-    )
-
-
-_ORACLES["dedup_components"] = _dedup_components_oracle()
-
-
-#: PQ gate parameters: codebooks = quantized subvectors of data vectors
-#: 100..115 (ksub=16), m=4 contiguous subspaces of dsub=16 over dim=64
-_PQ_CB_ID_LO, _PQ_CB_ID_HI = 100, 115
-_PQ_M, _PQ_KSUB, _PQ_DSUB = 4, 16, 16
-_PQ_CB_CACHE: dict = {}
-
-
-def _pq_sql_ctes() -> str:
-    """ADC twin CTE block over the existing qv/iv quantized-list CTEs:
-    same codebook ordering (row_number over vec_id == the numpy stack
-    order), same exact-integer subspace L2 (dot(a,a) - 2dot(a,b) +
-    dot(b,b)), same ties-to-lowest-code argmin, same table-lookup sum
-    and (pq_d2, vec_id) ranking."""
-    m, ksub, dsub = _PQ_M, _PQ_KSUB, _PQ_DSUB
-    l2 = (
-        "list_dot_product({a}, {a}) - 2 * list_dot_product({a}, {b})"
-        " + list_dot_product({b}, {b})"
-    )
-    return f"""
-    cb AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v
-      FROM iv WHERE vec_id BETWEEN {_PQ_CB_ID_LO} AND {_PQ_CB_ID_HI}
-    ),
-    cbs AS (
-      SELECT tj.j, c, list_slice(v, tj.j * {dsub} + 1, tj.j * {dsub} + {dsub}) AS cv
-      FROM cb, UNNEST(generate_series(0, {m - 1})) AS tj(j)
-    ),
-    isub AS (
-      SELECT vec_id, tj.j,
-             list_slice(v, tj.j * {dsub} + 1, tj.j * {dsub} + {dsub}) AS sv
-      FROM iv, UNNEST(generate_series(0, {m - 1})) AS tj(j)
-    ),
-    qsub AS (
-      SELECT query_id, tj.j,
-             list_slice(q, tj.j * {dsub} + 1, tj.j * {dsub} + {dsub}) AS sv
-      FROM qv, UNNEST(generate_series(0, {m - 1})) AS tj(j)
-    ),
-    icodes AS (
-      SELECT vec_id, j, c FROM (
-        SELECT i.vec_id, i.j, s.c,
-               row_number() OVER (PARTITION BY i.vec_id, i.j
-                 ORDER BY {l2.format(a='i.sv', b='s.cv')}, s.c) AS rn
-        FROM isub i JOIN cbs s ON s.j = i.j
-      ) WHERE rn = 1
-    ),
-    qtab AS (
-      SELECT qs.query_id, qs.j, s.c,
-             CAST({l2.format(a='qs.sv', b='s.cv')} AS BIGINT) AS d
-      FROM qsub qs JOIN cbs s ON s.j = qs.j
-    ),
-    adc AS (
-      SELECT t.query_id, ic.vec_id, CAST(SUM(t.d) AS BIGINT) AS pq_d2
-      FROM icodes ic JOIN qtab t ON t.j = ic.j AND t.c = ic.c
-      GROUP BY t.query_id, ic.vec_id
-    ),
-    pqr AS (
-      SELECT query_id, vec_id AS pq_vec_id, pq_d2,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY pq_d2, vec_id) AS rank
-      FROM adc
-    )"""
-
-
-@register(
-    "cosine_topk",
-    f"""
-    WITH qv AS (
-      SELECT vec_id AS query_id,
-             list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000)) AS q
-      FROM embeddings WHERE vec_id < 10
-    ),
-    iv AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000)) AS v
-      FROM embeddings
-    ),
-    d AS (
-      SELECT query_id, vec_id, CAST(list_dot_product(q, v) AS BIGINT) AS dot_q
-      FROM qv, iv
-    ),
-    r AS (
-      SELECT query_id, vec_id, dot_q,
-             row_number() OVER (PARTITION BY query_id ORDER BY dot_q DESC, vec_id) AS rank
-      FROM d
-    ),{_pq_sql_ctes()}
-    SELECT r.query_id, r.vec_id, r.dot_q, r.rank,
-           pqr.pq_vec_id AS pq_vec_id, pqr.pq_d2 AS pq_d2
-    FROM r JOIN pqr ON pqr.query_id = r.query_id AND pqr.rank = r.rank
-    WHERE r.rank <= 3
-    ORDER BY r.query_id, r.rank
-    """,
-)
-def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Similarity search baseline on quantized integer dot products
-    (bit-reproducible across engines; the float cosine path is covered
-    by pytest against numpy). PLUS product quantization
-    (similarity.pq_topk, the billion-scale ANN memory layout): the
-    same queries ranked by the exact-integer ADC distance over m=4
-    codebooks of data subvectors — codes, tables and ranking
-    reproduced bit-for-bit by the oracle's subspace-L2 twin."""
-    import numpy as np
-
-    from ..operators.similarity import _emb_matrix, _quantize, pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # the item side does ALL the per-row work here (64-wide HOF dot per
-    # brute pair, PQ encode Arrow stage): spread the one-row-group scan
-    # first or both run single-task (r6 profile: 10.5 s + 3.3 s
-    # single-task stages at sf1.0; ~1 s each spread over 32)
-    items = _rebalance(spark, emb, key="vec_id", eff=_rg_count(sf_dir, "embeddings"))
-    cb = _PQ_CB_CACHE.get(sf_dir)
-    if cb is None:
-        pdf = (
-            emb.filter(F.col("vec_id").between(_PQ_CB_ID_LO, _PQ_CB_ID_HI))
-            .orderBy("vec_id")
-            .select("embedding")
-            .toPandas()
-        )
-        vq = _quantize(_emb_matrix(pdf["embedding"]))  # (ksub, dim)
-        cb = np.stack(
-            [vq[:, j * _PQ_DSUB : (j + 1) * _PQ_DSUB] for j in range(_PQ_M)]
-        )  # (m, ksub, dsub)
-        _PQ_CB_CACHE[sf_dir] = cb
-    # pre-quantize BOTH sides below the cross join: round(x*1000) per
-    # element otherwise re-evaluates per PAIR inside the dot fold —
-    # 10x per item element for 10 queries. Same rounds, same long
-    # products, bit-identical dot_q (dot_q_expr == quantize + plain
-    # integer zip_with/aggregate by definition).
-    quant = lambda c: F.transform(  # noqa: E731
-        c, lambda x: F.round(x.cast("double") * 1000).cast("long")
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), quant(F.col("embedding")).alias("_qv")
-    )
-    it = items.select("vec_id", quant(F.col("embedding")).alias("_iv"))
-    idot = F.aggregate(
-        F.zip_with(F.col("_qv"), F.col("_iv"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    d = F.broadcast(q).crossJoin(it).withColumn("dot_q", idot)
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"), F.col("vec_id"))
-    pq = pq_topk(
-        emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        ),
-        items,
-        cb,
-        k=3,
-        dim=64,
-    ).select(
-        "query_id", F.col("vec_id").alias("pq_vec_id"), "pq_d2", "rank"
-    )
-    return (
-        d.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "vec_id", "dot_q", "rank")
-        .join(pq, ["query_id", "rank"])
-        .orderBy("query_id", "rank")
-    )
-
-
-#: the fixed relevance query for the pipeline's BM25 selection column
-_BM25_QUERY = ("fast", "vector", "scan", "merge")
-#: decontamination flag threshold (fraction of distinct trigrams shared
-#: with the benchmark slice)
-_CONTAM_THR = 0.2
-#: BPE merge rounds learned on the documents corpus (pretrain row)
-_BPE_MERGES = 5
-
-
-@register(
-    "pretrain_filter_pipeline",
-    None,  # filled below: composed from the shared text-op SQL generators
-)
-def pretrain_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capstone training-data pipeline: quality-filter + language gate +
-    exact-dedup keeper selection + BM25 relevance scoring composed into
-    ONE declarative plan — what a pretraining ingestion job actually
-    runs. Survivors = docs with enough tokens, sane mean token length,
-    some stopword mass, predicted 'en', and that are their duplicate
-    group's keeper; each carries its Okapi BM25 score against the fixed
-    seed query (relevance-weighted sampling weight; 0.0 = no hit) PLUS
-    the benchmark-decontamination screen (operators/contamination.py):
-    distinct word-trigram overlap against the planted benchmark slice
-    (doc_id % 37 == 0), exact integer counts and the one-division
-    fraction so the doubles hash-match bit-for-bit, PLUS the
-    char-bigram LM fluency score (operators/text.bigram_lm_scores —
-    the CCNet-style perplexity filter: corpus-trained add-one-smoothed
-    bigram model, two tiny broadcast aggregates, exact n_bigrams /
-    lm_mass pins behind the float avg log-prob), PLUS BPE tokenizer
-    training (operators/text.bpe_train, Sennrich 2016): 5 merge rounds
-    learned on the corpus — pair statistics over the DISTINCT-WORD
-    frequency table (the corpus is scanned once), argmax under the
-    deterministic (count DESC, a, b) order, greedy non-overlapping
-    merge application as a map-side array fold — the full learned
-    merge table and the before/after corpus token counts pinned as
-    global columns vs the oracle's 5 unrolled list_reduce rounds, PLUS
-    the pipeline's own evaluation metrics (operators/evalmetrics.py):
-    the exact midrank ROC-AUC of n_tokens predicting is_contaminated
-    (Mann-Whitney rank form — num/den pinned as decimal/HUGEINT digit
-    strings behind the one-division float), the 2x2 Pearson
-    chi-square of seed-query relevance (bm25_q > 0) vs contamination
-    (the four exact cells ARE the statistic's integer state), and the
-    exact midrank Spearman rank correlation of n_tokens vs n_shingles
-    (operators/evalmetrics.spearman — CENTERED doubled midranks keep
-    every integer <= n^3, pinned as digit strings behind the one fixed
-    num/sqrt(dx*dy) double tree)."""
-    from ..operators.contamination import contamination_scores
-    from ..operators.dedup import exact_duplicates
-    from ..operators.evalmetrics import (
-        chi2_2x2,
-        ece_quantized,
-        roc_auc,
-        spearman,
-    )
-    from ..operators.text import (
-        bigram_lm_scores,
-        bm25_scores,
-        bpe_train,
-        lang_score,
-        quality_features,
-    )
-
-    # NOT rebalanced (r6): this pipeline fans the scan into ~8 separate
-    # legs; a rebalance exchange per leg (column pruning keeps them
-    # from sharing one) adds more exchange + task-scheduling cost than
-    # the single-task map work it removes — A/B'd 9.8 s vs 11.4 s warm
-    # at sf0.1 with the spread variant
-    d = _t(spark, sf_dir, "documents")
-    q = quality_features(d, "text", "doc_id")
-    lang = lang_score(d, "text", "doc_id")
-    keep_q = q.filter(
-        (F.col("n_tokens") >= 10)
-        & (F.col("mean_tok_len") >= 3)
-        & (F.col("mean_tok_len") <= 12)
-        & (F.col("stopword_ratio") > 0)
-    ).select("doc_id", "n_tokens")
-    keep_lang = lang.filter(F.col("pred_lang") == "en").select("doc_id")
-    dups = exact_duplicates(d, "text", "doc_id")
-    losers = (
-        d.join(dups.select("content_hash", "keeper_id"),
-               F.xxhash64(F.col("text")) == F.col("content_hash"))
-        .filter(F.col("doc_id") != F.col("keeper_id"))
-        .select("doc_id")
-    )
-    bm = bm25_scores(d, "text", "doc_id", _BM25_QUERY)
-    cont = contamination_scores(
-        d, d.filter(F.col("doc_id") % 37 == 0), "text", "doc_id",
-        n=3, threshold=_CONTAM_THR,
-    )
-    lm = bigram_lm_scores(d, "text", "doc_id")
-    bpe_merges, bpe_seg = bpe_train(d, "text", n_merges=_BPE_MERGES)
-    before = F.sum(F.col("wf") * F.length(F.col("w"))).cast("long")
-    after = F.sum(F.col("wf") * F.size(F.col("syms"))).cast("long")
-    bpe_stats = bpe_seg.agg(
-        before.alias("bpe_tokens_before"), after.alias("bpe_tokens_after")
-    )
-    bpe_row = spark.createDataFrame(
-        [tuple(x for m in bpe_merges for x in m)],
-        ", ".join(
-            f"bpe_m{r}_a string, bpe_m{r}_b string, bpe_m{r}_n long"
-            for r in range(_BPE_MERGES)
-        ),
-    )
-    core = (
-        keep_q.join(keep_lang, "doc_id", "left_semi")
-        .join(losers, "doc_id", "left_anti")
-        .join(bm, "doc_id", "left")
-        .join(cont, "doc_id", "left")
-        .join(lm, "doc_id", "left")
-        .select(
-            "doc_id", "n_tokens", F.coalesce("bm25", F.lit(0.0)).alias("bm25_q"),
-            F.coalesce("n_shingles", F.lit(0).cast("long")).alias("n_shingles"),
-            F.coalesce("n_contam", F.lit(0).cast("long")).alias("n_contam"),
-            "contam_frac", "is_contaminated",
-            "n_bigrams", "lm_mass", "lm_avg_logp",
-        )
-    )
-    auc = roc_auc(core, "n_tokens", "is_contaminated", prefix="contam_auc")
-    # calibration of the shingle-derived confidence vs the
-    # contamination label (evalmetrics.ece_quantized — pure-integer
-    # ECE; conf = min(100, 5*n_shingles) is deliberately imperfect)
-    ece = ece_quantized(
-        core.select(
-            F.least(F.lit(100), F.col("n_shingles") * 5).alias("_s"),
-            F.col("is_contaminated").cast("long").alias("_y"),
-        ),
-        "_s",
-        "_y",
-    )
-    chi = chi2_2x2(core, F.col("bm25_q") > 0, "is_contaminated", prefix="rel_chi2")
-    rho = spearman(core, "n_tokens", "n_shingles", prefix="spear")
-    # vocabulary stats (Zipf/hapax screen) off the SAME distinct-word
-    # frequency table the BPE trainer already built — zero extra scans
-    vt = bpe_seg.agg(
-        F.count(F.lit(1)).cast("long").alias("vt_types"),
-        F.sum("wf").cast("long").alias("vt_tokens"),
-        F.coalesce(F.sum(F.when(F.col("wf") == 1, 1)), F.lit(0))
-        .cast("long")
-        .alias("vt_hapax"),
-    )
-    vtop = (
-        bpe_seg.orderBy(F.col("wf").desc(), "w")
-        .limit(1)
-        .select(F.col("w").alias("vt_top_w"), F.col("wf").alias("vt_top_n"))
-    )
-    return (
-        core.crossJoin(F.broadcast(auc))
-        .crossJoin(F.broadcast(chi))
-        .crossJoin(F.broadcast(rho))
-        .crossJoin(F.broadcast(ece))
-        .crossJoin(F.broadcast(vt))
-        .crossJoin(F.broadcast(vtop))
-        .crossJoin(F.broadcast(bpe_row))
-        .crossJoin(F.broadcast(bpe_stats))
-        .orderBy("doc_id")
-    )
-
-
-def _fill_pipeline_oracle() -> None:
-    from ..operators.contamination import sql_contamination_ctes
-    from ..operators.evalmetrics import (
-        sql_chi2_2x2,
-        sql_ece_ctes,
-        sql_roc_auc_ctes,
-        sql_spearman_ctes,
-    )
-    from ..operators.text import (
-        LANG_MARKERS as markers,
-        sql_bigram_lm,
-        sql_bm25,
-        sql_bpe_ctes,
-        sql_occurrences,
-        sql_stopword_hits,
-        sql_token_count,
-    )
-
-    bm25 = sql_bm25(id_out="doc_id", query_terms=_BM25_QUERY)
-    cont = sql_contamination_ctes("doc_id % 37 = 0", n=3)
-    lm = sql_bigram_lm()
-    bpe = sql_bpe_ctes(_BPE_MERGES)
-    bpe_cols = ", ".join(
-        f"bpe.m{r}_a AS bpe_m{r}_a, bpe.m{r}_b AS bpe_m{r}_b, "
-        f"bpe.m{r}_n AS bpe_m{r}_n"
-        for r in range(_BPE_MERGES)
-    )
-
-    ntok = sql_token_count("text")
-    padded = "(' ' || text || ' ')"
-    score = {
-        lang: "(" + " + ".join(sql_occurrences(padded, m) for m in ms) + ")"
-        for lang, ms in markers.items()
-    }
-    _ORACLES["pretrain_filter_pipeline"] = f"""
-    WITH q AS (
-      SELECT doc_id, text, {ntok} AS n_tokens,
-             CAST(length(text) AS DOUBLE) / greatest({ntok}, 1) AS mean_tok_len,
-             CAST(({sql_stopword_hits('text')}) AS DOUBLE) / greatest({ntok}, 1) AS swr
-      FROM documents
-    ),
-    lang AS (
-      SELECT doc_id FROM (
-        SELECT doc_id, {score['en']} AS s_en, {score['de']} AS s_de,
-               {score['fr']} AS s_fr, {score['es']} AS s_es
-        FROM documents
-      ) -- argmax tie rule: ties go to the lexicographically LARGER lang
-        -- (array_max on struct(score, lang)); en beats de on a tie but
-        -- loses ties to es and fr
-      WHERE s_en >= s_de AND s_en > s_fr AND s_en > s_es
-    ),
-    keepers AS (
-      SELECT text, min(doc_id) AS keeper_id, count(*) AS n
-      FROM documents GROUP BY text
-    ),
-    losers AS (
-      SELECT d.doc_id FROM documents d
-      JOIN keepers k ON k.text = d.text
-      WHERE k.n > 1 AND d.doc_id <> k.keeper_id
-    ),
-    bm AS ({bm25}
-    ),{cont},{lm},{bpe},
-    fin AS (
-    SELECT q.doc_id, q.n_tokens, COALESCE(bm.bm25, 0.0) AS bm25_q,
-           COALESCE(cont.n_shingles, 0) AS n_shingles,
-           COALESCE(cont.n_contam, 0) AS n_contam,
-           cont.contam_frac AS contam_frac,
-           cont.contam_frac >= {_CONTAM_THR!r} AS is_contaminated,
-           lm.n_bigrams AS n_bigrams,
-           lm.lm_mass AS lm_mass,
-           lm.lm_avg_logp AS lm_avg_logp,
-           {bpe_cols},
-           bpe.tokens_before AS bpe_tokens_before,
-           bpe.tokens_after AS bpe_tokens_after
-    FROM q
-    LEFT JOIN bm ON bm.doc_id = q.doc_id
-    LEFT JOIN cont ON cont.doc_id = q.doc_id
-    LEFT JOIN lm ON lm.doc_id = q.doc_id
-    CROSS JOIN bpe
-    WHERE q.n_tokens >= 10 AND q.mean_tok_len BETWEEN 3 AND 12 AND q.swr > 0
-      AND q.doc_id IN (SELECT doc_id FROM lang)
-      AND q.doc_id NOT IN (SELECT doc_id FROM losers)
-    ),
-    vtagg AS (
-      -- vocabulary statistics (the Zipf / hapax corpus screen) off the
-      -- SAME word-frequency table the BPE twin builds (bpe_w0)
-      SELECT CAST(COUNT(*) AS BIGINT) AS vt_types,
-             CAST(SUM(wf) AS BIGINT) AS vt_tokens,
-             CAST(COALESCE(SUM(CASE WHEN wf = 1 THEN 1 END), 0) AS BIGINT)
-               AS vt_hapax
-      FROM bpe_w0
-    ),
-    vttop AS (
-      SELECT w AS vt_top_w, wf AS vt_top_n
-      FROM bpe_w0 ORDER BY wf DESC, w LIMIT 1
-    ),{sql_roc_auc_ctes('fin', 'n_tokens', 'is_contaminated', prefix='contam_auc')},{sql_chi2_2x2('fin', 'bm25_q > 0', 'is_contaminated', prefix='rel_chi2')},{sql_spearman_ctes('fin', 'n_tokens', 'n_shingles', prefix='spear')},
-    {sql_ece_ctes('(SELECT least(100, n_shingles * 5) AS s, CAST(is_contaminated AS BIGINT) AS y FROM fin)', 's', 'y')}
-    SELECT fin.*, contam_auc.*, rel_chi2.*, spear.*, vtagg.*, vttop.*, ece.*
-    FROM fin CROSS JOIN contam_auc CROSS JOIN rel_chi2 CROSS JOIN spear
-    CROSS JOIN ece
-    CROSS JOIN vtagg CROSS JOIN vttop
-    ORDER BY fin.doc_id
-    """
-
-
-_fill_pipeline_oracle()
-
-
 # ---------------------------------------------------------------------------
-# text analysis (documents table)
+# membership, three-way filter and MERGE (P4-P6, K3/K4)
 # ---------------------------------------------------------------------------
-
-@register(
-    "text_features",
-    None,  # filled below from the shared sql generators
-)
-def text_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL per-doc text-analysis signals in one scan: whitespace token
-    count, quality features (pretraining filters), marker-token
-    language ID with deterministic argmax, and the rolling-hash
-    fingerprint (vectorized Arrow kernel; oracle = the identical
-    code-point Horner fold in HUGEINT SQL), plus the winnowing
-    (MOSS, SIGMOD'03) substring-fingerprint summary — count and sum of
-    the selected (pos, hash) fingerprints, which pins the whole
-    rightmost-min-per-window selection bit-for-bit against the same
-    HOF expression in DuckDB list_* spelling. (Round 5: consolidation
-    of the former `token_count` / `text_quality` / `lang_id` /
-    `doc_fingerprint` queries — one project over one scan instead of
-    four, and the catalog stays within the driver's 50-row gate.)
-
-    Plus the two deterministic sampling decisions a balanced-corpus job
-    makes on these signals (operators/sampling.py): ``sample_keep`` —
-    per-language Bernoulli rates (downsample the dominant 'en', keep
-    the tail whole) via exact integer hash-ticket thresholds, map-side,
-    reproducible under retries/resumes/engines; and ``lang_head`` —
-    exactly N docs per language uniform-without-replacement (rank by
-    ticket inside the stratum; the one narrow shuffle this plan has
-    besides the display sort).
-
-    And the PII scrub pass (operators/text.py PII block): every 5th doc
-    gets a deterministic email+URL+phone injection, and the gate carries
-    the per-pattern counts plus the 64-bit hash of the REDACTED text —
-    so both detection and the rewrite are driver-verified byte-for-byte
-    against RE2 (regex dialect parity is the whole risk of a scrub pass;
-    the patterns are chosen lookaround-free for exactly that)."""
-    from ..operators.sampling import stratified_fixed_n, stratified_rate_sample
-    from ..operators.text import text_features
-
-    # hash-spread the one-row-group scan BEFORE the heavy per-row text
-    # work (regex stacks, soundex, Arrow winnowing kernels): the whole
-    # map pipeline otherwise runs on a single core (r6 profile: 14.3 s
-    # single-task stage at sf1.0 vs ~5 MB of exchange to avoid it);
-    # both the feature branch and the soundex-blocks agg branch hang
-    # off the same spread frame so each parallelizes (guide §2.5)
-    d = _rebalance(spark, _t(spark, sf_dir, "documents"), key="doc_id", eff=_rg_count(sf_dir, "documents"))
-    tf = text_features(d, "text", "doc_id", extra_cols=list(_text_extra_cols()))
-    # phonetic blocking (entity resolution): the bucket size of each
-    # doc's first-word Soundex key — the candidate-pair budget a
-    # blocked linkage join would pay; tiny key domain, broadcast back
-    blocks = tf.groupBy("sx_first").agg(
-        F.count(F.lit(1)).cast("long").alias("sx_block_n")
-    )
-    tf = tf.join(F.broadcast(blocks), "sx_first", "left")
-    tf = stratified_rate_sample(
-        tf, "pred_lang", _LANG_SAMPLE_RATES, "doc_id", out_col="sample_keep"
-    )
-    tf = stratified_fixed_n(
-        tf, "pred_lang", _LANG_HEAD_N, "doc_id", salt="head", out_col="lang_head"
-    )
-    return tf.orderBy("doc_id")
-
-
-@functools.lru_cache(maxsize=1)
-def _text_extra_cols() -> tuple:
-    """text_features' PII/boilerplate/codec extra columns, built ONCE
-    per process — pure expression trees over the fixed doc_id/text
-    column names (planted-injection literals included), whose
-    construction is ~0.5 s of py4j round-trips per query build."""
-    from ..operators.dedup import h64_md5
-    from ..operators.text import (
-        bpe_token_count,
-        char_entropy_cols,
-        dup_line_frac,
-        pii_count_cols,
-        redact_pii,
-        soundex_expr,
-        url_canonicalize,
-        URL_PATTERN,
-    )
-
-    # planted line-structured boilerplate (the fixture corpus has no
-    # newlines): every 3rd doc gets a duplicated error line + footer,
-    # every 6th an extra copy — dup_line_frac carries 0 / 0.25 / 0.4
-    eline = F.lit("\nError 404: page not found")
-    footer = F.concat(F.lit("\nCopyright "), (F.col("doc_id") % 7).cast("string"))
-    ltxt = F.when(
-        F.col("doc_id") % 6 == 0,
-        F.concat(F.col("text"), eline, eline, eline, footer),
-    ).when(
-        F.col("doc_id") % 3 == 0, F.concat(F.col("text"), eline, eline, footer)
-    ).otherwise(F.col("text"))
-    inj = F.concat(
-        F.lit(" Contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com via https://ex.ample/u/"),
-        F.col("doc_id").cast("string"),
-        F.lit(" or +1 (555) 010-4242."),
-    )
-    ptxt = F.when(F.col("doc_id") % 5 == 0, F.concat(F.col("text"), inj)).otherwise(
-        F.col("text")
-    )
-    return (
-        *pii_count_cols(ptxt),
-        h64_md5(redact_pii(ptxt)).alias("pii_redacted_h64"),
-        dup_line_frac(ltxt).alias("dup_line_frac"),
-        bpe_token_count(F.col("text")).alias("bpe_tokens"),
-        soundex_expr(
-            F.regexp_extract(F.col("text"), r"^\s*(\S+)", 1)
-        ).alias("sx_first"),
-        url_canonicalize(
-            F.nullif(F.regexp_extract(ptxt, URL_PATTERN, 0), F.lit(""))
-        ).alias("url_canon"),
-        # char-entropy quality screen (map-only, zero new exchange)
-        *char_entropy_cols(F.col("text")),
-    )
-
-
-#: stratified sampling knobs for the text_features gate: the fixture
-#: corpus is en-dominant, so 'en' downsamples hard, 'de' lightly, and
-#: unlisted languages (fr/es) keep everything — all three CASE branches
-#: of the threshold expression carry driver-verified variation.
-_LANG_SAMPLE_RATES = {"en": 0.35, "de": 0.75}
-_LANG_HEAD_N = 25
-
-#: the phonetic blocking key's source: the doc's first whitespace token
-#: (regexp_extract group semantics are identical in Java regex / RE2,
-#: both return '' on no-match)
-_SX_FIRST_WORD = r"regexp_extract(text, '^\s*(\S+)', 1)"
-
-
-def _fill_text_oracles() -> None:
-    from ..operators.dedup import sql_h64_md5, winnow_fps_sql, winnow_hashes_sql
-    from ..operators.sampling import (
-        sql_stratified_fixed_n_expr,
-        sql_stratified_keep_expr,
-    )
-    from ..operators.text import (
-        sql_pii_counts,
-        sql_redact_pii,
-        sql_soundex,
-        sql_url_canonicalize,
-        URL_PATTERN,
-    )
-    from ..operators.text import (
-        LANG_MARKERS as markers,
-        sql_bpe_token_count,
-        sql_char_entropy,
-        sql_dup_line_frac,
-        sql_dup_trigram_frac,
-        sql_dup_trigrams,
-        sql_fingerprint,
-        sql_occurrences,
-        sql_stopword_hits,
-        sql_token_count,
-    )
-
-    ntok = sql_token_count("text")
-    padded = "(' ' || text || ' ')"
-    score = {
-        lang: "(" + " + ".join(sql_occurrences(padded, m) for m in ms) + ")"
-        for lang, ms in markers.items()
-    }
-    # argmax with greatest-struct semantics: ties resolve to the
-    # lexicographically largest language (matches F.array_max on
-    # struct(score, lang))
-    wfps = winnow_fps_sql("wh", dialect="duck")
-    inj_sql = (
-        "' Contact user' || CAST(doc_id AS VARCHAR) || "
-        "'@example.com via https://ex.ample/u/' || CAST(doc_id AS VARCHAR) || "
-        "' or +1 (555) 010-4242.'"
-    )
-    ptxt_sql = f"(CASE WHEN doc_id % 5 = 0 THEN text || {inj_sql} ELSE text END)"
-    pii_sql = ",\n           ".join(sql_pii_counts(ptxt_sql))
-    red_sql = f"{sql_h64_md5(sql_redact_pii(ptxt_sql))} AS pii_redacted_h64"
-    eline_sql = "chr(10) || 'Error 404: page not found'"
-    footer_sql = "chr(10) || 'Copyright ' || CAST(doc_id % 7 AS VARCHAR)"
-    ltxt_sql = (
-        f"(CASE WHEN doc_id % 6 = 0 THEN text || {eline_sql} || {eline_sql} "
-        f"|| {eline_sql} || {footer_sql} "
-        f"WHEN doc_id % 3 = 0 THEN text || {eline_sql} || {eline_sql} "
-        f"|| {footer_sql} ELSE text END)"
-    )
-    dlf_sql = f"{sql_dup_line_frac(ltxt_sql)} AS dup_line_frac"
-    ce = sql_char_entropy("text")
-    ce_sql = (
-        f"{ce['ce_n']} AS ce_n,\n           "
-        f"{ce['ce_distinct']} AS ce_distinct,\n           "
-        f"{ce['ce_h']} AS ce_h"
-    )
-    _ORACLES["text_features"] = f"""
-    WITH s AS (
-      SELECT doc_id, text, {score['en']} AS s_en, {score['de']} AS s_de,
-             {score['fr']} AS s_fr, {score['es']} AS s_es,
-             {winnow_hashes_sql('text', dialect='duck')} AS wh
-      FROM documents
-    ),
-    s2 AS (
-      SELECT *, {wfps} AS wfps, {sql_dup_trigrams('text')} AS tg FROM s
-    ),
-    tfo AS (
-    SELECT doc_id,
-           length(text) AS n_chars,
-           {ntok} AS n_tokens,
-           CAST(length(text) AS DOUBLE) / greatest({ntok}, 1) AS mean_tok_len,
-           CAST(({sql_stopword_hits('text')}) AS DOUBLE) / greatest({ntok}, 1) AS stopword_ratio,
-           {sql_occurrences('text', '.')} + {sql_occurrences('text', ',')}
-             + {sql_occurrences('text', '!')} AS n_punct,
-           {sql_dup_trigram_frac('tg', 'text')} AS dup_trigram_frac,
-           CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-                WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-                WHEN s_en >= s_de THEN 'en'
-                ELSE 'de' END AS pred_lang,
-           CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN s_fr
-                WHEN s_es >= s_en AND s_es >= s_de THEN s_es
-                WHEN s_en >= s_de THEN s_en
-                ELSE s_de END AS pred_score,
-           {sql_fingerprint('text')} AS fingerprint,
-           CAST(len(wfps) AS BIGINT) AS n_winnow_fp,
-           CAST(COALESCE(list_sum(wfps), 0) AS BIGINT) AS winnow_fp_sum,
-           {pii_sql},
-           {red_sql},
-           {dlf_sql},
-           {ce_sql},
-           {sql_bpe_token_count('text')} AS bpe_tokens,
-           {sql_soundex(_SX_FIRST_WORD)} AS sx_first,
-           {sql_url_canonicalize(
-               f"nullif(regexp_extract({ptxt_sql}, '{URL_PATTERN}', 0), '')"
-           )} AS url_canon
-    FROM s2
-    )
-    SELECT tfo.*, b.sx_block_n,
-           {sql_stratified_keep_expr('pred_lang', _LANG_SAMPLE_RATES, 'doc_id')} AS sample_keep,
-           {sql_stratified_fixed_n_expr('pred_lang', _LANG_HEAD_N, 'doc_id', salt='head')} AS lang_head
-    FROM tfo
-    LEFT JOIN (
-      SELECT sx_first, CAST(COUNT(*) AS BIGINT) AS sx_block_n
-      FROM tfo GROUP BY sx_first
-    ) b ON b.sx_first = tfo.sx_first
-    ORDER BY doc_id
-    """
-
-
-_fill_text_oracles()
-
-
-# ---------------------------------------------------------------------------
-# windows / top-k / set ops over the star schema
-# ---------------------------------------------------------------------------
-
-def _topk_oracle() -> str:
-    from ..operators.sketch import sql_cms_estimate
-
-    est = sql_cms_estimate(
-        "events", "user_id", depth=4, width=1024,
-        est_col="user_cnt_est", key_alias="user_id",
-    )
-    return f"""
-    WITH est AS ({est})
-    SELECT t.user_id, t.event_id, t.value, t.rnk, e.user_cnt_est FROM (
-      SELECT user_id, event_id, value,
-             row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rnk
-      FROM events
-    ) t JOIN est e USING (user_id)
-    WHERE t.rnk <= 3
-    ORDER BY t.user_id, t.rnk
-    """
-
-
-@register("topk_per_group", _topk_oracle())
-def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window top-k (§2.6): top-3 events by value per user, annotated
-    with the count-min-sketch estimate of the user's event count
-    (operators/sketch.py — bounded d*w aggregation state however
-    skewed user_id is; md5-shared slot hashes, so the oracle rebuilds
-    every counter and estimate bit-for-bit)."""
-    from ..operators.sketch import cms_build, cms_pack, cms_probe
-
-    # spread the one-row-group scan ON THE WINDOW KEY: one exchange
-    # both parallelizes the map side of BOTH branches (WindowGroupLimit
-    # local top-3 sort, CMS md5 hashing) and already satisfies the
-    # window's clustering, so no second exchange fires and the
-    # map-side top-3 filter is exact (hashing by event_id instead left
-    # each user's rows spread over every partition — WindowGroupLimit
-    # kept ~all 1M rows and the window re-shuffled them; r6 profile)
-    ev = _rebalance(spark, _t(spark, sf_dir, "events"), key="user_id", eff=_rg_count(sf_dir, "events"))
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.col("event_id"))
-    top = (
-        ev.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("user_id", "event_id", "value", "rnk")
-    )
-    sk = cms_build(ev.select("user_id"), "user_id", depth=4, width=1024)
-    # the sketch packs into ONE broadcast map row, so every top-k row is
-    # annotated MAP-SIDE (md5 + d lookups + least) — no probe distinct,
-    # no rejoin, no second shuffle of the window output
-    out = cms_probe(
-        top, cms_pack(sk, width=1024), "user_id",
-        depth=4, width=1024, out_col="user_cnt_est",
-    )
-    return out.orderBy("user_id", "rnk")
-
-
-@register(
-    "dedup_last_writer",
-    """
-    SELECT user_id, event_type, event_id AS last_event_id, value AS last_value
-    FROM (
-      SELECT user_id, event_type, event_id, value,
-             row_number() OVER (PARTITION BY user_id, event_type
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    ) WHERE rn = 1
-    ORDER BY user_id, event_type
-    """,
-)
-def dedup_last_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-writer-wins dedup (§2.6; the diff in-order overwrite rule)."""
-    # spread the scan on the window key so the WindowGroupLimit local
-    # top-1 sort runs on every core AND the one exchange already
-    # satisfies the window's clustering (same shape as topk_per_group)
-    ev = _rebalance(
-        spark,
-        _t(spark, sf_dir, "events"),
-        key=("user_id", "event_type"),
-        eff=_rg_count(sf_dir, "events"),
-    )
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("event_id").alias("last_event_id"),
-            F.col("value").alias("last_value"),
-        )
-        .orderBy("user_id", "event_type")
-    )
-
-
-@register(
-    "q03_shipping",
-    """
-    SELECT o.o_orderkey,
-           sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue,
-           o.o_orderdate
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-    GROUP BY o.o_orderkey, o.o_orderdate
-    ORDER BY revenue DESC, o_orderkey
-    LIMIT 10
-    """,
-)
-def q03_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join + agg + deterministic top-10 (broadcast dims)."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-        )
-        .select("o_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-    )
-
 
 # membership rect covers the lower-left quadrant: small partkeys (the
 # only keys present at sf0.001, where l_partkey <= 199 and the derived
@@ -2943,2076 +521,9 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_changes(d, changes, key="doc_id").orderBy("doc_id")
 
 
-@register(
-    "merge_versioned",
-    """
-    WITH base AS (
-      SELECT doc_id, text, doc_id % 4 + 1 AS version FROM documents
-    ),
-    ch AS (
-      SELECT doc_id, 'modify' AS action, doc_id % 6 AS cv,
-             'rev ' || CAST(doc_id % 6 AS VARCHAR) AS new_text
-      FROM documents WHERE doc_id % 3 = 0 AND doc_id % 10 <> 0
-      UNION ALL
-      SELECT doc_id, 'delete', doc_id % 8, NULL
-      FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id + 5000000, 'create', 1, 'new ' || CAST(doc_id AS VARCHAR)
-      FROM documents WHERE doc_id % 11 = 0 AND doc_id % 3 <> 0 AND doc_id % 10 <> 0
-    )
-    SELECT COALESCE(b.doc_id, c.doc_id) AS doc_id,
-           CASE WHEN c.doc_id IS NULL
-                     OR (b.version IS NOT NULL AND c.cv <= b.version)
-                THEN b.text ELSE COALESCE(c.new_text, b.text) END AS text,
-           CASE WHEN c.doc_id IS NULL
-                     OR (b.version IS NOT NULL AND c.cv <= b.version)
-                THEN b.version ELSE c.cv END AS version,
-           (list_max([{'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n4'), 'node': 'n4'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n3'), 'node': 'n3'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n2'), 'node': 'n2'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n1'), 'node': 'n1'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n0'), 'node': 'n0'}])).node AS hrw_node,
-           (list_max([{'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n4'), 'node': 'n4'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n3'), 'node': 'n3'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n1'), 'node': 'n1'}, {'w': md5(CAST(COALESCE(b.doc_id, c.doc_id) AS VARCHAR) || '|n0'), 'node': 'n0'}])).node AS hrw_node4
-    FROM base b FULL OUTER JOIN ch c ON b.doc_id = c.doc_id
-    WHERE c.doc_id IS NULL
-       OR (b.version IS NOT NULL AND c.cv <= b.version)
-       OR c.action <> 'delete'
-    ORDER BY doc_id
-    """,
-)
-def merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3/K4 + SURVEY §2.10 'idempotent MERGE keyed on (type,id,version)':
-    the version-keyed MERGE (osm.rs:26 element versions) against a
-    relational full-outer-join oracle. The synthesized batch mixes
-    stale modifies (cv <= stored), applied modifies, stale AND applied
-    deletes, and creates — stale changes must leave rows untouched,
-    applied upserts must advance the stored version."""
-    from ..operators.merge import merge_changes
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 4 + 1).alias("version")
-    )
-    mods = (
-        _t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 10 != 0))
-        .select(
-            "doc_id",
-            F.lit("modify").alias("action"),
-            (F.col("doc_id") % 6).alias("version"),
-            F.concat(F.lit("rev "), (F.col("doc_id") % 6).cast("string")).alias(
-                "new_text"
-            ),
-        )
-    )
-    dels = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 == 0)
-        .select(
-            "doc_id",
-            F.lit("delete").alias("action"),
-            (F.col("doc_id") % 8).alias("version"),
-            F.lit(None).cast("string").alias("new_text"),
-        )
-    )
-    crts = (
-        _t(spark, sf_dir, "documents")
-        .filter(
-            (F.col("doc_id") % 11 == 0)
-            & (F.col("doc_id") % 3 != 0)
-            & (F.col("doc_id") % 10 != 0)
-        )
-        .select(
-            (F.col("doc_id") + 5_000_000).alias("doc_id"),
-            F.lit("create").alias("action"),
-            F.lit(1).cast("long").alias("version"),
-            F.concat(F.lit("new "), F.col("doc_id").cast("string")).alias("new_text"),
-        )
-    )
-    changes = mods.unionByName(dels).unionByName(crts)
-    # rendezvous-hash shard placement of every merged key (skew.
-    # hrw_assign): the owner over the 5-node ring plus the owner after
-    # node n2 leaves — the per-row pair pins HRW's minimal-disruption
-    # contract (only n2's keys move), driver-verified key by key
-    from ..operators.skew import hrw_assign
-
-    merged = merge_changes(
-        d, changes, key="doc_id", order="version", version_col="version"
-    )
-    nodes5 = [f"n{i}" for i in range(5)]
-    nodes4 = [n for n in nodes5 if n != "n2"]
-    return merged.select(
-        "*",
-        hrw_assign(F.col("doc_id"), nodes5).alias("hrw_node"),
-        hrw_assign(F.col("doc_id"), nodes4).alias("hrw_node4"),
-    ).orderBy("doc_id")
-
-
-@register(
-    "stream_window_stats",
-    """
-    SELECT time_bucket(INTERVAL '5 minutes', ts) AS win_start, event_type,
-           count(*) AS n, sum(value) AS sum_value
-    FROM events GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
-)
-def stream_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10: the windowed change-stats aggregation (same plan batch and
-    streaming; streamed variant exercised in tests). (The per-group OLS
-    trend fold lives on the non-benched sessionize row — gate value,
-    not bench value, so this benched row keeps measuring the windowed
-    aggregation alone.)"""
-    from ..streaming.incremental import windowed_change_stats
-
-    ev = _t(spark, sf_dir, "events")
-    return windowed_change_stats(ev).orderBy("win_start", "event_type")
-
-
 # ---------------------------------------------------------------------------
-# rows-only entries (non-SQL-expressible: engine-hash / LSH / binary ops)
+# sources: OsmChange, .poly trees, PBF (S2-S5, K1/K2)
 # ---------------------------------------------------------------------------
-
-@register(
-    "minhash_lsh_pairs",
-    _sql_jaccard_pairs(
-        _sql_doc_union(200),
-        0.5,
-        "id_a, id_b, CAST(n_common AS DOUBLE) / (sa.sz + sb.sz - n_common) AS jaccard",
-    ),
-)
-def minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs. Oracle = the EXACT Jaccard pair set
-    (recall-1 contract): on this fixture every >=0.5 pair is either a
-    planted identical copy (identical signatures => guaranteed LSH
-    candidate) or a 0.95+ natural near-dup the seeded deterministic LSH
-    is verified to catch; the exact-verify stage removes all false
-    positives, so LSH output == exact pair set, checked by the gate."""
-    from ..operators.dedup import minhash_lsh_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    u = d.select("doc_id", "text").unionByName(
-        d.filter(F.col("doc_id") % 7 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    # spread the docs before the shingle explode + 32-min signature
-    # aggregate: the one-row-group scan otherwise puts the whole
-    # per-doc map side on one core (r6 profile: ~0.9 s single-task)
-    u = _rebalance(spark, u, key="doc_id", eff=_rg_count(sf_dir, "documents"))
-    return minhash_lsh_pairs(u, "text", "doc_id").select(
-        "id_a", "id_b", "jaccard"
-    ).orderBy("id_a", "id_b")
-
-
-def _fill_simhash_oracle() -> None:
-    from ..operators.dedup import sql_simhash_pairs
-
-    _ORACLES["simhash_pairs"] = sql_simhash_pairs(_sql_doc_union(200), max_hamming=3)
-
-
-@register("simhash_pairs")
-def simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs within Hamming<=3. Banding is a lossless
-    pigeonhole prefilter, so the spec is 'all pairs with hamming <= 3';
-    the oracle recomputes the simhash bit-for-bit in SQL (shared md5
-    token hash) and checks that spec over all pairs."""
-    from ..operators.dedup import simhash_near_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    u = d.select("doc_id", "text").unionByName(
-        d.filter(F.col("doc_id") % 7 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    # spread the docs before the per-doc token-hash/bit-vote map (one-
-    # row-group scan; same shape as minhash_lsh_pairs)
-    u = _rebalance(spark, u, key="doc_id", eff=_rg_count(sf_dir, "documents"))
-    return simhash_near_pairs(u, "text", "doc_id", max_hamming=3).select(
-        "id_a", "id_b", "hamming"
-    ).orderBy("id_a", "id_b")
-
-
-_fill_simhash_oracle()
-
-
-def _ann_lsh_oracle() -> str:
-    """Full SQL twin of ann_lsh_topk: the integer hyperplanes are
-    emitted as literals, buckets recomputed per table over quantized
-    embeddings (bit-identical candidate sets), rerank by the exact
-    integer dot product.  PLUS the multi-probe variant (probe = base
-    bucket with the lowest-|margin| bit flipped) scored by the same
-    truth — recall/NDCG improve measurably (20 -> 29 of 50 hits on
-    this fixture), and the gate pins both rankings."""
-    from ..operators.similarity import (
-        sql_lsh_buckets,
-        sql_lsh_probe_buckets,
-        sql_quantized,
-    )
-
-    bkts = sql_lsh_buckets(dim=64, n_tables=8, n_bits=8, seed=13, vec="v")
-    pbkts = sql_lsh_probe_buckets(dim=64, n_tables=8, n_bits=8, seed=13, vec="v")
-    per_table = "\n      UNION ALL\n      ".join(
-        f"SELECT vec_id, {t} AS tbl, {e} AS bucket FROM iv"
-        for t, e in enumerate(bkts)
-    )
-    probe_table = "\n      UNION ALL\n      ".join(
-        f"SELECT vec_id, {t} AS tbl, {e} AS bucket FROM iv WHERE vec_id < 10"
-        for t, e in enumerate(pbkts)
-    )
-    return f"""
-    WITH iv AS (SELECT vec_id, {sql_quantized('embedding')} AS v FROM embeddings),
-    bt AS (
-      {per_table}
-    ),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, i.vec_id
-      FROM bt q JOIN bt i USING (tbl, bucket)
-      WHERE q.vec_id < 10
-    ),
-    btp AS (
-      {probe_table}
-    ),
-    candm AS (
-      -- multi-probe candidates: base ∪ lowest-margin-flip buckets on
-      -- the QUERY side, items indexed on base only
-      SELECT DISTINCT q.vec_id AS query_id, i.vec_id
-      FROM (SELECT vec_id, tbl, CAST(bucket AS BIGINT) AS bucket
-            FROM bt WHERE vec_id < 10
-            UNION ALL
-            SELECT vec_id, tbl, CAST(bucket AS BIGINT) FROM btp) q
-      JOIN bt i ON i.tbl = q.tbl AND CAST(i.bucket AS BIGINT) = q.bucket
-    ),
-    scoredm AS (
-      SELECT c.query_id, c.vec_id,
-             CAST(list_dot_product(q.v, i.v) AS BIGINT) AS dot_q
-      FROM candm c
-      JOIN iv q ON q.vec_id = c.query_id
-      JOIN iv i ON i.vec_id = c.vec_id
-    ),
-    rm AS (
-      SELECT query_id, vec_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY dot_q DESC, vec_id) AS rank
-      FROM scoredm
-    ),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             CAST(list_dot_product(q.v, i.v) AS BIGINT) AS dot_q
-      FROM cand c
-      JOIN iv q ON q.vec_id = c.query_id
-      JOIN iv i ON i.vec_id = c.vec_id
-    ),
-    r AS (
-      SELECT query_id, vec_id, dot_q,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY dot_q DESC, vec_id) AS rank
-      FROM scored
-    ),
-    tru AS (
-      -- EXACT brute top-5 by the same integer dot (the retrieval
-      -- ground truth the ANN ranking is scored against)
-      SELECT query_id, vec_id, trank FROM (
-        SELECT q.vec_id AS query_id, i.vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY CAST(list_dot_product(q.v, i.v) AS BIGINT) DESC,
-                          i.vec_id) AS trank
-        FROM iv q, iv i WHERE q.vec_id < 10
-      ) WHERE trank <= 5
-    ),
-    evl AS (
-      -- recall@5 + DCG/NDCG@5 with graded relevance 6 - trank; the
-      -- DCG is a FIXED left-associated chain over the shared float
-      -- literals so the double tree is engine-identical
-      SELECT a.query_id,
-             CAST(COALESCE(SUM(CASE WHEN t.trank IS NOT NULL THEN 1 END), 0)
-                  AS BIGINT) AS rt5_rec,
-             ((((COALESCE(CAST(SUM(CASE WHEN a.rank = 1 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.0 + COALESCE(CAST(SUM(CASE WHEN a.rank = 2 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.584962500721156) + COALESCE(CAST(SUM(CASE WHEN a.rank = 3 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.0) + COALESCE(CAST(SUM(CASE WHEN a.rank = 4 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.321928094887362) + COALESCE(CAST(SUM(CASE WHEN a.rank = 5 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.584962500721156) AS rt5_dcg,
-             ((((COALESCE(CAST(SUM(CASE WHEN a.rank = 1 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.0 + COALESCE(CAST(SUM(CASE WHEN a.rank = 2 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.584962500721156) + COALESCE(CAST(SUM(CASE WHEN a.rank = 3 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.0) + COALESCE(CAST(SUM(CASE WHEN a.rank = 4 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.321928094887362) + COALESCE(CAST(SUM(CASE WHEN a.rank = 5 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.584962500721156) / 10.271924937667158 AS rt5_ndcg
-      FROM (SELECT query_id, vec_id, rank FROM r WHERE rank <= 5) a
-      LEFT JOIN tru t USING (query_id, vec_id)
-      GROUP BY a.query_id
-    ),
-    evm AS (
-      -- recall@5 + DCG/NDCG@5 with graded relevance 6 - trank; the
-      -- DCG is a FIXED left-associated chain over the shared float
-      -- literals so the double tree is engine-identical
-      SELECT a.query_id,
-             CAST(COALESCE(SUM(CASE WHEN t.trank IS NOT NULL THEN 1 END), 0)
-                  AS BIGINT) AS mp_rec,
-             ((((COALESCE(CAST(SUM(CASE WHEN a.rank = 1 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.0 + COALESCE(CAST(SUM(CASE WHEN a.rank = 2 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.584962500721156) + COALESCE(CAST(SUM(CASE WHEN a.rank = 3 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.0) + COALESCE(CAST(SUM(CASE WHEN a.rank = 4 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.321928094887362) + COALESCE(CAST(SUM(CASE WHEN a.rank = 5 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.584962500721156) AS mp_dcg,
-             ((((COALESCE(CAST(SUM(CASE WHEN a.rank = 1 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.0 + COALESCE(CAST(SUM(CASE WHEN a.rank = 2 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 1.584962500721156) + COALESCE(CAST(SUM(CASE WHEN a.rank = 3 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.0) + COALESCE(CAST(SUM(CASE WHEN a.rank = 4 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.321928094887362) + COALESCE(CAST(SUM(CASE WHEN a.rank = 5 THEN CASE WHEN t.trank IS NULL THEN 0 ELSE 6 - t.trank END END) AS DOUBLE), 0.0) / 2.584962500721156) / 10.271924937667158 AS mp_ndcg
-      FROM (SELECT query_id, vec_id, rank FROM rm WHERE rank <= 5) a
-      LEFT JOIN tru t USING (query_id, vec_id)
-      GROUP BY a.query_id
-    )
-    SELECT r.query_id, r.vec_id, r.dot_q, r.rank,
-           e.rt5_rec, e.rt5_dcg, e.rt5_ndcg,
-           m.mp_rec, m.mp_dcg, m.mp_ndcg
-    FROM r JOIN evl e USING (query_id) JOIN evm m USING (query_id)
-    WHERE r.rank <= 5
-    ORDER BY r.query_id, r.rank
-    """
-
-
-@register("ann_lsh_topk", _ann_lsh_oracle())
-def ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate NN via random-hyperplane LSH + exact rerank. Integer
-    hyperplanes on quantized embeddings make the whole pipeline —
-    buckets, candidates, rerank order — reproducible in the oracle.
-
-    PLUS the retrieval-quality evaluation every ANN deployment runs:
-    per query, recall@5 and DCG/NDCG@5 of the LSH ranking against the
-    EXACT brute top-5 by the same integer dot product (graded
-    relevance 6 − true_rank; the DCG is a fixed left-associated chain
-    over shared float literals — identical doubles cross-engine; IDCG
-    is the shared constant for 5 graded levels)."""
-    from ..operators.similarity import ann_lsh_topk, dot_q_expr
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "query_id")
-    ann = ann_lsh_topk(
-        q, emb, k=5, dim=64, n_tables=8, n_bits=8, rank_by="dot_q"
-    ).select("query_id", "vec_id", "dot_q", "rank")
-    truth = (
-        emb.crossJoin(
-            F.broadcast(
-                q.select("query_id", F.col("embedding").alias("_qe"))
-            )
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            dot_q_expr(F.col("_qe"), F.col("embedding")).alias("_d"),
-        )
-        .withColumn(
-            "trank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("_d"), F.asc("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("trank") <= 5)
-        .select("query_id", "vec_id", "trank")
-    )
-    rel = F.when(F.col("trank").isNull(), F.lit(0)).otherwise(
-        F.lit(6) - F.col("trank")
-    )
-    lab = ann.join(truth, ["query_id", "vec_id"], "left").select(
-        "query_id", "rank", rel.alias("_rel")
-    )
-    terms = [
-        F.coalesce(
-            F.sum(F.when(F.col("rank") == pp, F.col("_rel"))).cast("double"),
-            F.lit(0.0),
-        )
-        / F.lit([0.0, 1.0, 1.584962500721156, 2.0, 2.321928094887362, 2.584962500721156][pp])
-        for pp in range(1, 6)
-    ]
-    dcg = terms[0]
-    for t in terms[1:]:
-        dcg = dcg + t
-    evl = lab.groupBy("query_id").agg(
-        F.coalesce(F.sum(F.when(F.col("_rel") > 0, 1)), F.lit(0))
-        .cast("long")
-        .alias("rt5_rec"),
-        dcg.alias("rt5_dcg"),
-        (dcg / F.lit(10.271924937667158)).alias("rt5_ndcg"),
-    )
-    # the multi-probe ranking scored by the SAME truth (similarity.
-    # ann_lsh_topk multiprobe — lowest-margin bit flip; recall
-    # measurably improves, and the gate pins both rankings)
-    annm = ann_lsh_topk(
-        q, emb, k=5, dim=64, n_tables=8, n_bits=8,
-        rank_by="dot_q", multiprobe=True,
-    ).select("query_id", "vec_id", "rank")
-    labm = annm.join(truth, ["query_id", "vec_id"], "left").select(
-        "query_id", "rank", rel.alias("_rel")
-    )
-    termsm = [
-        F.coalesce(
-            F.sum(F.when(F.col("rank") == pp, F.col("_rel"))).cast("double"),
-            F.lit(0.0),
-        )
-        / F.lit([0.0, 1.0, 1.584962500721156, 2.0,
-                 2.321928094887362, 2.584962500721156][pp])
-        for pp in range(1, 6)
-    ]
-    dcgm = termsm[0]
-    for t in termsm[1:]:
-        dcgm = dcgm + t
-    evm = labm.groupBy("query_id").agg(
-        F.coalesce(F.sum(F.when(F.col("_rel") > 0, 1)), F.lit(0))
-        .cast("long")
-        .alias("mp_rec"),
-        dcgm.alias("mp_dcg"),
-        (dcgm / F.lit(10.271924937667158)).alias("mp_ndcg"),
-    )
-    return (
-        ann.join(evl, "query_id")
-        .join(evm, "query_id")
-        .select(
-            "query_id", "vec_id", "dot_q", "rank",
-            "rt5_rec", "rt5_dcg", "rt5_ndcg",
-            "mp_rec", "mp_dcg", "mp_ndcg",
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-#: scene-cut mean-abs-diff threshold in millis (20.0/pixel): separates
-#: the fixture's in-scene transitions (~4/px) from its cut (~115/px)
-_SCENE_THR = 20_000
-
-#: audio silence amplitude (|sample - 128| below this is silence)
-_AUDIO_AMP = 16
-
-#: Sobel edge-pixel squared-magnitude threshold: splits the LCG
-#: fixture's interior pixels ~28% above / 72% below, so the n_edge
-#: column is a non-trivial discriminator
-_EDGE_SQ_MIN = 200_000
-
-#: Harris R20 corner threshold: the LCG fixture's response pixels split
-#: ~50% above / 50% below (measured median 2.0e12, max 6.4e12), so
-#: hc_n and hc_wpos genuinely discriminate
-_CORNER_MIN = 2_000_000_000_000
-
-#: FAST-9 segment-test threshold: the LCG fixture is an affine ramp
-#: mod 251, so its corners come from the wrap seams — counts are stable
-#: across t in [20, 40] (17388 corners, ~50/50 bright/dark over the 500
-#: images) and vanish by t=60; 30 sits mid-band
-_FAST_T = 30
-
-
-def _sql_lcg_px(kexpr: str) -> str:
-    """Pixel value of the deterministic LCG fake codec at linear index
-    ``kexpr`` of image i — the formula datagen.synth.gen_images writes
-    into the binary payload, so the oracle reads no bytes at all."""
-    return f"CAST(((({kexpr}) * 1103515245 + i * 12345 + 7) % 251) AS BIGINT)"
-
-
-def _multimodal_oracle() -> str:
-    """DuckDB twin of decode_stats + patchify_stage over the
-    deterministic fake codec: pixel k of image i is
-    (k*1103515245 + i*12345 + 7) % 251 (the LCG datagen.synth.gen_images
-    writes into the binary payload), so both the per-image stats and the
-    per-patch (8x8 tile) aggregates are computable from first principles
-    — only (image_id, w, h, i) metadata is emitted as literals. The
-    patch checksums weight every tile's sum/min by its grid position
-    (pr*1024 + pc + 1), so a patch landing at the wrong (row, col) —
-    a transpose bug, an off-by-one crop — breaks the hash even when the
-    pixel multiset is right."""
-    from ..datagen.synth import gen_images
-    from ..operators.multimodal import ACF_LAGS as _ACF_LAGS
-    from ..operators.multimodal import FAST_OFFSETS
-
-    images = gen_images(500, seed=42)
-    meta = ",\n      ".join(
-        f"('{r.image_id}', {r.w}, {r.h}, {i})"
-        for i, r in enumerate(images.itertuples())
-    )
-    pxv = _sql_lcg_px("k")  # ONE definition of the codec formula
-
-    def _sql_vpx(kexpr: str, jexpr: str) -> str:
-        """Frame pixel of the VIDEO fixture (gen_videos): the image LCG
-        plus the 1-based frame's VIDEO_SHIFTS entry."""
-        return (
-            f"((({kexpr}) * 1103515245 + i * 12345 + 7"
-            f" + ([0,2,91,93])[{jexpr}]) % 251)"
-        )
-
-    # FAST-9 (multimodal.fast_stage): 16 circle taps -> bit masks; the
-    # cyclic >=9-run test is the same m*65537 bit logic the kernel uses
-    def _fast_mask(cmp: str) -> str:
-        return " + ".join(
-            f"CASE WHEN ({_sql_lcg_px(f'k + ({dy}) * w + ({dx})')}) {cmp}"
-            f" THEN {1 << j} ELSE 0 END"
-            for j, (dx, dy) in enumerate(FAST_OFFSETS)
-        )
-
-    def _run9(m: str) -> str:
-        return "(" + " OR ".join(
-            f"(((CAST({m} AS BIGINT) * 65537) >> {kk}) & 511) = 511"
-            for kk in range(16)
-        ) + ")"
-    return f"""
-    WITH RECURSIVE meta(image_id, w, h, i) AS (VALUES
-      {meta}
-    ),
-    px AS (
-      SELECT image_id, w, h, k // w AS r, k % w AS c, {pxv} AS v
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-    ),
-    stats AS (
-      SELECT image_id,
-             avg(CAST(v AS DOUBLE)) AS pix_mean,
-             max(v) AS pix_max,
-             min(v) AS pix_min
-      FROM px
-      GROUP BY image_id
-    ),
-    patches AS (
-      SELECT image_id, r // 8 AS pr, c // 8 AS pc,
-             SUM(v) AS p_sum, MIN(v) AS p_min
-      FROM px
-      WHERE r < (h // 8) * 8 AND c < (w // 8) * 8
-      GROUP BY image_id, r // 8, c // 8
-    ),
-    pagg AS (
-      SELECT image_id,
-             CAST(COUNT(*) AS BIGINT) AS n_patches,
-             CAST(SUM((pr * 1024 + pc + 1) * p_sum) AS BIGINT) AS patch_sum_check,
-             CAST(SUM((pr * 1024 + pc + 1) * p_min) AS BIGINT) AS patch_min_check
-      FROM patches
-      GROUP BY image_id
-    ),
-    lap AS (
-      SELECT image_id,
-             (4 * ({_sql_lcg_px('k')}) - ({_sql_lcg_px('k - w')})
-              - ({_sql_lcg_px('k + w')}) - ({_sql_lcg_px('k - 1')})
-              - ({_sql_lcg_px('k + 1')})) AS lp
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE (k // w) BETWEEN 1 AND h - 2 AND (k % w) BETWEEN 1 AND w - 2
-    ),
-    lagg AS (
-      SELECT image_id,
-             CAST(COUNT(*) AS BIGINT) AS n_interior,
-             CAST(SUM(lp) AS BIGINT) AS lap_sum,
-             CAST(SUM(lp * lp) AS BIGINT) AS lap_sq_sum
-      FROM lap
-      GROUP BY image_id
-    ),
-    vtrans AS (
-      SELECT image_id, j AS frame_idx, w * h AS n_px,
-             SUM(ABS(
-               ((k * 1103515245 + i * 12345 + 7 + ([0,2,91,93])[j + 1]) % 251)
-               - ((k * 1103515245 + i * 12345 + 7 + ([0,2,91,93])[j]) % 251)
-             )) AS sad
-      FROM meta,
-           UNNEST(generate_series(0, w * h - 1)) AS t(k),
-           UNNEST([1, 2, 3]) AS jt(j)
-      GROUP BY image_id, j, w * h
-    ),
-    vagg AS (
-      SELECT image_id,
-             CAST(COUNT(*) AS BIGINT) AS n_transitions,
-             CAST(SUM(CASE WHEN sad * 1000 >= {_SCENE_THR} * n_px
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
-             CAST(SUM(sad) AS BIGINT) AS sad_total,
-             CAST(MIN(CASE WHEN sad * 1000 >= {_SCENE_THR} * n_px
-                           THEN frame_idx END) AS INT) AS cut_frame
-      FROM vtrans
-      GROUP BY image_id
-    ),
-    sob AS (
-      SELECT image_id, w, k // w AS r, k % w AS c,
-             (({_sql_lcg_px('k - w + 1')}) + 2 * ({_sql_lcg_px('k + 1')})
-              + ({_sql_lcg_px('k + w + 1')}) - ({_sql_lcg_px('k - w - 1')})
-              - 2 * ({_sql_lcg_px('k - 1')}) - ({_sql_lcg_px('k + w - 1')})) AS gx,
-             (({_sql_lcg_px('k + w - 1')}) + 2 * ({_sql_lcg_px('k + w')})
-              + ({_sql_lcg_px('k + w + 1')}) - ({_sql_lcg_px('k - w - 1')})
-              - 2 * ({_sql_lcg_px('k - w')}) - ({_sql_lcg_px('k - w + 1')})) AS gy
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE (k // w) BETWEEN 1 AND h - 2 AND (k % w) BETWEEN 1 AND w - 2
-    ),
-    scrow AS (
-      -- per interior row the Sobel energy LIST (seam_stage's frame)
-      SELECT image_id, r, list(gx * gx + gy * gy ORDER BY c) AS erow
-      FROM sob GROUP BY image_id, r
-    ),
-    scrng AS (
-      SELECT image_id, min(r) AS r0, max(r) AS r1 FROM scrow GROUP BY image_id
-    ),
-    scdp(image_id, r, costs) AS (
-      -- the seam DP as a recursive list recurrence: dynamic
-      -- programming in SQL list algebra vs the kernel's numpy rows
-      SELECT s.image_id, s.r, s.erow
-      FROM scrow s JOIN scrng g ON g.image_id = s.image_id AND s.r = g.r0
-      UNION ALL
-      SELECT n.image_id, n.r,
-             list_transform(range(1, len(n.erow) + 1), i ->
-               n.erow[i] + least(
-                 d.costs[greatest(i - 1, 1)],
-                 d.costs[i],
-                 d.costs[least(i + 1, len(d.costs))]))
-      FROM scdp d JOIN scrow n ON n.image_id = d.image_id AND n.r = d.r + 1
-    ),
-    scagg AS (
-      SELECT d.image_id,
-             CAST(list_min(d.costs) AS BIGINT) AS sc_cost,
-             CAST(list_position(d.costs, list_min(d.costs)) - 1
-                  AS BIGINT) AS sc_end,
-             CAST(t.sc_top AS BIGINT) AS sc_top
-      FROM scdp d
-      JOIN scrng g ON g.image_id = d.image_id AND d.r = g.r1
-      JOIN (
-        SELECT s.image_id, list_min(s.erow) AS sc_top
-        FROM scrow s JOIN scrng g2 ON g2.image_id = s.image_id AND s.r = g2.r0
-      ) t ON t.image_id = d.image_id
-    ),
-    sagg AS (
-      SELECT image_id,
-             CAST(SUM(ABS(gx)) AS BIGINT) AS gx_abs_sum,
-             CAST(SUM(ABS(gy)) AS BIGINT) AS gy_abs_sum,
-             CAST(SUM(gx * gx + gy * gy) AS BIGINT) AS g_sq_sum,
-             CAST(SUM(CASE WHEN gx * gx + gy * gy >= {_EDGE_SQ_MIN}
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_edge
-      FROM sob
-      GROUP BY image_id
-    ),
-    sobn AS (
-      -- upper-half-plane normalization for the orientation bins
-      -- (multimodal.orientation_hist_stage): 45-degree sector
-      -- boundaries are exact integer tests
-      SELECT image_id,
-             CASE WHEN gy < 0 OR (gy = 0 AND gx < 0) THEN -gx ELSE gx END AS nx,
-             CASE WHEN gy < 0 OR (gy = 0 AND gx < 0) THEN -gy ELSE gy END AS ny,
-             gx * gx + gy * gy AS sq
-      FROM sob
-    ),
-    og AS (
-      SELECT image_id,
-             CAST(COALESCE(SUM(CASE WHEN sq = 0 THEN 1 END), 0) AS BIGINT) AS og_flat,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx > ny THEN 1 END), 0) AS BIGINT) AS og_n0,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx > 0 AND ny >= nx THEN 1 END), 0) AS BIGINT) AS og_n1,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx <= 0 AND ny > -nx THEN 1 END), 0) AS BIGINT) AS og_n2,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx < 0 AND ny <= -nx THEN 1 END), 0) AS BIGINT) AS og_n3,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx > ny THEN sq END), 0) AS BIGINT) AS og_e0,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx > 0 AND ny >= nx THEN sq END), 0) AS BIGINT) AS og_e1,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx <= 0 AND ny > -nx THEN sq END), 0) AS BIGINT) AS og_e2,
-             CAST(COALESCE(SUM(CASE WHEN sq > 0 AND nx < 0 AND ny <= -nx THEN sq END), 0) AS BIGINT) AS og_e3
-      FROM sobn
-      GROUP BY image_id
-    ),
-    hgv AS (
-      -- Hough vote accumulator (multimodal.hough_stage): each edge
-      -- pixel (same Sobel threshold as n_edge) votes for the
-      -- 45-degree-family line through it; rho is the exact integer
-      -- normal form per orientation
-      SELECT image_id, t AS theta,
-             CASE t WHEN 0 THEN c WHEN 1 THEN c + r WHEN 2 THEN r
-                    ELSE r - c END AS rho,
-             COUNT(*) AS v
-      FROM sob, UNNEST([0, 1, 2, 3]) AS tt(t)
-      WHERE gx * gx + gy * gy >= {_EDGE_SQ_MIN}
-      GROUP BY image_id, theta, rho
-    ),
-    hbest AS (
-      -- winner per image, ties to the smallest (theta, rho) — the
-      -- kernel's C-order argmax
-      SELECT image_id, hl_votes, hl_theta, hl_rho FROM (
-        SELECT image_id, CAST(v AS BIGINT) AS hl_votes,
-               CAST(theta AS BIGINT) AS hl_theta,
-               CAST(rho AS BIGINT) AS hl_rho,
-               ROW_NUMBER() OVER (PARTITION BY image_id
-                                  ORDER BY v DESC, theta, rho) AS rn
-        FROM hgv) WHERE rn = 1
-    ),
-    hsx AS (
-      -- pixel-value histogram for the EMD fold (multimodal.emd_stage)
-      SELECT image_id, v, COUNT(*) AS c FROM px GROUP BY image_id, v
-    ),
-    emdg AS (
-      -- dense value series 0..255 (codec values stop at 250; the gap
-      -- bins must still contribute |CDF - uniform| terms)
-      SELECT a.image_id, a.npx, a.v, COALESCE(h.c, 0) AS c
-      FROM (SELECT image_id, w * h AS npx, v
-            FROM meta, UNNEST(generate_series(0, 255)) AS t(v)) a
-      LEFT JOIN hsx h ON h.image_id = a.image_id AND h.v = a.v
-    ),
-    emdc AS (
-      SELECT image_id, npx, v,
-             SUM(c) OVER (PARTITION BY image_id ORDER BY v) AS ch
-      FROM emdg
-    ),
-    emda AS (
-      SELECT image_id,
-             CAST(SUM(ABS(256 * ch - npx * (v + 1))) AS BIGINT) AS emd_uniform
-      FROM emdc GROUP BY image_id
-    ),
-    euw AS (
-      -- Euler quad census (multimodal.euler_stage): 2x2 windows over
-      -- the zero-padded >= 128 foreground mask; window top-left runs
-      -- over the padded grid, out-of-range pixels are background
-      SELECT image_id,
-             CASE WHEN (k0 // (w + 1)) - 1 BETWEEN 0 AND h - 1
-                   AND (k0 % (w + 1)) - 1 BETWEEN 0 AND w - 1
-                   AND ({_sql_lcg_px('((k0 // (w + 1)) - 1) * w + ((k0 % (w + 1)) - 1)')}) >= 128
-                  THEN 1 ELSE 0 END AS tl,
-             CASE WHEN (k0 // (w + 1)) - 1 BETWEEN 0 AND h - 1
-                   AND (k0 % (w + 1)) BETWEEN 0 AND w - 1
-                   AND ({_sql_lcg_px('((k0 // (w + 1)) - 1) * w + (k0 % (w + 1))')}) >= 128
-                  THEN 1 ELSE 0 END AS tr,
-             CASE WHEN (k0 // (w + 1)) BETWEEN 0 AND h - 1
-                   AND (k0 % (w + 1)) - 1 BETWEEN 0 AND w - 1
-                   AND ({_sql_lcg_px('(k0 // (w + 1)) * w + ((k0 % (w + 1)) - 1)')}) >= 128
-                  THEN 1 ELSE 0 END AS bl,
-             CASE WHEN (k0 // (w + 1)) BETWEEN 0 AND h - 1
-                   AND (k0 % (w + 1)) BETWEEN 0 AND w - 1
-                   AND ({_sql_lcg_px('(k0 // (w + 1)) * w + (k0 % (w + 1))')}) >= 128
-                  THEN 1 ELSE 0 END AS br
-      FROM meta, UNNEST(generate_series(0, (h + 1) * (w + 1) - 1)) AS t(k0)
-    ),
-    eu AS (
-      SELECT image_id,
-             CAST(SUM(CASE WHEN tl + tr + bl + br = 1 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS eu_q1,
-             CAST(SUM(CASE WHEN tl + tr + bl + br = 3 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS eu_q3,
-             CAST(SUM(CASE WHEN tl + tr + bl + br = 2 AND tl = br
-                            AND tr = bl AND tl <> tr THEN 1 ELSE 0 END)
-                  AS BIGINT) AS eu_qd
-      FROM euw GROUP BY image_id
-    ),
-    euc AS (
-      SELECT image_id, eu_q1, eu_q3, eu_qd,
-             (eu_q1 - eu_q3 + 2 * eu_qd) // 4 AS eu_chi4,
-             (eu_q1 - eu_q3 - 2 * eu_qd) // 4 AS eu_chi8
-      FROM eu
-    ),
-    nmsd AS (
-      -- exact 4-direction binning (multimodal.nms_stage): the 22.5-deg
-      -- boundaries via (|gx|+|gy|)^2 <= 2*g^2 (tan 22.5 = sqrt2 - 1;
-      -- tie-free for nonzero ints)
-      SELECT image_id, r, c, gx * gx + gy * gy AS sq,
-             CASE
-               WHEN (ABS(gx) + ABS(gy)) * (ABS(gx) + ABS(gy)) <= 2 * gx * gx
-                 THEN 0  -- horizontal: E/W
-               WHEN (ABS(gx) + ABS(gy)) * (ABS(gx) + ABS(gy)) <= 2 * gy * gy
-                 THEN 1  -- vertical: N/S
-               WHEN gx * gy > 0 THEN 2  -- main diagonal
-               ELSE 3                   -- anti diagonal
-             END AS dirb
-      FROM sob
-    ),
-    nmsn AS (
-      SELECT d.image_id, d.r, d.c, d.sq,
-             COALESCE(n1.sq, 0) AS sq1, COALESCE(n2.sq, 0) AS sq2
-      FROM (
-        SELECT *,
-               CASE dirb WHEN 0 THEN 0 WHEN 1 THEN -1 ELSE -1 END AS dy1,
-               CASE dirb WHEN 0 THEN -1 WHEN 1 THEN 0
-                         WHEN 2 THEN -1 ELSE 1 END AS dx1,
-               CASE dirb WHEN 0 THEN 0 WHEN 1 THEN 1 ELSE 1 END AS dy2,
-               CASE dirb WHEN 0 THEN 1 WHEN 1 THEN 0
-                         WHEN 2 THEN 1 ELSE -1 END AS dx2
-        FROM nmsd
-      ) d
-      LEFT JOIN nmsd n1 ON n1.image_id = d.image_id
-                       AND n1.r = d.r + d.dy1 AND n1.c = d.c + d.dx1
-      LEFT JOIN nmsd n2 ON n2.image_id = d.image_id
-                       AND n2.r = d.r + d.dy2 AND n2.c = d.c + d.dx2
-    ),
-    nms AS (
-      SELECT image_id,
-             CAST(COALESCE(SUM(CASE WHEN keep THEN 1 END), 0) AS BIGINT)
-               AS nms_n,
-             CAST(COALESCE(SUM(CASE WHEN keep THEN sq END), 0) AS BIGINT)
-               AS nms_sq_sum,
-             CAST(COALESCE(SUM(CASE WHEN keep THEN r * 4096 + c + 1 END), 0)
-                  AS BIGINT) AS nms_wpos
-      FROM (
-        SELECT image_id, r, c, sq,
-               sq >= {_EDGE_SQ_MIN} AND sq >= sq1 AND sq >= sq2 AS keep
-        FROM nmsn
-      ) GROUP BY image_id
-    ),
-    bpn AS (
-      -- bit-plane popcounts (multimodal.bitplane_stage)
-      SELECT image_id,
-             {", ".join(f"CAST(SUM((v >> {b}) & 1) AS BIGINT) AS bp{b}_n" for b in (0, 1, 6, 7))}
-      FROM px GROUP BY image_id
-    ),
-    bpt AS (
-      -- horizontal bit transitions per plane (same LCG-tap spelling)
-      SELECT image_id,
-             {", ".join(f"CAST(COALESCE(SUM(CASE WHEN ((({_sql_lcg_px('k')}) >> {b}) & 1) <> ((({_sql_lcg_px('k + 1')}) >> {b}) & 1) THEN 1 END), 0) AS BIGINT) AS bp{b}_t" for b in (0, 1, 6, 7))}
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE k % w < w - 1
-      GROUP BY image_id
-    ),
-    sgc AS (
-      -- binary-segmentation confusion (multimodal.segmetrics_stage):
-      -- gt = v >= 128, pred = (v*7) % 251 >= 120 (the scrambled
-      -- imperfect predictor); mIoU reduced to canonical digits
-      SELECT image_id,
-             CAST(SUM(CASE WHEN v >= 128 AND (v * 7) % 251 >= 120
-                           THEN 1 ELSE 0 END) AS BIGINT) AS sg_tp,
-             CAST(SUM(CASE WHEN v < 128 AND (v * 7) % 251 >= 120
-                           THEN 1 ELSE 0 END) AS BIGINT) AS sg_fp,
-             CAST(SUM(CASE WHEN v >= 128 AND (v * 7) % 251 < 120
-                           THEN 1 ELSE 0 END) AS BIGINT) AS sg_fn,
-             CAST(SUM(CASE WHEN v < 128 AND (v * 7) % 251 < 120
-                           THEN 1 ELSE 0 END) AS BIGINT) AS sg_tn
-      FROM px GROUP BY image_id
-    ),
-    sgm AS (
-      -- mIoU = (tp/(tp+fp+fn) + tn/(tn+fp+fn)) / 2 as one exact
-      -- fraction over den = 2*ufg*ubg (unions nonzero on this
-      -- fixture: the scrambled predictor always disagrees somewhere)
-      SELECT image_id, sg_tp, sg_fp, sg_fn,
-             CAST((CAST(sg_tp AS HUGEINT) * (sg_tn + sg_fp + sg_fn)
-                   + CAST(sg_tn AS HUGEINT) * (sg_tp + sg_fp + sg_fn))
-                  // gcd(CAST(sg_tp AS HUGEINT) * (sg_tn + sg_fp + sg_fn)
-                         + CAST(sg_tn AS HUGEINT) * (sg_tp + sg_fp + sg_fn),
-                         2 * CAST(sg_tp + sg_fp + sg_fn AS HUGEINT)
-                           * (sg_tn + sg_fp + sg_fn))
-                  AS VARCHAR) AS sg_miou_num,
-             CAST((2 * CAST(sg_tp + sg_fp + sg_fn AS HUGEINT)
-                   * (sg_tn + sg_fp + sg_fn))
-                  // gcd(CAST(sg_tp AS HUGEINT) * (sg_tn + sg_fp + sg_fn)
-                         + CAST(sg_tn AS HUGEINT) * (sg_tp + sg_fp + sg_fn),
-                         2 * CAST(sg_tp + sg_fp + sg_fn AS HUGEINT)
-                           * (sg_tn + sg_fp + sg_fn))
-                  AS VARCHAR) AS sg_miou_den
-      FROM sgc
-    ),
-    apg AS (
-      -- detection-AP ground truth (evalmetrics.average_precision):
-      -- boxes from pure integer arithmetic on the image index i
-      SELECT image_id, j AS gt_id,
-             (i * 37 + j * 101) % 180 AS x0,
-             (i * 53 + j * 71) % 180 AS y0,
-             (i * 37 + j * 101) % 180 + 20 + (i * 11 + j * 13) % 25 AS x1,
-             (i * 53 + j * 71) % 180 + 20 + (i * 17 + j * 19) % 25 AS y1
-      FROM meta, UNNEST(generate_series(0, 2)) t(j)
-      WHERE j < 1 + i % 3
-    ),
-    apd AS (
-      -- detections: per-GT shifted matches (±7) + 1-2 far FPs
-      SELECT image_id,
-             CASE WHEN j < 3 THEN j ELSE 100 + (j - 3) END AS det_id,
-             CASE WHEN j < 3 THEN (i * 41 + j * 59) % 100
-                  ELSE (i * 41 + (j - 3) * 59 + 3) % 100 END AS score,
-             CASE WHEN j < 3 THEN (i * 37 + j * 101) % 180
-                                  + (i * 7 + j * 23) % 15 - 7
-                  ELSE 200 + (i * 13 + (j - 3) * 37) % 150 END AS x0,
-             CASE WHEN j < 3 THEN (i * 53 + j * 71) % 180
-                                  + (i * 29 + j * 5) % 15 - 7
-                  ELSE (i * 43 + (j - 3) * 29) % 300 END AS y0,
-             CASE WHEN j < 3 THEN (i * 37 + j * 101) % 180
-                                  + (i * 7 + j * 23) % 15 - 7
-                                  + 20 + (i * 11 + j * 13) % 25
-                  ELSE 200 + (i * 13 + (j - 3) * 37) % 150
-                       + 15 + (i + 100 + (j - 3)) % 20 END AS x1,
-             CASE WHEN j < 3 THEN (i * 53 + j * 71) % 180
-                                  + (i * 29 + j * 5) % 15 - 7
-                                  + 20 + (i * 17 + j * 19) % 25
-                  ELSE (i * 43 + (j - 3) * 29) % 300
-                       + 15 + (i * 3 + 100 + (j - 3)) % 20 END AS y1
-      FROM meta, UNNEST(generate_series(0, 4)) t(j)
-      WHERE (j < 3 AND j < 1 + i % 3) OR (j >= 3 AND j - 3 < 1 + i % 2)
-    ),
-    apdr AS (
-      SELECT *, row_number() OVER (PARTITION BY image_id
-                                   ORDER BY score DESC, det_id) AS rn
-      FROM apd
-    ),
-    apnd AS (
-      SELECT image_id, count(*) AS nd,
-             CASE count(*) WHEN 1 THEN 1 WHEN 2 THEN 2 WHEN 3 THEN 6
-                           WHEN 4 THEN 24 ELSE 120 END AS fct
-      FROM apd GROUP BY 1
-    ),
-    apng AS (SELECT image_id, count(*) AS ng FROM apg GROUP BY 1),
-    appair AS (
-      SELECT d.image_id, d.rn, g.gt_id,
-             CASE WHEN least(d.x1, g.x1) - greatest(d.x0, g.x0) > 0
-                   AND least(d.y1, g.y1) - greatest(d.y0, g.y0) > 0
-                  THEN (least(d.x1, g.x1) - greatest(d.x0, g.x0))
-                       * (least(d.y1, g.y1) - greatest(d.y0, g.y0))
-                  ELSE 0 END AS inter,
-             (d.x1 - d.x0) * (d.y1 - d.y0)
-             + (g.x1 - g.x0) * (g.y1 - g.y0) AS ab
-      FROM apdr d JOIN apg g USING (image_id)
-    ),
-    apcand AS (
-      -- per det: candidate GTs at IoU >= 1/2 (exact cross-mult),
-      -- ordered by the shared correctly-rounded double, then gt_id
-      SELECT image_id, rn,
-             list(gt_id ORDER BY CAST(inter AS DOUBLE)
-                                 / CAST(ab - inter AS DOUBLE) DESC, gt_id)
-               AS cands
-      FROM appair
-      WHERE ab - inter > 0 AND inter * 2 >= 1 * (ab - inter)
-      GROUP BY image_id, rn
-    ),
-    apwalk AS (
-      -- COCO greedy matching as a recursive walk with a taken-list
-      SELECT image_id, 0 AS rn, CAST([] AS BIGINT[]) AS taken,
-             0 AS tp, CAST(0 AS HUGEINT) AS apn
-      FROM apnd
-      UNION ALL
-      SELECT s.image_id, s.rn + 1,
-             CASE WHEN s.pick IS NULL THEN s.taken
-                  ELSE list_append(s.taken, s.pick) END,
-             s.tp + CASE WHEN s.pick IS NULL THEN 0 ELSE 1 END,
-             s.apn + CASE WHEN s.pick IS NULL THEN CAST(0 AS HUGEINT)
-                          ELSE CAST(s.tp + 1 AS HUGEINT)
-                               * (s.fct // (s.rn + 1)) END
-      FROM (
-        SELECT w.image_id, w.rn, w.taken, w.tp, w.apn, n.nd, n.fct,
-               list_filter(COALESCE(c.cands, CAST([] AS BIGINT[])),
-                           g -> NOT list_contains(w.taken, g))[1] AS pick
-        FROM apwalk w
-        JOIN apnd n ON n.image_id = w.image_id AND w.rn < n.nd
-        LEFT JOIN apcand c ON c.image_id = w.image_id AND c.rn = w.rn + 1
-      ) s
-    ),
-    apfin AS (
-      SELECT w.image_id,
-             CAST(g.ng AS BIGINT) AS ap_n_gt,
-             CAST(n.nd AS BIGINT) AS ap_n_det,
-             CAST(w.tp AS BIGINT) AS ap_tp,
-             CAST(w.apn // gcd(w.apn, CAST(n.fct AS HUGEINT) * g.ng)
-                  AS VARCHAR) AS ap_num_str,
-             CAST((CAST(n.fct AS HUGEINT) * g.ng)
-                  // gcd(w.apn, CAST(n.fct AS HUGEINT) * g.ng)
-                  AS VARCHAR) AS ap_den_str
-      FROM apwalk w
-      JOIN apnd n ON n.image_id = w.image_id AND w.rn = n.nd
-      JOIN apng g ON g.image_id = w.image_id
-    ),
-    dthg AS (
-      -- Bayer 4x4 ordered-dithering census (multimodal.dither_stage):
-      -- the threshold matrix rebuilt arithmetically from the recursive
-      -- 2x2 construction 4*B2[r%2][c%2] + B2[r//2][c//2]
-      SELECT image_id,
-             CAST(SUM(CASE WHEN v > ((4 * (3 * ((r) % 2) + 2 * ((c) % 2) - 4 * ((c) % 2) * ((r) % 2)) + (3 * (((r) // 2) % 2) + 2 * (((c) // 2) % 2) - 4 * (((c) // 2) % 2) * (((r) // 2) % 2))) * 16 + 8) THEN 1 ELSE 0 END) AS BIGINT)
-               AS dth_n,
-             CAST(SUM(CASE WHEN v > ((4 * (3 * ((r) % 2) + 2 * ((c) % 2) - 4 * ((c) % 2) * ((r) % 2)) + (3 * (((r) // 2) % 2) + 2 * (((c) // 2) % 2) - 4 * (((c) // 2) % 2) * (((r) // 2) % 2))) * 16 + 8) THEN r * w + c + 1 ELSE 0 END)
-                  AS BIGINT) AS dth_wsum
-      FROM px GROUP BY image_id
-    ),
-    dtt AS (
-      -- dithered-bitmap horizontal transitions (same LCG-tap spelling
-      -- as bpt; both taps re-derive the Bayer threshold per pixel)
-      SELECT image_id,
-             CAST(COALESCE(SUM(CASE WHEN
-                   (CASE WHEN ({_sql_lcg_px('k')}) > ((4 * (3 * ((k // w) % 2) + 2 * ((k % w) % 2) - 4 * ((k % w) % 2) * ((k // w) % 2)) + (3 * (((k // w) // 2) % 2) + 2 * (((k % w) // 2) % 2) - 4 * (((k % w) // 2) % 2) * (((k // w) // 2) % 2))) * 16 + 8) THEN 1 ELSE 0 END)
-                <> (CASE WHEN ({_sql_lcg_px('k + 1')}) > ((4 * (3 * ((k // w) % 2) + 2 * ((k % w + 1) % 2) - 4 * ((k % w + 1) % 2) * ((k // w) % 2)) + (3 * (((k // w) // 2) % 2) + 2 * (((k % w + 1) // 2) % 2) - 4 * (((k % w + 1) // 2) % 2) * (((k // w) // 2) % 2))) * 16 + 8) THEN 1 ELSE 0 END)
-                 THEN 1 END), 0) AS BIGINT) AS dth_t
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE k % w < w - 1
-      GROUP BY image_id
-    ),
-    acf AS (
-      -- autocorrelation lag products (multimodal.audio_acf_stage)
-      SELECT image_id,
-             CAST(SUM((({_sql_lcg_px('k')}) - 128)
-                      * (({_sql_lcg_px('k')}) - 128)) AS BIGINT) AS acf0,
-             {", ".join(
-                 f"CAST(SUM(CASE WHEN k < w * h - {lg} THEN"
-                 f" (({_sql_lcg_px('k')}) - 128)"
-                 f" * (({_sql_lcg_px(f'k + {lg}')}) - 128) END)"
-                 f" AS BIGINT) AS acf{lg}"
-                 for lg in _ACF_LAGS)}
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      GROUP BY image_id
-    ),
-    whtc AS (
-      -- WHT coefficients (multimodal.audio_wht_stage): the direct
-      -- popcount-sign sum — a genuinely different algorithm from the
-      -- kernel's butterfly, same exact integers
-      SELECT image_id, b,
-             SUM((({_sql_lcg_px('k')}) - 128)
-                 * (1 - 2 * (bit_count(CAST(b & k AS BIGINT)) % 2))) AS c,
-             MAX(bit_count(CAST(b AS BIGINT))) AS pc
-      FROM meta,
-           UNNEST(generate_series(0, 255)) AS bt(b),
-           UNNEST(generate_series(0, 255)) AS kt(k)
-      GROUP BY image_id, b
-    ),
-    whta AS (
-      SELECT image_id,
-             CAST(COALESCE(SUM(CASE WHEN b = 0 THEN c END), 0) AS BIGINT)
-               AS wht_dc,
-             CAST(COALESCE(SUM(CASE WHEN pc BETWEEN 1 AND 2 THEN c * c END), 0)
-                  AS BIGINT) AS wht_e_low,
-             CAST(COALESCE(SUM(CASE WHEN pc BETWEEN 3 AND 5 THEN c * c END), 0)
-                  AS BIGINT) AS wht_e_mid,
-             CAST(COALESCE(SUM(CASE WHEN pc >= 6 THEN c * c END), 0)
-                  AS BIGINT) AS wht_e_high,
-             CAST(SUM(c * c) AS BIGINT) AS wht_e_total
-      FROM whtc GROUP BY image_id
-    ),
-    mvc AS (
-      -- block-matching motion (multimodal.motion_stage): SAD of every
-      -- in-bounds ±2 candidate per 8x8 target block per frame pair,
-      -- frames recomputed from the LCG + VIDEO_SHIFTS formula
-      SELECT image_id, j, bR, bC, dy, dx,
-             SUM(ABS(
-               {_sql_vpx("(8*bR + p // 8 + dy) * w + (8*bC + p % 8 + dx)", "j")}
-               - {_sql_vpx("(8*bR + p // 8) * w + (8*bC + p % 8)", "j + 1")}
-             )) AS sad
-      FROM meta,
-           UNNEST(generate_series(1, 3)) AS jt(j),
-           UNNEST(generate_series(0, h // 8 - 1)) AS rt(bR),
-           UNNEST(generate_series(0, w // 8 - 1)) AS ct(bC),
-           UNNEST(generate_series(-2, 2)) AS dyt(dy),
-           UNNEST(generate_series(-2, 2)) AS dxt(dx),
-           UNNEST(generate_series(0, 63)) AS pt(p)
-      WHERE 8*bR + dy >= 0 AND 8*bR + 8 + dy <= h
-        AND 8*bC + dx >= 0 AND 8*bC + 8 + dx <= w
-      GROUP BY image_id, j, bR, bC, dy, dx
-    ),
-    mvb AS (
-      SELECT *, row_number() OVER (PARTITION BY image_id, j, bR, bC
-                                   ORDER BY sad, dy, dx) AS rn
-      FROM mvc
-    ),
-    mvagg AS (
-      SELECT image_id,
-             CAST(COUNT(*) AS BIGINT) AS mv_blocks,
-             CAST(SUM(sad) AS BIGINT) AS mv_sad_sum,
-             CAST(COALESCE(SUM(CASE WHEN dy <> 0 OR dx <> 0 THEN 1 END), 0)
-                  AS BIGINT) AS mv_nz,
-             CAST(SUM(dx) AS BIGINT) AS mv_dx_sum,
-             CAST(SUM(dy) AS BIGINT) AS mv_dy_sum,
-             CAST(SUM((j * 4096 + bR * 64 + bC + 1) * dx) AS BIGINT) AS mv_dxw,
-             CAST(SUM((j * 4096 + bR * 64 + bC + 1) * dy) AS BIGINT) AS mv_dyw
-      FROM mvb WHERE rn = 1 GROUP BY image_id
-    ),
-    wv1 AS (
-      -- 2-level Haar (multimodal.wavelet_stage): level-1 subbands as
-      -- signed within-2x2-block sums; the sign of a pixel's
-      -- contribution to LH/HL/HH is (-1)^(c%2) / (-1)^(r%2) / both
-      SELECT image_id, w, h, r // 2 AS br, c // 2 AS bc,
-             SUM(v) AS ll,
-             SUM(v * (1 - 2 * (c % 2))) AS lh,
-             SUM(v * (1 - 2 * (r % 2))) AS hl,
-             SUM(v * (1 - 2 * (c % 2)) * (1 - 2 * (r % 2))) AS hh
-      FROM px
-      WHERE r < h // 2 * 2 AND c < w // 2 * 2
-      GROUP BY image_id, w, h, r // 2, c // 2
-    ),
-    wv2 AS (
-      -- level 2 = the same step on the level-1 LL grid (complete
-      -- blocks only: h//4 x w//4)
-      SELECT image_id, br // 2 AS b2r, bc // 2 AS b2c,
-             SUM(ll) AS ll2,
-             SUM(ll * (1 - 2 * (bc % 2))) AS lh2,
-             SUM(ll * (1 - 2 * (br % 2))) AS hl2,
-             SUM(ll * (1 - 2 * (bc % 2)) * (1 - 2 * (br % 2))) AS hh2
-      FROM wv1
-      WHERE br < h // 4 * 2 AND bc < w // 4 * 2
-      GROUP BY image_id, br // 2, bc // 2
-    ),
-    wvagg1 AS (
-      SELECT image_id,
-             CAST(SUM(lh * lh) AS BIGINT) AS wv_e_lh1,
-             CAST(SUM(hl * hl) AS BIGINT) AS wv_e_hl1,
-             CAST(SUM(hh * hh) AS BIGINT) AS wv_e_hh1,
-             CAST(COUNT(*) AS BIGINT) AS wv_n1
-      FROM wv1 GROUP BY image_id
-    ),
-    wvagg2 AS (
-      SELECT image_id,
-             CAST(SUM(lh2 * lh2) AS BIGINT) AS wv_e_lh2,
-             CAST(SUM(hl2 * hl2) AS BIGINT) AS wv_e_hl2,
-             CAST(SUM(hh2 * hh2) AS BIGINT) AS wv_e_hh2,
-             CAST(SUM(ll2) AS BIGINT) AS wv_ll2_sum,
-             CAST(COUNT(*) AS BIGINT) AS wv_n2
-      FROM wv2 GROUP BY image_id
-    ),
-    fastb AS (
-      -- FAST-9 bright/dark circle masks per full-circle center
-      -- (multimodal.fast_stage)
-      SELECT image_id, k,
-             {_fast_mask(f"> ({pxv}) + {_FAST_T}")} AS mb,
-             {_fast_mask(f"< ({pxv}) - {_FAST_T}")} AS md
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE (k // w) BETWEEN 3 AND h - 4 AND (k % w) BETWEEN 3 AND w - 4
-    ),
-    fastagg AS (
-      SELECT image_id,
-             CAST(COALESCE(SUM(CASE WHEN isb OR isd THEN 1 END), 0)
-                  AS BIGINT) AS fast_n,
-             CAST(COALESCE(SUM(CASE WHEN isb THEN 1 END), 0)
-                  AS BIGINT) AS fast_bn,
-             CAST(COALESCE(SUM(CASE WHEN isb OR isd THEN k END), 0)
-                  AS BIGINT) AS fast_wpos
-      FROM (
-        SELECT image_id, k, {_run9("mb")} AS isb, {_run9("md")} AS isd
-        FROM fastb
-      ) GROUP BY image_id
-    ),
-    hoff(dy, dx) AS (VALUES (-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 0),
-                            (0, 1), (1, -1), (1, 0), (1, 1)),
-    hacc AS (
-      -- Harris structure tensor: scatter each gradient pixel to the 9
-      -- windows it belongs to; full windows (n9 = 9) are the response
-      -- pixels (multimodal.harris_stage)
-      SELECT image_id, w, r + dy AS hr, c + dx AS hc,
-             SUM(gx * gx) AS ha, SUM(gy * gy) AS hb, SUM(gx * gy) AS hcv,
-             COUNT(*) AS n9
-      FROM sob CROSS JOIN hoff
-      GROUP BY image_id, w, r + dy, c + dx
-    ),
-    hres AS (
-      SELECT image_id, hr * w + hc AS kpos,
-             20 * (ha * hb - hcv * hcv) - (ha + hb) * (ha + hb) AS r20
-      FROM hacc WHERE n9 = 9
-    ),
-    hagg AS (
-      SELECT image_id,
-             CAST(COALESCE(SUM(CASE WHEN r20 > {_CORNER_MIN} THEN 1 END), 0)
-                  AS BIGINT) AS hc_n,
-             CAST(MAX(r20) AS BIGINT) AS hc_max,
-             CAST(MIN(r20) AS BIGINT) AS hc_min,
-             CAST(COALESCE(SUM(CASE WHEN r20 > {_CORNER_MIN} THEN kpos END), 0)
-                  AS BIGINT) AS hc_wpos
-      FROM hres GROUP BY image_id
-    ),
-    macc AS (
-      -- 3x3 median filter + morphology: ONE window scatter over raw
-      -- pixels feeds all three order statistics — quantile_disc(0.5)
-      -- of 9 ints = the exact 5th order statistic
-      -- (multimodal.median_filter_stage), MIN/MAX = erosion/dilation
-      -- (multimodal.morphology_stage)
-      SELECT image_id, r + dy AS mr, c + dx AS mc,
-             CAST(quantile_disc(v, 0.5) AS BIGINT) AS medv,
-             MIN(v) AS erov, MAX(v) AS dilv, COUNT(*) AS n9
-      FROM px CROSS JOIN hoff
-      GROUP BY image_id, r + dy, c + dx
-    ),
-    magg AS (
-      SELECT m.image_id,
-             CAST(SUM(m.medv) AS BIGINT) AS med_sum,
-             CAST(SUM(ABS(m.medv - p.v)) AS BIGINT) AS med_absdiff,
-             CAST(SUM(m.erov) AS BIGINT) AS ero_sum,
-             CAST(SUM(m.dilv) AS BIGINT) AS dil_sum,
-             CAST(COALESCE(SUM(CASE WHEN m.dilv > m.erov THEN 1 END), 0)
-                  AS BIGINT) AS mg_nz
-      FROM macc m JOIN px p ON p.image_id = m.image_id
-                           AND p.r = m.mr AND p.c = m.mc
-      WHERE m.n9 = 9
-      GROUP BY m.image_id
-    ),
-    ssmom AS (
-      -- SSIM integer moments vs the 3x3 median (multimodal.ssim_stage
-      -- — reuses macc's exact order-statistic median; every fixture
-      -- image is >= 16 px so the interior is never empty)
-      SELECT m.image_id,
-             CAST(count(*) AS BIGINT) AS ssim_n,
-             CAST(SUM(p.v) AS BIGINT) AS ssim_sx,
-             CAST(SUM(m.medv) AS BIGINT) AS ssim_sy,
-             CAST(SUM(p.v * p.v) AS BIGINT) AS ssim_sx2,
-             CAST(SUM(m.medv * m.medv) AS BIGINT) AS ssim_sy2,
-             CAST(SUM(p.v * m.medv) AS BIGINT) AS ssim_sxy
-      FROM macc m JOIN px p ON p.image_id = m.image_id
-                           AND p.r = m.mr AND p.c = m.mc
-      WHERE m.n9 = 9
-      GROUP BY m.image_id
-    ),
-    lbpb AS (
-      -- LBP ring taps (multimodal.lbp_stage): bit i set when the
-      -- clockwise-from-top-left neighbor i >= center, per interior
-      -- pixel — the same LCG-tap spelling the Sobel twin uses
-      SELECT image_id,
-        CASE WHEN ({_sql_lcg_px('k - w - 1')}) >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b0,
-        CASE WHEN ({_sql_lcg_px('k - w')})     >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b1,
-        CASE WHEN ({_sql_lcg_px('k - w + 1')}) >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b2,
-        CASE WHEN ({_sql_lcg_px('k + 1')})     >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b3,
-        CASE WHEN ({_sql_lcg_px('k + w + 1')}) >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b4,
-        CASE WHEN ({_sql_lcg_px('k + w')})     >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b5,
-        CASE WHEN ({_sql_lcg_px('k + w - 1')}) >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b6,
-        CASE WHEN ({_sql_lcg_px('k - 1')})     >= ({_sql_lcg_px('k')}) THEN 1 ELSE 0 END AS b7
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE (k // w) BETWEEN 1 AND h - 2 AND (k % w) BETWEEN 1 AND w - 2
-    ),
-    lbpagg AS (
-      SELECT image_id,
-             CAST(SUM(b0 + 2*b1 + 4*b2 + 8*b3 + 16*b4 + 32*b5 + 64*b6
-                      + 128*b7) AS BIGINT) AS lbp_sum,
-             CAST(COALESCE(SUM(CASE WHEN
-                 (CASE WHEN b0 <> b1 THEN 1 ELSE 0 END)
-               + (CASE WHEN b1 <> b2 THEN 1 ELSE 0 END)
-               + (CASE WHEN b2 <> b3 THEN 1 ELSE 0 END)
-               + (CASE WHEN b3 <> b4 THEN 1 ELSE 0 END)
-               + (CASE WHEN b4 <> b5 THEN 1 ELSE 0 END)
-               + (CASE WHEN b5 <> b6 THEN 1 ELSE 0 END)
-               + (CASE WHEN b6 <> b7 THEN 1 ELSE 0 END)
-               + (CASE WHEN b7 <> b0 THEN 1 ELSE 0 END) <= 2
-               THEN 1 END), 0) AS BIGINT) AS lbp_uni
-      FROM lbpb GROUP BY image_id
-    ),
-    ohist AS (
-      SELECT image_id, v, COUNT(*) AS c
-      FROM px
-      GROUP BY image_id, v
-    ),
-    ocum AS (
-      -- ONE cumulative-histogram source for BOTH the Otsu and the
-      -- hist-eq twins (c carried through for the equalization weights)
-      SELECT image_id, v, c,
-             SUM(c) OVER (PARTITION BY image_id ORDER BY v) AS cw,
-             SUM(v * c) OVER (PARTITION BY image_id ORDER BY v) AS cs,
-             SUM(c) OVER (PARTITION BY image_id) AS n_px,
-             SUM(v * c) OVER (PARTITION BY image_id) AS s_tot
-      FROM ohist
-    ),
-    osig AS (
-      -- sigma_b at each plateau start (present value with both classes
-      -- non-empty); numerator/denominator exact ints < 2^53, ONE
-      -- squaring + ONE division of identical doubles = the kernel's
-      SELECT image_id, CAST(v AS INT) AS otsu_t,
-             CAST(n_px - cw AS BIGINT) AS otsu_fg,
-             (CAST(cw * s_tot - n_px * cs AS DOUBLE)
-              * CAST(cw * s_tot - n_px * cs AS DOUBLE))
-               / CAST(cw * (n_px - cw) AS DOUBLE) AS otsu_sigma
-      FROM ocum
-      WHERE cw * (n_px - cw) > 0
-    ),
-    obest AS (
-      SELECT image_id, otsu_t, otsu_fg, otsu_sigma
-      FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY image_id ORDER BY otsu_sigma DESC, otsu_t ASC
-        ) AS rn
-        FROM osig
-      )
-      WHERE rn = 1
-    ),
-    ecc AS (
-      SELECT image_id, v, c, cw, n_px,
-             MIN(cw) OVER (PARTITION BY image_id) AS cmin
-      FROM ocum
-    ),
-    eagg AS (
-      -- histogram equalization: eq(v) = ((cw - cmin) * 255) // (n - cmin),
-      -- pure non-negative integer floor division (multimodal.hist_eq_stage)
-      SELECT image_id,
-             CASE WHEN n_px = cmin THEN NULL ELSE
-               CAST(SUM((((cw - cmin) * 255) // (n_px - cmin)) * c) AS BIGINT)
-             END AS eq_sum,
-             CASE WHEN n_px = cmin THEN NULL ELSE
-               CAST(COALESCE(SUM(CASE WHEN ((cw - cmin) * 255) // (n_px - cmin) < 64
-                                      THEN c END), 0) AS BIGINT)
-             END AS eq_dark
-      FROM ecc
-      GROUP BY image_id, n_px, cmin
-    ),
-    blc AS (
-      SELECT image_id, w, h, i, j,
-             least(greatest((2 * (j // 8) + 1) * h - 8, 0), (h - 1) * 16) AS ny,
-             least(greatest((2 * (j % 8) + 1) * w - 8, 0), (w - 1) * 16) AS nx
-      FROM meta, UNNEST(generate_series(0, 63)) AS bt(j)
-    ),
-    bld AS (
-      SELECT image_id, w, h, i, j,
-             ny // 16 AS y0, ny % 16 AS fy, least(ny // 16 + 1, h - 1) AS y1,
-             nx // 16 AS x0, nx % 16 AS fx, least(nx // 16 + 1, w - 1) AS x1
-      FROM blc
-    ),
-    ble AS (
-      -- exact fixed-point bilinear (multimodal.bilinear_resize_stage):
-      -- floor division of non-negative ints, Dx = Dy = 16
-      SELECT image_id, j,
-             (({_sql_lcg_px('y0 * w + x0')}) * (16 - fx) * (16 - fy)
-            + ({_sql_lcg_px('y0 * w + x1')}) * fx * (16 - fy)
-            + ({_sql_lcg_px('y1 * w + x0')}) * (16 - fx) * fy
-            + ({_sql_lcg_px('y1 * w + x1')}) * fx * fy) // 256 AS ov
-      FROM bld
-    ),
-    blagg AS (
-      SELECT image_id,
-             CAST(SUM(ov) AS BIGINT) AS bl_sum,
-             CAST(SUM((j + 1) * ov) AS BIGINT) AS bl_wsum
-      FROM ble GROUP BY image_id
-    ),
-    tmssd AS (
-      -- exact SSD template matching (multimodal.template_match_stage):
-      -- the 8x8 gate template is tpl[j] = (j*37 + 11) % 251
-      SELECT image_id, (h - 7) * (w - 7) AS n_pos, oy, ox,
-             SUM((({_sql_lcg_px('(oy + j // 8) * w + (ox + j % 8)')})
-                  - ((j * 37 + 11) % 251))
-                 * (({_sql_lcg_px('(oy + j // 8) * w + (ox + j % 8)')})
-                    - ((j * 37 + 11) % 251))) AS ssd
-      FROM meta,
-           UNNEST(generate_series(0, h - 8)) AS t1(oy),
-           UNNEST(generate_series(0, w - 8)) AS t2(ox),
-           UNNEST(generate_series(0, 63)) AS t3(j)
-      GROUP BY image_id, (h - 7) * (w - 7), oy, ox
-    ),
-    tmbest AS (
-      SELECT image_id, CAST(n_pos AS BIGINT) AS tm_npos,
-             CAST(ssd AS BIGINT) AS tm_ssd,
-             CAST(oy AS BIGINT) AS tm_y, CAST(ox AS BIGINT) AS tm_x
-      FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY image_id ORDER BY ssd, oy, ox) AS rn
-        FROM tmssd
-      ) WHERE rn = 1
-    ),
-    glcp AS (
-      -- GLCM horizontal-pair codes (multimodal.glcm_stage): 16-level
-      -- quantization v >> 4 == v // 16 on non-negative pixels; the
-      -- k % w <> w - 1 guard keeps the east pair inside its row
-      SELECT image_id,
-             (({_sql_lcg_px('k')}) // 16) * 16
-               + (({_sql_lcg_px('k + 1')}) // 16) AS code,
-             COUNT(*) AS nc
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      WHERE w >= 2 AND k % w <> w - 1
-      GROUP BY image_id, code
-    ),
-    glcm AS (
-      -- Haralick statistics in exact integers; homogeneity weight
-      -- quantized through LCM(1..16) = 720720 so 1/(1+|i-j|) is exact
-      SELECT image_id,
-             CAST(SUM(nc) AS BIGINT) AS glcm_n,
-             CAST(SUM(nc * (code // 16 - code % 16)
-                         * (code // 16 - code % 16)) AS BIGINT)
-               AS glcm_contrast,
-             CAST(SUM(nc * nc) AS BIGINT) AS glcm_energy,
-             CAST(SUM(nc * (720720 // (1 + abs(code // 16 - code % 16))))
-                  AS BIGINT) AS glcm_homog,
-             CAST(COUNT(*) AS BIGINT) AS glcm_nz
-      FROM glcp GROUP BY image_id
-    ),
-    momr AS (
-      -- raw spatial moments (multimodal.moments_stage); DuckDB SUM on
-      -- BIGINT already accumulates in HUGEINT
-      SELECT image_id,
-             SUM(v) AS m00,
-             SUM(c * v) AS m10, SUM(r * v) AS m01,
-             SUM(c * c * v) AS m20, SUM(r * r * v) AS m02,
-             SUM(c * r * v) AS m11
-      FROM px GROUP BY image_id
-    ),
-    mom AS (
-      -- central-moment numerators m00*m2x - m1x^2 in HUGEINT ==
-      -- Spark's decimal(38,0), rendered as digits
-      SELECT image_id,
-             CAST(m00 AS BIGINT) AS im_m00,
-             CAST(CAST(m00 AS HUGEINT) * m20
-                  - CAST(m10 AS HUGEINT) * m10 AS VARCHAR) AS mu20n,
-             CAST(CAST(m00 AS HUGEINT) * m02
-                  - CAST(m01 AS HUGEINT) * m01 AS VARCHAR) AS mu02n,
-             CAST(CAST(m00 AS HUGEINT) * m11
-                  - CAST(m10 AS HUGEINT) * m01 AS VARCHAR) AS mu11n
-      FROM momr
-    ),
-    aud AS (
-      SELECT image_id,
-             CAST(w * h AS INT) AS n_samples,
-             CAST(MAX(ABS(({_sql_lcg_px('k')}) - 128)) AS INT) AS peak,
-             CAST(SUM(ABS(({_sql_lcg_px('k')}) - 128)
-                      * ABS(({_sql_lcg_px('k')}) - 128)) AS BIGINT) AS energy,
-             CAST(MIN(CASE WHEN ABS(({_sql_lcg_px('k')}) - 128) >= {_AUDIO_AMP}
-                           THEN k END) AS INT) AS trim_start,
-             CAST(MAX(CASE WHEN ABS(({_sql_lcg_px('k')}) - 128) >= {_AUDIO_AMP}
-                           THEN k END) AS INT) AS trim_end
-      FROM meta, UNNEST(generate_series(0, w * h - 1)) AS t(k)
-      GROUP BY image_id, w * h
-    )
-    SELECT s.image_id, s.pix_mean, s.pix_max, s.pix_min,
-           p.n_patches, p.patch_sum_check, p.patch_min_check,
-           COALESCE(l.n_interior, 0) AS n_interior,
-           COALESCE(l.lap_sum, 0) AS lap_sum,
-           COALESCE(l.lap_sq_sum, 0) AS lap_sq_sum,
-           CASE WHEN COALESCE(l.n_interior, 0) > 0 THEN
-             (CAST(l.n_interior AS DOUBLE) * CAST(l.lap_sq_sum AS DOUBLE)
-              - CAST(l.lap_sum AS DOUBLE) * CAST(l.lap_sum AS DOUBLE))
-               / (CAST(l.n_interior AS DOUBLE) * CAST(l.n_interior AS DOUBLE))
-           END AS lap_var,
-           v.n_transitions, v.n_cuts, v.sad_total, v.cut_frame,
-           COALESCE(mv.mv_blocks, 0) AS mv_blocks,
-           COALESCE(mv.mv_sad_sum, 0) AS mv_sad_sum,
-           COALESCE(mv.mv_nz, 0) AS mv_nz,
-           COALESCE(mv.mv_dx_sum, 0) AS mv_dx_sum,
-           COALESCE(mv.mv_dy_sum, 0) AS mv_dy_sum,
-           COALESCE(mv.mv_dxw, 0) AS mv_dxw,
-           COALESCE(mv.mv_dyw, 0) AS mv_dyw,
-           aud.n_samples, aud.peak, aud.energy,
-           wt.wht_dc, wt.wht_e_low, wt.wht_e_mid, wt.wht_e_high,
-           wt.wht_e_total,
-           ac.acf0, ac.acf1, ac.acf2, ac.acf4, ac.acf8, ac.acf16,
-           bn.bp0_n, bn.bp1_n, bn.bp6_n, bn.bp7_n,
-           COALESCE(bt.bp0_t, 0) AS bp0_t, COALESCE(bt.bp1_t, 0) AS bp1_t,
-           COALESCE(bt.bp6_t, 0) AS bp6_t, COALESCE(bt.bp7_t, 0) AS bp7_t,
-           dg.dth_n, COALESCE(dt2.dth_t, 0) AS dth_t, dg.dth_wsum,
-           af.ap_n_gt, af.ap_n_det, af.ap_tp, af.ap_num_str, af.ap_den_str,
-           sm.sg_tp, sm.sg_fp, sm.sg_fn, sm.sg_miou_num, sm.sg_miou_den,
-           sso.ssim_n, sso.ssim_sx, sso.ssim_sy, sso.ssim_sx2,
-           sso.ssim_sy2, sso.ssim_sxy,
-           CASE WHEN sso.ssim_n > 0 THEN ((2.0 * (CAST(sso.ssim_sx AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) * (CAST(sso.ssim_sy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) + 6.5025) * (2.0 * (CAST(sso.ssim_sxy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE) - (CAST(sso.ssim_sx AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) * (CAST(sso.ssim_sy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE))) + 58.5225)) / (((CAST(sso.ssim_sx AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) * (CAST(sso.ssim_sx AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) + (CAST(sso.ssim_sy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) * (CAST(sso.ssim_sy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) + 6.5025) * ((CAST(sso.ssim_sx2 AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE) - (CAST(sso.ssim_sx AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) * (CAST(sso.ssim_sx AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE))) + (CAST(sso.ssim_sy2 AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE) - (CAST(sso.ssim_sy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE)) * (CAST(sso.ssim_sy AS DOUBLE) / CAST(sso.ssim_n AS DOUBLE))) + 58.5225)) END AS ssim,
-           SQRT(CAST(aud.energy AS DOUBLE) / CAST(aud.n_samples AS DOUBLE)) AS rms,
-           aud.trim_start, aud.trim_end,
-           COALESCE(sg.gx_abs_sum, 0) AS gx_abs_sum,
-           COALESCE(sg.gy_abs_sum, 0) AS gy_abs_sum,
-           COALESCE(sg.g_sq_sum, 0) AS g_sq_sum,
-           COALESCE(sg.n_edge, 0) AS n_edge,
-           ob.otsu_t, ob.otsu_fg, ob.otsu_sigma,
-           e.eq_sum, e.eq_dark,
-           bl.bl_sum, bl.bl_wsum,
-           tb.tm_npos, tb.tm_ssd, tb.tm_y, tb.tm_x,
-           COALESCE(og.og_flat, 0) AS og_flat,
-           COALESCE(og.og_n0, 0) AS og_n0, COALESCE(og.og_n1, 0) AS og_n1,
-           COALESCE(og.og_n2, 0) AS og_n2, COALESCE(og.og_n3, 0) AS og_n3,
-           COALESCE(og.og_e0, 0) AS og_e0, COALESCE(og.og_e1, 0) AS og_e1,
-           COALESCE(og.og_e2, 0) AS og_e2, COALESCE(og.og_e3, 0) AS og_e3,
-           COALESCE(hg.hc_n, 0) AS hc_n, hg.hc_max, hg.hc_min,
-           COALESCE(hg.hc_wpos, 0) AS hc_wpos,
-           sc.sc_cost, sc.sc_end, sc.sc_top,
-           COALESCE(fg.fast_n, 0) AS fast_n,
-           COALESCE(fg.fast_bn, 0) AS fast_bn,
-           COALESCE(fg.fast_wpos, 0) AS fast_wpos,
-           COALESCE(w1.wv_e_lh1, 0) AS wv_e_lh1,
-           COALESCE(w1.wv_e_hl1, 0) AS wv_e_hl1,
-           COALESCE(w1.wv_e_hh1, 0) AS wv_e_hh1,
-           COALESCE(w1.wv_n1, 0) AS wv_n1,
-           COALESCE(w2.wv_e_lh2, 0) AS wv_e_lh2,
-           COALESCE(w2.wv_e_hl2, 0) AS wv_e_hl2,
-           COALESCE(w2.wv_e_hh2, 0) AS wv_e_hh2,
-           COALESCE(w2.wv_ll2_sum, 0) AS wv_ll2_sum,
-           COALESCE(w2.wv_n2, 0) AS wv_n2,
-           COALESCE(mg.med_sum, 0) AS med_sum,
-           COALESCE(mg.med_absdiff, 0) AS med_absdiff,
-           COALESCE(mg.ero_sum, 0) AS ero_sum,
-           COALESCE(mg.dil_sum, 0) AS dil_sum,
-           COALESCE(mg.mg_nz, 0) AS mg_nz,
-           COALESCE(lb.lbp_sum, 0) AS lbp_sum,
-           COALESCE(lb.lbp_uni, 0) AS lbp_uni,
-           COALESCE(gm.glcm_n, 0) AS glcm_n,
-           COALESCE(gm.glcm_contrast, 0) AS glcm_contrast,
-           COALESCE(gm.glcm_energy, 0) AS glcm_energy,
-           COALESCE(gm.glcm_homog, 0) AS glcm_homog,
-           COALESCE(gm.glcm_nz, 0) AS glcm_nz,
-           mm.im_m00 AS im_m00,
-           mm.mu20n AS mu20n, mm.mu02n AS mu02n, mm.mu11n AS mu11n,
-           COALESCE(nm.nms_n, 0) AS nms_n,
-           COALESCE(nm.nms_sq_sum, 0) AS nms_sq_sum,
-           COALESCE(nm.nms_wpos, 0) AS nms_wpos,
-           ec.eu_q1 AS eu_q1, ec.eu_q3 AS eu_q3, ec.eu_qd AS eu_qd,
-           ec.eu_chi4 AS eu_chi4, ec.eu_chi8 AS eu_chi8,
-           COALESCE(hb.hl_votes, 0) AS hl_votes,
-           hb.hl_theta, hb.hl_rho,
-           em.emd_uniform
-    FROM stats s JOIN pagg p USING (image_id) LEFT JOIN lagg l USING (image_id)
-    JOIN vagg v USING (image_id) JOIN aud USING (image_id)
-    JOIN whta wt USING (image_id)
-    JOIN acf ac USING (image_id)
-    JOIN bpn bn USING (image_id)
-    LEFT JOIN bpt bt USING (image_id)
-    JOIN dthg dg USING (image_id)
-    LEFT JOIN dtt dt2 USING (image_id)
-    JOIN apfin af USING (image_id)
-    JOIN sgm sm USING (image_id)
-    JOIN ssmom sso USING (image_id)
-    LEFT JOIN mvagg mv USING (image_id)
-    LEFT JOIN sagg sg USING (image_id) LEFT JOIN obest ob USING (image_id)
-    JOIN eagg e USING (image_id)
-    JOIN blagg bl USING (image_id)
-    JOIN tmbest tb USING (image_id)
-    LEFT JOIN og USING (image_id)
-    LEFT JOIN hagg hg USING (image_id)
-    LEFT JOIN scagg sc USING (image_id)
-    LEFT JOIN fastagg fg USING (image_id)
-    LEFT JOIN wvagg1 w1 USING (image_id)
-    LEFT JOIN wvagg2 w2 USING (image_id)
-    LEFT JOIN magg mg USING (image_id)
-    LEFT JOIN lbpagg lb USING (image_id)
-    LEFT JOIN glcm gm USING (image_id)
-    JOIN mom mm USING (image_id)
-    LEFT JOIN nms nm USING (image_id)
-    JOIN euc ec USING (image_id)
-    LEFT JOIN hbest hb USING (image_id)
-    JOIN emda em USING (image_id)
-    ORDER BY s.image_id
-    """
-
-
-@register("multimodal_decode_stats", _multimodal_oracle())
-def multimodal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column decode + per-image stats through mapInPandas (codec
-    stubbed; plumbing and batch shape real) joined with ViT-style 8x8
-    patch extraction: patchify_stage explodes each image into
-    position-keyed tiles map-side, and the gate aggregates them back to
-    position-weighted checksums per image so every tile's placement and
-    content is oracle-verified. Plus variance-of-Laplacian sharpness
-    (the classic blur filter): the stage emits exact integer moments
-    and the variance is ONE shared IEEE division here, so the doubles
-    are bit-identical across engines. Input synthesized
-    deterministically (the driver star schema has no binary column);
-    the oracle recomputes the fake-codec pixels, the patch grid, AND
-    the interior Laplacian in SQL.
-
-    Plus video scene-cut detection (scene_cut_stage): a 4-frame video
-    sibling of every image (gen_videos — per-frame pixel shifts with
-    one planted scene change) yields per-transition exact integer SAD
-    and a no-FP threshold flag; the gate carries per-video transition
-    count, cut count, SAD total and the first cut's frame index, all
-    recomputed by the oracle from the shift formula.
-
-    Plus the audio pass (audio_stats_stage): the same opaque binary
-    column read under the unsigned-8-bit-PCM contract — exact integer
-    peak/energy, rms as ONE shared sqrt (IEEE sqrt is correctly
-    rounded, so the doubles match bit-for-bit), and the silence-trim
-    [trim_start, trim_end] slice a speech pipeline cuts to.
-
-    Plus Sobel gradient stats (sobel_stage — exact-integer edge energy
-    and the n_edge threshold count, all recomputed by the oracle from
-    the LCG formula at the six neighbor offsets) and Otsu's threshold
-    (otsu_stage — the between-class-variance argmax over the 256-bin
-    histogram; exact int64 numerator/denominator with ONE shared
-    squaring + division, ties to the lowest t, so the picked threshold,
-    foreground mass and sigma are bit-identical cross-engine).
-
-    Plus histogram equalization (hist_eq_stage): the standard
-    contrast-normalization mapping eq(v) = ((cdf(v)−cdf_min)·255) //
-    (n−cdf_min) is pure non-negative integer floor division, so the
-    per-image equalized sum and post-equalization shadow mass
-    (eq_sum/eq_dark) reproduce bit-for-bit from the oracle's histogram
-    CTE; constant images NULL.
-
-    Plus exact fixed-point bilinear resize (bilinear_resize_stage, the
-    real-world interpolation default): every 8x8 output pixel is a
-    floor-division combination of the four LCG neighbors with the
-    half-pixel fixed-point fractions, pinned per image by the output
-    sum and the position-weighted checksum (a transpose or shift
-    breaks it even when the pixel multiset is right).
-
-    Plus exact SSD template matching (template_match_stage, the
-    localization primitive behind logo/watermark detection): the best
-    offset of the fixed 8x8 gate template tpl[j] = (j*37 + 11) % 251
-    in every image, ties to the smallest (y, x) — valid-offset count,
-    minimum SSD and BOTH coordinates recomputed by the oracle's
-    position x template-index unnest (a localization off-by-one
-    breaks tm_y/tm_x even when the SSD value is right).
-
-    Plus the gradient-orientation histogram
-    (orientation_hist_stage, HOG's pooling statistic at one cell per
-    image): per-sector pixel counts and edge energy over FOUR
-    45-degree sectors of the undirected gradient angle — the sector
-    boundaries sit at 45-degree multiples precisely so every boundary
-    is an exact integer comparison (classic HOG's tan() boundaries
-    are irrational and cross-engine unverifiable); flat gradients
-    counted separately; oracle reuses the Sobel CTE.
-
-    Plus the Harris corner response (harris_stage): R20 = 20·det(M) −
-    trace(M)² over the 3x3 box structure tensor of Sobel gradients —
-    classic Harris with k = 1/20 multiplied through so every response
-    is exact int64; pinned per image by the above-threshold count, the
-    extreme responses AND the position-weighted corner sum hc_wpos (a
-    shifted response map breaks the gate even when the count is
-    right); the oracle scatters the shared Sobel CTE through the 9
-    window offsets.
-
-    Plus the 3x3 median filter (median_filter_stage, the
-    salt-and-pepper noise screen): the median of 9 ints is the exact
-    5th order statistic, pinned by the filtered sum and the
-    impulse-noise mass Σ|median − center| vs the oracle's
-    window-scatter + quantile_disc twin.
-
-    Plus 3x3 morphology (morphology_stage — erosion/dilation sums and
-    the non-flat gradient mass mg_nz, exact window MIN/MAX recomputed
-    by the SAME oracle window scatter the median twin uses) and Local
-    Binary Patterns (lbp_stage — Σ 8-bit ring codes and the
-    uniform-pattern count, every comparison plane rebuilt from the
-    eight LCG neighbor taps; the circular-transition test makes the
-    ring ORDER part of the gate, not just the comparison set).
-
-    Plus GLCM texture statistics (glcm_stage, Haralick's second-order
-    screen): the 16-level horizontal co-occurrence matrix pinned by
-    exact-integer contrast / energy / homogeneity (the 1/(1+|i-j|)
-    inverse-difference weight quantized through LCM(1..16) = 720720 so
-    no per-cell float division exists in either engine), total-pair
-    and occupied-cell counts; the oracle re-bins east-neighbor LCG
-    pairs per image.
-
-    Plus the Hough line transform (hough_stage — the dominant-line
-    detector at the four exact 45-degree orientations; every Sobel
-    edge pixel votes at integer normal forms and the winning
-    accumulator cell rides each row as hl_votes/hl_theta/hl_rho, ties
-    pinned to the smallest (theta, rho), so a vote-table or argmax
-    bug anywhere breaks 500 rows bit-for-bit).
-
-    Plus raw spatial moments (moments_stage, the Hu-moment /
-    orientation front end): exact int64 m00..m11 from the kernel, the
-    central-moment numerators m00·m2x − m1x² computed in decimal(38,0)
-    on Spark and HUGEINT in the oracle (they pass 2^63 even at 256²,
-    so the wide products belong to the engines' exact types, not the
-    numpy kernel) and pinned as digit strings."""
-    import numpy as np
-
-    from ..datagen.synth import gen_images, gen_videos
-    from ..operators.evalmetrics import average_precision
-    from ..operators.multimodal import (
-        ACF_LAGS,
-        audio_acf_stage,
-        audio_stats_stage,
-        audio_wht_stage,
-        bitplane_stage,
-        dither_stage,
-        segmetrics_stage,
-        ssim_expr,
-        ssim_stage,
-        bilinear_resize_stage,
-        decode_stats,
-        emd_stage,
-        euler_stage,
-        glcm_stage,
-        fast_stage,
-        harris_stage,
-        hist_eq_stage,
-        hough_stage,
-        lbp_stage,
-        median_filter_stage,
-        moments_stage,
-        motion_stage,
-        morphology_stage,
-        nms_stage,
-        otsu_stage,
-        patchify_stage,
-        scene_cut_stage,
-        seam_stage,
-        orientation_hist_stage,
-        sharpness_stage,
-        sobel_stage,
-        template_match_stage,
-        wavelet_stage,
-    )
-
-    imgs = spark.createDataFrame(gen_images(500, seed=42))
-    vids = spark.createDataFrame(gen_videos(500, seed=42))
-    stats = decode_stats(imgs).select("image_id", "pix_mean", "pix_max", "pix_min")
-    pat = patchify_stage(imgs.select("image_id", "bytes", "w", "h"), patch=8)
-    wgt = F.col("patch_row").cast("long") * 1024 + F.col("patch_col") + 1
-    pagg = pat.groupBy("image_id").agg(
-        F.count(F.lit(1)).alias("n_patches"),
-        F.sum(wgt * F.col("p_sum")).alias("patch_sum_check"),
-        F.sum(wgt * F.col("p_min").cast("long")).alias("patch_min_check"),
-    )
-    # moments combine as DOUBLES: n*Σx² can pass 2^63 for big noisy
-    # images, where int64 would wrap in Spark but raise in DuckDB —
-    # identical IEEE multiplies keep the engines bit-equal at any size
-    ni = F.col("n_interior").cast("double")
-    lsum = F.col("lap_sum").cast("double")
-    lsq = F.col("lap_sq_sum").cast("double")
-    sharp = sharpness_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id",
-        "n_interior",
-        "lap_sum",
-        "lap_sq_sum",
-        F.when(
-            F.col("n_interior") > 0, (ni * lsq - lsum * lsum) / (ni * ni)
-        ).alias("lap_var"),
-    )
-    cuts = scene_cut_stage(vids, threshold_millis=_SCENE_THR)
-    mvs = motion_stage(vids).select(
-        "image_id", "mv_blocks", "mv_sad_sum", "mv_nz",
-        "mv_dx_sum", "mv_dy_sum", "mv_dxw", "mv_dyw",
-    )
-    vagg = cuts.groupBy("image_id").agg(
-        F.count(F.lit(1)).alias("n_transitions"),
-        F.sum(F.col("is_cut").cast("long")).alias("n_cuts"),
-        F.sum("sad").alias("sad_total"),
-        F.min(F.when(F.col("is_cut"), F.col("frame_idx"))).alias("cut_frame"),
-    )
-    aud = audio_stats_stage(
-        imgs.select("image_id", "bytes", "w", "h"), silence_amp=_AUDIO_AMP
-    ).select(
-        "image_id",
-        "n_samples",
-        "peak",
-        "energy",
-        F.sqrt(
-            F.col("energy").cast("double") / F.col("n_samples").cast("double")
-        ).alias("rms"),
-        "trim_start",
-        "trim_end",
-    )
-    wht = audio_wht_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "wht_dc", "wht_e_low", "wht_e_mid", "wht_e_high",
-        "wht_e_total",
-    )
-    acf = audio_acf_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "acf0", *[f"acf{lg}" for lg in ACF_LAGS]
-    )
-    bpl = bitplane_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id",
-        *[f"bp{b}_{s}" for b in (0, 1, 6, 7) for s in ("n", "t")],
-    )
-    dth = dither_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "dth_n", "dth_t", "dth_wsum"
-    )
-    # detection AP fixture (evalmetrics.average_precision): GT and DET
-    # boxes derived from the image index by pure integer arithmetic
-    # (i = the digits of image_id), so the oracle rebuilds them exactly;
-    # matched dets are the GT boxes shifted by up to ±7 (a genuine
-    # TP/FP mix at IoU>=1/2 on 20..45-sized boxes) plus 1-2 far FPs
-    ii = F.substring("image_id", 4, 8).cast("long")
-    jj = F.col("j")
-    gtb = (
-        imgs.select("image_id", ii.alias("i"))
-        .select("image_id", "i", F.explode(F.sequence(F.lit(0), F.lit(2))).alias("j"))
-        .filter(jj < 1 + F.col("i") % 3)
-        .select(
-            "image_id",
-            jj.alias("gt_id"),
-            ((F.col("i") * 37 + jj * 101) % 180).alias("x0"),
-            ((F.col("i") * 53 + jj * 71) % 180).alias("y0"),
-            ((F.col("i") * 37 + jj * 101) % 180 + 20
-             + (F.col("i") * 11 + jj * 13) % 25).alias("x1"),
-            ((F.col("i") * 53 + jj * 71) % 180 + 20
-             + (F.col("i") * 17 + jj * 19) % 25).alias("y1"),
-        )
-    )
-    detb = (
-        imgs.select("image_id", ii.alias("i"))
-        .select("image_id", "i", F.explode(F.sequence(F.lit(0), F.lit(4))).alias("j"))
-        .filter(
-            ((jj < 3) & (jj < 1 + F.col("i") % 3))
-            | ((jj >= 3) & (jj - 3 < 1 + F.col("i") % 2))
-        )
-        .select(
-            "image_id",
-            F.when(jj < 3, jj).otherwise(100 + jj - 3).alias("det_id"),
-            F.when(jj < 3, (F.col("i") * 41 + jj * 59) % 100)
-            .otherwise((F.col("i") * 41 + (jj - 3) * 59 + 3) % 100)
-            .alias("score"),
-            F.when(
-                jj < 3,
-                (F.col("i") * 37 + jj * 101) % 180
-                + (F.col("i") * 7 + jj * 23) % 15 - 7,
-            )
-            .otherwise(200 + (F.col("i") * 13 + (jj - 3) * 37) % 150)
-            .alias("x0"),
-            F.when(
-                jj < 3,
-                (F.col("i") * 53 + jj * 71) % 180
-                + (F.col("i") * 29 + jj * 5) % 15 - 7,
-            )
-            .otherwise((F.col("i") * 43 + (jj - 3) * 29) % 300)
-            .alias("y0"),
-        )
-        .select(
-            "image_id",
-            "det_id",
-            "score",
-            "x0",
-            "y0",
-            F.when(F.col("det_id") < 100,
-                   F.col("x0") + 20
-                   + (F.substring("image_id", 4, 8).cast("long") * 11
-                      + F.col("det_id") * 13) % 25)
-            .otherwise(F.col("x0") + 15
-                       + (F.substring("image_id", 4, 8).cast("long")
-                          + F.col("det_id")) % 20)
-            .alias("x1"),
-            F.when(F.col("det_id") < 100,
-                   F.col("y0") + 20
-                   + (F.substring("image_id", 4, 8).cast("long") * 17
-                      + F.col("det_id") * 19) % 25)
-            .otherwise(F.col("y0") + 15
-                       + (F.substring("image_id", 4, 8).cast("long") * 3
-                          + F.col("det_id")) % 20)
-            .alias("y1"),
-        )
-    )
-    apf = average_precision(gtb, detb)
-    # binary-segmentation confusion + exact-fraction mIoU per image
-    # (multimodal.segmetrics_stage; the mul-7 scrambled predictor
-    # populates every confusion cell)
-    ssm = ssim_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "ssim_n", "ssim_sx", "ssim_sy", "ssim_sx2",
-        "ssim_sy2", "ssim_sxy",
-    )
-    ssm = ssm.select(
-        "*",
-        ssim_expr(
-            F.col("ssim_n"), F.col("ssim_sx"), F.col("ssim_sy"),
-            F.col("ssim_sx2"), F.col("ssim_sy2"), F.col("ssim_sxy"),
-        ).alias("ssim"),
-    )
-    seg = segmetrics_stage(
-        imgs.select("image_id", "bytes", "w", "h"),
-        pred_mul=7, pred_mod=251,
-    ).select(
-        "image_id", "sg_tp", "sg_fp", "sg_fn", "sg_miou_num", "sg_miou_den"
-    )
-    scm = seam_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "sc_cost", "sc_end", "sc_top"
-    )
-    sob = sobel_stage(
-        imgs.select("image_id", "bytes", "w", "h"), edge_sq_min=_EDGE_SQ_MIN
-    ).select("image_id", "gx_abs_sum", "gy_abs_sum", "g_sq_sum", "n_edge")
-    ots = otsu_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "otsu_t", "otsu_fg", "otsu_sigma"
-    )
-    heq = hist_eq_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "eq_sum", "eq_dark"
-    )
-    blr = bilinear_resize_stage(
-        imgs.select("image_id", "bytes", "w", "h"), 8, 8, with_checksums=True
-    ).select("image_id", "bl_sum", "bl_wsum")
-    tpl = ((np.arange(64) * 37 + 11) % 251).reshape(8, 8)
-    tmt = template_match_stage(
-        imgs.select("image_id", "bytes", "w", "h"), tpl
-    ).select(
-        "image_id",
-        F.col("n_pos").alias("tm_npos"),
-        F.col("best_ssd").alias("tm_ssd"),
-        F.col("best_y").alias("tm_y"),
-        F.col("best_x").alias("tm_x"),
-    )
-    ogh = orientation_hist_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id",
-        "og_flat",
-        *[f"og_n{b}" for b in range(4)],
-        *[f"og_e{b}" for b in range(4)],
-    )
-    hcr = harris_stage(
-        imgs.select("image_id", "bytes", "w", "h"), corner_min=_CORNER_MIN
-    ).select("image_id", "hc_n", "hc_max", "hc_min", "hc_wpos")
-    fst = fast_stage(
-        imgs.select("image_id", "bytes", "w", "h"), t=_FAST_T
-    ).select("image_id", "fast_n", "fast_bn", "fast_wpos")
-    wvl = wavelet_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id",
-        "wv_e_lh1", "wv_e_hl1", "wv_e_hh1", "wv_n1",
-        "wv_e_lh2", "wv_e_hl2", "wv_e_hh2", "wv_ll2_sum", "wv_n2",
-    )
-    mfs = median_filter_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "med_sum", "med_absdiff"
-    )
-    mor = morphology_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "ero_sum", "dil_sum", "mg_nz"
-    )
-    lbp = lbp_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "lbp_sum", "lbp_uni"
-    )
-    glc = glcm_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id",
-        "glcm_n",
-        "glcm_contrast",
-        "glcm_energy",
-        "glcm_homog",
-        "glcm_nz",
-    )
-    nms = nms_stage(
-        imgs.select("image_id", "bytes", "w", "h"), edge_sq_min=_EDGE_SQ_MIN
-    ).select("image_id", "nms_n", "nms_sq_sum", "nms_wpos")
-    eul = euler_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "eu_q1", "eu_q3", "eu_qd", "eu_chi4", "eu_chi8"
-    )
-    hgh = hough_stage(
-        imgs.select("image_id", "bytes", "w", "h"), edge_sq_min=_EDGE_SQ_MIN
-    ).select("image_id", "hl_votes", "hl_theta", "hl_rho")
-    emd = emd_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id", "emd_uniform"
-    )
-    # central-moment numerators in decimal(38,0): the kernel emits raw
-    # int64 moments only (m00*m20 - m10^2 passes 2^63 even at 256^2) —
-    # the wide products live in the engines' exact types, one spelling
-    _d = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    mom = moments_stage(imgs.select("image_id", "bytes", "w", "h")).select(
-        "image_id",
-        "im_m00",
-        (_d("im_m00") * _d("im_m20") - _d("im_m10") * _d("im_m10"))
-        .cast("string").alias("mu20n"),
-        (_d("im_m00") * _d("im_m02") - _d("im_m01") * _d("im_m01"))
-        .cast("string").alias("mu02n"),
-        (_d("im_m00") * _d("im_m11") - _d("im_m10") * _d("im_m01"))
-        .cast("string").alias("mu11n"),
-    )
-    return (
-        stats.join(pagg, "image_id")
-        .join(sharp, "image_id")
-        .join(vagg, "image_id")
-        .join(mvs, "image_id")
-        .join(aud, "image_id")
-        .join(wht, "image_id")
-        .join(acf, "image_id")
-        .join(bpl, "image_id")
-        .join(dth, "image_id")
-        .join(apf, "image_id")
-        .join(seg, "image_id")
-        .join(ssm, "image_id")
-        .join(scm, "image_id")
-        .join(sob, "image_id")
-        .join(ots, "image_id")
-        .join(heq, "image_id")
-        .join(blr, "image_id")
-        .join(tmt, "image_id")
-        .join(ogh, "image_id")
-        .join(hcr, "image_id")
-        .join(fst, "image_id")
-        .join(wvl, "image_id")
-        .join(mfs, "image_id")
-        .join(mor, "image_id")
-        .join(lbp, "image_id")
-        .join(glc, "image_id")
-        .join(mom, "image_id")
-        .join(nms, "image_id")
-        .join(eul, "image_id")
-        .join(hgh, "image_id")
-        .join(emd, "image_id")
-        .orderBy("image_id")
-    )
-
-
-def _group_bbox_oracle() -> str:
-    """DuckDB twin of A3 group_bboxes: a recursive CTE computes the
-    transitive image-closure of every group (UNION dedup terminates the
-    2-cycle), then min/max over reachable points — the same
-    decomposition group_bboxes runs (member closure ⋈ point bboxes ->
-    min/max), valid because bbox-union composes. Fixture literals are emitted
-    from the same deterministic generator the Spark query uses."""
-    from ..datagen.synth import gen_groups, gen_images
-
-    images = gen_images(300, seed=42)
-    lat = (images.phash // C.PHASH_LON_BASE) - C.LAT_OFFSET
-    lon = (images.phash % C.PHASH_LON_BASE) - C.LON_OFFSET
-    pts = ",\n      ".join(
-        f"('{i}', {la}, {lo})"
-        for i, la, lo in zip(images.image_id, lat, lon)
-    )
-    rows = []
-    for g in gen_groups(images).itertuples():
-        for m in g.members:
-            rows.append(
-                f"('{g.group_id}', '{g.kind}', '{m['ref']}', '{m['type']}')"
-            )
-    edges = ",\n      ".join(rows)
-    return f"""
-    WITH RECURSIVE
-    pts(ref, lat, lon) AS (VALUES
-      {pts}
-    ),
-    edges(group_id, kind, ref, ref_type) AS (VALUES
-      {edges}
-    ),
-    reach(group_id, img) AS (
-      SELECT group_id, ref FROM edges WHERE ref_type = 'image'
-      UNION
-      SELECT e.group_id, r.img
-      FROM edges e JOIN reach r ON e.ref_type = 'group' AND e.ref = r.group_id
-    ),
-    gk AS (SELECT DISTINCT group_id, kind FROM edges)
-    SELECT r.group_id, gk.kind,
-           min(p.lat) AS minlat, max(p.lat) AS maxlat,
-           min(p.lon) AS minlon, max(p.lon) AS maxlon
-    FROM reach r
-    JOIN pts p ON p.ref = r.img
-    JOIN gk ON gk.group_id = r.group_id
-    GROUP BY r.group_id, gk.kind
-    ORDER BY r.group_id
-    """
-
-
-#: coarse cell resolution for the skew entries: big cells (2^24
-#: decimicro ~ 1.7 deg) so the event footprints concentrate into a few
-#: mega-cells far above the sub-bucket cap — the hot path really runs
-_SKEW_RES = 24
-
-
-def _skew_agg_oracle() -> str:
-    from ..operators.evalmetrics import sql_first_digit_ctes, sql_ks_2samp_ctes
-
-    cell = C.sql_cell_id(
-        C.sql_derived_lon("event_id"), C.sql_derived_lat("event_id"), 24
-    )
-    return f"""
-    WITH pts AS (SELECT {cell} AS cell, value FROM events),
-    base AS (
-      SELECT cell, count(*) AS n_points, sum(value) AS sum_value
-      FROM pts GROUP BY cell
-    ),
-    {sql_first_digit_ctes('pts', 'floor(abs(value) * 100)', prefix='fd')},
-    {sql_ks_2samp_ctes('pts', 'value', 'cell % 2 = 0', prefix='drift_ks')}
-    SELECT base.*, fd.*, drift_ks.*
-    FROM base CROSS JOIN fd CROSS JOIN drift_ks ORDER BY cell
-    """
-
-
-@register("skew_salted_agg")
-def skew_salted_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew tooling (north_rule: "skewed mega-cells salted and
-    AQE-split explicitly"): hot cells are sub-bucketed
-    (operators/skew.split_hot_cells), the aggregate runs in two stages
-    — partial per (cell, sub), final per cell — and the oracle's
-    direct single-stage aggregation must match value-for-value, proving
-    the salting is a pure physical transform.
-
-    Round 5: the row also carries the exact two-sample KS drift screen
-    (operators/evalmetrics.ks_2samp) between the value distributions of
-    even- and odd-parity cells — D = max|cumA·nB − cumB·nA| / (nA·nB),
-    decimal/HUGEINT cross products pinned as digit strings behind the
-    one shared division."""
-    from ..operators.evalmetrics import first_digit_screen, ks_2samp
-    from ..operators.skew import split_hot_cells
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "value",
-        C.cell_id(
-            C.derived_lon(F.col("event_id")),
-            C.derived_lat(F.col("event_id")),
-            _SKEW_RES,
-        ).alias("cell"),
-    )
-    sub = split_hot_cells(ev, "event_id", max_per_cell=500, sub_buckets=8)
-    partial = sub.groupBy("cell", "cell_sub").agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("value").alias("_s")
-    )
-    ks = ks_2samp(ev, "value", F.col("cell") % 2 == 0, prefix="drift_ks")
-    # first-significant-digit screen over exact fixed-point cents
-    # (floor(abs(v)*100): abs and one multiply are the same IEEE ops in
-    # both engines, so the integer population is identical)
-    fd = first_digit_screen(
-        ev.select(F.floor(F.abs(F.col("value")) * 100).alias("cents")),
-        "cents",
-        prefix="fd",
-    )
-    return (
-        partial.groupBy("cell")
-        .agg(F.sum("_n").alias("n_points"), F.sum("_s").alias("sum_value"))
-        .crossJoin(F.broadcast(fd))
-        .crossJoin(F.broadcast(ks))
-        .orderBy("cell")
-    )
-
-
-_ORACLES["skew_salted_agg"] = _skew_agg_oracle()
-
-
-@register(
-    "skew_salted_join",
-    f"""
-    WITH pts AS (
-      SELECT event_id, value,
-             {C.sql_cell_id(C.sql_derived_lon('event_id'), C.sql_derived_lat('event_id'), 24)} AS cell
-      FROM events
-    ),
-    dim AS (SELECT DISTINCT cell, cell % 7 AS zone FROM pts)
-    SELECT d.zone AS zone, count(*) AS n, sum(p.value) AS sum_value
-    FROM pts p JOIN dim d ON p.cell = d.cell
-    GROUP BY zone ORDER BY zone
-    """,
-)
-def skew_salted_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit salted equi-join (operators/skew.salted_join): the hot
-    fact side is salted S ways, the dim side exploded over the same
-    salts; the join result — and therefore the aggregate — must equal
-    the plain join exactly (salt placement cannot change membership)."""
-    from ..operators.skew import salted_join
-
-    pts = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "value",
-        C.cell_id(
-            C.derived_lon(F.col("event_id")),
-            C.derived_lat(F.col("event_id")),
-            _SKEW_RES,
-        ).alias("cell"),
-    )
-    dim = pts.select("cell").distinct().withColumn("zone", F.col("cell") % 7)
-    joined = salted_join(pts, dim, "cell", salt_buckets=8)
-    return (
-        joined.groupBy("zone")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .orderBy("zone")
-    )
-
 
 @register(
     "osc_roundtrip",
@@ -5343,6 +854,10 @@ def pbf_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# member closures: relation_full and group bboxes (S10, A3)
+# ---------------------------------------------------------------------------
+
 def _closure_fixture_pts() -> tuple:
     """Shared fixture literals for the S9/S10 closure oracles: the same
     deterministic (image_id, lat, lon) set group_bbox uses."""
@@ -5357,1568 +872,13 @@ def _closure_fixture_pts() -> tuple:
     return images, gen_groups(images), pts
 
 
-_WAY_BFS_MAX_HOPS = 15  # fixture giant component spans 12 hops; 15 converges
-
-
-@functools.lru_cache(maxsize=1)
-def _way_graph_opt_hop_bound() -> int:
-    """Max edge count over any WEIGHTED-shortest path from the shared
-    seed (Dijkstra with hop tracking) — proves the weighted oracle
-    CTE's hop bound is a pure finiteness device, not a semantic cut:
-    every optimal path fits under _WAY_BFS_MAX_HOPS, so the bounded
-    enumeration finds the true minimum the (unbounded) Spark operator
-    converges to. Measured 12 on the seed-42 fixture; the oracle
-    builder asserts it stays < the bound if the fixture ever changes."""
-    import heapq
-
-    images, groups_pdf, _ = _closure_fixture_pts()
-    lat = (images.phash // C.PHASH_LON_BASE) - C.LAT_OFFSET
-    lon = (images.phash % C.PHASH_LON_BASE) - C.LON_OFFSET
-    coord = {
-        i: (int(la), int(lo))
-        for i, la, lo in zip(images.image_id, lat, lon)
-    }
-    adj: dict = {}
-    for g in groups_pdf.itertuples():
-        if g.kind != "way":
-            continue
-        refs = [
-            m["ref"] for m in g.members
-            if m["type"] == "image" and m["ref"] in coord
-        ]
-        for a, b in zip(refs, refs[1:]):
-            w = abs(coord[a][0] - coord[b][0]) + abs(coord[a][1] - coord[b][1])
-            adj.setdefault(a, []).append((b, w))
-            adj.setdefault(b, []).append((a, w))
-    seed = _way_graph_seed()
-    dist: dict = {seed: (0, 0)}
-    pq = [(0, 0, seed)]
-    while pq:
-        d, h, u = heapq.heappop(pq)
-        if (d, h) > dist.get(u, (1 << 62, 0)):
-            continue
-        for v, w in adj.get(u, ()):
-            nd = d + w
-            if nd < dist.get(v, (1 << 62,))[0]:
-                dist[v] = (nd, h + 1)
-                heapq.heappush(pq, (nd, h + 1, v))
-    return max(h for _, h in dist.values())
-
-
-@functools.lru_cache(maxsize=1)
-def _way_graph_seed() -> str:
-    """Deterministic BFS seed for the way-graph reachability gate: the
-    lexicographically smallest node of the LARGEST connected component
-    of the fixture way graph (the naive global-min ref sits on a
-    3-node island). Shared by the Spark query and the oracle; cached —
-    it re-derives the seed-42 fixture and runs a python BFS."""
-    from collections import deque
-
-    images, groups_pdf, _ = _closure_fixture_pts()
-    ids = set(images.image_id)
-    adj: dict = {}
-    for g in groups_pdf.itertuples():
-        if g.kind != "way":
-            continue
-        refs = [
-            m["ref"] for m in g.members
-            if m["type"] == "image" and m["ref"] in ids
-        ]
-        for a, b in zip(refs, refs[1:]):
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    seen: set = set()
-    best: list = []
-    for s in sorted(adj):
-        if s in seen:
-            continue
-        q = deque([s])
-        seen.add(s)
-        comp = [s]
-        while q:
-            u = q.popleft()
-            for v in adj[u]:
-                if v not in seen:
-                    seen.add(v)
-                    comp.append(v)
-                    q.append(v)
-        if len(comp) > len(best):
-            best = comp
-    return min(best)
-
-
-@functools.lru_cache(maxsize=1)
-def _way_graph_mst_literals() -> tuple:
-    """(n_edges, total_weight, md5_sig) of the fixture way graph's
-    minimum spanning forest under the (w, a, b) canonical total order,
-    computed by a SEQUENTIAL KRUSKAL here — the oracle embeds these as
-    literals, so the gate cross-checks the engine's distributed
-    Borůvka against an INDEPENDENT algorithm (the _way_graph_seed
-    embedding precedent). The total order makes weights distinct and
-    the forest unique, hence the md5 of the sorted edge list is
-    well-defined on both sides."""
-    import hashlib
-
-    images, groups_pdf, _ = _closure_fixture_pts()
-    lat = (images.phash // C.PHASH_LON_BASE) - C.LAT_OFFSET
-    lon = (images.phash % C.PHASH_LON_BASE) - C.LON_OFFSET
-    coord = {
-        i: (int(la), int(lo))
-        for i, la, lo in zip(images.image_id, lat, lon)
-    }
-    raw = []
-    for g in groups_pdf.itertuples():
-        if g.kind != "way":
-            continue
-        refs = [
-            m["ref"] for m in g.members
-            if m["type"] == "image" and m["ref"] in coord
-        ]
-        for a, b in zip(refs, refs[1:]):
-            w = abs(coord[a][0] - coord[b][0]) + abs(coord[a][1] - coord[b][1])
-            raw.append((a, b, w))
-    canon = sorted(
-        {(min(a, b), max(a, b), w) for a, b, w in raw if a != b},
-        key=lambda e: (e[2], e[0], e[1]),
-    )
-    parent: dict = {}
-
-    def find(u):
-        parent.setdefault(u, u)
-        while parent[u] != u:
-            parent[u] = parent[parent[u]]
-            u = parent[u]
-        return u
-
-    forest = []
-    for a, b, w in canon:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-            forest.append((a, b, w))
-    forest.sort()
-    sig = hashlib.md5(
-        ",".join(f"{a}:{b}:{w}" for a, b, w in forest).encode()
-    ).hexdigest()
-    return len(forest), sum(w for _, _, w in forest), sig
-
-
-def _way_full_oracle() -> str:
-    """DuckDB twin of S9 resolve_way_full: member-position-ordered
-    coordinate chains, canonicalized to a string so nested-array output
-    is hash-comparable (string_agg ORDER BY pos == collect_list over the
-    pos-ordered window). Missing refs drop out of the chain (inner
-    join), preserving the order of the resolved remainder. PLUS the
-    way-graph reachability twin: BFS hop distances from the shared
-    seed via a bounded recursive CTE ((node, d) tuples keep cycles
-    finite under UNION dedup; min(d) == the BFS layer, the
-    relation_closure argument), rolled up per way as reached-member
-    count and closest hop. PLUS the weighted twin (graph.py
-    weighted_distances): exact-integer Manhattan edge weights, a
-    bounded (node, d, h) enumeration whose hop bound is PROVEN a pure
-    finiteness device by _way_graph_opt_hop_bound (every weighted-
-    shortest path uses fewer edges than the bound — asserted here), so
-    min(d) == the converged Bellman-Ford distance."""
-    _, groups_pdf, pts = _closure_fixture_pts()
-    rows = []
-    for g in groups_pdf.itertuples():
-        if g.kind != "way":
-            continue
-        for pos, m in enumerate(g.members):
-            if m["type"] == "image":
-                rows.append(f"('{g.group_id}', {pos}, '{m['ref']}')")
-    edges = ",\n      ".join(rows)
-    seed = _way_graph_seed()
-    assert _way_graph_opt_hop_bound() < _WAY_BFS_MAX_HOPS, (
-        "weighted oracle hop bound no longer covers all optimal paths"
-    )
-    mst_n, mst_w, mst_sig = _way_graph_mst_literals()
-    return f"""
-    WITH RECURSIVE pts(ref, lat, lon) AS (VALUES
-      {pts}
-    ),
-    edges(group_id, pos, ref) AS (VALUES
-      {edges}
-    ),
-    j AS (
-      SELECT e.group_id, e.pos, e.ref, p.lat, p.lon
-      FROM edges e JOIN pts p ON p.ref = e.ref
-    ),
-    eg AS (
-      SELECT ref AS a, nref AS b, abs(lat - nlat) + abs(lon - nlon) AS w
-      FROM (
-        SELECT ref, lat, lon,
-               lead(ref) OVER (PARTITION BY group_id ORDER BY pos) AS nref,
-               lead(lat) OVER (PARTITION BY group_id ORDER BY pos) AS nlat,
-               lead(lon) OVER (PARTITION BY group_id ORDER BY pos) AS nlon
-        FROM j
-      ) WHERE nref IS NOT NULL
-    ),
-    und AS (SELECT a, b, w FROM eg UNION ALL SELECT b AS a, a AS b, w FROM eg),
-    bfs(node, d) AS (
-      SELECT '{seed}', 0
-      UNION
-      SELECT u.b, bfs.d + 1 FROM bfs JOIN und u ON u.a = bfs.node
-      WHERE bfs.d < {_WAY_BFS_MAX_HOPS}
-    ),
-    dist AS (SELECT node, CAST(min(d) AS BIGINT) AS hops FROM bfs GROUP BY node),
-    wbf(node, d, h) AS (
-      SELECT '{seed}', CAST(0 AS BIGINT), 0
-      UNION
-      SELECT u.b, wbf.d + u.w, wbf.h + 1 FROM wbf JOIN und u ON u.a = wbf.node
-      WHERE wbf.h < {_WAY_BFS_MAX_HOPS}
-    ),
-    wdist AS (SELECT node, CAST(min(d) AS BIGINT) AS wd FROM wbf GROUP BY node)
-    SELECT j.group_id AS group_id,
-           string_agg(CAST(j.lat AS VARCHAR) || ':' || CAST(j.lon AS VARCHAR),
-                      '|' ORDER BY j.pos) AS coords_str,
-           count(*) AS n_pts,
-           CAST(count(dist.hops) AS BIGINT) AS way_reach,
-           CAST(min(dist.hops) AS BIGINT) AS way_min_hops,
-           CAST(min(wdist.wd) AS BIGINT) AS way_min_wdist,
-           CAST({mst_n} AS BIGINT) AS mst_n,
-           CAST({mst_w} AS BIGINT) AS mst_w_total,
-           '{mst_sig}' AS mst_sig
-    FROM j
-    LEFT JOIN dist ON dist.node = j.ref
-    LEFT JOIN wdist ON wdist.node = j.ref
-    GROUP BY j.group_id ORDER BY j.group_id
-    """
-
-
-@register("way_full_closure", _way_full_oracle())
-def way_full_closure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9: way_full closure (ordered member coords,
-    /root/reference/src/osm.rs:203-214) through the real operator; the
-    nested array is canonicalized with array_join so DuckDB can
-    hash-compare it. PLUS way-graph reachability (operators/graph.py
-    hop_distances): BFS layers over the undirected node graph the way
-    chains induce, from the shared largest-component seed — each way
-    carries how many of its resolved members the seed reaches and the
-    closest hop (NULL for detached-island ways), vs the oracle's
-    bounded recursive-CTE BFS. PLUS weighted shortest distances
-    (graph.py weighted_distances, frontier Bellman-Ford, exact int64):
-    edge weight = Manhattan distance in decimicro between the chain's
-    consecutive member coordinates; each way carries the closest
-    WEIGHTED distance from the same seed, vs the oracle's bounded
-    (node, d, h) enumeration (bound proven non-semantic by the
-    Dijkstra hop audit in _way_graph_opt_hop_bound). PLUS the minimum
-    spanning forest (graph.py minimum_spanning_forest, distributed
-    Borůvka — unique under the (w, a, b) total order): the forest's
-    edge count, total weight and sorted-edge md5 ride every row as
-    constants, cross-checked against an INDEPENDENT sequential Kruskal
-    embedded in the oracle as literals (_way_graph_mst_literals)."""
-    from ..datagen.synth import gen_groups, gen_images
-    from ..operators.graph import (
-        hop_distances,
-        minimum_spanning_forest,
-        weighted_distances,
-    )
-    from ..operators.resolve import resolve_way_full
-
-    images = gen_images(300, seed=42)
-    base = spark.createDataFrame(images[["image_id", "phash"]]).select(
-        "image_id",
-        C.unpack_lat(F.col("phash")).alias("lat"),
-        C.unpack_lon(F.col("phash")).alias("lon"),
-    )
-    groups = spark.createDataFrame(gen_groups(images))
-    out = resolve_way_full(groups, base)
-
-    mem = (
-        groups.filter(F.col("kind") == "way")
-        .select("group_id", F.posexplode("members").alias("pos", "m"))
-        .filter(F.col("m.type") == "image")
-        .select("group_id", "pos", F.col("m.ref").alias("ref"))
-        .join(base.select(F.col("image_id").alias("ref")), "ref", "left_semi")
-    )
-    w = Window.partitionBy("group_id").orderBy("pos")
-    memc = mem.join(
-        base.select(F.col("image_id").alias("ref"), "lat", "lon"), "ref"
-    )
-    egw = (
-        memc.select(
-            "group_id",
-            "pos",
-            "ref",
-            "lat",
-            "lon",
-            F.lead("ref").over(w).alias("nref"),
-            F.lead("lat").over(w).alias("nlat"),
-            F.lead("lon").over(w).alias("nlon"),
-        )
-        .filter(F.col("nref").isNotNull())
-        .select(
-            F.col("ref").alias("a"),
-            F.col("nref").alias("b"),
-            (
-                F.abs(F.col("lat") - F.col("nlat"))
-                + F.abs(F.col("lon") - F.col("nlon"))
-            ).alias("w"),
-        )
-    )
-    seeds = spark.createDataFrame([(_way_graph_seed(),)], "node_id string")
-    dist = hop_distances(
-        egw.select("a", "b"), seeds, max_hops=_WAY_BFS_MAX_HOPS
-    )
-    wdist = weighted_distances(egw, seeds).withColumnRenamed(
-        "node_id", "wnode"
-    )
-    forest = minimum_spanning_forest(egw)
-    fsig = F.md5(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            "a",
-                            "b",
-                            F.concat_ws(
-                                ":", F.col("a"), F.col("b"), F.col("w")
-                            ).alias("s"),
-                        )
-                    )
-                ),
-                lambda x: x["s"],
-            ),
-        )
-    )
-    mst = forest.agg(
-        F.count(F.lit(1)).cast("long").alias("mst_n"),
-        F.sum("w").cast("long").alias("mst_w_total"),
-        fsig.alias("mst_sig"),
-    )
-    reach = (
-        mem.join(dist, mem["ref"] == dist["node_id"], "left")
-        .join(wdist, mem["ref"] == wdist["wnode"], "left")
-        .groupBy("group_id")
-        .agg(
-            F.count("hops").cast("long").alias("way_reach"),
-            F.min("hops").cast("long").alias("way_min_hops"),
-            F.min("dist").cast("long").alias("way_min_wdist"),
-        )
-    )
-    return (
-        out.select(
-            "group_id",
-            F.array_join(
-                F.transform("coords", lambda c: F.concat_ws(":", c["lat"], c["lon"])),
-                "|",
-            ).alias("coords_str"),
-            F.size("coords").cast("long").alias("n_pts"),
-        )
-        .join(reach, "group_id")
-        .crossJoin(F.broadcast(mst))
-        .orderBy("group_id")
-    )
-
-
-_WAY_SIMPLIFY_EPS = 1e7  # 1 degree in decimicro
-_DENSIFY_GAP = 100_000_000  # 10 deg in decimicro: fixture segments densify to <= ~50 points
-_INTERP_T = 0.37  # arc-length fraction for the line_interpolate gate columns
-_LINE_PX_RES = 16  # rasterize_line gate pixels: 65536-decimicro (~6.6 mdeg) cells
-_TPA_GATE_RES = 22  # tile_polygon_areas gate tiles (~0.42 deg; fixture rings span a few)
-_TPA_GATE_Q = 12  # sub-coordinate lattice bits for the snapped breakpoints
-
-
-def _sql_dp_d2(px, py, x1, y1, x2, y2) -> str:
-    """Squared clamped point-to-segment distance, written as the SAME
-    IEEE mul/add tree as resolve._dp_keep_mask so the DP keep decision
-    is bit-identical across engines (all operands exact doubles)."""
-    dx, dy = f"({x2} - {x1})", f"({y2} - {y1})"
-    len2 = f"({dx}*{dx} + {dy}*{dy})"
-    t = f"((({px} - {x1})*{dx} + ({py} - {y1})*{dy}) / {len2})"
-    tc = f"LEAST(GREATEST({t}, 0.0), 1.0)"
-    ex = f"({px} - ({x1} + {tc}*{dx}))"
-    ey = f"({py} - ({y1} + {tc}*{dy}))"
-    return (
-        f"CASE WHEN {len2} = 0.0 THEN "
-        f"(({px} - {x1})*({px} - {x1}) + ({py} - {y1})*({py} - {y1})) "
-        f"ELSE ({ex}*{ex} + {ey}*{ey}) END"
-    )
-
-
-def _sql_dp_levels(levels: int, eps2: float) -> str:
-    """Unrolled Douglas-Peucker as chained plain CTEs over ``dpts``
-    (group_id, pos, x, y): each level splits every pending segment at
-    its farthest interior point (ties -> lowest pos, matching
-    np.argmax) when d2 > eps2. ``levels`` must be >= the max recursion
-    depth = max chain length - 2; fixture chains are <= 7 long."""
-    d2 = _sql_dp_d2(
-        "p.x", "p.y", "pi.x", "pi.y", "pj.x", "pj.y"
-    )
-    parts = [
-        "seg0 AS (SELECT group_id, min(pos) AS si, max(pos) AS sj"
-        " FROM dpts GROUP BY group_id)"
-    ]
-    for k in range(levels):
-        parts.append(f"""seg{k + 1} AS (
-      SELECT b.group_id,
-             CASE WHEN sides.s = 0 THEN b.si ELSE b.k END AS si,
-             CASE WHEN sides.s = 0 THEN b.k ELSE b.sj END AS sj
-      FROM (
-        SELECT group_id, si, sj, pos AS k FROM (
-          SELECT c.*, row_number() OVER (
-                   PARTITION BY c.group_id, c.si, c.sj
-                   ORDER BY c.d2 DESC, c.pos ASC) AS rn
-          FROM (
-            SELECT s.group_id, s.si, s.sj, p.pos, {d2} AS d2
-            FROM seg{k} s
-            JOIN dpts pi ON pi.group_id = s.group_id AND pi.pos = s.si
-            JOIN dpts pj ON pj.group_id = s.group_id AND pj.pos = s.sj
-            JOIN dpts p ON p.group_id = s.group_id
-                       AND p.pos > s.si AND p.pos < s.sj
-          ) c
-        ) r WHERE r.rn = 1 AND r.d2 > {eps2!r}
-      ) b CROSS JOIN (VALUES (0), (1)) AS sides(s)
-    )""")
-    allseg = " UNION ALL ".join(
-        f"SELECT * FROM seg{k}" for k in range(levels + 1)
-    )
-    parts.append(f"allseg AS ({allseg})")
-    # NOT a top-level `A UNION B` CTE body: the way_geometry oracle runs
-    # under WITH RECURSIVE (the hull's gift-wrapping walk), and DuckDB
-    # reinterprets ANY `base UNION step` CTE as a recursive CTE there —
-    # dropping the cross-leg dedup (measured: WITH RECURSIVE t AS
-    # (SELECT 1 UNION SELECT 1) yields 2 rows). Outer DISTINCT over a
-    # UNION ALL subquery keeps the body a plain SELECT.
-    parts.append(
-        "keepp AS (SELECT DISTINCT group_id, pos FROM ("
-        "SELECT group_id, si AS pos FROM allseg"
-        " UNION ALL SELECT group_id, sj AS pos FROM allseg))"
-    )
-    parts.append(
-        "simp AS (SELECT group_id, count(*) AS n_kept,"
-        " string_agg(CAST(pos AS VARCHAR), ',' ORDER BY pos) AS kept_pos"
-        " FROM keepp GROUP BY group_id)"
-    )
-    return ",\n    ".join(parts)
-
-
-def _planted_rev_ways(groups_pdf):
-    """Reversed-member clones of every 4th way (sorted by group_id),
-    appended as ``<id>_rev`` — planted duplicate geometries so the
-    direction-invariant signature gate is non-trivial — PLUS closed
-    RING clones of every 3rd way with >= 3 members (first member
-    re-appended, ``<id>_ring``) so the closed-ring folds (shoelace
-    area/centroid, tile_polygon_areas) have genuine rings to chew on.
-    Shared by the Spark query and the oracle so both engines see the
-    same fixture."""
-    import pandas as pd
-
-    ways = groups_pdf[groups_pdf["kind"] == "way"].sort_values("group_id")
-    clones = ways.iloc[::4].copy()
-    clones["group_id"] = clones["group_id"] + "_rev"
-    clones["members"] = clones["members"].apply(lambda ms: list(reversed(ms)))
-    ringable = ways[ways["members"].apply(len) >= 3]
-    rings = ringable.iloc[::3].copy()
-    rings["group_id"] = rings["group_id"] + "_ring"
-    rings["members"] = rings["members"].apply(lambda ms: list(ms) + [ms[0]])
-    return pd.concat([groups_pdf, clones, rings], ignore_index=True)
-
-
-def _way_geometry_oracle() -> str:
-    """DuckDB twin of way_geometry + simplify_ways: the same shoelace
-    (translated to the first vertex, HUGEINT terms == Spark's
-    decimal(38,0)), vertex-mean centroid, open polyline length over the
-    window'd chain, and the unrolled-CTE Douglas-Peucker keep set
-    (bit-identical IEEE distance tree; see _sql_dp_d2)."""
-    from ..operators.snap import sql_snap_d2_expr
-    from ..operators.validity import (
-        sql_cross_point_exprs,
-        sql_proper_cross_expr,
-    )
-
-    from ..operators.dedup import sql_h64_md5
-
-    _, groups_pdf, pts = _closure_fixture_pts()
-    groups_pdf = _planted_rev_ways(groups_pdf)
-    snap_d2 = sql_snap_d2_expr("p.lon", "p.lat", "s.x1", "s.y1", "s.x2", "s.y2")
-    hc_d2 = sql_snap_d2_expr("a.lon", "a.lat", "s.x1", "s.y1", "s.x2", "s.y2")
-    _sql_h64_gid = sql_h64_md5("group_id")
-    cross = sql_proper_cross_expr(
-        "a.x1", "a.y1", "a.x2", "a.y2", "b.x1", "b.y1", "b.x2", "b.y2"
-    )
-    cp_ix, cp_iy = sql_cross_point_exprs(
-        "a.x1", "a.y1", "a.x2", "a.y2", "b.x1", "b.y1", "b.x2", "b.y2"
-    )
-    # gift-wrapping orientation tests, shared by the two hull witnesses
-    hx = "(q.x - w.x)::HUGEINT * (r.y - w.y) - (q.y - w.y)::HUGEINT * (r.x - w.x)"
-    # tile_polygon_areas twin: snapped breakpoint branches (the SAME
-    # floor-division spelling — sign-normalized denominator, offset
-    # makes the numerator non-negative so // is an exact floor)
-    _edge = 1 << _TPA_GATE_RES
-    _tq = 1 << _TPA_GATE_Q
-    _toff = 1 << 31
-
-    def _tpa_branch(cline: str, idx: int, is_x: bool) -> str:
-        p1, p2, o1, o2 = ("x1", "x2", "y1", "y2") if is_x else (
-            "y1", "y2", "x1", "x2"
-        )
-        num = f"(CAST({cline} - {p1} AS HUGEINT) * ({o2} - {o1}) * {_tq})"
-        nums = f"(CASE WHEN {p2} >= {p1} THEN {num} ELSE -{num} END)"
-        ddp = f"CAST(ABS({p2} - {p1}) AS HUGEINT)"
-        oq = (
-            f"(CAST((({nums} + (CAST({o1} AS HUGEINT) + {_toff})"
-            f" * {_tq} * {ddp}) // {ddp}) AS BIGINT) - {_toff * _tq})"
-        )
-        pq = f"(({cline}) * {_tq})"
-        xq, yq = (pq, oq) if is_x else (oq, pq)
-        return f"""
-      SELECT group_id, pos, tx, ty,
-             CAST({cline} - {p1} AS DOUBLE)
-               / CAST({p2} - {p1} AS DOUBLE) AS td,
-             {idx} AS idx, {xq} AS xq, {yq} AS yq
-      FROM tfan
-      WHERE ({p1} < {cline} AND {cline} < {p2})
-         OR ({p2} < {cline} AND {cline} < {p1})"""
-
-    _cx0 = f"(tx * {_edge} - {C.LON_OFFSET})"
-    _cx1 = f"((tx + 1) * {_edge} - {C.LON_OFFSET})"
-    _cy0 = f"(ty * {_edge} - {C.LAT_OFFSET})"
-    _cy1 = f"((ty + 1) * {_edge} - {C.LAT_OFFSET})"
-    tpa_branches = " UNION ALL ".join(
-        [
-            f"""
-      SELECT group_id, pos, tx, ty, 0.0 AS td, 0 AS idx,
-             x1 * {_tq} AS xq, y1 * {_tq} AS yq FROM tfan""",
-            _tpa_branch(_cx0, 1, True),
-            _tpa_branch(_cx1, 2, True),
-            _tpa_branch(_cy0, 3, False),
-            _tpa_branch(_cy1, 4, False),
-            f"""
-      SELECT group_id, pos, tx, ty, 1.0 AS td, 5 AS idx,
-             x2 * {_tq} AS xq, y2 * {_tq} AS yq FROM tfan""",
-        ]
-    )
-    rows = []
-    for g in groups_pdf.itertuples():
-        if g.kind != "way":
-            continue
-        for pos, m in enumerate(g.members):
-            if m["type"] == "image":
-                rows.append(f"('{g.group_id}', {pos}, '{m['ref']}')")
-    edges = ",\n      ".join(rows)
-    return f"""
-    WITH RECURSIVE pts(ref, lat, lon) AS (VALUES
-      {pts}
-    ),
-    edges(group_id, pos, ref) AS (VALUES
-      {edges}
-    ),
-    j AS (
-      SELECT e.group_id, e.pos, p.lat, p.lon
-      FROM edges e JOIN pts p ON p.ref = e.ref
-    ),
-    w AS (
-      SELECT group_id, pos, lat, lon,
-             first_value(lat) OVER g AS flat,
-             first_value(lon) OVER g AS flon,
-             coalesce(lead(lat) OVER g, first_value(lat) OVER g) AS nlat,
-             coalesce(lead(lon) OVER g, first_value(lon) OVER g) AS nlon,
-             (lead(lat) OVER g IS NULL) AS is_last
-      FROM j
-      WINDOW g AS (PARTITION BY group_id ORDER BY pos)
-    ),
-    geo AS (
-      SELECT group_id,
-           count(*) AS n_pts,
-           bool_or(is_last AND lat = flat AND lon = flon) AS is_closed,
-           CAST(SUM(((lon - flon)::HUGEINT) * (nlat - flat)
-                    - ((nlon - flon)::HUGEINT) * (lat - flat))
-                AS VARCHAR) AS area2,
-           SUM(((lon - flon)::HUGEINT) * (nlat - flat)
-               - ((nlon - flon)::HUGEINT) * (lat - flat)) AS a2h,
-           SUM((((lon - flon) + (nlon - flon))::HUGEINT)
-               * (((lon - flon)::HUGEINT) * (nlat - flat)
-                  - ((nlon - flon)::HUGEINT) * (lat - flat))) AS swx,
-           SUM((((lat - flat) + (nlat - flat))::HUGEINT)
-               * (((lon - flon)::HUGEINT) * (nlat - flat)
-                  - ((nlon - flon)::HUGEINT) * (lat - flat))) AS swy,
-           MIN(flon) AS flon0,
-           MIN(flat) AS flat0,
-           avg(lon) AS cx,
-           avg(lat) AS cy,
-           coalesce(SUM(CASE WHEN NOT is_last THEN
-             sqrt( ((nlon - lon)::DOUBLE) * ((nlon - lon)::DOUBLE)
-                 + ((nlat - lat)::DOUBLE) * ((nlat - lat)::DOUBLE) )
-           END), 0.0) AS length
-      FROM w GROUP BY group_id
-    ),
-    dpts AS (
-      SELECT group_id, pos, CAST(lon AS DOUBLE) AS x, CAST(lat AS DOUBLE) AS y
-      FROM j
-    ),
-    {_sql_dp_levels(6, _WAY_SIMPLIFY_EPS * _WAY_SIMPLIFY_EPS)},
-    kc AS (
-      -- kept-vertex coordinates (the DP keep set with geometry back on)
-      SELECT k.group_id, k.pos, jj.lon, jj.lat
-      FROM keepp k JOIN j jj
-        ON jj.group_id = k.group_id AND jj.pos = k.pos
-    ),
-    hvmin AS (
-      -- directed vertex-set Hausdorff original -> kept: per-vertex min
-      -- squared distance in HUGEINT (== Spark decimal(38,0))
-      SELECT a.group_id, a.pos,
-             MIN(CAST(CAST(a.lon AS BIGINT) - k.lon AS HUGEINT)
-                   * (CAST(a.lon AS BIGINT) - k.lon)
-                 + CAST(CAST(a.lat AS BIGINT) - k.lat AS HUGEINT)
-                   * (CAST(a.lat AS BIGINT) - k.lat)) AS mind2
-      FROM j a JOIN kc k ON k.group_id = a.group_id
-      GROUP BY a.group_id, a.pos
-    ),
-    hv AS (
-      SELECT group_id, CAST(MAX(mind2) AS VARCHAR) AS hd2_kept
-      FROM hvmin GROUP BY group_id
-    ),
-    kseg AS (
-      -- consecutive kept vertices = the simplified polyline's segments
-      SELECT * FROM (
-        SELECT group_id, pos, lon AS x1, lat AS y1,
-               lead(lon) OVER kg AS x2, lead(lat) OVER kg AS y2
-        FROM kc WINDOW kg AS (PARTITION BY group_id ORDER BY pos)
-      ) WHERE x2 IS NOT NULL
-    ),
-    hcmin AS (
-      SELECT a.group_id, a.pos, MIN({hc_d2}) AS mind2
-      FROM j a JOIN kseg s ON s.group_id = a.group_id
-      GROUP BY a.group_id, a.pos
-    ),
-    hc AS (
-      SELECT group_id, MAX(mind2) AS hd_seg_d2 FROM hcmin GROUP BY group_id
-    ),
-    segs AS (
-      SELECT group_id, pos, lon AS x1, lat AS y1, nlon AS x2, nlat AS y2
-      FROM w WHERE NOT is_last
-    ),
-    cand AS (
-      SELECT p.ref AS pid, s.group_id, s.pos,
-             {snap_d2} AS d2
-      FROM pts p, segs s
-    ),
-    near AS (
-      SELECT pid, group_id, pos, d2,
-             row_number() OVER (PARTITION BY pid
-                                ORDER BY d2, group_id, pos) AS rn
-      FROM cand
-    ),
-    snap AS (
-      SELECT group_id,
-             CAST(count(*) AS BIGINT) AS n_snapped,
-             MIN(d2) AS snap_min_d2
-      FROM near WHERE rn = 1 GROUP BY group_id
-    ),
-    xsel AS (
-      SELECT a.group_id, CAST(count(*) AS BIGINT) AS n_self_x
-      FROM segs a JOIN segs b
-        ON b.group_id = a.group_id AND a.pos < b.pos
-      WHERE {cross}
-      GROUP BY a.group_id
-    ),
-    slay AS (
-      -- two overlay layers by shared-hash parity (validity.
-      -- cross_intersection_pairs gate): pmod(h64_md5(group_id), 2)
-      SELECT group_id,
-             ((({_sql_h64_gid} % 2) + 2) % 2) AS lay
-      FROM (SELECT DISTINCT group_id FROM segs) t
-    ),
-    cxp AS (
-      SELECT a.group_id AS agid, a.pos AS apos,
-             b.group_id AS bgid, b.pos AS bpos,
-             CAST(FLOOR({cp_ix}) AS BIGINT) AS fx,
-             CAST(FLOOR({cp_iy}) AS BIGINT) AS fy
-      FROM segs a JOIN slay la ON la.group_id = a.group_id AND la.lay = 0
-      CROSS JOIN segs b
-      JOIN slay lb ON lb.group_id = b.group_id AND lb.lay = 1
-      WHERE {cross}
-    ),
-    cxc AS (
-      SELECT group_id, CAST(count(*) AS BIGINT) AS n_cross_x
-      FROM (SELECT agid AS group_id FROM cxp
-            UNION ALL SELECT bgid AS group_id FROM cxp)
-      GROUP BY group_id
-    ),
-    cxs AS (
-      SELECT md5(COALESCE(string_agg(
-               agid || ':' || CAST(apos AS VARCHAR) || ':' ||
-               bgid || ':' || CAST(bpos AS VARCHAR),
-               ',' ORDER BY agid, apos, bgid, bpos), '')) AS cx_sig,
-             md5(COALESCE(string_agg(
-               agid || ':' || CAST(apos AS VARCHAR) || ':' ||
-               bgid || ':' || CAST(bpos AS VARCHAR) || ':' ||
-               CAST(fx AS VARCHAR) || ':' || CAST(fy AS VARCHAR),
-               ',' ORDER BY agid, apos, bgid, bpos), '')) AS cxp_sig,
-             CAST(COALESCE(SUM(fx), 0) AS BIGINT) AS cx_fx_sum,
-             CAST(COALESCE(SUM(fy), 0) AS BIGINT) AS cx_fy_sum
-      FROM cxp
-    ),
-    ldda AS (
-      -- rounded-DDA line rasterization (raster.rasterize_line):
-      -- endpoint pixels at _LINE_PX_RES; numerators kept non-negative
-      -- so DuckDB's flooring // equals Spark's truncating div
-      SELECT group_id,
-             (CAST(x1 AS BIGINT) + {C.LON_OFFSET}) // {1 << _LINE_PX_RES} AS px1,
-             (CAST(y1 AS BIGINT) + {C.LAT_OFFSET}) // {1 << _LINE_PX_RES} AS py1,
-             (CAST(x2 AS BIGINT) + {C.LON_OFFSET}) // {1 << _LINE_PX_RES}
-               - (CAST(x1 AS BIGINT) + {C.LON_OFFSET}) // {1 << _LINE_PX_RES} AS dx,
-             (CAST(y2 AS BIGINT) + {C.LAT_OFFSET}) // {1 << _LINE_PX_RES}
-               - (CAST(y1 AS BIGINT) + {C.LAT_OFFSET}) // {1 << _LINE_PX_RES} AS dy
-      FROM segs
-    ),
-    ln0 AS (SELECT *, GREATEST(ABS(dx), ABS(dy)) AS n FROM ldda),
-    lpxs AS (
-      -- closed form: round-half-up on the absolute delta, sign applied
-      -- outside; GREATEST(n, 1) makes the n = 0 single-pixel case the
-      -- same branchless formula (j = 0 -> offset 0)
-      SELECT group_id,
-             CASE WHEN dx >= 0
-               THEN px1 + (2 * j * ABS(dx) + n) // (2 * GREATEST(n, 1))
-               ELSE px1 - (2 * j * ABS(dx) + n) // (2 * GREATEST(n, 1)) END AS px,
-             CASE WHEN dy >= 0
-               THEN py1 + (2 * j * ABS(dy) + n) // (2 * GREATEST(n, 1))
-               ELSE py1 - (2 * j * ABS(dy) + n) // (2 * GREATEST(n, 1)) END AS py
-      FROM ln0, UNNEST(generate_series(0, n)) AS t(j)
-    ),
-    lpd AS (SELECT DISTINCT group_id, px, py FROM lpxs),
-    lrast AS (
-      SELECT group_id,
-             CAST(COUNT(*) AS BIGINT) AS n_line_px,
-             CAST(SUM(px) AS BIGINT) AS lpx_sum,
-             CAST(SUM(py) AS BIGINT) AS lpy_sum,
-             md5(string_agg(CAST(px AS VARCHAR) || ',' || CAST(py AS VARCHAR),
-                            ';' ORDER BY px, py)) AS line_sig
-      FROM lpd GROUP BY group_id
-    ),
-    cseg AS (
-      -- closed rings only: the clamp identity needs a closed curve
-      SELECT s.group_id, s.pos,
-             CAST(s.x1 AS BIGINT) AS x1, CAST(s.y1 AS BIGINT) AS y1,
-             CAST(s.x2 AS BIGINT) AS x2, CAST(s.y2 AS BIGINT) AS y2
-      FROM segs s JOIN geo g ON g.group_id = s.group_id AND g.is_closed
-    ),
-    tbb AS (
-      SELECT group_id,
-             MIN((LEAST(x1, x2) + {C.LON_OFFSET}) // {1 << _TPA_GATE_RES}) AS txlo,
-             MAX((GREATEST(x1, x2) + {C.LON_OFFSET}) // {1 << _TPA_GATE_RES}) AS txhi,
-             MIN((LEAST(y1, y2) + {C.LAT_OFFSET}) // {1 << _TPA_GATE_RES}) AS tylo,
-             MAX((GREATEST(y1, y2) + {C.LAT_OFFSET}) // {1 << _TPA_GATE_RES}) AS tyhi
-      FROM cseg GROUP BY group_id
-    ),
-    tfan AS (
-      -- EVERY ring edge contributes to every bbox tile (a far edge
-      -- clamps to the tile boundary; its run carries the winding)
-      SELECT s.group_id, s.pos, s.x1, s.y1, s.x2, s.y2, gx.tx, gy.ty
-      FROM cseg s JOIN tbb b USING (group_id),
-           UNNEST(generate_series(b.txlo, b.txhi)) AS gx(tx),
-           UNNEST(generate_series(b.tylo, b.tyhi)) AS gy(ty)
-    ),
-    tcand AS (SELECT * FROM ({tpa_branches})),
-    tpts AS (
-      SELECT group_id, pos, tx, ty, td, idx,
-             LEAST(GREATEST(xq, (tx * {1 << _TPA_GATE_RES}
-                                 - {C.LON_OFFSET}) * {1 << _TPA_GATE_Q}),
-                   ((tx + 1) * {1 << _TPA_GATE_RES}
-                    - {C.LON_OFFSET}) * {1 << _TPA_GATE_Q}) AS cx,
-             LEAST(GREATEST(yq, (ty * {1 << _TPA_GATE_RES}
-                                 - {C.LAT_OFFSET}) * {1 << _TPA_GATE_Q}),
-                   ((ty + 1) * {1 << _TPA_GATE_RES}
-                    - {C.LAT_OFFSET}) * {1 << _TPA_GATE_Q}) AS cy
-      FROM tcand
-    ),
-    tterm AS (
-      SELECT group_id, tx, ty,
-             CAST(cx AS HUGEINT) * lead(cy) OVER tw
-               - CAST(lead(cx) OVER tw AS HUGEINT) * cy AS t
-      FROM tpts
-      WINDOW tw AS (PARTITION BY group_id, pos, tx, ty ORDER BY td, idx)
-    ),
-    tparea AS (
-      SELECT group_id, tx, ty, SUM(t) AS area2q
-      FROM tterm WHERE t IS NOT NULL
-      GROUP BY group_id, tx, ty
-      HAVING SUM(t) <> 0
-    ),
-    tpagg AS (
-      SELECT group_id,
-             CAST(COUNT(*) AS BIGINT) AS n_area_tiles,
-             CAST(SUM(area2q) AS VARCHAR) AS clip_area2q_sum,
-             md5(string_agg(
-               tx || ',' || ty || ',' || CAST(area2q AS VARCHAR),
-               ';' ORDER BY tx, ty)) AS tile_area_sig
-      FROM tparea GROUP BY group_id
-    ),
-    atv AS (
-      -- areal transfer (clip.areal_transfer): deterministic per-ring
-      -- value h64(group_id) % 97 + 1
-      SELECT group_id, ((({_sql_h64_gid} % 97) + 97) % 97) + 1 AS v
-      FROM (SELECT DISTINCT group_id FROM tparea) t
-    ),
-    att AS (
-      SELECT group_id, SUM(ABS(area2q)) AS tot FROM tparea GROUP BY group_id
-    ),
-    atw AS (
-      SELECT p.tx, p.ty,
-             (CAST(a.v AS HUGEINT) * {1 << 20} * ABS(p.area2q)) // t.tot AS wq
-      FROM tparea p JOIN att t USING (group_id) JOIN atv a USING (group_id)
-    ),
-    atagg AS (SELECT tx, ty, SUM(wq) AS alloc FROM atw GROUP BY tx, ty),
-    ats AS (
-      SELECT md5(COALESCE(string_agg(
-               tx || ',' || ty || ',' || CAST(alloc AS VARCHAR),
-               ';' ORDER BY tx, ty), '')) AS at_sig,
-             CAST(COALESCE(SUM(alloc), 0) AS VARCHAR) AS at_total
-      FROM atagg
-    ),
-    bhs AS (
-      -- street-grid orientation histogram (clip.bearing_histogram):
-      -- upper-half-plane normalization, exact integer sector tests
-      SELECT group_id,
-             CASE WHEN nx > ny THEN 0
-                  WHEN nx > 0 AND ny >= nx THEN 1
-                  WHEN nx <= 0 AND ny > -nx THEN 2
-                  ELSE 3 END AS s,
-             CAST(nx AS HUGEINT) * nx + CAST(ny AS HUGEINT) * ny AS l2
-      FROM (
-        SELECT group_id,
-               CASE WHEN CAST(y2 AS BIGINT) - y1 < 0
-                      OR (y2 = y1 AND CAST(x2 AS BIGINT) - x1 < 0)
-                    THEN -(CAST(x2 AS BIGINT) - x1)
-                    ELSE CAST(x2 AS BIGINT) - x1 END AS nx,
-               CASE WHEN CAST(y2 AS BIGINT) - y1 < 0
-                      OR (y2 = y1 AND CAST(x2 AS BIGINT) - x1 < 0)
-                    THEN -(CAST(y2 AS BIGINT) - y1)
-                    ELSE CAST(y2 AS BIGINT) - y1 END AS ny
-        FROM segs WHERE x1 <> x2 OR y1 <> y2
-      )
-    ),
-    bh AS (
-      SELECT group_id,
-             CAST(SUM(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS BIGINT) AS bh_n0,
-             CAST(SUM(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT) AS bh_n1,
-             CAST(SUM(CASE WHEN s = 2 THEN 1 ELSE 0 END) AS BIGINT) AS bh_n2,
-             CAST(SUM(CASE WHEN s = 3 THEN 1 ELSE 0 END) AS BIGINT) AS bh_n3,
-             CAST(SUM(CASE WHEN s = 0 THEN l2 END) AS VARCHAR) AS bh_l0,
-             CAST(SUM(CASE WHEN s = 1 THEN l2 END) AS VARCHAR) AS bh_l1,
-             CAST(SUM(CASE WHEN s = 2 THEN l2 END) AS VARCHAR) AS bh_l2,
-             CAST(SUM(CASE WHEN s = 3 THEN l2 END) AS VARCHAR) AS bh_l3
-      FROM bhs GROUP BY group_id
-    ),
-    sigser AS (
-      SELECT group_id,
-             string_agg(lon || ',' || lat, ';' ORDER BY pos) AS fwd,
-             string_agg(lon || ',' || lat, ';' ORDER BY pos DESC) AS rev
-      FROM j GROUP BY group_id
-    ),
-    sigs AS (
-      SELECT group_id, md5(LEAST(fwd, rev)) AS geom_sig FROM sigser
-    ),
-    dupc AS (
-      SELECT geom_sig, CAST(count(*) AS BIGINT) AS n_geom_dups
-      FROM sigs GROUP BY geom_sig
-    ),
-    dens1 AS (
-      SELECT group_id,
-             CAST(x1 AS DOUBLE) AS x1d, CAST(y1 AS DOUBLE) AS y1d,
-             CAST(x2 - x1 AS DOUBLE) AS dx, CAST(y2 - y1 AS DOUBLE) AS dy,
-             GREATEST(CAST(ceil(sqrt(CAST(x2 - x1 AS DOUBLE) * CAST(x2 - x1 AS DOUBLE)
-                                   + CAST(y2 - y1 AS DOUBLE) * CAST(y2 - y1 AS DOUBLE))
-                                / {float(_DENSIFY_GAP)!r}) AS BIGINT),
-                      CAST(1 AS BIGINT)) AS n_sub
-      FROM segs
-    ),
-    densp AS (
-      SELECT group_id,
-             x1d + (dx * CAST(j AS DOUBLE)) / CAST(n_sub AS DOUBLE) AS px,
-             y1d + (dy * CAST(j AS DOUBLE)) / CAST(n_sub AS DOUBLE) AS py
-      FROM (SELECT *, unnest(generate_series(1, n_sub - 1)) AS j
-            FROM dens1 WHERE n_sub > 1)
-    ),
-    dens AS (
-      SELECT group_id,
-             CAST(count(*) AS BIGINT) AS n_densified,
-             CAST(SUM(CAST(floor(px) AS BIGINT)) AS BIGINT) AS dens_fx_sum,
-             CAST(SUM(CAST(floor(py) AS BIGINT)) AS BIGINT) AS dens_fy_sum,
-             MIN(px) AS dens_px_min,
-             MAX(py) AS dens_py_max
-      FROM densp GROUP BY group_id
-    ),
-    lin0 AS (
-      SELECT group_id,
-             list(CAST(lon AS BIGINT) ORDER BY pos) AS xs,
-             list(CAST(lat AS BIGINT) ORDER BY pos) AS ys
-      FROM j GROUP BY group_id
-    ),
-    lin1 AS (
-      SELECT group_id, xs, ys,
-             list_transform(generate_series(1, len(xs) - 1), i ->
-               sqrt(CAST(xs[i + 1] - xs[i] AS DOUBLE) * CAST(xs[i + 1] - xs[i] AS DOUBLE)
-                  + CAST(ys[i + 1] - ys[i] AS DOUBLE) * CAST(ys[i + 1] - ys[i] AS DOUBLE))
-             ) AS le
-      FROM lin0
-    ),
-    lin2 AS (
-      SELECT group_id, xs, ys, le,
-             {_INTERP_T!r} * COALESCE(list_sum(le), 0.0) AS d
-      FROM lin1
-    ),
-    lin3 AS (
-      SELECT group_id, xs, ys, le, d,
-             COALESCE(list_filter(generate_series(1, len(le)), i ->
-               COALESCE(list_sum(list_slice(le, 1, i)), 0.0) >= d)[1],
-               len(le)) AS k
-      FROM lin2
-    ),
-    lin AS (
-      SELECT group_id,
-             CASE WHEN len(xs) >= 2 THEN
-               CAST(xs[k] AS DOUBLE)
-               + (CASE WHEN le[k] > 0.0
-                  THEN (d - COALESCE(list_sum(list_slice(le, 1, k - 1)), 0.0)) / le[k]
-                  ELSE 0.0 END)
-                 * CAST(xs[k + 1] - xs[k] AS DOUBLE)
-             END AS ix,
-             CASE WHEN len(xs) >= 2 THEN
-               CAST(ys[k] AS DOUBLE)
-               + (CASE WHEN le[k] > 0.0
-                  THEN (d - COALESCE(list_sum(list_slice(le, 1, k - 1)), 0.0)) / le[k]
-                  ELSE 0.0 END)
-                 * CAST(ys[k + 1] - ys[k] AS DOUBLE)
-             END AS iy
-      FROM lin3
-    ),
-    hpts AS (
-      -- convex hull input: DISTINCT vertices per way
-      SELECT DISTINCT group_id, CAST(lon AS BIGINT) AS x, CAST(lat AS BIGINT) AS y
-      FROM j
-    ),
-    hstart AS (
-      SELECT group_id, x, y FROM (
-        SELECT group_id, x, y,
-               ROW_NUMBER() OVER (PARTITION BY group_id ORDER BY x, y) AS rn
-        FROM hpts
-      ) WHERE rn = 1
-    ),
-    hwalk(group_id, step, x, y, sx, sy) AS (
-      -- gift wrapping (Jarvis march) from the lexicographic min, CCW:
-      -- next vertex q has NO point strictly right of cur->q and NO
-      -- collinear point beyond q (minimal hull) — exact HUGEINT cross/
-      -- dot products; provably the monotone chain's canonical order
-      SELECT group_id, 0, x, y, x, y FROM hstart
-      UNION ALL
-      SELECT w.group_id, w.step + 1, q.x, q.y, w.sx, w.sy
-      FROM hwalk w
-      JOIN hpts q ON q.group_id = w.group_id AND (q.x <> w.x OR q.y <> w.y)
-      WHERE (q.x <> w.sx OR q.y <> w.sy)
-        AND NOT EXISTS (
-          SELECT 1 FROM hpts r
-          WHERE r.group_id = w.group_id
-            AND (r.x <> w.x OR r.y <> w.y) AND (r.x <> q.x OR r.y <> q.y)
-            AND (
-              {hx} < 0
-              OR ({hx} = 0
-                  AND (q.x - w.x)::HUGEINT * (r.x - w.x)
-                      + (q.y - w.y)::HUGEINT * (r.y - w.y)
-                    > (q.x - w.x)::HUGEINT * (q.x - w.x)
-                      + (q.y - w.y)::HUGEINT * (q.y - w.y))
-            )
-        )
-    ),
-    hpair AS (
-      SELECT group_id, step, x, y,
-             x::HUGEINT * COALESCE(lead(y) OVER hg, first_value(y) OVER hg)
-               - COALESCE(lead(x) OVER hg, first_value(x) OVER hg)::HUGEINT * y
-               AS t
-      FROM hwalk WINDOW hg AS (PARTITION BY group_id ORDER BY step)
-    ),
-    hagg AS (
-      SELECT group_id,
-             CAST(COUNT(*) AS INT) AS n_hull,
-             CAST(SUM(t) AS VARCHAR) AS hull_area2,
-             md5(string_agg(x || ',' || y, ';' ORDER BY step)) AS hull_sig
-      FROM hpair GROUP BY group_id
-    ),
-    hdiam AS (
-      -- exact squared point-set diameter (ST_MaxDistance): brute
-      -- all-pairs over DISTINCT vertices — the diameter is attained at
-      -- hull vertices, so this equals hull.hull_diam2's hull-vertex
-      -- brute (two routes to one exact integer)
-      SELECT a.group_id,
-             CAST(MAX((a.x - b.x)::HUGEINT * (a.x - b.x)
-                    + (a.y - b.y)::HUGEINT * (a.y - b.y)) AS VARCHAR)
-               AS hull_diam2
-      FROM hpts a JOIN hpts b ON b.group_id = a.group_id
-      GROUP BY a.group_id
-    ),
-    hedge AS (
-      -- hull edges with ring wraparound (lead else first) — the
-      -- candidate orientations of the minimum-area oriented envelope
-      SELECT group_id, step, x, y,
-             COALESCE(lead(x) OVER hgm, first_value(x) OVER hgm) - x AS dx,
-             COALESCE(lead(y) OVER hgm, first_value(y) OVER hgm) - y AS dy
-      FROM hwalk WINDOW hgm AS (PARTITION BY group_id ORDER BY step)
-    ),
-    hmbre AS (
-      -- per-edge envelope area (hull.hull_mbr_area twin): exact
-      -- HUGEINT projection/perpendicular extents, ONE cast per factor,
-      -- two IEEE ops — the doubles match the Python kernel bit-for-bit
-      SELECT e.group_id,
-             CAST(MAX(v.x::HUGEINT * e.dx + v.y::HUGEINT * e.dy)
-                  - MIN(v.x::HUGEINT * e.dx + v.y::HUGEINT * e.dy) AS DOUBLE)
-             * CAST(MAX(v.y::HUGEINT * e.dx - v.x::HUGEINT * e.dy)
-                    - MIN(v.y::HUGEINT * e.dx - v.x::HUGEINT * e.dy) AS DOUBLE)
-             / CAST(e.dx::HUGEINT * e.dx + e.dy::HUGEINT * e.dy AS DOUBLE) AS a
-      FROM hedge e JOIN hwalk v ON v.group_id = e.group_id
-      WHERE e.dx <> 0 OR e.dy <> 0
-      GROUP BY e.group_id, e.step, e.dx, e.dy
-    ),
-    hmbr AS (SELECT group_id, MIN(a) AS a FROM hmbre GROUP BY group_id)
-    SELECT geo.group_id AS group_id, n_pts, is_closed, area2, cx, cy,
-           CASE WHEN a2h <> 0 THEN
-             CAST(flon0 AS DOUBLE) + CAST(swx AS DOUBLE) / CAST(3 * a2h AS DOUBLE)
-           END AS acx,
-           CASE WHEN a2h <> 0 THEN
-             CAST(flat0 AS DOUBLE) + CAST(swy AS DOUBLE) / CAST(3 * a2h AS DOUBLE)
-           END AS acy,
-           lin.ix AS ix, lin.iy AS iy,
-           length,
-           simp.n_kept AS n_kept, simp.kept_pos AS kept_pos,
-           hv.hd2_kept AS hd2_kept,
-           hc.hd_seg_d2 AS hd_seg_d2,
-           COALESCE(snap.n_snapped, 0) AS n_snapped,
-           snap.snap_min_d2,
-           COALESCE(xsel.n_self_x, 0) AS n_self_x,
-           COALESCE(xsel.n_self_x, 0) = 0 AS is_simple,
-           sigs.geom_sig AS geom_sig,
-           dupc.n_geom_dups AS n_geom_dups,
-           COALESCE(dens.n_densified, 0) AS n_densified,
-           COALESCE(dens.dens_fx_sum, 0) AS dens_fx_sum,
-           COALESCE(dens.dens_fy_sum, 0) AS dens_fy_sum,
-           dens.dens_px_min AS dens_px_min,
-           dens.dens_py_max AS dens_py_max,
-           hagg.n_hull AS n_hull,
-           hagg.hull_area2 AS hull_area2,
-           hagg.hull_sig AS hull_sig,
-           hdiam.hull_diam2 AS hull_diam2,
-           CASE WHEN hagg.n_hull >= 3 THEN hmbr.a ELSE 0.0 END AS mbr_area,
-           COALESCE(cxc.n_cross_x, 0) AS n_cross_x,
-           cxs.cx_sig AS cx_sig,
-           cxs.cxp_sig AS cxp_sig,
-           cxs.cx_fx_sum AS cx_fx_sum,
-           cxs.cx_fy_sum AS cx_fy_sum,
-           COALESCE(lr.n_line_px, 0) AS n_line_px,
-           COALESCE(lr.lpx_sum, 0) AS lpx_sum,
-           COALESCE(lr.lpy_sum, 0) AS lpy_sum,
-           lr.line_sig AS line_sig,
-           COALESCE(tp.n_area_tiles, 0) AS n_area_tiles,
-           tp.clip_area2q_sum AS clip_area2q_sum,
-           tp.tile_area_sig AS tile_area_sig,
-           ats.at_sig AS at_sig,
-           ats.at_total AS at_total,
-           COALESCE(bh.bh_n0, 0) AS bh_n0, COALESCE(bh.bh_n1, 0) AS bh_n1,
-           COALESCE(bh.bh_n2, 0) AS bh_n2, COALESCE(bh.bh_n3, 0) AS bh_n3,
-           bh.bh_l0 AS bh_l0, bh.bh_l1 AS bh_l1,
-           bh.bh_l2 AS bh_l2, bh.bh_l3 AS bh_l3
-    FROM geo JOIN simp ON simp.group_id = geo.group_id
-    JOIN hv ON hv.group_id = geo.group_id
-    LEFT JOIN hc ON hc.group_id = geo.group_id
-    LEFT JOIN snap ON snap.group_id = geo.group_id
-    LEFT JOIN xsel ON xsel.group_id = geo.group_id
-    JOIN sigs ON sigs.group_id = geo.group_id
-    JOIN dupc ON dupc.geom_sig = sigs.geom_sig
-    LEFT JOIN dens ON dens.group_id = geo.group_id
-    JOIN lin ON lin.group_id = geo.group_id
-    JOIN hagg ON hagg.group_id = geo.group_id
-    JOIN hdiam ON hdiam.group_id = geo.group_id
-    LEFT JOIN hmbr ON hmbr.group_id = geo.group_id
-    LEFT JOIN cxc ON cxc.group_id = geo.group_id
-    LEFT JOIN lrast lr ON lr.group_id = geo.group_id
-    LEFT JOIN tpagg tp ON tp.group_id = geo.group_id
-    LEFT JOIN bh ON bh.group_id = geo.group_id
-    CROSS JOIN cxs
-    CROSS JOIN ats
-    ORDER BY geo.group_id
-    """
-
-
-@register("way_geometry", _way_geometry_oracle())
-def way_geometry_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-way geometry products (operators/resolve.way_geometry):
-    ring detection, exact signed shoelace area (decimal carry), vertex
-    centroid, polyline length — the geometry the reference derives
-    per-way from its resolved chains (osm.rs way bbox/extent handling),
-    generalized to area/centroid/length — PLUS the Douglas-Peucker
-    keep set (resolve.simplify_ways) summarized per way, PLUS the
-    snap-to-nearest-segment assignment (operators/snap.py, map
-    matching's core): every fixture point snaps to its closest way
-    segment with exact-integer clamped point-segment distance, and the
-    gate carries each way's snapped-point count and closest approach —
-    PLUS the validity screen (operators/validity.py): per-way proper
-    self-intersection count via the tile-bucketed canonical-tile pair
-    join, checked against the oracle's quadratic all-pairs twin — PLUS
-    the ST_Segmentize core (operators/clip.densify_segments): per-way
-    inserted-vertex count, exact floor-sums, and min/max interpolated
-    coordinates, every float produced by the one shared IEEE
-    interpolation spelling so the doubles hash-match bit-for-bit — PLUS
-    linear referencing (resolve.line_interpolate,
-    ST_LineInterpolatePoint): the point at arc-length fraction t along
-    each chain, prefix lengths as strict left-to-right folds in BOTH
-    engines (never a windowed SUM, whose segment-tree addition order
-    diverges) — PLUS the convex hull (operators/hull.py,
-    ST_ConvexHull): minimal hull in canonical CCW-from-lexicographic-
-    min order, exact-integer monotone chain checked bit-for-bit
-    (vertex count, exact shoelace area string, canonical-order md5,
-    and the exact squared point-set diameter hull_diam2 — hull-vertex
-    brute vs the oracle's all-distinct-vertex brute, ST_MaxDistance)
-    against the oracle's gift-wrapping recursive CTE — PLUS the
-    two-layer overlay join (validity.cross_intersection_points,
-    ST_Crosses + ST_Intersection as a distributed join): ways split
-    into two layers by shared-hash parity, every cross-layer proper
-    crossing found by the canonical-tile bucketed GLOBAL pair join
-    (no shared group key) TOGETHER with the intersection point itself
-    (exact decimal(38,0)/HUGEINT rational, ONE shared division ->
-    bit-identical doubles, pinned by floor-coordinate signature
-    cxp_sig and floor sums), per-way crossing counts riding each row
-    and md5s over the ordered pair and node sets vs the oracle's
-    brute cross-join twin — PLUS
-    discrete Hausdorff distances (operators/hausdorff.py,
-    ST_HausdorffDistance): hd2_kept = directed vertex-set Hausdorff
-    from the original chain to its DP keep set (exact decimal(38,0)
-    digits — whole-globe deltas square past 2^63) and hd_seg_d2 = the
-    max-min point-to-simplified-POLYLINE d² (the true Douglas-Peucker
-    error, <= eps² by the DP invariant; snap.point_segment_d2's one
-    IEEE spelling both engines) — PLUS the rounded-DDA line
-    rasterization (raster.rasterize_line: per-way distinct burned
-    pixel count, coordinate sums and ordered-set md5) — PLUS the
-    tile-clipped polygon areas (clip.tile_polygon_areas, the
-    Green's-theorem clamp identity over 6 planted closed-ring clones:
-    per-way tile count, exact Σ area2q digits and the ordered
-    per-tile md5 vs the oracle's breakpoint-union + window twin) —
-    all by the one oracle."""
-    from ..datagen.synth import gen_groups, gen_images
-    from ..operators.clip import (
-        areal_transfer,
-        bearing_histogram,
-        densify_segments,
-        tile_polygon_areas,
-        way_segments,
-    )
-    from ..operators.hausdorff import (
-        chain_hausdorff_d2,
-        chain_segments,
-        directed_hausdorff_d2,
-    )
-    from ..operators.hull import convex_hull_stats
-    from ..operators.resolve import (
-        line_interpolate,
-        resolve_way_full,
-        simplify_ways,
-        way_geom_signature,
-        way_geometry,
-    )
-    from ..operators.dedup import h64_md5
-    from ..operators.raster import rasterize_line
-    from ..operators.snap import snap_points_to_segments
-    from ..operators.validity import (
-        cross_intersection_points,
-        self_intersection_counts,
-    )
-
-    images = gen_images(300, seed=42)
-    base = spark.createDataFrame(images[["image_id", "phash"]]).select(
-        "image_id",
-        C.unpack_lat(F.col("phash")).alias("lat"),
-        C.unpack_lon(F.col("phash")).alias("lon"),
-    )
-    groups = spark.createDataFrame(_planted_rev_ways(gen_groups(images)))
-    kept = simplify_ways(groups, base, eps=_WAY_SIMPLIFY_EPS)
-    simp = (
-        kept
-        .groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(F.collect_list("pos")),
-                    lambda p: p.cast("string"),
-                ),
-            ).alias("kept_pos"),
-        )
-    )
-    # Hausdorff folds (operators/hausdorff.py): hd2_kept = vertex-set
-    # directed Hausdorff original chain -> DP keep set, exact
-    # decimal(38,0) rendered as digits (whole-globe deltas square past
-    # 2^63); hd_seg_d2 = point-to-simplified-POLYLINE max-min — the
-    # true DP error, <= eps^2 by the invariant, doubles through the ONE
-    # snap.point_segment_d2 spelling shared with the oracle twin
-    allv = (
-        resolve_way_full(groups, base, keep_pos=True)
-        .select("group_id", F.explode("coords").alias("c"))
-        .select(
-            "group_id",
-            F.col("c.lon").alias("lon"),
-            F.col("c.lat").alias("lat"),
-        )
-    )
-    hvd = directed_hausdorff_d2(allv, kept).select(
-        "group_id", F.col("hd2").cast("string").alias("hd2_kept")
-    )
-    hch = chain_hausdorff_d2(allv, chain_segments(kept)).select(
-        "group_id", F.col("hd2").alias("hd_seg_d2")
-    )
-    segs = way_segments(groups, base)
-    snapped = snap_points_to_segments(
-        base.select(F.col("image_id").alias("pid"), "lon", "lat"),
-        segs,
-        point_id="pid",
-    )
-    per_way = snapped.groupBy("group_id").agg(
-        F.count(F.lit(1)).alias("n_snapped"),
-        F.min("d2").alias("snap_min_d2"),
-    )
-    # res=27 (~13.4 deg tiles): whole-globe fixture chains stay a few
-    # tiles wide, so the canonical-tile dedup path is truly exercised
-    selfx = self_intersection_counts(segs, res=27)
-    lay = F.pmod(h64_md5(F.col("group_id")), F.lit(2))
-    # points, not just pairs: the node-ing step — fx/fy floors are
-    # engine-stable because the doubles themselves are bit-identical
-    cxp = cross_intersection_points(
-        segs.filter(lay == 0), segs.filter(lay == 1), res=27
-    ).withColumns(
-        {
-            "fx": F.floor("ix").cast("long"),
-            "fy": F.floor("iy").cast("long"),
-        }
-    )
-    cxc = (
-        cxp.select(F.col("a_group").alias("group_id"))
-        .unionByName(cxp.select(F.col("b_group").alias("group_id")))
-        .groupBy("group_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_cross_x"))
-    )
-    cx_s = F.concat_ws(
-        ":",
-        F.col("a_group"),
-        F.col("apos").cast("string"),
-        F.col("b_group"),
-        F.col("bpos").cast("string"),
-    )
-    cxp_s = F.concat_ws(
-        ":",
-        F.col("a_group"),
-        F.col("apos").cast("string"),
-        F.col("b_group"),
-        F.col("bpos").cast("string"),
-        F.col("fx").cast("string"),
-        F.col("fy").cast("string"),
-    )
-    cxs = cxp.agg(
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "a_group", "apos", "b_group", "bpos",
-                                cx_s.alias("s"),
-                            )
-                        )
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("cx_sig"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "a_group", "apos", "b_group", "bpos",
-                                cxp_s.alias("s"),
-                            )
-                        )
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("cxp_sig"),
-        F.coalesce(F.sum("fx"), F.lit(0)).cast("long").alias("cx_fx_sum"),
-        F.coalesce(F.sum("fy"), F.lit(0)).cast("long").alias("cx_fy_sum"),
-    )
-    # line rasterization fold (raster.rasterize_line): the per-way
-    # DISTINCT burned pixel set at _LINE_PX_RES, pinned by count, both
-    # coordinate sums and the ordered-set md5
-    lrast = (
-        rasterize_line(segs, px_res=_LINE_PX_RES)
-        .select("group_id", "px", "py")
-        .distinct()
-        .groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_line_px"),
-            F.sum("px").cast("long").alias("lpx_sum"),
-            F.sum("py").cast("long").alias("lpy_sum"),
-            F.md5(
-                F.concat_ws(
-                    ";",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("px", "py"))),
-                        lambda s: F.concat_ws(
-                            ",",
-                            s["px"].cast("string"),
-                            s["py"].cast("string"),
-                        ),
-                    ),
-                )
-            ).alias("line_sig"),
-        )
-    )
-    sigs = way_geom_signature(groups, base).withColumn(
-        "n_geom_dups",
-        F.count(F.lit(1)).over(Window.partitionBy("geom_sig")).cast("long"),
-    )
-    dens = (
-        densify_segments(segs, max_gap=_DENSIFY_GAP)
-        .groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_densified"),
-            # exact-int / order-free checksums over every inserted
-            # point (FP sums would hit engine summation orders)
-            F.sum(F.floor("px")).cast("long").alias("dens_fx_sum"),
-            F.sum(F.floor("py")).cast("long").alias("dens_fy_sum"),
-            F.min("px").alias("dens_px_min"),
-            F.max("py").alias("dens_py_max"),
-        )
-    )
-    lin = line_interpolate(groups, base, t=_INTERP_T)
-    hull = convex_hull_stats(groups, base)
-    bh = bearing_histogram(segs)
-    wg = way_geometry(groups, base)
-    # tile-clipped polygon areas (clip.tile_polygon_areas): closed
-    # rings only — the clamp identity needs a closed curve; per way the
-    # tile count, the exact Σ area2q digits (== ring area up to
-    # boundary snapping) and the ordered per-tile md5
-    tpa = tile_polygon_areas(
-        segs.join(
-            wg.filter(F.col("is_closed")).select("group_id"), "group_id"
-        ),
-        res=_TPA_GATE_RES,
-        qshift=_TPA_GATE_Q,
-    )
-    tpagg = tpa.groupBy("group_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_area_tiles"),
-        F.sum("area2q").cast("decimal(38,0)").cast("string")
-        .alias("clip_area2q_sum"),
-        F.md5(
-            F.concat_ws(
-                ";",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "tx",
-                                "ty",
-                                F.col("area2q").cast("string").alias("a"),
-                            )
-                        )
-                    ),
-                    lambda s: F.concat_ws(
-                        ",",
-                        s["tx"].cast("string"),
-                        s["ty"].cast("string"),
-                        s["a"],
-                    ),
-                ),
-            )
-        ).alias("tile_area_sig"),
-    )
-    # areal transfer (clip.areal_transfer): redistribute the per-ring
-    # deterministic value h64(group_id) % 97 + 1 onto tiles by exact
-    # quantized area weights; pinned globally by the ordered per-tile
-    # md5 and the total allocation digits
-    atv = tpa.select("group_id").distinct().select(
-        "group_id",
-        (F.pmod(h64_md5(F.col("group_id")), F.lit(97)) + 1).alias("value"),
-    )
-    ats = (
-        areal_transfer(tpa, atv)
-        .select(
-            F.struct(
-                "tx", "ty", F.col("alloc").cast("string").alias("a")
-            ).alias("s")
-        )
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    ";",
-                    F.transform(
-                        F.array_sort(F.collect_list("s")),
-                        lambda s: F.concat_ws(
-                            ",",
-                            s["tx"].cast("string"),
-                            s["ty"].cast("string"),
-                            s["a"],
-                        ),
-                    ),
-                )
-            ).alias("at_sig"),
-            F.coalesce(
-                F.sum(F.col("s.a").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).cast("decimal(38,0)").cast("string").alias("at_total"),
-        )
-    )
-    return (
-        wg
-        .join(simp, "group_id")
-        .join(hvd, "group_id")
-        .join(hch, "group_id", "left")
-        .join(lin, "group_id")
-        .join(hull, "group_id")
-        .join(per_way, "group_id", "left")
-        .withColumn("n_snapped", F.coalesce("n_snapped", F.lit(0).cast("long")))
-        .join(selfx, "group_id", "left")
-        .withColumn("n_self_x", F.coalesce("n_self_x", F.lit(0).cast("long")))
-        .withColumn("is_simple", F.coalesce("is_simple", F.lit(True)))
-        .join(sigs, "group_id")
-        .join(dens, "group_id", "left")
-        .withColumn("n_densified", F.coalesce("n_densified", F.lit(0).cast("long")))
-        .withColumn("dens_fx_sum", F.coalesce("dens_fx_sum", F.lit(0).cast("long")))
-        .withColumn("dens_fy_sum", F.coalesce("dens_fy_sum", F.lit(0).cast("long")))
-        .join(cxc, "group_id", "left")
-        .withColumn("n_cross_x", F.coalesce("n_cross_x", F.lit(0).cast("long")))
-        .join(lrast, "group_id", "left")
-        .withColumn("n_line_px", F.coalesce("n_line_px", F.lit(0).cast("long")))
-        .withColumn("lpx_sum", F.coalesce("lpx_sum", F.lit(0).cast("long")))
-        .withColumn("lpy_sum", F.coalesce("lpy_sum", F.lit(0).cast("long")))
-        .join(tpagg, "group_id", "left")
-        .withColumn(
-            "n_area_tiles", F.coalesce("n_area_tiles", F.lit(0).cast("long"))
-        )
-        .join(bh, "group_id", "left")
-        .withColumns(
-            {
-                f"bh_n{b}": F.coalesce(f"bh_n{b}", F.lit(0).cast("long"))
-                for b in range(4)
-            }
-        )
-        .crossJoin(F.broadcast(cxs))
-        .crossJoin(F.broadcast(ats))
-        .orderBy("group_id")
-    )
-
-
-_CLIP_RES = 23  # tile edge 2^23 decimicro ≈ 0.84°: fixture segments span 1-6 tiles
-
-
-def _clip_to_tiles_oracle(res: int = _CLIP_RES) -> str:
-    """DuckDB twin of clip.clip_ways_to_tiles: window-lead segments over
-    the member-ordered chains, unnest(generate_series) tile fan-out,
-    then the SAME IEEE Liang–Barsky tree (least/greatest of the two
-    slab divisions, degenerate axes via CASE) — clipped endpoints are
-    bit-identical doubles across engines."""
-    _, groups_pdf, pts = _closure_fixture_pts()
-    rows = []
-    for g in groups_pdf.itertuples():
-        if g.kind != "way":
-            continue
-        for pos, m in enumerate(g.members):
-            if m["type"] == "image":
-                rows.append(f"('{g.group_id}', {pos}, '{m['ref']}')")
-    edges_v = ",\n      ".join(rows)
-    edge = C.cell_edge(res)
-
-    def axis(d: str, p1: str, lo: str, hi: str) -> tuple[str, str]:
-        t_lo = (
-            f"CASE WHEN {d} <> 0.0 THEN LEAST(({lo} - {p1})/{d}, ({hi} - {p1})/{d})"
-            f" ELSE CASE WHEN {p1} >= {lo} AND {p1} <= {hi} THEN 0.0 ELSE 2.0 END END"
-        )
-        t_hi = (
-            f"CASE WHEN {d} <> 0.0 THEN GREATEST(({lo} - {p1})/{d}, ({hi} - {p1})/{d})"
-            f" ELSE CASE WHEN {p1} >= {lo} AND {p1} <= {hi} THEN 1.0 ELSE -1.0 END END"
-        )
-        return t_lo, t_hi
-
-    tx_lo, tx_hi = axis("dx", "x1d", "xmin", "xmax")
-    ty_lo, ty_hi = axis("dy", "y1d", "ymin", "ymax")
-    return f"""
-    WITH pts(ref, lat, lon) AS (VALUES
-      {pts}
-    ),
-    edges(group_id, pos, ref) AS (VALUES
-      {edges_v}
-    ),
-    j AS (
-      SELECT e.group_id, e.pos,
-             CAST(p.lat AS BIGINT) AS lat, CAST(p.lon AS BIGINT) AS lon
-      FROM edges e JOIN pts p ON p.ref = e.ref
-    ),
-    seg AS (
-      SELECT group_id, pos, lon AS x1, lat AS y1,
-             lead(lon) OVER w AS x2, lead(lat) OVER w AS y2
-      FROM j WINDOW w AS (PARTITION BY group_id ORDER BY pos)
-    ),
-    s AS (SELECT * FROM seg WHERE x2 IS NOT NULL),
-    tiledx AS (
-      SELECT *, unnest(generate_series(
-        (LEAST(x1, x2) + {C.LON_OFFSET}) // {edge},
-        (GREATEST(x1, x2) + {C.LON_OFFSET}) // {edge})) AS tx
-      FROM s
-    ),
-    tiled AS (
-      SELECT *, unnest(generate_series(
-        (LEAST(y1, y2) + {C.LAT_OFFSET}) // {edge},
-        (GREATEST(y1, y2) + {C.LAT_OFFSET}) // {edge})) AS ty
-      FROM tiledx
-    ),
-    prep AS (
-      SELECT group_id, pos, tx, ty,
-             CAST(x1 AS DOUBLE) AS x1d, CAST(y1 AS DOUBLE) AS y1d,
-             CAST(x2 - x1 AS DOUBLE) AS dx, CAST(y2 - y1 AS DOUBLE) AS dy,
-             CAST(tx * {edge} - {C.LON_OFFSET} AS DOUBLE) AS xmin,
-             CAST(tx * {edge} - {C.LON_OFFSET} AS DOUBLE) + {float(edge)!r} AS xmax,
-             CAST(ty * {edge} - {C.LAT_OFFSET} AS DOUBLE) AS ymin,
-             CAST(ty * {edge} - {C.LAT_OFFSET} AS DOUBLE) + {float(edge)!r} AS ymax
-      FROM tiled
-    ),
-    clip0 AS (
-      SELECT group_id, pos, tx, ty, x1d, y1d, dx, dy,
-             GREATEST(0.0, {tx_lo}, {ty_lo}) AS t0,
-             LEAST(1.0, {tx_hi}, {ty_hi}) AS t1
-      FROM prep
-    )
-    SELECT group_id, pos, tx, ty,
-           x1d + t0 * dx AS cx1, y1d + t0 * dy AS cy1,
-           x1d + t1 * dx AS cx2, y1d + t1 * dy AS cy2
-    FROM clip0 WHERE t0 <= t1
-    ORDER BY group_id, pos, tx, ty
-    """
-
-
-@register("clip_to_tiles", _clip_to_tiles_oracle())
-def clip_to_tiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-star 'polygon-extract splitting' as a set-based operator:
-    every resolved way chain split into per-tile segment pieces
-    (Liang–Barsky against each covered tile's extent, the reference's
-    geometry ∩ bounding_box_to_polygon, /root/reference/src/osmgeom.rs:
-    65-71) — all arithmetic whole-stage codegen, the only shuffle is
-    the closure agg. Oracle recomputes the identical IEEE clip tree in
-    SQL, so clipped endpoints hash-match bit-for-bit."""
-    from ..datagen.synth import gen_groups, gen_images
-    from ..operators.clip import clip_ways_to_tiles
-
-    images = gen_images(300, seed=42)
-    base = spark.createDataFrame(images[["image_id", "phash"]]).select(
-        "image_id",
-        C.unpack_lat(F.col("phash")).alias("lat"),
-        C.unpack_lon(F.col("phash")).alias("lon"),
-    )
-    groups = spark.createDataFrame(gen_groups(images))
-    return clip_ways_to_tiles(groups, base, res=_CLIP_RES).orderBy(
-        "group_id", "pos", "tx", "ty"
+def _closure_fixture_edges(groups_pdf) -> str:
+    """The fixture groups' member lists as (group_id, kind, ref,
+    ref_type) VALUES rows for the closure oracles."""
+    return ",\n      ".join(
+        f"('{g.group_id}', '{g.kind}', '{m['ref']}', '{m['type']}')"
+        for g in groups_pdf.itertuples()
+        for m in g.members
     )
 
 
@@ -6931,13 +891,7 @@ def _relation_closure_oracle() -> str:
     shortest path visits each group at most once, so it is never cut."""
     _, groups_pdf, pts = _closure_fixture_pts()
     max_depth = groups_pdf["group_id"].nunique()
-    rows = []
-    for g in groups_pdf.itertuples():
-        for m in g.members:
-            rows.append(
-                f"('{g.group_id}', '{g.kind}', '{m['ref']}', '{m['type']}')"
-            )
-    edges = ",\n      ".join(rows)
+    edges = _closure_fixture_edges(groups_pdf)
     return f"""
     WITH RECURSIVE
     pts(ref, lat, lon) AS (VALUES
@@ -6990,6 +944,41 @@ def relation_closure_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("group_id", "member_id")
 
 
+def _group_bbox_oracle() -> str:
+    """DuckDB twin of A3 group_bboxes: a recursive CTE computes the
+    transitive image-closure of every group (UNION dedup terminates the
+    2-cycle), then min/max over reachable points — the same
+    decomposition group_bboxes runs (member closure ⋈ point bboxes ->
+    min/max), valid because bbox-union composes. Fixture literals are emitted
+    from the same deterministic generator the Spark query uses."""
+    _, groups_pdf, pts = _closure_fixture_pts()
+    edges = _closure_fixture_edges(groups_pdf)
+    return f"""
+    WITH RECURSIVE
+    pts(ref, lat, lon) AS (VALUES
+      {pts}
+    ),
+    edges(group_id, kind, ref, ref_type) AS (VALUES
+      {edges}
+    ),
+    reach(group_id, img) AS (
+      SELECT group_id, ref FROM edges WHERE ref_type = 'image'
+      UNION
+      SELECT e.group_id, r.img
+      FROM edges e JOIN reach r ON e.ref_type = 'group' AND e.ref = r.group_id
+    ),
+    gk AS (SELECT DISTINCT group_id, kind FROM edges)
+    SELECT r.group_id, gk.kind,
+           min(p.lat) AS minlat, max(p.lat) AS maxlat,
+           min(p.lon) AS minlon, max(p.lon) AS maxlon
+    FROM reach r
+    JOIN pts p ON p.ref = r.img
+    JOIN gk ON gk.group_id = r.group_id
+    GROUP BY r.group_id, gk.kind
+    ORDER BY r.group_id
+    """
+
+
 @register("group_bbox_fixpoint", _group_bbox_oracle())
 def group_bbox_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: recursive relation-bbox resolution to fixpoint (cycle-safe).
@@ -7015,3295 +1004,3 @@ def group_bbox_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = spark.createDataFrame(gen_groups(images))
     pb = point_bboxes(base, changes)
     return group_bboxes(groups, pb).orderBy("group_id")
-
-
-# ---------------------------------------------------------------------------
-# additional relational operators (as-of join, sessionization, rollup)
-# ---------------------------------------------------------------------------
-
-@register(
-    "asof_join",
-    """
-    WITH iv AS (
-      SELECT event_id, user_id,
-             epoch_us(ts) // 1000000 AS s,
-             epoch_us(ts) // 1000000 + (event_id % 5 + 1) * 86400 AS e
-      FROM events
-    ), ov AS (
-      SELECT a.event_id,
-             count(*) AS n_overlap,
-             CAST(sum(b.event_id) AS BIGINT) AS overlap_idsum
-      FROM iv a JOIN iv b
-        ON a.user_id = b.user_id AND a.event_id <> b.event_id
-       AND a.s <= b.e AND b.s <= a.e
-      GROUP BY a.event_id
-    )
-    SELECT e.event_id, e.user_id, e.ts,
-           o.o_orderkey AS right_o_orderkey, o.o_totalprice AS right_o_totalprice,
-           COALESCE(ov.n_overlap, 0) AS n_overlap,
-           COALESCE(ov.overlap_idsum, 0) AS overlap_idsum
-    FROM events e
-    ASOF LEFT JOIN orders o
-      ON e.user_id % 150 + 1 = o.o_custkey AND o.o_orderdate <= e.ts
-    LEFT JOIN ov ON ov.event_id = e.event_id
-    ORDER BY e.event_id
-    """,
-)
-def asof_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (latest order at-or-before each event, per customer) —
-    union + last-observation window, one shuffle, no range explosion;
-    oracle = DuckDB's native ASOF JOIN.
-
-    DuckDB ASOF tie rule differs on exact timestamp ties and on
-    duplicate right timestamps (it picks one arbitrary max row), so the
-    fixture keys avoid both: o_orderdate values are unique per customer
-    in the driver schema and never equal event ts exactly.
-
-    Folded range-join columns (round 5): each event carries an activity
-    interval [ts, ts + (event_id%5+1) days] in floor-epoch-seconds
-    (Spark's cast-to-long == DuckDB's epoch_us // 1e6, exact int64);
-    ``n_overlap``/``overlap_idsum`` count and fingerprint the OTHER
-    same-user events whose intervals overlap — computed by the
-    bucketized exactly-once ``range_join`` (one equi-join, no cartesian,
-    no distinct), while the oracle recomputes the pair set with a plain
-    quadratic overlap join."""
-    from ..operators.relational import asof_join, range_join
-
-    # spread the one-row-group events scan before the interval fan-out
-    # and the union/window map work: the bucket explode + join probe
-    # otherwise serialize on one core (r6 profile: 10.3 s -> ~3 s for
-    # the range-join leg at sf1.0 once spread; guide §2.5)
-    ev = _rebalance(spark, _t(spark, sf_dir, "events"), key="event_id", eff=_rg_count(sf_dir, "events")).select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"),
-        (F.col("user_id") % 150 + 1).alias("cust"),
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("cust"),
-        F.col("o_orderdate").cast("timestamp").alias("ts"),
-        "o_orderkey",
-        "o_totalprice",
-    )
-    s = F.col("ts").cast("long")
-    iv = ev.select(
-        "event_id",
-        "user_id",
-        s.alias("s"),
-        (s + (F.col("event_id") % 5 + 1) * 86400).alias("e"),
-    )
-    # bucket = the MAX interval length (5 days): every interval then
-    # spans <= 2 buckets, so the exploded/shuffled/sorted row count is
-    # bounded at <= 2x input regardless of density, while per-bucket
-    # candidate growth vs the 3-day median stays ~5% ((bw+len)^2/bw).
-    # Measured at sf1.0: 2.1 s vs 2.4 s for the 3-day width.
-    pairs = range_join(
-        iv, iv, "s", "e", "s", "e",
-        bucket_width=5 * 86400, key="user_id", right_cols=["event_id"],
-    )
-    ov = (
-        pairs.filter(F.col("event_id") != F.col("right_event_id"))
-        .groupBy("event_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_overlap"),
-            F.sum("right_event_id").alias("overlap_idsum"),
-        )
-    )
-    # attach the overlap columns to the EVENT side BEFORE the as-of
-    # union: they ride through the per-cust window as two extra longs,
-    # so the former post-window sort-merge join by event_id (one more
-    # exchange + sort of the full 1M-row as-of output) disappears —
-    # and the ov side joins straight off its aggregation's existing
-    # hash(event_id) partitioning (guide §2.4). Same rows, same
-    # coalesce-to-0 semantics, same final order.
-    ev_ov = ev.join(ov, on="event_id", how="left")
-    out = asof_join(
-        ev_ov, orders, key="cust", ts="ts",
-        value_cols=["o_orderkey", "o_totalprice"],
-    )
-    return (
-        out.select(
-            "event_id", "user_id", "ts", "right_o_orderkey", "right_o_totalprice",
-            F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
-            F.coalesce(F.col("overlap_idsum"), F.lit(0)).alias("overlap_idsum"),
-        )
-        .orderBy("event_id")
-    )
-
-
-#: trajectory segmentation gate params: 8e6 decimicro step threshold
-#: (~median consecutive-step distance at sf0.01, so segments mix) and a
-#: 10-minute stay criterion
-_TRAJ_EPS = 8_000_000
-_TRAJ_MIN_STAY_S = 600
-#: k-anonymity QI coarse-tile resolution (~1.6 degrees per cell)
-_KA_TILE_RES = 24
-#: speed-screen bound (decimicro/s) for the sessionize fold: the
-#: synthetic per-user steps imply planar speeds of ~90..4400
-#: decimicro/s (median ~338 at sf0.01), so 400 splits the steps into a
-#: genuine ok/violation mix (~40% violations)
-_SPEED_VMAX = 400
-#: window-funnel gate params: view -> click -> purchase within 4 h of
-#: the chain's FIRST step (150/99/4 users at levels >=1/2/3 at sf0.01 —
-#: genuinely mixed at the driver's gate scale)
-_FUNNEL_STEPS = ("view", "click", "purchase")
-_FUNNEL_H_S = 14_400
-#: cohort-retention gate param: hourly periods (per-user activity is
-#: ~one event / 9 h at sf0.01, so user-periods genuinely skip — 32
-#: cohorts, cell counts 1-19; weekly/daily periods are degenerate
-#: full-retention on this fixture)
-_COHORT_PERIOD_S = 3_600
-#: isotonic-regression gate cap: first 12 events per user (the bounded-
-#: trajectory contract hmm_map_match set; keeps the oracle's O(n³)
-#: brute minimax trivial while PAVA pooling is genuinely mixed)
-_ISO_MAX_N = 12
-
-
-def _mm_segments_values() -> str:
-    """Pandas twin of clip.way_segments over the RAW closure fixture
-    (no _planted_rev_ways mutation — the map-match dimension is the
-    store as-is), rendered as VALUES literals for the oracle; parity
-    with the Spark operator is pinned by test_mapmatch."""
-    images, groups_pdf, _ = _closure_fixture_pts()
-    lat = (images.phash // C.PHASH_LON_BASE) - C.LAT_OFFSET
-    lon = (images.phash % C.PHASH_LON_BASE) - C.LON_OFFSET
-    coord = {
-        i: (int(lo), int(la))
-        for i, la, lo in zip(images.image_id, lat, lon)
-    }
-    vals = []
-    for _, g in groups_pdf.iterrows():
-        if g["kind"] != "way":
-            continue
-        chain = [
-            (p, coord[m["ref"]])
-            for p, m in enumerate(g["members"])
-            if m["type"] == "image" and m["ref"] in coord
-        ]
-        for (p1, (x1, y1)), (_, (x2, y2)) in zip(chain, chain[1:]):
-            vals.append(f"('{g['group_id']}', {p1}, {x1}, {y1}, {x2}, {y2})")
-    return ", ".join(vals)
-
-
-def _mm_oracle_ctes() -> str:
-    from ..operators.mapmatch import sql_hmm_ctes
-
-    pts = (
-        f"(SELECT user_id, ts, event_id, {_EV_LON} AS lon, "
-        f"{_EV_LAT} AS lat FROM events)"
-    )
-    return sql_hmm_ctes(pts, _mm_segments_values())
-
-
-@register(
-    "sessionize",
-    f"""
-    WITH RECURSIVE g AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1
-                  ELSE 0 END AS new_s,
-             CASE WHEN lag(lat) OVER w IS NULL
-                       OR (lat - lag(lat) OVER w) * (lat - lag(lat) OVER w)
-                          + (lon - lag(lon) OVER w) * (lon - lag(lon) OVER w)
-                          > CAST({_TRAJ_EPS} AS BIGINT) * {_TRAJ_EPS} THEN 1
-                  ELSE 0 END AS new_g
-      FROM (
-        SELECT user_id, event_id, ts,
-               {_EV_LAT} AS lat, {_EV_LON} AS lon
-        FROM events
-      )
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sg AS (
-      SELECT user_id, event_id, ts,
-             CAST(sum(new_s) OVER cum AS BIGINT) AS session_id,
-             CAST(sum(new_g) OVER cum AS BIGINT) AS seg_id,
-             -- SCD2 validity intervals (relational.scd2_intervals):
-             -- each user's revisions tile into half-open
-             -- [valid_from_s, valid_to_s) with one open current row
-             CAST(row_number() OVER w2 AS BIGINT) AS scd_version,
-             CAST(epoch_us(ts) // 1000000 AS BIGINT) AS valid_from_s,
-             CAST(lead(epoch_us(ts) // 1000000) OVER w2 AS BIGINT)
-               AS valid_to_s
-      FROM g
-      WINDOW cum AS (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS UNBOUNDED PRECEDING),
-             w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    tm AS (
-      -- per-user OLS trend moments (operators/relational.group_trend,
-      -- relocated from the benched stream_window_stats row): x = the
-      -- event's epoch second, y = event_id % 997 (exact ints both)
-      SELECT user_id,
-             CAST(count(*) AS HUGEINT) AS tn,
-             SUM(CAST(epoch_us(ts) // 1000000 AS HUGEINT)) AS sx,
-             SUM(CAST(event_id % 997 AS HUGEINT)) AS sy,
-             SUM(CAST(epoch_us(ts) // 1000000 AS HUGEINT)
-                 * CAST(epoch_us(ts) // 1000000 AS HUGEINT)) AS sxx,
-             SUM(CAST(epoch_us(ts) // 1000000 AS HUGEINT)
-                 * CAST(event_id % 997 AS HUGEINT)) AS sxy
-      FROM events GROUP BY user_id
-    ),
-    tt AS (
-      SELECT user_id,
-             CAST(tn AS BIGINT) AS n_obs,
-             CASE WHEN tn * sxx - sx * sx != 0
-               THEN CAST(tn * sxy - sx * sy AS DOUBLE)
-                    / CAST(tn * sxx - sx * sx AS DOUBLE) END AS slope,
-             CASE WHEN tn * sxx - sx * sx != 0
-               THEN CAST(sy * sxx - sx * sxy AS DOUBLE)
-                    / CAST(tn * sxx - sx * sx AS DOUBLE) END AS intercept,
-             CAST(tn * sxx - sx * sx AS VARCHAR) AS trend_den_str
-      FROM tm
-    ),
-    -- Mann-Kendall trend test (relational.mann_kendall): the oracle
-    -- verifies with the brute pair join where Spark folds the
-    -- time-ordered value array inside one nested HOF aggregate
-    mkp AS (
-      SELECT a.user_id,
-             CASE WHEN b.event_id % 997 > a.event_id % 997 THEN 1
-                  WHEN b.event_id % 997 < a.event_id % 997 THEN -1
-                  ELSE 0 END AS sg
-      FROM events a JOIN events b
-        ON b.user_id = a.user_id
-       AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id))
-    ),
-    mks AS (
-      SELECT user_id, CAST(SUM(sg) AS BIGINT) AS mk_s
-      FROM mkp GROUP BY user_id
-    ),
-    mkt AS (
-      SELECT user_id,
-             SUM(CASE WHEN t > 1 THEN t * (t - 1) * (2 * t + 5)
-                 ELSE 0 END) AS tie
-      FROM (SELECT user_id, CAST(count(*) AS HUGEINT) AS t
-            FROM events GROUP BY user_id, event_id % 997)
-      GROUP BY user_id
-    ),
-    mkf AS (
-      SELECT tm.user_id,
-             COALESCE(mks.mk_s, 0) AS mk_s,
-             CAST(tn * (tn - 1) * (2 * tn + 5) - COALESCE(mkt.tie, 0)
-                  AS VARCHAR) AS mk_var18_str,
-             CASE WHEN tn * (tn - 1) * (2 * tn + 5) - COALESCE(mkt.tie, 0) = 0
-                    THEN NULL
-                  WHEN COALESCE(mks.mk_s, 0) > 0
-                    THEN CAST(mks.mk_s - 1 AS DOUBLE)
-                         / sqrt(CAST(tn * (tn - 1) * (2 * tn + 5)
-                                     - COALESCE(mkt.tie, 0) AS DOUBLE) / 18.0)
-                  WHEN COALESCE(mks.mk_s, 0) < 0
-                    THEN CAST(mks.mk_s + 1 AS DOUBLE)
-                         / sqrt(CAST(tn * (tn - 1) * (2 * tn + 5)
-                                     - COALESCE(mkt.tie, 0) AS DOUBLE) / 18.0)
-                  ELSE 0.0 END AS mk_z
-      FROM tm
-      LEFT JOIN mks ON mks.user_id = tm.user_id
-      LEFT JOIN mkt ON mkt.user_id = tm.user_id
-    ),
-    -- window funnel (relational.funnel_levels, ClickHouse
-    -- windowFunnel semantics): the oracle verifies with a genuinely
-    -- DIFFERENT algorithm — brute exists-joins over the same
-    -- (ts, event_id) total order — where Spark runs the single-agg
-    -- max-start DP fold
-    f1 AS (SELECT user_id, ts, event_id FROM events
-           WHERE event_type = '{_FUNNEL_STEPS[0]}'),
-    f2 AS (SELECT user_id, ts, event_id FROM events
-           WHERE event_type = '{_FUNNEL_STEPS[1]}'),
-    f3 AS (SELECT user_id, ts, event_id FROM events
-           WHERE event_type = '{_FUNNEL_STEPS[2]}'),
-    fl2 AS (
-      SELECT DISTINCT a.user_id FROM f1 a JOIN f2 b
-        ON b.user_id = a.user_id
-       AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id))
-       AND epoch_us(b.ts) - epoch_us(a.ts) <= {_FUNNEL_H_S * 1_000_000}
-    ),
-    fl3 AS (
-      SELECT a.user_id, CAST(max(epoch_us(a.ts)) AS BIGINT) AS fstart
-      FROM f1 a
-      JOIN f2 b ON b.user_id = a.user_id
-       AND (a.ts < b.ts OR (a.ts = b.ts AND a.event_id < b.event_id))
-      JOIN f3 c ON c.user_id = a.user_id
-       AND (b.ts < c.ts OR (b.ts = c.ts AND b.event_id < c.event_id))
-       AND epoch_us(c.ts) - epoch_us(a.ts) <= {_FUNNEL_H_S * 1_000_000}
-      GROUP BY a.user_id
-    ),
-    fnl AS (
-      SELECT u.user_id,
-             CASE WHEN l3.user_id IS NOT NULL THEN 3
-                  WHEN l2.user_id IS NOT NULL THEN 2
-                  WHEN e1.user_id IS NOT NULL THEN 1 ELSE 0 END
-               AS funnel_level,
-             l3.fstart AS funnel_start_us
-      FROM (SELECT DISTINCT user_id FROM events) u
-      LEFT JOIN (SELECT DISTINCT user_id FROM f1) e1
-        ON e1.user_id = u.user_id
-      LEFT JOIN fl2 l2 ON l2.user_id = u.user_id
-      LEFT JOIN fl3 l3 ON l3.user_id = u.user_id
-    ),
-    -- cohort retention (relational.cohort_retention): hourly periods,
-    -- cohort = the user's first active period, cell = distinct users
-    -- of a cohort active at that offset
-    cb AS (SELECT user_id, epoch_us(ts) // 1000000 // {_COHORT_PERIOD_S} AS p
-           FROM events),
-    cf AS (SELECT user_id, CAST(min(p) AS BIGINT) AS cohort_p
-           FROM cb GROUP BY user_id),
-    ca AS (SELECT DISTINCT b.user_id, f.cohort_p, b.p - f.cohort_p AS offset_p
-           FROM cb b JOIN cf f ON f.user_id = b.user_id),
-    cm AS (SELECT cohort_p, offset_p, CAST(count(*) AS BIGINT) AS ret_n
-           FROM ca GROUP BY cohort_p, offset_p),
-    -- exact median/MAD robust outliers (relational.robust_outliers):
-    -- doubled medians via two midrank window picks, cross-multiplied
-    -- Hampel test 2*d2 > k*mad22 — all exact BIGINTs
-    rza AS (
-      SELECT user_id, event_id,
-             (CAST(1 AS BIGINT) << CAST(event_id % 19 AS INT)) AS amp
-      FROM events
-    ),
-    rzr AS (
-      SELECT user_id, event_id, amp,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY amp, event_id) AS rn,
-             count(*) OVER (PARTITION BY user_id) AS rzn
-      FROM rza
-    ),
-    rzm AS (
-      SELECT user_id, event_id, amp, rzn,
-             SUM(CASE WHEN rn = (rzn + 1) // 2 THEN amp END)
-               OVER (PARTITION BY user_id)
-           + SUM(CASE WHEN rn = rzn // 2 + 1 THEN amp END)
-               OVER (PARTITION BY user_id) AS rz_med2
-      FROM rzr
-    ),
-    rzd AS (
-      SELECT user_id, event_id, rzn, rz_med2,
-             ABS(2 * amp - rz_med2) AS rz_d2,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ABS(2 * amp - rz_med2), amp,
-                                         event_id) AS rn2
-      FROM rzm
-    ),
-    rzf AS (
-      SELECT user_id, event_id,
-             CAST(rz_med2 AS BIGINT) AS rz_med2,
-             CAST(rz_d2 AS BIGINT) AS rz_d2,
-             CAST(SUM(CASE WHEN rn2 = (rzn + 1) // 2 THEN rz_d2 END)
-                    OVER (PARTITION BY user_id)
-                + SUM(CASE WHEN rn2 = rzn // 2 + 1 THEN rz_d2 END)
-                    OVER (PARTITION BY user_id) AS BIGINT) AS rz_mad22
-      FROM rzd
-    ),
-    rz AS (
-      SELECT user_id, event_id, rz_med2, rz_d2, rz_mad22,
-             CAST(CASE WHEN 2 * rz_d2 > 3 * rz_mad22
-                       THEN 1 ELSE 0 END AS BIGINT) AS rz_out
-      FROM rzf
-    ),
-    {_mm_oracle_ctes()},
-    mmfull AS (
-      SELECT a.pid, a.mm_way, a.mm_pos, a.mm_rank, a.mm_e, a.mm_cost,
-             s2.mm_cost2, w.mm_switches
-      FROM mmassign a JOIN mmswitch w USING (traj)
-      LEFT JOIN mmsecond s2 USING (traj)
-    ),
-    alsid AS (
-      -- Allen census (relational.allen_census): the same 30-min
-      -- session assignment, joined back for the event type
-      SELECT g.user_id, g.ts, e.event_type,
-             SUM(new_s) OVER (PARTITION BY g.user_id ORDER BY g.ts, g.event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM g JOIN events e ON e.event_id = g.event_id
-    ),
-    aliv AS (
-      SELECT user_id, sid, event_type,
-             min(epoch_us(ts)) AS s, max(epoch_us(ts)) AS e
-      FROM alsid GROUP BY user_id, sid, event_type
-    ),
-    alp AS (
-      SELECT user_id,
-             CASE WHEN sa = sb AND ea = eb THEN 'al_eq'
-                  WHEN sa = sb THEN 'al_starts'
-                  WHEN ea < sb THEN 'al_prec'
-                  WHEN ea = sb THEN 'al_meets'
-                  WHEN eb < ea THEN 'al_during'
-                  WHEN eb = ea THEN 'al_fin'
-                  ELSE 'al_over' END AS rel
-      FROM (
-        SELECT x.user_id,
-               CASE WHEN (y.s, y.e) < (x.s, x.e) THEN y.s ELSE x.s END AS sa,
-               CASE WHEN (y.s, y.e) < (x.s, x.e) THEN y.e ELSE x.e END AS ea,
-               CASE WHEN (y.s, y.e) < (x.s, x.e) THEN x.s ELSE y.s END AS sb,
-               CASE WHEN (y.s, y.e) < (x.s, x.e) THEN x.e ELSE y.e END AS eb
-        FROM aliv x JOIN aliv y ON y.user_id = x.user_id AND y.sid = x.sid
-                                AND y.event_type > x.event_type
-      )
-    ),
-    alc AS (
-      SELECT user_id,
-             {", ".join(
-                 f"CAST(COALESCE(SUM(CASE WHEN rel = '{c}' THEN 1 END), 0)"
-                 f" AS BIGINT) AS {c}"
-                 for c in (
-                     'al_prec', 'al_meets', 'al_over', 'al_starts',
-                     'al_during', 'al_fin', 'al_eq'))}
-      FROM alp GROUP BY user_id
-    ),
-    isot AS (
-      -- isotonic regression (relational.isotonic_fit): first {_ISO_MAX_N}
-      -- events per user; the oracle brute-forces the textbook minimax
-      -- characterization over scaled-floor block averages
-      SELECT * FROM (
-        SELECT user_id, event_id, (event_id % 997) AS y,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS rn
-        FROM events
-      ) WHERE rn <= {_ISO_MAX_N}
-    ),
-    ison AS (
-      SELECT user_id, CAST(COUNT(*) AS BIGINT) AS iso_n
-      FROM isot GROUP BY user_id
-    ),
-    isop AS (
-      SELECT user_id, rn, y, event_id,
-             SUM(y) OVER (PARTITION BY user_id ORDER BY rn) AS ps
-      FROM isot
-    ),
-    isow AS (
-      SELECT j.user_id, j.rn AS wj, k.rn AS wk,
-             (2 * n.iso_n * n.iso_n * (k.ps - j.ps + j.y))
-               // (k.rn - j.rn + 1) AS qv
-      FROM isop j
-      JOIN isop k ON k.user_id = j.user_id AND k.rn >= j.rn
-      JOIN ison n ON n.user_id = j.user_id
-    ),
-    isomn AS (
-      SELECT w.user_id, w.wj, i.rn AS wi, MIN(w.qv) AS mn
-      FROM isow w
-      JOIN isot i ON i.user_id = w.user_id AND i.rn BETWEEN w.wj AND w.wk
-      GROUP BY w.user_id, w.wj, i.rn
-    ),
-    isofit AS (
-      SELECT t.event_id, n.iso_n, MAX(m.mn) AS iso_fitq
-      FROM isomn m
-      JOIN isot t ON t.user_id = m.user_id AND t.rn = m.wi
-      JOIN ison n ON n.user_id = m.user_id
-      GROUP BY t.event_id, n.iso_n
-    ),
-    cpp AS (
-      -- CUSUM changepoint (relational.cusum_changepoint): n-scaled
-      -- D_k = n*S_k - k*S_n over the same (ts, event_id) order,
-      -- argmax |D| over interior k (ties -> earliest k)
-      SELECT user_id, event_id % 997 AS v,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS k,
-             SUM(event_id % 997) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sk
-      FROM events
-    ),
-    cpt AS (
-      SELECT user_id, count(*) AS cp_n, SUM(v) AS sn FROM cpp GROUP BY 1
-    ),
-    cpb AS (
-      SELECT user_id, cp_stat, cp_pos, cp_sign FROM (
-        SELECT p.user_id,
-               CAST(abs(t.cp_n * p.sk - p.k * t.sn) AS BIGINT) AS cp_stat,
-               CAST(p.k AS BIGINT) AS cp_pos,
-               CAST(CASE WHEN t.cp_n * p.sk - p.k * t.sn > 0 THEN 1
-                         WHEN t.cp_n * p.sk - p.k * t.sn < 0 THEN -1
-                         ELSE 0 END AS BIGINT) AS cp_sign,
-               row_number() OVER (PARTITION BY p.user_id
-                   ORDER BY abs(t.cp_n * p.sk - p.k * t.sn) DESC, p.k) AS rn
-        FROM cpp p JOIN cpt t USING (user_id)
-        WHERE p.k < t.cp_n AND t.cp_n >= 2
-      ) WHERE rn = 1
-    ),
-    spq AS (
-      -- speed screen (relational.speed_screen): per consecutive step
-      -- the planar displacement and the whole-second gap, same
-      -- (ts, event_id) order as every trajectory fold
-      SELECT user_id,
-             lat - lag(lat) OVER wsp AS ddy,
-             lon - lag(lon) OVER wsp AS ddx,
-             epoch_us(ts) // 1000000
-               - lag(epoch_us(ts) // 1000000) OVER wsp AS ddt
-      FROM (SELECT user_id, event_id, ts, {_EV_LAT} AS lat, {_EV_LON} AS lon
-            FROM events)
-      WINDOW wsp AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    spx AS (
-      SELECT user_id,
-             CAST(ddx AS HUGEINT) * ddx + CAST(ddy AS HUGEINT) * ddy AS d2,
-             CAST({_SPEED_VMAX} AS HUGEINT) * {_SPEED_VMAX} * ddt * ddt AS b2
-      FROM spq WHERE ddt IS NOT NULL
-    ),
-    spagg AS (
-      SELECT user_id,
-             CAST(count(*) AS BIGINT) AS sp_steps,
-             CAST(COALESCE(SUM(CASE WHEN d2 > b2 THEN 1 END), 0) AS BIGINT)
-               AS sp_viol,
-             CAST(COALESCE(SUM(CASE WHEN d2 > b2 THEN d2 - b2 END), 0)
-                  AS VARCHAR) AS sp_ex_str
-      FROM spx GROUP BY user_id
-    ),
-    tspt AS (
-      -- Theil-Sen point frame: same first-{_ISO_MAX_N} cap and
-      -- (ts, event_id) order as isotonic; x = epoch second
-      SELECT user_id, rn, x, y FROM (
-        SELECT user_id, epoch_us(ts) // 1000000 AS x, (event_id % 997) AS y,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS rn
-        FROM events
-      ) WHERE rn <= {_ISO_MAX_N}
-    ),
-    tsp AS (
-      -- pairwise slopes as rationals (d0 > 0 by the rn order; dx = 0
-      -- vertical pairs skipped, the standard Theil-Sen rule)
-      SELECT a.user_id, b.y - a.y AS n0, b.x - a.x AS d0
-      FROM tspt a JOIN tspt b ON b.user_id = a.user_id AND b.rn > a.rn
-      WHERE b.x <> a.x
-    ),
-    tsm2 AS (SELECT user_id, count(*) AS m FROM tsp GROUP BY 1),
-    tsrk AS (
-      -- exact value ranks by cross-multiplied compare (dens positive)
-      SELECT p.user_id, p.n0, p.d0,
-             SUM(CASE WHEN q.n0 * p.d0 < p.n0 * q.d0 THEN 1 ELSE 0 END) AS lt,
-             SUM(CASE WHEN q.n0 * p.d0 <= p.n0 * q.d0 THEN 1 ELSE 0 END) AS le
-      FROM (SELECT DISTINCT user_id, n0, d0 FROM tsp) p
-      JOIN tsp q ON q.user_id = p.user_id
-      GROUP BY p.user_id, p.n0, p.d0
-    ),
-    tsrr AS (
-      -- the needed order-statistic ranks: upper middle always, lower
-      -- middle too when the pair count is even
-      SELECT t.user_id, t.m,
-             CASE WHEN u.i = 0 THEN t.m // 2 + 1 ELSE t.m // 2 END AS r
-      FROM tsm2 t CROSS JOIN (VALUES (0), (1)) u(i)
-      WHERE u.i = 0 OR t.m % 2 = 0
-    ),
-    tsv AS (
-      SELECT DISTINCT k.user_id, rr.r,
-             k.n0 // gcd(abs(k.n0), k.d0) AS vn,
-             k.d0 // gcd(abs(k.n0), k.d0) AS vd
-      FROM tsrk k
-      JOIN tsrr rr ON rr.user_id = k.user_id
-                  AND k.lt < rr.r AND rr.r <= k.le
-    ),
-    tsfin AS (
-      SELECT a.user_id, t.m,
-             CASE WHEN b.user_id IS NULL THEN a.vn
-                  ELSE (a.vn * b.vd + b.vn * a.vd)
-                       // gcd(abs(a.vn * b.vd + b.vn * a.vd),
-                              2 * a.vd * b.vd) END AS fn,
-             CASE WHEN b.user_id IS NULL THEN a.vd
-                  ELSE (2 * a.vd * b.vd)
-                       // gcd(abs(a.vn * b.vd + b.vn * a.vd),
-                              2 * a.vd * b.vd) END AS fd
-      FROM (SELECT v.user_id, v.vn, v.vd FROM tsv v
-            JOIN tsm2 t2 ON t2.user_id = v.user_id
-            WHERE v.r = t2.m // 2 + 1) a
-      JOIN tsm2 t ON t.user_id = a.user_id
-      LEFT JOIN (SELECT v.user_id, v.vn, v.vd FROM tsv v
-                 JOIN tsm2 t3 ON t3.user_id = v.user_id
-                 WHERE t3.m % 2 = 0 AND v.r = t3.m // 2) b
-             ON b.user_id = a.user_id
-    )
-    SELECT sg.user_id, sg.event_id AS event_id, session_id, seg_id,
-           CAST(count(*) OVER ws AS BIGINT) AS seg_n,
-           CAST(max(epoch_us(ts) // 1000000) OVER ws
-                - min(epoch_us(ts) // 1000000) OVER ws AS BIGINT)
-             AS seg_duration_s,
-           CAST(CASE WHEN max(epoch_us(ts) // 1000000) OVER ws
-                          - min(epoch_us(ts) // 1000000) OVER ws
-                          >= {_TRAJ_MIN_STAY_S} THEN 1 ELSE 0 END AS BIGINT)
-             AS seg_stay,
-           scd_version, valid_from_s, valid_to_s,
-           CAST(CASE WHEN valid_to_s IS NULL THEN 1 ELSE 0 END AS BIGINT)
-             AS is_current,
-           tt.n_obs, tt.slope, tt.intercept, tt.trend_den_str,
-           mkf.mk_s AS mk_s, mkf.mk_var18_str AS mk_var18_str,
-           mkf.mk_z AS mk_z,
-           CAST(COALESCE(fnl.funnel_level, 0) AS BIGINT) AS funnel_level,
-           fnl.funnel_start_us,
-           cf.cohort_p,
-           CAST(epoch_us(ts) // 1000000 // {_COHORT_PERIOD_S} - cf.cohort_p
-                AS BIGINT) AS offset_p,
-           cm.ret_n,
-           mmf.mm_way, mmf.mm_pos, mmf.mm_rank, mmf.mm_e, mmf.mm_cost,
-           mmf.mm_cost2, mmf.mm_switches,
-           rz.rz_med2, rz.rz_d2, rz.rz_mad22, rz.rz_out,
-           iso.iso_n, iso.iso_fitq,
-           al.al_prec, al.al_meets, al.al_over, al.al_starts,
-           al.al_during, al.al_fin, al.al_eq,
-           CAST(cpt.cp_n AS BIGINT) AS cp_n,
-           COALESCE(cpb.cp_stat, 0) AS cp_stat,
-           cpb.cp_pos AS cp_pos,
-           COALESCE(cpb.cp_sign, 0) AS cp_sign,
-           COALESCE(spagg.sp_steps, 0) AS sp_steps,
-           COALESCE(spagg.sp_viol, 0) AS sp_viol,
-           COALESCE(spagg.sp_ex_str, '0') AS sp_ex_str,
-           CAST(COALESCE(tsfin.m, 0) AS BIGINT) AS ts_m,
-           CAST(tsfin.fn AS VARCHAR) AS ts_num_str,
-           CAST(tsfin.fd AS VARCHAR) AS ts_den_str
-    FROM sg JOIN tt ON tt.user_id = sg.user_id
-    JOIN mkf ON mkf.user_id = sg.user_id
-    LEFT JOIN fnl ON fnl.user_id = sg.user_id
-    JOIN cf ON cf.user_id = sg.user_id
-    JOIN cm ON cm.cohort_p = cf.cohort_p
-           AND cm.offset_p = epoch_us(ts) // 1000000 // {_COHORT_PERIOD_S}
-                             - cf.cohort_p
-    LEFT JOIN mmfull mmf ON mmf.pid = sg.event_id
-    JOIN rz ON rz.event_id = sg.event_id
-    LEFT JOIN isofit iso ON iso.event_id = sg.event_id
-    LEFT JOIN alc al ON al.user_id = sg.user_id
-    JOIN cpt ON cpt.user_id = sg.user_id
-    LEFT JOIN cpb ON cpb.user_id = sg.user_id
-    LEFT JOIN spagg ON spagg.user_id = sg.user_id
-    LEFT JOIN tsfin ON tsfin.user_id = sg.user_id
-    WINDOW ws AS (PARTITION BY sg.user_id, seg_id)
-    ORDER BY sg.user_id, event_id
-    """,
-)
-def sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min gap) per user PLUS spatial
-    trajectory segmentation (operators/relational.trajectory_segments
-    — the stay-region / movement-leg split): a new segment starts when
-    the step to the previous point exceeds {_TRAJ_EPS} decimicro
-    (exact int64 squared compare; the 8e6 threshold sits near the
-    median consecutive-step distance, so segments genuinely mix), each
-    point carrying its segment id, size, duration and the stay flag
-    (duration >= {_TRAJ_MIN_STAY_S}s, BIGINT per the gate dtype rule).
-    Same (user, ts, event_id) window partitioning as the session id —
-    one shuffle serves both.
-
-    PLUS the per-user OLS trend (operators/relational.group_trend,
-    relocated from the benched stream_window_stats row): x = the
-    event's epoch second, y = event_id % 997 (both exact ints), every
-    moment decimal(38,0)/HUGEINT with ONE shared division per
-    statistic and the exact denominator carried as digits
-    (trend_den_str).
-
-    PLUS SCD2 validity intervals (operators/relational.scd2_intervals
-    — the temporal-table primitive over the reference's element
-    version chains, osm.rs:26): each user's time-ordered revisions
-    tile into half-open [valid_from_s, valid_to_s) with a 1-based
-    scd_version and exactly one open current row per key; rides the
-    SAME (user, ts, event_id) window partitioning, so the fold adds
-    no shuffle.
-
-    PLUS the window funnel (operators/relational.funnel_levels —
-    ClickHouse windowFunnel): per user the deepest in-order prefix of
-    view -> click -> purchase within {_FUNNEL_H_S} s of the chain's
-    FIRST step, as a single-agg exact-integer max-start DP fold; the
-    oracle proves it with a DIFFERENT algorithm (brute exists-joins
-    over the same (ts, event_id) total order), and level-3 users also
-    pin the latest complete chain's start micros.
-
-    PLUS the Mann-Kendall trend test (operators/relational.
-    mann_kendall): exact-integer S over the (ts, event_id) time order
-    folded as one nested HOF aggregate over the collected value array
-    (per-user O(n²) INSIDE the executor, no pair shuffle), exact
-    tie-corrected Var·18 carried as digits, Z one sqrt+divide tree —
-    the oracle proves S with the brute pair join, a genuinely
-    different algorithm.
-
-    PLUS cohort retention (operators/relational.cohort_retention, the
-    trio's third leg): hourly periods (see _COHORT_PERIOD_S for why
-    coarser periods are degenerate on this fixture), each event row
-    carrying its user's cohort_p, its own offset_p, and the matrix
-    cell ret_n — distinct users of that cohort active at that offset —
-    so the complete retention matrix is pinned through the join.
-
-    PLUS exact median/MAD robust outliers (operators/relational.
-    robust_outliers, the Hampel screen): per-user doubled medians via
-    two midrank window picks over a deliberately heavy-tailed exact
-    amplitude (2^(id mod 19) — the regime where mean/stddev z-scores
-    drown), cross-multiplied flag test 2*d2 > k*mad22, all BIGINTs.
-
-    PLUS Viterbi HMM map matching (operators/mapmatch.py, Newson &
-    Krumm '09 reduced to exact ints): each user's first 8 events are
-    JOINTLY matched onto the closure fixture's way segments — emission
-    = floor(snap d²), transition = switch-penalty + squared midpoint
-    gap, all int64, tie rule = lexicographically smallest rank path —
-    per matched event mm_way/mm_pos/mm_rank/mm_e plus the trajectory's
-    mm_cost/mm_switches; the oracle ENUMERATES all 3^8 candidate paths
-    in a recursive CTE and takes ORDER BY (cost, path), proving the DP
-    optimal and the tie rule exact on every user."""
-    from ..datagen.synth import gen_groups, gen_images
-    from ..operators.clip import way_segments
-    from ..operators.mapmatch import hmm_map_match
-    from ..operators.relational import (
-        ALLEN_COLS,
-        allen_census,
-        cohort_retention,
-        cusum_changepoint,
-        speed_screen,
-        theil_sen,
-        funnel_levels,
-        group_trend,
-        isotonic_fit,
-        mann_kendall,
-        robust_outliers,
-        scd2_intervals,
-        trajectory_segments,
-    )
-    from pyspark.sql import Window as W
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    new_s = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    seg = trajectory_segments(
-        ev,
-        key="user_id",
-        ts="ts",
-        step_eps=_TRAJ_EPS,
-        min_stay_s=_TRAJ_MIN_STAY_S,
-        order_cols=["ts", "event_id"],
-    )
-    tr = group_trend(
-        ev.select(
-            "user_id",
-            F.col("ts").cast("long").alias("x"),
-            (F.col("event_id") % 997).alias("y"),
-        ),
-        ["user_id"],
-        "x",
-        "y",
-    )
-    fl = funnel_levels(
-        _t(spark, sf_dir, "events"), list(_FUNNEL_STEPS), _FUNNEL_H_S
-    ).select(F.col("user").alias("user_id"), "funnel_level", "funnel_start_us")
-    mk = mann_kendall(
-        _t(spark, sf_dir, "events").select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_id",
-            (F.col("event_id") % 997).alias("v"),
-        )
-    ).select("user_id", "mk_s", "mk_var18_str", "mk_z")
-    images = gen_images(300, seed=42)
-    mm_base = spark.createDataFrame(images[["image_id", "phash"]]).select(
-        "image_id",
-        C.unpack_lat(F.col("phash")).alias("lat"),
-        C.unpack_lon(F.col("phash")).alias("lon"),
-    )
-    mm_segs = way_segments(spark.createDataFrame(gen_groups(images)), mm_base)
-    mm = hmm_map_match(ev, mm_segs).withColumnRenamed("pid", "event_id")
-    raw_ev = _t(spark, sf_dir, "events")
-    ret = cohort_retention(raw_ev, _COHORT_PERIOD_S)
-    # exact median/MAD robust outliers (Hampel screen) per user over a
-    # deliberately heavy-tailed exact amplitude (2^(id mod 19)): the
-    # regime where mean/stddev z-scores drown and MAD is the tool
-    # Allen interval-relations census per user: the (session, type)
-    # activity intervals classified by temporal relation — uses the
-    # SAME 30-min session assignment as the main pipeline
-    sess_ev = raw_ev.select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "event_id",
-        "event_type",
-    )
-    w_al = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_al = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(
-        w_al
-    )
-    sid = F.sum(
-        F.when(gap_al.isNull() | (gap_al > 1800), 1).otherwise(0)
-    ).over(w_al.rowsBetween(W.unboundedPreceding, 0))
-    aliv = (
-        sess_ev.withColumn("_sid", sid)
-        .groupBy("user_id", "_sid", "event_type")
-        .agg(
-            F.min(F.unix_micros("ts")).alias("s"),
-            F.max(F.unix_micros("ts")).alias("e"),
-        )
-    )
-    alc = allen_census(aliv, ["user_id", "_sid"], "event_type")
-    al_user = alc.groupBy("user_id").agg(
-        *[F.sum(c).cast("long").alias(c) for c in ALLEN_COLS]
-    )
-    iso = isotonic_fit(
-        raw_ev.select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_id",
-            (F.col("event_id") % 997).alias("v"),
-        ),
-        max_n=_ISO_MAX_N,
-    ).select("event_id", "iso_n", "iso_fitq")
-    ro = robust_outliers(
-        raw_ev.select(
-            "user_id",
-            "event_id",
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(event_id % 19 AS INT))"
-            ).alias("amp"),
-        ),
-        "user_id",
-        "amp",
-        k=3,
-        tiebreak="event_id",
-    ).select("event_id", "rz_med2", "rz_d2", "rz_mad22", "rz_out")
-    coh = (
-        raw_ev.select(
-            "user_id",
-            F.expr(f"CAST(CAST(ts AS TIMESTAMP) AS LONG) DIV {_COHORT_PERIOD_S}").alias("_p"),
-        )
-        .groupBy("user_id")
-        .agg(F.min("_p").cast("long").alias("cohort_p"))
-    )
-    # CUSUM changepoint screen per user over the same (ts, event_id)
-    # order and the same v = event_id % 997 the trend/isotonic folds
-    # use (relational.cusum_changepoint — n-scaled exact D_k)
-    cp = cusum_changepoint(
-        raw_ev.select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_id",
-            (F.col("event_id") % 997).alias("v"),
-        ),
-        ["user_id"],
-        ["ts", "event_id"],
-        "v",
-    ).select("user_id", "cp_n", "cp_stat", "cp_pos", "cp_sign")
-    # speed-feasibility screen over the same derived trajectory
-    # (relational.speed_screen — GPS-cleaning teleport detector)
-    sp = speed_screen(
-        ev, "user_id", "ts", vmax=_SPEED_VMAX, order_cols=["ts", "event_id"]
-    )
-    # Theil-Sen robust slope over the SAME capped (x, y) series the
-    # isotonic fold uses (relational.theil_sen — exact rational median
-    # of pairwise slopes, canonical reduced digits)
-    tsl = theil_sen(
-        raw_ev.select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_id",
-            F.expr("CAST(CAST(ts AS TIMESTAMP) AS LONG)").alias("x"),
-            (F.col("event_id") % 997).alias("y"),
-        ),
-        "user_id",
-        "x",
-        "y",
-        ["ts", "event_id"],
-        max_n=_ISO_MAX_N,
-    )
-    return (
-        scd2_intervals(
-            seg.withColumn(
-                "session_id",
-                F.sum(new_s).over(w.rowsBetween(W.unboundedPreceding, 0)),
-            ),
-            key_cols=["user_id"],
-            ts="ts",
-            order_cols=["ts", "event_id"],
-        )
-        .join(tr, "user_id")
-        .join(mk, "user_id")
-        .join(fl, "user_id", "left")
-        .join(coh, "user_id")
-        .withColumn(
-            "offset_p",
-            F.expr(f"CAST(CAST(ts AS TIMESTAMP) AS LONG) DIV {_COHORT_PERIOD_S}") - F.col("cohort_p"),
-        )
-        .join(ret.withColumnRenamed("n_users", "ret_n"), ["cohort_p", "offset_p"])
-        .select(
-            "user_id",
-            "event_id",
-            "session_id",
-            "seg_id",
-            F.col("seg_n").cast("long").alias("seg_n"),
-            "seg_duration_s",
-            "seg_stay",
-            "scd_version",
-            "valid_from_s",
-            "valid_to_s",
-            "is_current",
-            "n_obs",
-            "slope",
-            "intercept",
-            "trend_den_str",
-            "mk_s",
-            "mk_var18_str",
-            "mk_z",
-            F.coalesce(F.col("funnel_level"), F.lit(0))
-            .cast("long")
-            .alias("funnel_level"),
-            "funnel_start_us",
-            "cohort_p",
-            F.col("offset_p").cast("long").alias("offset_p"),
-            "ret_n",
-        )
-        .join(mm, "event_id", "left")
-        .join(ro, "event_id")
-        .join(iso, "event_id", "left")
-        .join(al_user, "user_id", "left")
-        .join(cp, "user_id")
-        .join(sp, "user_id")
-        .join(tsl, "user_id")
-        .orderBy("user_id", "event_id")
-    )
-
-
-def _rollup_oracle() -> str:
-    from ..operators.sketch import sql_hll_est_expr, sql_hll_registers
-
-    regs0 = sql_hll_registers(
-        "lineitem", "l_orderkey", p=8, group_exprs=["l_returnflag", "l_linestatus"]
-    )
-    est = sql_hll_est_expr(p=8)
-    return f"""
-    WITH regs0 AS (
-      {regs0}
-    ),
-    regs AS (
-      SELECT l_returnflag AS rf, l_linestatus AS ls, bucket, reg FROM regs0
-      UNION ALL
-      SELECT l_returnflag, 'ALL', bucket, MAX(reg)
-      FROM regs0 GROUP BY l_returnflag, bucket
-      UNION ALL
-      SELECT 'ALL', 'ALL', bucket, MAX(reg) FROM regs0 GROUP BY bucket
-    ),
-    est AS (
-      SELECT rf, ls, {est} AS orders_hll_est FROM regs GROUP BY rf, ls
-    )
-    SELECT r.rf, r.ls, r.revenue, r.n, r.lvl, e.orders_hll_est FROM (
-      SELECT coalesce(l_returnflag, 'ALL') AS rf,
-             coalesce(l_linestatus, 'ALL') AS ls,
-             sum(l_extendedprice * (1 - l_discount)) AS revenue,
-             count(*) AS n,
-             grouping(l_returnflag) + grouping(l_linestatus) AS lvl
-      FROM lineitem
-      GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    ) r
-    JOIN est e USING (rf, ls)
-    ORDER BY r.lvl, r.rf, r.ls
-    """
-
-
-@register("rollup_revenue", _rollup_oracle())
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouping-set rollup with grouping() level markers, annotated
-    with the HyperLogLog distinct-orderkey estimate per rollup group
-    (operators/sketch.py): registers build ONCE at the finest level
-    and every coarser level re-aggregates them with MAX — the
-    sketch-union property, computed the way a 100 TB cube would
-    (2^p-bounded state per group, never re-reading rows per level).
-    md5-shared hashing + exact-integer denominators make the estimate
-    bit-identical in the DuckDB oracle."""
-    from ..operators.sketch import hll_estimate, hll_rank_cols
-
-    li = _t(spark, sf_dir, "lineitem")
-    roll = (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-            (F.grouping("l_returnflag") + F.grouping("l_linestatus")).alias("lvl"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("rf"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
-            "revenue",
-            "n",
-            "lvl",
-        )
-    )
-    # ONE scan builds every rollup level's registers via GROUPING SETS
-    # ((rf,ls,bucket),(rf,bucket),(bucket)) — max(rank) per set is
-    # exactly max-of-maxes of the finest registers (the sketch-union
-    # property), so the result is bit-identical to building lvl0 and
-    # re-aggregating it twice, but the lineitem scan + per-row md5 run
-    # ONCE instead of three times (r6 profile: three ~20 CPU-s map
-    # stages with ~5 s GC each at sf1.0 collapsed to one; guide §2.4 —
-    # two operations keyed the same way share one pass)
-    bucket, rank = hll_rank_cols(F.col("l_orderkey"), p=8)
-    # spread the 6-row-group scan (narrow 3-col projection) before the
-    # per-row md5: the register build otherwise runs on 6 cores of 32
-    # (r6 profile: 12 CPU-s / 2.2 s-wall warm stage at sf1.0)
-    rows = _rebalance(
-        spark,
-        li.where(F.col("l_orderkey").isNotNull()).select(
-            "l_returnflag", "l_linestatus", "l_orderkey"
-        ),
-        key="l_orderkey",
-        eff=_rg_count(sf_dir, "lineitem"),
-    ).select(
-        "l_returnflag",
-        "l_linestatus",
-        bucket.alias("bucket"),
-        rank.alias("rank"),
-    )
-    regs = (
-        rows.groupingSets(
-            [
-                ["l_returnflag", "l_linestatus", "bucket"],
-                ["l_returnflag", "bucket"],
-                ["bucket"],
-            ],
-            "l_returnflag",
-            "l_linestatus",
-            "bucket",
-        )
-        .agg(
-            F.max("rank").alias("reg"),
-            F.grouping("l_returnflag").alias("_g_rf"),
-            F.grouping("l_linestatus").alias("_g_ls"),
-        )
-        .select(
-            F.when(F.col("_g_rf") == 1, F.lit("ALL"))
-            .otherwise(F.col("l_returnflag"))
-            .alias("rf"),
-            F.when(F.col("_g_ls") == 1, F.lit("ALL"))
-            .otherwise(F.col("l_linestatus"))
-            .alias("ls"),
-            "bucket",
-            "reg",
-        )
-    )
-    est = hll_estimate(
-        regs,
-        p=8,
-        group_cols=["rf", "ls"],
-        out_col="orders_hll_est",
-    )
-    # est is <= |groups| rows — broadcast so the final join adds no
-    # exchange on either tiny side
-    return roll.join(F.broadcast(est), ["rf", "ls"]).orderBy("lvl", "rf", "ls")
-
-
-#: centroid vec_ids for the oracle-checked IVF entry: data vectors
-#: selected by literal id (so DuckDB reproduces the quantizer exactly);
-#: the k-means training path is exercised by tests/test_ivf.py.
-_IVF_CENT_IDS = [7 + 31 * j for j in range(16)]
-
-#: per-sf_dir memo of the fetched centroid matrix (a fixed parameter)
-_IVF_CENT_CACHE: dict = {}
-
-
-def _ivf_oracle() -> str:
-    from ..operators.similarity import sql_lloyd_refined_cents, sql_quantized
-
-    ids = ", ".join(str(i) for i in _IVF_CENT_IDS)
-    # exact integer L2 via dot products (all values < 2^53: exact doubles)
-    dist = (
-        "(list_dot_product(iv.v, iv.v) - 2 * list_dot_product(iv.v, cent.cv)"
-        " + list_dot_product(cent.cv, cent.cv))"
-    )
-    return f"""
-    WITH iv AS (SELECT vec_id, {sql_quantized('embedding')} AS v FROM embeddings),
-    cent0 AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-      FROM iv WHERE vec_id IN ({ids})
-    ),
-    cent AS ({sql_lloyd_refined_cents('iv', 'cent0', 64)}
-    ),
-    d AS (
-      SELECT iv.vec_id, cent.cid,
-             row_number() OVER (PARTITION BY iv.vec_id
-                                ORDER BY {dist}, cent.cid) AS rn
-      FROM iv, cent
-    ),
-    lists AS (SELECT vec_id, cid FROM d WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, cid FROM d WHERE vec_id < 10 AND rn <= 4),
-    scored AS (
-      SELECT p.query_id, l.vec_id,
-             CAST(list_dot_product(q.v, i.v) AS BIGINT) AS dot_q
-      FROM probes p
-      JOIN lists l ON l.cid = p.cid
-      JOIN iv q ON q.vec_id = p.query_id
-      JOIN iv i ON i.vec_id = l.vec_id
-    ),
-    r AS (
-      SELECT query_id, vec_id, dot_q,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY dot_q DESC, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, dot_q, rank FROM r WHERE rank <= 5
-    ORDER BY query_id, rank
-    """
-
-
-@register("ivf_topk", _ivf_oracle())
-def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a DISTRIBUTED-trained coarse quantizer: seed
-    centroids are data vectors (literal ids, so both engines start from
-    the same quantizer), then ONE full-table Lloyd iteration refines
-    them — assignment as an Arrow stage of exact integer L2, update as
-    one K*D-bounded integer-sum agg, means as exact floor division
-    (similarity.lloyd_refine_centroids; the oracle unrolls the same
-    iteration in SQL and lands on identical integer centroids). The
-    query then runs the nprobe list scan + exact rerank against the
-    refined quantizer. Driver-side sample training (train_centroids)
-    remains the cold-start path, covered by tests/test_ivf.py."""
-    import numpy as np
-
-    from ..operators.similarity import _quantize, ivf_topk, lloyd_refine_centroids
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # the refined centroid matrix is a bounded K x D query PARAMETER;
-    # memoize per sf_dir so repeated runs don't pay the training job again
-    refined = _IVF_CENT_CACHE.get(sf_dir)
-    if refined is None:
-        cent_pdf = (
-            emb.filter(F.col("vec_id").isin(_IVF_CENT_IDS))
-            .orderBy("vec_id")
-            .select("embedding")
-            .toPandas()
-        )
-        seeds = _quantize(
-            np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in cent_pdf["embedding"]]
-            )
-        )
-        refined = lloyd_refine_centroids(emb, seeds, iters=1)
-        _IVF_CENT_CACHE[sf_dir] = refined
-    q = emb.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "query_id")
-    # item-side list assignment is an Arrow stage over every vector:
-    # spread the one-row-group scan first (r6 profile: 5.2 s
-    # single-task at sf1.0, ~0.5 s spread over 32)
-    items = _rebalance(spark, emb, key="vec_id", eff=_rg_count(sf_dir, "embeddings"))
-    return ivf_topk(
-        q, items, k=5, dim=64, nprobe=4, centroids_q=refined, rank_by="dot_q"
-    ).select("query_id", "vec_id", "dot_q", "rank").orderBy("query_id", "rank")
-
-
-#: fixed-point power-iteration rounds for the PCA fold (gate cost is
-#: ~5 materialized CTEs per round in the oracle; the iterate is exact
-#: at ANY count — more rounds only tighten the eigen direction)
-_PCA_ITERS = 12
-
-
-def _near_dup_oracle() -> str:
-    """SQL twin of embedding_near_dup: same planted fixture (x2 scaling
-    is exact in any float width), bit-identical LSH candidate sets via
-    the integer-plane buckets, exact cosine >= threshold filter. PLUS
-    the fixed-point PCA twin over the FULL embeddings table (pca CTE:
-    relational Gram + unrolled integer power iterations, every CTE
-    materialized)."""
-    from ..operators.similarity import (
-        sql_lsh_buckets,
-        sql_pca_ctes,
-        sql_quantized,
-    )
-
-    bkts = sql_lsh_buckets(dim=64, n_tables=12, n_bits=8, seed=13, vec="v")
-    per_table = "\n      UNION ALL\n      ".join(
-        f"SELECT vec_id, {t} AS tbl, {e} AS bucket FROM iv"
-        for t, e in enumerate(bkts)
-    )
-    return f"""
-    WITH u AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200
-      UNION ALL
-      SELECT vec_id + 1000000,
-             list_transform(embedding, x -> CAST(x AS DOUBLE) * 2.0)
-      FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 200
-    ),
-    iv AS (SELECT vec_id, {sql_quantized('embedding')} AS v,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS fv
-           FROM u),
-    bt AS (
-      {per_table}
-    ),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM bt a JOIN bt b USING (tbl, bucket)
-      WHERE a.vec_id < b.vec_id
-    ),
-    chk AS (
-      SELECT c.id_a, c.id_b,
-             list_dot_product(x.fv, y.fv)
-               / (sqrt(list_dot_product(x.fv, x.fv))
-                  * sqrt(list_dot_product(y.fv, y.fv))) AS cosine
-      FROM cand c
-      JOIN iv x ON x.vec_id = c.id_a
-      JOIN iv y ON y.vec_id = c.id_b
-    ),{sql_pca_ctes(dim=64, iters=_PCA_ITERS)},{_sql_kcenter_ctes(_KC_K)}
-    SELECT id_a, id_b,
-           pca.pca_eig, pca.pca_v_sig, pca.pca_v0, pca.pca_v1, pca.pca_v2,
-           pca.pca_gtrace, kc.*
-    FROM chk CROSS JOIN pca CROSS JOIN kc WHERE cosine >= 0.99
-    ORDER BY id_a, id_b
-    """
-
-
-#: k-center greedy gate size: seed + 4 picks (each oracle round is an
-#: unrolled min-join + argmax CTE pair)
-_KC_K = 5
-
-
-def _sql_kcenter_ctes(k: int) -> str:
-    """DuckDB twin of similarity.kcenter_greedy: k unrolled rounds —
-    per round one min-d²-to-selected join + the (d² DESC, id) argmax.
-    Final CTE ``kc`` is one row of kc_id0..k-1 + kc_r2_1..k-1."""
-    d2 = (
-        "list_sum(list_transform(range(1, len(k.q) + 1),"
-        " i -> (k.q[i] - s.q[i]) * (k.q[i] - s.q[i])))"
-    )
-    parts = [f"""kcq AS (
-      SELECT vec_id AS id,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      FROM embeddings
-    ),
-    kc_sel0 AS (SELECT id, q FROM kcq ORDER BY id LIMIT 1)"""]
-    for r in range(1, k):
-        parts.append(f"""kc_c{r} AS (
-      SELECT k.id, k.q, MIN({d2}) AS d2
-      FROM kcq k CROSS JOIN kc_sel{r - 1} s
-      GROUP BY k.id, k.q
-      ORDER BY d2 DESC, k.id LIMIT 1
-    ),
-    kc_sel{r} AS (
-      SELECT id, q FROM kc_sel{r - 1}
-      UNION ALL SELECT id, q FROM kc_c{r}
-    )""")
-    cols = ["(SELECT id FROM kc_sel0 LIMIT 1) AS kc_id0"]
-    for r in range(1, k):
-        cols.append(f"(SELECT id FROM kc_c{r}) AS kc_id{r}")
-        cols.append(f"(SELECT CAST(d2 AS BIGINT) FROM kc_c{r}) AS kc_r2_{r}")
-    parts.append("kc AS (SELECT " + ",\n           ".join(cols) + ")")
-    return ",\n    ".join(parts)
-
-
-@register("embedding_near_dup", _near_dup_oracle())
-def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup tier 5): LSH
-    candidates + exact cosine >= 0.99; duplicates planted by a
-    deterministic self-union with scaled copies (same direction =>
-    cosine 1). Candidate sets are bit-identical across engines (integer
-    planes); the cosine threshold only separates ~1.0 from <=0.7, so
-    float rounding cannot flip membership.
-
-    PLUS the top principal component of the FULL embeddings table
-    (operators/similarity.pca_power_top): the data reduces to ONE
-    64×64 exact-integer Gram sufficient statistic (posexplode of the
-    per-row outer product + one hash agg — dim²·partitions shuffle
-    rows whatever the row count), then fixed-point power iteration on
-    the collected tiny matrix — integer requantize sign·(|w|·2^20 //
-    max|w|) each round, so the iterate, its md5 signature, the three
-    leading components, the Gram trace and the Rayleigh eigenvalue
-    (ONE division of exact ints) reproduce bit-for-bit in the oracle's
-    unrolled materialized-CTE twin."""
-    from ..operators.similarity import (
-        embedding_near_dup_pairs,
-        kcenter_greedy,
-        pca_power_top,
-    )
-
-    emb_all = _t(spark, sf_dir, "embeddings")
-    # spread the one-row-group scan before the heavy full-table passes:
-    # the PCA Gram posexplodes dim^2 rows per vector (82M rows at
-    # sf0.1) and the k-center loop re-scans per round — both otherwise
-    # run single-task (r6 profile: 10.2 s single-task Gram collect)
-    emb_all = _rebalance(
-        spark, emb_all, key="vec_id", eff=_rg_count(sf_dir, "embeddings")
-    )
-    emb = emb_all.filter(F.col("vec_id") < 200)
-    planted = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-    )
-    u = emb.select("vec_id", "embedding").unionByName(planted)
-    import hashlib
-
-    v, eig, gtrace, _ = pca_power_top(emb_all, dim=64, iters=_PCA_ITERS)
-    sig = hashlib.md5(
-        ",".join(f"{i}:{x}" for i, x in enumerate(v)).encode()
-    ).hexdigest()
-    pca_row = spark.createDataFrame(
-        [(eig, sig, str(v[0]), str(v[1]), str(v[2]), str(gtrace))],
-        "pca_eig double, pca_v_sig string, pca_v0 string, pca_v1 string, "
-        "pca_v2 string, pca_gtrace string",
-    )
-    # k-center greedy coreset (diversity curation) over the FULL table:
-    # seed + radii pinned as global columns (the pca_row pattern)
-    sel = kcenter_greedy(emb_all, k=_KC_K)
-    kc_vals = [sel[0][0]] + [x for i, r2 in sel[1:] for x in (i, r2)]
-    kc_schema = "kc_id0 long, " + ", ".join(
-        f"kc_id{r} long, kc_r2_{r} long" for r in range(1, _KC_K)
-    )
-    kc_row = spark.createDataFrame([tuple(kc_vals)], kc_schema)
-    return (
-        embedding_near_dup_pairs(u, 0.99, dim=64)
-        .select("id_a", "id_b")
-        .crossJoin(F.broadcast(pca_row))
-        .crossJoin(F.broadcast(kc_row))
-        .orderBy("id_a", "id_b")
-    )
-
-
-@register(
-    "session_window_stats",
-    f"""
-    WITH g AS (
-      SELECT user_id, ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800 THEN 1
-                  ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    s AS (
-      SELECT user_id, ts, value,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM g
-    ),
-    sess AS (
-      SELECT user_id, min(ts) AS s_start,
-             count(*) AS n, sum(value) AS sum_value
-      FROM s GROUP BY user_id, sid
-    ),
-    ij AS (
-      SELECT a.user_id, a.event_id AS cid, b.event_id AS bid
-      FROM events a JOIN events b ON a.user_id = b.user_id
-       AND a.event_type = 'click' AND b.event_type = 'purchase'
-       AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 7200 SECOND
-    ),
-    iju AS (SELECT user_id, count(*) AS ij_n FROM ij GROUP BY user_id),
-    ijs AS (SELECT md5(COALESCE(string_agg(
-              CAST(cid AS VARCHAR) || ':' || CAST(bid AS VARCHAR),
-              ',' ORDER BY cid, bid), '')) AS ij_sig FROM ij),
-    kaq AS (
-      -- k-anonymity QI frame (relational.k_anonymity_census): the
-      -- release-shaped (event_type, hour, coarse-tile) tuple
-      SELECT event_type,
-             (epoch_us(ts) // 1000000 // 3600) % 24 AS hr,
-             ((({_EV_LAT}) + {C.LAT_OFFSET}) // {1 << _KA_TILE_RES})
-               * {C.Y_STRIDE}
-               + ((({_EV_LON}) + {C.LON_OFFSET}) // {1 << _KA_TILE_RES})
-               AS ct,
-             user_id
-      FROM events
-    ),
-    kac AS (SELECT event_type, hr, ct, count(*) AS n,
-                   count(DISTINCT user_id) AS l
-            FROM kaq GROUP BY 1, 2, 3),
-    stb AS (
-      SELECT epoch_us(ts) // 1000000 // 3600 AS hb, count(*) AS n
-      FROM events GROUP BY 1
-    ),
-    stspan AS (SELECT min(hb) AS h0, max(hb) AS h1 FROM stb),
-    stden AS (
-      SELECT g.hb, COALESCE(b.n, 0) AS n
-      FROM (SELECT gs.hb FROM stspan sp,
-                 UNNEST(generate_series(sp.h0, sp.h1)) AS gs(hb)) g
-      LEFT JOIN stb b ON b.hb = g.hb
-    ),
-    sttr AS (
-      -- centered 2x24 moving average, SCALED integer (den 48); NULL
-      -- at the 12-bin edges (relational.seasonal_decompose)
-      SELECT hb, n,
-             CASE WHEN count(*) OVER w = 25 THEN
-               SUM(2 * n) OVER w - first_value(n) OVER w
-               - last_value(n) OVER w
-             END AS tsc
-      FROM stden
-      WINDOW w AS (ORDER BY hb ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)
-    ),
-    stse AS (
-      SELECT hb % 24 AS phase, count(*) AS m, SUM(48 * n - tsc) AS s_num
-      FROM sttr WHERE tsc IS NOT NULL GROUP BY 1
-    ),
-    stg1 AS (
-      SELECT CAST(count(*) AS BIGINT) AS st_bins,
-             CAST(COALESCE(SUM(tsc), 0) AS BIGINT) AS st_trend_sum
-      FROM sttr
-    ),
-    stg2 AS (
-      SELECT string_agg(CAST(phase AS VARCHAR) || ':'
-                        || CAST(s_num AS VARCHAR) || '/'
-                        || CAST(48 * m AS VARCHAR), ';' ORDER BY phase)
-               AS st_seas_sig
-      FROM stse
-    ),
-    eqr AS (
-      SELECT event_id % 9973 AS v,
-             row_number() OVER (ORDER BY event_id % 9973, event_id) AS rn
-      FROM events
-    ),
-    eqn AS (SELECT count(*) AS n FROM events),
-    eqbd AS (
-      SELECT ii.i, r.v AS boundary
-      FROM (VALUES (1), (2), (3), (4), (5), (6), (7), (8)) ii(i), eqn, eqr r
-      WHERE r.rn = (ii.i * eqn.n + 7) // 8
-    ),
-    eqc AS (
-      SELECT b.i, b.boundary,
-             CAST((SELECT count(*) FROM eqr r2 WHERE r2.v <= b.boundary)
-                  AS BIGINT) AS cum
-      FROM eqbd b
-    ),
-    eqg AS (
-      SELECT string_agg(CAST(i AS VARCHAR) || ':' || CAST(boundary AS VARCHAR)
-                        || ':' || CAST(cum AS VARCHAR), ';' ORDER BY i)
-               AS eq_sig
-      FROM eqc
-    ),
-    kag AS (SELECT CAST(count(*) AS BIGINT) AS ka_classes,
-                   CAST(min(n) AS BIGINT) AS ka_min,
-                   CAST(COALESCE(SUM(CASE WHEN n < 5 THEN n END), 0)
-                        AS BIGINT) AS ka_sup,
-                   CAST(SUM(CAST(n AS HUGEINT) * n) AS VARCHAR)
-                     AS ka_sum2_str,
-                   CAST(min(l) AS BIGINT) AS ld_min
-            FROM kac)
-    SELECT se.user_id, se.s_start, se.n, se.sum_value,
-           COALESCE(u.ij_n, 0) AS ij_n, ijs.ij_sig,
-           kag.ka_classes, kag.ka_min, kag.ka_sup, kag.ka_sum2_str,
-           kag.ld_min,
-           stg1.st_bins, stg1.st_trend_sum, stg2.st_seas_sig, eqg.eq_sig
-    FROM sess se LEFT JOIN iju u ON u.user_id = se.user_id
-    CROSS JOIN ijs
-    CROSS JOIN kag
-    CROSS JOIN stg1
-    CROSS JOIN stg2
-    CROSS JOIN eqg
-    ORDER BY se.user_id, se.s_start
-    """,
-)
-def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window aggregation (gap-based), the built-in
-    sibling of operators/relational.sessionize. Spark session windows
-    are half-open [start, last_ts + gap): an event at exactly
-    last_ts + gap starts a NEW session, hence the oracle's >= 1800.
-    PLUS the stream-stream interval join
-    (streaming/incremental.stream_interval_join — same call, batch
-    frames, identical plan minus watermarks; streaming face asserted
-    stream==batch with out-of-order arrivals and a watermark-drop case
-    in test_streaming): the click->purchase-within-2h attribution
-    pairs per user ride each session row (ij_n, BIGINT per the gate
-    dtype rule) and the ENTIRE pair set is pinned by one md5 over the
-    (click, purchase) id pairs in pair order (ij_sig)."""
-    from ..streaming.incremental import stream_interval_join
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    sess = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select("user_id", F.col("w.start").alias("s_start"), "n", "sum_value")
-    )
-    evi = _t(spark, sf_dir, "events")
-    clicks = evi.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("cid")
-    )
-    buys = evi.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("event_id").alias("bid")
-    )
-    ij = stream_interval_join(clicks, buys, after_s=7200)
-    iju = ij.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("ij_n"))
-    pair_s = F.concat_ws(":", F.col("cid").cast("string"), F.col("bid").cast("string"))
-    ijs = ij.agg(
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("cid", "bid", pair_s.alias("s")))
-                    ),
-                    lambda x: x["s"],
-                ),
-            )
-        ).alias("ij_sig")
-    )
-    # k-anonymity / l-diversity census over the release-shaped QI
-    # tuple (event_type, hour-of-day, coarse tile) with user_id as the
-    # sensitive attribute (relational.k_anonymity_census)
-    from ..operators.relational import k_anonymity_census
-
-    kaq = evi.select(
-        "event_type",
-        (F.expr("CAST(CAST(ts AS TIMESTAMP) AS LONG) DIV 3600") % 24)
-        .alias("hr"),
-        (
-            F.shiftright(
-                C.derived_lat(F.col("event_id")) + C.LAT_OFFSET, _KA_TILE_RES
-            )
-            * C.Y_STRIDE
-            + F.shiftright(
-                C.derived_lon(F.col("event_id")) + C.LON_OFFSET, _KA_TILE_RES
-            )
-        ).alias("ct"),
-        "user_id",
-    )
-    ka = k_anonymity_census(kaq, ["event_type", "hr", "ct"], "user_id")
-    # classical seasonal decomposition of the global hourly series
-    # (relational.seasonal_decompose — centered 2x24 MA, exact scaled
-    # integers; the series is bin-domain sized, densified over the
-    # observed hour span)
-    from ..operators.relational import seasonal_decompose
-
-    stb = evi.select(
-        F.expr("CAST(CAST(ts AS TIMESTAMP) AS LONG) DIV 3600").alias("hb")
-    ).groupBy("hb").agg(F.count(F.lit(1)).alias("n"))
-    _sb = stb.agg(F.min("hb").alias("h0"), F.max("hb").alias("h1")).first()
-    dense = (
-        spark.range(int(_sb["h0"]), int(_sb["h1"]) + 1)
-        .select(F.col("id").alias("hb"))
-        .join(stb, "hb", "left")
-        .select("hb", F.coalesce("n", F.lit(0)).cast("long").alias("n"))
-    )
-    sttr, stse = seasonal_decompose(dense, t="hb", v="n", period=24)
-    # exact equi-depth histogram of the derived integer value surface
-    # (sketch.equi_depth_bins — tie-aware cum counts, the cardinality-
-    # estimator profile)
-    from ..operators.sketch import equi_depth_bins
-
-    eqb = equi_depth_bins(
-        evi.select(
-            (F.col("event_id") % 9973).alias("_eqv"), "event_id"
-        ),
-        "_eqv",
-        k=8,
-        tiebreak="event_id",
-    )
-    eqg = eqb.agg(
-        F.concat_ws(
-            ";",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("i"),
-                            F.concat_ws(
-                                ":",
-                                F.col("i").cast("string"),
-                                F.col("boundary").cast("string"),
-                                F.col("cum").cast("string"),
-                            ).alias("s"),
-                        )
-                    )
-                ),
-                lambda x: x["s"],
-            ),
-        ).alias("eq_sig")
-    )
-    stg1 = sttr.agg(
-        F.count(F.lit(1)).cast("long").alias("st_bins"),
-        F.coalesce(F.sum("trend_scaled"), F.lit(0))
-        .cast("long")
-        .alias("st_trend_sum"),
-    )
-    stg2 = stse.agg(
-        F.concat_ws(
-            ";",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("phase"),
-                            F.concat_ws(
-                                ":",
-                                F.col("phase").cast("string"),
-                                F.concat_ws(
-                                    "/",
-                                    F.col("s_num").cast("string"),
-                                    F.col("s_den").cast("string"),
-                                ),
-                            ).alias("s"),
-                        )
-                    )
-                ),
-                lambda x: x["s"],
-            ),
-        ).alias("st_seas_sig")
-    )
-    return (
-        sess.join(iju, "user_id", "left")
-        .withColumn("ij_n", F.coalesce(F.col("ij_n"), F.lit(0).cast("long")))
-        .crossJoin(F.broadcast(ijs))
-        .crossJoin(F.broadcast(ka))
-        .crossJoin(F.broadcast(stg1))
-        .crossJoin(F.broadcast(stg2))
-        .crossJoin(F.broadcast(eqg))
-        .select(
-            "user_id", "s_start", "n", "sum_value", "ij_n", "ij_sig",
-            "ka_classes", "ka_min", "ka_sup", "ka_sum2_str", "ld_min",
-            "st_bins", "st_trend_sum", "st_seas_sig", "eq_sig",
-        )
-        .orderBy("user_id", "s_start")
-    )
-
-
-# ---------------------------------------------------------------------------
-# raster <-> vector (north-rule index primitive #4; operators/raster.py)
-# ---------------------------------------------------------------------------
-
-_RAS_TILE_RES = 23
-_RAS_PX_RES = 19
-_RAS_NPX = 1 << (_RAS_TILE_RES - _RAS_PX_RES)
-_RAS_PXE = 1 << _RAS_PX_RES
-
-
-def _sql_rasterize_density() -> str:
-    npx, pxe = _RAS_NPX, _RAS_PXE
-    return f"""
-    WITH px AS (
-      SELECT (({_EV_LON}) + {C.LON_OFFSET}) // {pxe} AS gx,
-             (({_EV_LAT}) + {C.LAT_OFFSET}) // {pxe} AS gy
-      FROM events
-    ),
-    sp AS (
-      SELECT (gy // {npx}) * {C.Y_STRIDE} + (gx // {npx}) AS tile,
-             (gy % {npx}) * {npx} + (gx % {npx}) AS idx,
-             count(*) AS n
-      FROM px GROUP BY 1, 2
-    ),
-    dense AS (
-      SELECT t.tile, g.i, coalesce(s.n, 0) AS n
-      FROM (SELECT DISTINCT tile FROM sp) t
-      CROSS JOIN range(0, {npx * npx}) g(i)
-      LEFT JOIN sp s ON s.tile = t.tile AND s.idx = g.i
-    ),
-    agg AS (
-      SELECT tile,
-             CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS nnz,
-             CAST(sum(n) AS BIGINT)                        AS total,
-             string_agg(n::VARCHAR, ',' ORDER BY i)        AS raster_sig
-      FROM dense GROUP BY tile
-    )
-    SELECT tile, nnz, total, raster_sig
-    FROM agg
-    ORDER BY tile
-    """
-
-
-@register("rasterize_density", _sql_rasterize_density())
-def rasterize_density_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector->raster: events burned into dense per-tile density
-    rasters (operators/raster.rasterize_points), emitted as a
-    canonical comma-joined signature per tile so the DuckDB twin (a
-    range() densify + ordered string_agg) compares every pixel,
-    including the zeros. (The focal-convolution / Gi* / Moran's I
-    spatial-statistics folds live on the non-benched raster_vectorize
-    row, which builds the identical pixel frame — this benched row
-    keeps measuring the pure rasterize plan.)"""
-    from ..operators.raster import pixels_to_tiles, point_pixel_counts
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    pix = point_pixel_counts(ev, px_res=_RAS_PX_RES)
-    r = pixels_to_tiles(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-    return r.select(
-        "tile",
-        F.size(F.filter("raster", lambda x: x > 0)).cast("long").alias("nnz"),
-        F.aggregate(
-            "raster", F.lit(0).cast("long"), lambda a, x: a + x
-        ).alias("total"),
-        F.array_join("raster", ",").alias("raster_sig"),
-    ).orderBy("tile")
-
-
-_PYR_BASE_RES = 18
-_PYR_LEVELS = 6
-#: quadtree leaf cap for the adaptive-tiling gate column: at sf0.01 the
-#: effective pyramid has max cell counts 394/127/56/24/8/4 from the
-#: coarsest level down, so cap 30 forces splits at the top two levels
-#: and freezes leaves across at least three levels
-_QT_CAP = 30
-
-
-#: IVM fixture split for the tile_pyramid gate: base = events not
-#: divisible by 17; the diff DELETES base events divisible by 13 and
-#: INSERTS the %17 ones — "effective" is what both engines pyramid.
-_PYR_EFF = "(event_id % 17 = 0 OR event_id % 13 <> 0)"
-
-
-def _sql_tile_pyramid() -> str:
-    """Per-level direct GROUP BY over the EFFECTIVE event set (base
-    with the diff applied): grouping the raw points at each coarser res
-    is definitionally equal to rolling up the finer level (ancestor
-    cell of a point == ancestor of its base cell), so the
-    UNION-ALL-of-group-bys twin checks the engine's two-agg rollup
-    exactly — and since it recomputes from scratch, emitting the same
-    count as BOTH n and n_ivm makes the gate assert that the engine's
-    incremental path (delta rollup + merge) equals a full recompute."""
-    lvls = []
-    for k in range(_PYR_LEVELS):
-        r = _PYR_BASE_RES + k
-        e = 1 << r
-        lvls.append(f"""
-      SELECT {r} AS res,
-             ((({_EV_LAT}) + {C.LAT_OFFSET}) // {e}) * {C.Y_STRIDE}
-               + ((({_EV_LON}) + {C.LON_OFFSET}) // {e}) AS cell,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(count(*) AS BIGINT) AS n_ivm
-      FROM events WHERE {_PYR_EFF} GROUP BY 1, 2""")
-    ys = C.Y_STRIDE
-    res_max = _PYR_BASE_RES + _PYR_LEVELS - 1
-    body = "\nUNION ALL\n".join(lvls)
-    return f"""
-    WITH p AS (
-      {body}
-    ),
-    anc AS (
-      SELECT c.res, c.cell, MIN(a.n) AS amin
-      FROM p c JOIN p a
-        ON a.res > c.res
-       AND a.cell = ((c.cell // {ys}) >> (a.res - c.res)) * {ys}
-                    + ((c.cell % {ys}) >> (a.res - c.res))
-      GROUP BY c.res, c.cell
-    )
-    SELECT p.res, p.cell, p.n, p.n_ivm,
-           CAST(CASE WHEN (p.res = {res_max} OR anc.amin > {_QT_CAP})
-                      AND (p.n <= {_QT_CAP} OR p.res = {_PYR_BASE_RES})
-                THEN 1 ELSE 0 END AS BIGINT) AS qt_leaf
-    FROM p LEFT JOIN anc ON anc.res = p.res AND anc.cell = p.cell
-    ORDER BY p.res, p.cell
-    """
-
-
-@register("tile_pyramid", _sql_tile_pyramid())
-def tile_pyramid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile-server zoom pyramid (operators/raster.tile_pyramid): event
-    densities at six resolutions, coarser levels rolled up from the
-    base cells (two aggs total), never re-scanning the fact table.
-    PLUS incremental view maintenance (raster.merge_pyramids): ``n``
-    is the direct pyramid of the effective event set, ``n_ivm`` the
-    base pyramid plus a SIGNED delta rollup (deletes -1 / inserts +1)
-    merged at delta-proportional cost — the full-outer join surfaces
-    any IVM divergence (phantom or missing cells) as a row mismatch
-    against the recompute-from-scratch oracle. PLUS adaptive quadtree
-    tiling (raster.quadtree_leaves — the explicit mega-cell split):
-    qt_leaf marks the unique cap-bounded leaf tiling derived
-    declaratively from the pyramid itself (one ancestor explode + one
-    join + one min-agg, no iteration), vs the oracle's non-equi
-    ancestor self-join twin."""
-    from ..operators.raster import merge_pyramids, pyramid_rollup, quadtree_leaves
-
-    # ONE events pass builds ALL THREE base-level counter sets
-    # (effective / base / signed delta): per base cell, n_eff counts
-    # the effective rows, n_base the pre-diff rows, wsum the signed
-    # delta (+1 insert / -1 delete) and n_dr the delta ROW count (so a
-    # cancelled-out cell — wsum 0 with rows present — stays in the
-    # delta exactly as tile_pyramid(weight=...) keeps it). Filtered
-    # counts per cell are definitionally the per-cell counts of the
-    # filtered rows, so each projected base level is bit-identical to
-    # the separate tile_pyramid() base agg it replaces — but the fact
-    # table is scanned and aggregated ONCE instead of three times (r6
-    # profile: three concurrent 1.2 s scan stages at sf1.0; guide
-    # §2.4). The IVM semantics are untouched: the delta still rolls up
-    # separately and merges at delta-proportional cost.
-    lat = C.derived_lat(F.col("event_id"))
-    lon = C.derived_lon(F.col("event_id"))
-    cell = (
-        F.shiftright(lat + C.LAT_OFFSET, _PYR_BASE_RES) * C.Y_STRIDE
-        + F.shiftright(lon + C.LON_OFFSET, _PYR_BASE_RES)
-    )
-    is_ins = F.col("event_id") % 17 == 0
-    is_base = ~is_ins
-    is_del = is_base & (F.col("event_id") % 13 == 0)
-    counters = (
-        _t(spark, sf_dir, "events")
-        .select(
-            cell.alias("cell"),
-            F.when(is_ins | ~is_del, 1).otherwise(0).alias("_eff"),
-            F.when(is_base, 1).otherwise(0).alias("_base"),
-            F.when(is_ins, 1).when(is_del, -1).otherwise(0).alias("_w"),
-            F.when(is_ins | is_del, 1).otherwise(0).alias("_dr"),
-        )
-        .groupBy("cell")
-        .agg(
-            F.sum("_eff").cast("long").alias("n_eff"),
-            F.sum("_base").cast("long").alias("n_base"),
-            F.sum("_w").cast("long").alias("wsum"),
-            F.sum("_dr").cast("long").alias("n_dr"),
-        )
-    )
-    eff_base = counters.filter(F.col("n_eff") > 0).select(
-        "cell", F.col("n_eff").alias("n")
-    )
-    base_base = counters.filter(F.col("n_base") > 0).select(
-        "cell", F.col("n_base").alias("n")
-    )
-    diff_base = counters.filter(F.col("n_dr") > 0).select(
-        "cell", F.col("wsum").alias("n")
-    )
-    direct = pyramid_rollup(eff_base, base_res=_PYR_BASE_RES, levels=_PYR_LEVELS)
-    # check_levels=False: both sides are built RIGHT HERE with the same
-    # base_res/levels, and the guard's distinct-res probes would re-run
-    # the full upstream pyramid aggs as two extra driver actions
-    ivm = merge_pyramids(
-        pyramid_rollup(base_base, base_res=_PYR_BASE_RES, levels=_PYR_LEVELS),
-        pyramid_rollup(diff_base, base_res=_PYR_BASE_RES, levels=_PYR_LEVELS),
-        check_levels=False,
-    )
-    # check_levels=False: `direct` is built right here with the same
-    # base_res/levels, and the probe would re-run the pyramid agg as an
-    # extra driver action (the merge_pyramids opt-out precedent)
-    qt = quadtree_leaves(
-        direct,
-        cap=_QT_CAP,
-        base_res=_PYR_BASE_RES,
-        levels=_PYR_LEVELS,
-        check_levels=False,
-    ).select("res", "cell", "qt_leaf")
-    return (
-        direct.join(
-            ivm.select("res", "cell", F.col("n").alias("n_ivm")),
-            ["res", "cell"],
-            "full_outer",
-        )
-        .join(qt, ["res", "cell"], "left")
-        .select(
-            "res",
-            "cell",
-            F.coalesce("n", F.lit(-1).cast("long")).alias("n"),
-            F.coalesce("n_ivm", F.lit(-1).cast("long")).alias("n_ivm"),
-            # a diverging IVM could produce cells absent from the
-            # direct pyramid (and thus from the leaf set): keep them
-            # visible as -1, never silently 0
-            F.coalesce("qt_leaf", F.lit(-1).cast("long")).alias("qt_leaf"),
-        )
-        .orderBy("res", "cell")
-    )
-
-
-def _sql_raster_vectorize() -> str:
-    """Two legs: (1) pentagon polygon -> pixel-center raster mask ->
-    maximal rectangles, entirely in SQL (grid from range(), the
-    generated ray-cast predicate, then two gaps-and-islands window
-    passes); (2) the events density mask vectorized the same way, with
-    each rectangle annotated by its connected component (blob) — the
-    component label is the min pixel key under 4-adjacency, recomputed
-    by a recursive-CTE reachability closure (the dedup_components
-    oracle pattern; O(blob size²) tuples, affordable at oracle scale).
-
-    NOTE: the final UNION ALL lives in the outer SELECT, not a CTE
-    body — under WITH RECURSIVE DuckDB reinterprets any `A UNION B`
-    CTE body as a recursive CTE (see the convex-hull row's trap)."""
-    mp = fixture_regions()[5]
-    px_res = 18
-    pxe = 1 << px_res
-    half = pxe // 2
-    minx, miny, maxx, maxy = mp.bbox
-    x0 = (minx + C.LON_OFFSET) >> px_res
-    x1 = (maxx + C.LON_OFFSET) >> px_res
-    y0 = (miny + C.LAT_OFFSET) >> px_res
-    y1 = (maxy + C.LAT_OFFSET) >> px_res
-    nx = x1 - x0 + 1
-    ny = y1 - y0 + 1
-    ray = sql_raycast(
-        mp,
-        f"(gx * {pxe} + {half} - {C.LON_OFFSET})",
-        f"(gy * {pxe} + {half} - {C.LAT_OFFSET})",
-    )
-    epxe = _RAS_PXE
-    enpx = _RAS_NPX
-    ys = C.Y_STRIDE
-    return f"""
-    WITH RECURSIVE grid AS (
-      SELECT {x0} + i % {nx} AS gx, {y0} + i // {nx} AS gy
-      FROM range(0, {nx * ny}) t(i)
-    ),
-    inside AS (SELECT gx, gy FROM grid WHERE {ray}),
-    runs AS (
-      SELECT gy, rk, min(gx) AS x0, max(gx) AS x1
-      FROM (SELECT gy, gx,
-                   gx - row_number() OVER (PARTITION BY gy ORDER BY gx) AS rk
-            FROM inside)
-      GROUP BY gy, rk
-    ),
-    rects AS (
-      SELECT x0, x1, ck, min(gy) AS y0, max(gy) AS y1
-      FROM (SELECT gy, x0, x1,
-                   gy - row_number() OVER (PARTITION BY x0, x1 ORDER BY gy) AS ck
-            FROM runs)
-      GROUP BY x0, x1, ck
-    ),
-    epx AS (
-      SELECT DISTINCT (({_EV_LON}) + {C.LON_OFFSET}) // {epxe} AS gx,
-                      (({_EV_LAT}) + {C.LAT_OFFSET}) // {epxe} AS gy
-      FROM events
-    ),
-    eruns AS (
-      SELECT gy, rk, min(gx) AS x0, max(gx) AS x1
-      FROM (SELECT gy, gx,
-                   gx - row_number() OVER (PARTITION BY gy ORDER BY gx) AS rk
-            FROM epx)
-      GROUP BY gy, rk
-    ),
-    erects AS (
-      SELECT x0, x1, ck, min(gy) AS y0, max(gy) AS y1
-      FROM (SELECT gy, x0, x1,
-                   gy - row_number() OVER (PARTITION BY x0, x1 ORDER BY gy) AS ck
-            FROM eruns)
-      GROUP BY x0, x1, ck
-    ),
-    und AS (
-      SELECT a.gy * {ys} + a.gx AS ka, b.gy * {ys} + b.gx AS kb
-      FROM epx a JOIN epx b
-        ON b.gx BETWEEN a.gx - 1 AND a.gx + 1
-       AND b.gy BETWEEN a.gy - 1 AND a.gy + 1
-       AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-    ),
-    reach(id, r) AS (
-      SELECT ka, ka FROM und
-      UNION
-      SELECT u.ka, r.r FROM und u JOIN reach r ON r.id = u.kb
-    ),
-    comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-    lab AS (
-      SELECT gx, gy, coalesce(c, gy * {ys} + gx) AS blob
-      FROM epx LEFT JOIN comp ON gy * {ys} + gx = comp.id
-    ),
-    bsz AS (SELECT blob, CAST(count(*) AS BIGINT) AS blob_px FROM lab GROUP BY blob),
-    gpx AS (
-      -- pixel COUNTS (epx is the distinct mask): the spatial-stats
-      -- frame shared by the focal / Gi* / Moran twins
-      SELECT (({_EV_LON}) + {C.LON_OFFSET}) // {epxe} AS gx,
-             (({_EV_LAT}) + {C.LAT_OFFSET}) // {epxe} AS gy,
-             count(*) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    foc AS (
-      SELECT a.gx, a.gy,
-             CAST(SUM(b.n) AS BIGINT) AS focal,
-             CAST(COUNT(*) AS BIGINT) AS n_nbrs
-      FROM gpx a JOIN gpx b
-        ON b.gx BETWEEN a.gx - 1 AND a.gx + 1
-       AND b.gy BETWEEN a.gy - 1 AND a.gy + 1
-      GROUP BY a.gx, a.gy
-    ),
-    gstat AS (
-      SELECT CAST(count(*) AS HUGEINT) AS gn,
-             SUM(CAST(n AS HUGEINT)) AS gs,
-             SUM(CAST(n AS HUGEINT) * CAST(n AS HUGEINT)) AS gq
-      FROM gpx
-    ),
-    gz AS (
-      SELECT gx, gy,
-             (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile,
-             focal, n_nbrs,
-             CASE WHEN gn > 1
-                   AND gn * gq - gs * gs != 0
-                   AND gn * CAST(n_nbrs AS HUGEINT)
-                       - CAST(n_nbrs AS HUGEINT) * CAST(n_nbrs AS HUGEINT) != 0
-               THEN CAST(gn * CAST(focal AS HUGEINT)
-                         - gs * CAST(n_nbrs AS HUGEINT) AS DOUBLE)
-                    / sqrt((CAST(gn * gq - gs * gs AS DOUBLE)
-                            / CAST(gn - 1 AS DOUBLE))
-                           * CAST(gn * CAST(n_nbrs AS HUGEINT)
-                                  - CAST(n_nbrs AS HUGEINT)
-                                    * CAST(n_nbrs AS HUGEINT) AS DOUBLE))
-             END AS gi_z
-      FROM foc CROSS JOIN gstat
-    ),
-    ftile AS (
-      SELECT tile,
-             CAST(SUM(focal) AS BIGINT) AS focal_total,
-             CAST(MAX(focal) AS BIGINT) AS focal_max,
-             CAST(COALESCE(SUM(CASE WHEN n_nbrs = 9 THEN 1 END), 0) AS BIGINT)
-               AS n_core,
-             CAST(COALESCE(SUM(CASE WHEN gi_z > 2.576 THEN 1 END), 0) AS BIGINT)
-               AS n_hot,
-             MAX(gi_z) AS z_max
-      FROM gz GROUP BY 1
-    ),
-    mpair AS (
-      SELECT (a.gy // {enpx}) * {ys} + (a.gx // {enpx}) AS tile,
-             a.gx AS sgx, a.gy AS sgy,
-             a.n AS va, b.n AS vb
-      FROM gpx a JOIN gpx b
-        ON b.gx BETWEEN a.gx - 1 AND a.gx + 1
-       AND b.gy BETWEEN a.gy - 1 AND a.gy + 1
-       AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-       AND a.gx // {enpx} = b.gx // {enpx}
-       AND a.gy // {enpx} = b.gy // {enpx}
-    ),
-    mp AS (
-      SELECT tile,
-             CAST(count(*) AS HUGEINT) AS mw,
-             SUM(CAST(va AS HUGEINT) * CAST(vb AS HUGEINT)) AS mpp,
-             SUM(CAST(va AS HUGEINT) + CAST(vb AS HUGEINT)) AS mr,
-             SUM((CAST(va AS HUGEINT) - CAST(vb AS HUGEINT))
-                 * (CAST(va AS HUGEINT) - CAST(vb AS HUGEINT))) AS md,
-             SUM(CASE WHEN va % 2 = 1 AND vb % 2 = 1 THEN 1 END) AS mbb,
-             SUM(CASE WHEN va % 2 = 0 AND vb % 2 = 0 THEN 1 END) AS mww,
-             SUM(CASE WHEN va % 2 <> vb % 2 THEN 1 END) AS mbw
-      FROM mpair GROUP BY tile
-    ),
-    mx AS (
-      SELECT (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile,
-             CAST(count(*) AS HUGEINT) AS mn,
-             SUM(CAST(n AS HUGEINT)) AS ms,
-             SUM(CAST(n AS HUGEINT) * CAST(n AS HUGEINT)) AS mq
-      FROM gpx GROUP BY 1
-    ),
-    mi AS (
-      SELECT mx.tile,
-             CAST(COALESCE(mp.mw, 0) AS BIGINT) AS mi_w,
-             CASE WHEN mp.mw IS NOT NULL AND mp.mw != 0
-                   AND mn * mn * mq - mn * ms * ms != 0
-               THEN CAST(mn * (mn * mn * mpp - mn * ms * mr + mw * ms * ms)
-                         AS DOUBLE)
-                    / CAST(mw * (mn * mn * mq - mn * ms * ms) AS DOUBLE)
-             END AS moran_i,
-             -- Geary's C twin (raster.geary_join_stats): exact HUGEINT
-             -- n(n-1)D over 2W(nQ - S^2), ONE division
-             CASE WHEN mp.mw IS NOT NULL AND mp.mw != 0
-                   AND mn * mq - ms * ms != 0
-               THEN CAST(mn * (mn - 1) * md AS DOUBLE)
-                    / CAST(2 * mw * (mn * mq - ms * ms) AS DOUBLE)
-             END AS geary_c,
-             CAST(COALESCE(mbb, 0) AS BIGINT) AS jc_bb,
-             CAST(COALESCE(mww, 0) AS BIGINT) AS jc_ww,
-             CAST(COALESCE(mbw, 0) AS BIGINT) AS jc_bw
-      FROM mx LEFT JOIN mp ON mp.tile = mx.tile
-    ),
-    lnb AS (
-      -- LISA per-source-pixel lag frame (raster.local_moran): degree
-      -- and neighbour-value sum over the SAME within-tile rook pairs
-      SELECT tile, sgx, sgy, MAX(va) AS va,
-             CAST(count(*) AS HUGEINT) AS deg,
-             SUM(CAST(vb AS HUGEINT)) AS nbs
-      FROM mpair GROUP BY tile, sgx, sgy
-    ),
-    lqp AS (
-      SELECT l.tile,
-             mx.mn * CAST(l.va AS HUGEINT) - mx.ms AS d,
-             mx.mn * l.nbs - l.deg * mx.ms AS lag
-      FROM lnb l JOIN mx ON mx.tile = l.tile
-    ),
-    lqa AS (
-      SELECT tile,
-             CAST(COALESCE(SUM(CASE WHEN d > 0 AND lag > 0 THEN 1 END), 0)
-                  AS BIGINT) AS lq_hh,
-             CAST(COALESCE(SUM(CASE WHEN d < 0 AND lag < 0 THEN 1 END), 0)
-                  AS BIGINT) AS lq_ll,
-             CAST(COALESCE(SUM(CASE WHEN d > 0 AND lag < 0 THEN 1 END), 0)
-                  AS BIGINT) AS lq_hl,
-             CAST(COALESCE(SUM(CASE WHEN d < 0 AND lag > 0 THEN 1 END), 0)
-                  AS BIGINT) AS lq_lh,
-             CAST(SUM(d * lag) AS VARCHAR) AS lisa_num_str,
-             CAST(count(*) AS BIGINT) AS npix
-      FROM lqp GROUP BY tile
-    ),
-    lq AS (
-      SELECT mx.tile,
-             CAST(mx.mn AS BIGINT) AS lq_n,
-             COALESCE(lqa.lq_hh, 0) AS lq_hh,
-             COALESCE(lqa.lq_ll, 0) AS lq_ll,
-             COALESCE(lqa.lq_hl, 0) AS lq_hl,
-             COALESCE(lqa.lq_lh, 0) AS lq_lh,
-             CAST(mx.mn AS BIGINT) - COALESCE(lqa.npix, 0) AS lq_iso,
-             lqa.lisa_num_str
-      FROM mx LEFT JOIN lqa ON lqa.tile = mx.tile
-    ),
-    vso AS (
-      -- viewshed observer (raster.viewshed): per-tile max-value pixel,
-      -- tie -> smallest (py, px), raised by tower=2
-      SELECT tile, opx, opy, ho FROM (
-        SELECT (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile,
-               gx % {enpx} AS opx, gy % {enpx} AS opy, n + 2 AS ho,
-               row_number() OVER (
-                 PARTITION BY (gy // {enpx}) * {ys} + (gx // {enpx})
-                 ORDER BY n DESC, gy % {enpx}, gx % {enpx}) AS rn
-        FROM gpx
-      ) WHERE rn = 1
-    ),
-    vst AS (
-      SELECT (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile,
-             gx % {enpx} AS tx, gy % {enpx} AS ty, n AS tv
-      FROM gpx
-    ),
-    vsx AS (
-      SELECT t.tile, t.tx, t.ty, t.tv, o.ho, o.opx, o.opy,
-             t.tx - o.opx AS dx, t.ty - o.opy AS dy,
-             greatest(abs(t.tx - o.opx), abs(t.ty - o.opy)) AS dm
-      FROM vst t JOIN vso o ON o.tile = t.tile
-    ),
-    vsk AS (
-      -- sightline lattice cells (forced-positive floor division: the
-      -- same spelling the Spark operator uses, so truncation == floor)
-      SELECT x.tile, x.tx, x.ty, x.tv, x.ho, x.dm, kk.k,
-             x.opx + (2 * kk.k * x.dx + x.dm + 2 * x.dm * 64)
-                       // (2 * x.dm) - 64 AS cx,
-             x.opy + (2 * kk.k * x.dy + x.dm + 2 * x.dm * 64)
-                       // (2 * x.dm) - 64 AS cy
-      FROM vsx x, UNNEST(generate_series(1, CAST(x.dm AS BIGINT) - 1)) AS kk(k)
-    ),
-    vsblk AS (
-      SELECT v.tile, v.tx, v.ty,
-             MAX(CASE WHEN (COALESCE(e.tv, 0) - v.ho) * v.dm
-                           >= (v.tv - v.ho) * v.k THEN 1 ELSE 0 END) AS blk
-      FROM vsk v
-      LEFT JOIN vst e ON e.tile = v.tile AND e.tx = v.cx AND e.ty = v.cy
-      GROUP BY v.tile, v.tx, v.ty
-    ),
-    vsagg AS (
-      SELECT x.tile,
-             CAST(COUNT(*) AS BIGINT) AS vs_ntot,
-             CAST(SUM(CASE WHEN COALESCE(b.blk, 0) = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS vs_n,
-             CAST(SUM(CASE WHEN COALESCE(b.blk, 0) = 0 THEN x.tv ELSE 0 END)
-                  AS BIGINT) AS vs_mass
-      FROM vsx x
-      LEFT JOIN vsblk b ON b.tile = x.tile AND b.tx = x.tx AND b.ty = x.ty
-      GROUP BY x.tile
-    ),
-    vs AS (
-      SELECT o.tile, CAST(o.opx AS BIGINT) AS vs_opx,
-             CAST(o.opy AS BIGINT) AS vs_opy,
-             a.vs_ntot, a.vs_n, a.vs_mass
-      FROM vso o JOIN vsagg a USING (tile)
-    ),
-    grk AS (
-      -- Gini rank frame (raster.gini_tile): equal values occupy a
-      -- consecutive rank block, so SUM(rk * n) is tie-order invariant
-      SELECT (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile, n,
-             row_number() OVER (
-               PARTITION BY (gy // {enpx}) * {ys} + (gx // {enpx})
-               ORDER BY n, gy, gx) AS rk
-      FROM gpx
-    ),
-    gini AS (
-      SELECT tile,
-             CAST(SUM(n) AS BIGINT) AS gini_mass,
-             CASE WHEN CAST(COUNT(*) AS HUGEINT) * SUM(CAST(n AS HUGEINT)) != 0
-               THEN CAST(2 * SUM(CAST(rk AS HUGEINT) * CAST(n AS HUGEINT))
-                         - (CAST(COUNT(*) AS HUGEINT) + 1)
-                           * SUM(CAST(n AS HUGEINT)) AS DOUBLE)
-                    / CAST(CAST(COUNT(*) AS HUGEINT)
-                           * SUM(CAST(n AS HUGEINT)) AS DOUBLE)
-             END AS gini
-      FROM grk GROUP BY tile
-    ),
-    -- L1 distance transform (raster.distance_transform_l1): the
-    -- two-pass min-plus factorization as FOUR running-min windows
-    -- over each occupied tile's dense grid; BIG sentinel = 2^40
-    dtg AS (
-      SELECT t.tile, i % {enpx} AS px, i // {enpx} AS py
-      FROM (SELECT DISTINCT (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile
-            FROM epx) t, range(0, {enpx * enpx}) r(i)
-    ),
-    dto AS (
-      SELECT g.tile, g.px, g.py,
-             CASE WHEN e.gx IS NULL THEN 1099511627776 ELSE 0 END AS seed
-      FROM dtg g LEFT JOIN epx e
-        ON (e.gy // {enpx}) * {ys} + (e.gx // {enpx}) = g.tile
-       AND e.gx % {enpx} = g.px AND e.gy % {enpx} = g.py
-    ),
-    dtr AS (
-      SELECT tile, px, py,
-             least(px + min(seed - px) OVER
-                     (PARTITION BY tile, py ORDER BY px
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                   -px + min(seed + px) OVER
-                     (PARTITION BY tile, py ORDER BY px DESC
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS rm
-      FROM dto
-    ),
-    dtf AS (
-      SELECT tile,
-             least(py + min(rm - py) OVER
-                     (PARTITION BY tile, px ORDER BY py
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                   -py + min(rm + py) OVER
-                     (PARTITION BY tile, px ORDER BY py DESC
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS dt
-      FROM dtr
-    ),
-    dtile AS (
-      SELECT tile, CAST(sum(dt) AS BIGINT) AS dt_sum,
-             CAST(max(dt) AS BIGINT) AS dt_max,
-             CAST(sum(CASE WHEN dt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS dt_zeros
-      FROM dtf GROUP BY tile
-    ),
-    -- D8 flow direction (raster.d8_flow): steepest strictly-downhill
-    -- occupied 8-neighbour within the tile; the drop/distance compare
-    -- cross-multiplied to ints (cardinal w=2, diagonal w=1: 2*drop_c²
-    -- vs drop_d²), ties to the smallest direction code
-    d8c AS (
-      SELECT a.gx, a.gy, o.d,
-             (CASE WHEN o.dx = 0 OR o.dy = 0 THEN 2 ELSE 1 END)
-               * CAST(a.n - b.n AS HUGEINT)
-               * CAST(a.n - b.n AS HUGEINT) AS k
-      FROM gpx a
-      CROSS JOIN (VALUES (0, 1, 0), (1, 1, 1), (2, 0, 1), (3, -1, 1),
-                         (4, -1, 0), (5, -1, -1), (6, 0, -1), (7, 1, -1))
-                 o(d, dx, dy)
-      JOIN gpx b ON b.gx = a.gx + o.dx AND b.gy = a.gy + o.dy
-                AND b.n < a.n
-                AND a.gx // {enpx} = b.gx // {enpx}
-                AND a.gy // {enpx} = b.gy // {enpx}
-    ),
-    d8dir AS (
-      SELECT gx, gy, d FROM (
-        SELECT gx, gy, d,
-               row_number() OVER (PARTITION BY gx, gy ORDER BY k DESC, d) AS rn
-        FROM d8c)
-      WHERE rn = 1
-    ),
-    d8e AS (
-      SELECT f.gx, f.gy, f.gx + o.dx AS tx, f.gy + o.dy AS ty
-      FROM d8dir f
-      JOIN (VALUES (0, 1, 0), (1, 1, 1), (2, 0, 1), (3, -1, 1),
-                   (4, -1, 0), (5, -1, -1), (6, 0, -1), (7, 1, -1))
-           o(d, dx, dy) ON o.d = f.d
-    ),
-    -- flow accumulation = per-cell visit count over every occupied
-    -- cell's downstream walk (strict descent => acyclic => terminates)
-    d8walk(gx, gy) AS (
-      SELECT gx, gy FROM gpx
-      UNION ALL
-      SELECT e.tx, e.ty FROM d8walk w
-      JOIN d8e e ON e.gx = w.gx AND e.gy = w.gy
-    ),
-    d8acc AS (
-      SELECT gx, gy, CAST(count(*) AS BIGINT) AS acc
-      FROM d8walk GROUP BY 1, 2
-    ),
-    d8t AS (
-      SELECT (g.gy // {enpx}) * {ys} + (g.gx // {enpx}) AS tile,
-             CAST(count(d.d) AS BIGINT) AS d8_flows,
-             CAST(count(*) - count(d.d) AS BIGINT) AS d8_pits,
-             CAST(COALESCE(SUM((d.d + 1)
-                   * ((g.gy % {enpx}) * {enpx} + (g.gx % {enpx}) + 1)), 0)
-                  AS BIGINT) AS d8_dirw,
-             CAST(SUM(a.acc) AS BIGINT) AS d8_acc_sum,
-             CAST(MAX(a.acc) AS BIGINT) AS d8_acc_max
-      FROM gpx g
-      LEFT JOIN d8dir d ON d.gx = g.gx AND d.gy = g.gy
-      JOIN d8acc a ON a.gx = g.gx AND a.gy = g.gy
-      GROUP BY 1
-    ),
-    -- watershed basins (raster.d8_basins): every occupied cell walks
-    -- its flow path to the terminal pit; basin = the pit's within-tile
-    -- key py*npx + px
-    d8r(gx0, gy0, gx, gy) AS (
-      SELECT gx, gy, gx, gy FROM gpx
-      UNION ALL
-      SELECT r.gx0, r.gy0, e.tx, e.ty FROM d8r r
-      JOIN d8e e ON e.gx = r.gx AND e.gy = r.gy
-    ),
-    d8b AS (
-      SELECT r.gx0 AS gx, r.gy0 AS gy,
-             (r.gy % {enpx}) * {enpx} + (r.gx % {enpx}) AS basin
-      FROM d8r r LEFT JOIN d8e e ON e.gx = r.gx AND e.gy = r.gy
-      WHERE e.gx IS NULL
-    ),
-    wbg AS (
-      SELECT (gy // {enpx}) * {ys} + (gx // {enpx}) AS tile, basin,
-             count(*) AS bn,
-             SUM((basin + 1) * ((gy % {enpx}) * {enpx} + (gx % {enpx}) + 1))
-               AS bw
-      FROM d8b GROUP BY 1, 2
-    ),
-    wbt AS (
-      SELECT tile, CAST(count(*) AS BIGINT) AS wb_nbas,
-             CAST(max(bn) AS BIGINT) AS wb_max,
-             CAST(sum(bw) AS BIGINT) AS wb_wsum
-      FROM wbg GROUP BY 1
-    ),
-    -- emerging-hotspot trend: per-tile Mann-Kendall over the
-    -- densified daily space-time cube (zero-bins included); the twin
-    -- proves S with the brute pair join, a different algorithm
-    ehd AS (
-      SELECT (({_EV_LAT}) + {C.LAT_OFFSET}) // {1 << _RAS_TILE_RES} * {ys}
-             + (({_EV_LON}) + {C.LON_OFFSET}) // {1 << _RAS_TILE_RES} AS tile,
-             epoch_us(ts) // 1000000 // 86400 AS day,
-             count(*) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    ehspan AS (SELECT min(day) AS d0, max(day) AS d1 FROM ehd),
-    ehcube AS (
-      SELECT g.tile, g.day, COALESCE(e.n, 0) AS n
-      FROM (SELECT t.tile, gs.day
-            FROM (SELECT DISTINCT tile FROM ehd) t, ehspan s,
-                 UNNEST(generate_series(s.d0, s.d1)) AS gs(day)) g
-      LEFT JOIN ehd e ON e.tile = g.tile AND e.day = g.day
-    ),
-    ehp AS (
-      SELECT a.tile,
-             CASE WHEN b.n > a.n THEN 1 WHEN b.n < a.n THEN -1
-                  ELSE 0 END AS sg
-      FROM ehcube a JOIN ehcube b ON b.tile = a.tile AND a.day < b.day
-    ),
-    ehs AS (SELECT tile, CAST(SUM(sg) AS BIGINT) AS eh_s FROM ehp GROUP BY tile),
-    ehn AS (SELECT tile, CAST(count(*) AS HUGEINT) AS en FROM ehcube GROUP BY tile),
-    eht AS (
-      SELECT tile,
-             SUM(CASE WHEN t > 1 THEN t * (t - 1) * (2 * t + 5)
-                 ELSE 0 END) AS tie
-      FROM (SELECT tile, CAST(count(*) AS HUGEINT) AS t
-            FROM ehcube GROUP BY tile, n)
-      GROUP BY tile
-    ),
-    ehf AS (
-      SELECT ehn.tile,
-             CAST(ehn.en AS BIGINT) AS eh_n,
-             COALESCE(ehs.eh_s, 0) AS eh_s,
-             CAST(en * (en - 1) * (2 * en + 5) - COALESCE(eht.tie, 0)
-                  AS VARCHAR) AS eh_var18_str,
-             CASE WHEN en * (en - 1) * (2 * en + 5) - COALESCE(eht.tie, 0) = 0
-                    THEN NULL
-                  WHEN COALESCE(ehs.eh_s, 0) > 0
-                    THEN CAST(ehs.eh_s - 1 AS DOUBLE)
-                         / sqrt(CAST(en * (en - 1) * (2 * en + 5)
-                                     - COALESCE(eht.tie, 0) AS DOUBLE) / 18.0)
-                  WHEN COALESCE(ehs.eh_s, 0) < 0
-                    THEN CAST(ehs.eh_s + 1 AS DOUBLE)
-                         / sqrt(CAST(en * (en - 1) * (2 * en + 5)
-                                     - COALESCE(eht.tie, 0) AS DOUBLE) / 18.0)
-                  ELSE 0.0 END AS eh_z
-      FROM ehn
-      LEFT JOIN ehs ON ehs.tile = ehn.tile
-      LEFT JOIN eht ON eht.tile = ehn.tile
-    ),
-    -- Horn slope/aspect (raster.slope_aspect): exact gradient
-    -- numerators via the 8-offset weighted scatter; octant = the
-    -- half-open 45-degree sector decision table (flat -> NULL)
-    sasc AS (
-      SELECT (g.gy // {enpx}) * {ys} + (g.gx // {enpx}) AS tile,
-             (g.gx % {enpx}) - o.ox AS px,
-             (g.gy % {enpx}) - o.oy AS py,
-             g.n * o.wx AS cx, g.n * o.wy AS cy
-      FROM gpx g
-      CROSS JOIN (VALUES (1, 0, 2, 0), (1, 1, 1, 1), (1, -1, 1, -1),
-                         (-1, 0, -2, 0), (-1, 1, -1, 1),
-                         (-1, -1, -1, -1), (0, 1, 0, 2), (0, -1, 0, -2))
-                 o(ox, oy, wx, wy)
-      WHERE (g.gx % {enpx}) - o.ox BETWEEN 1 AND {enpx - 2}
-        AND (g.gy % {enpx}) - o.oy BETWEEN 1 AND {enpx - 2}
-    ),
-    sagr AS (
-      SELECT tile, px, py, SUM(cx) AS sx, SUM(cy) AS sy
-      FROM sasc GROUP BY 1, 2, 3
-    ),
-    saoct AS (
-      SELECT tile, px, py, sx * sx + sy * sy AS slope2,
-             CASE WHEN sx = 0 AND sy = 0 THEN NULL
-                  WHEN sx > 0 AND sy >= 0 AND sy < sx THEN 0
-                  WHEN sy > 0 AND sx > 0 THEN 1
-                  WHEN sy > 0 AND sx <= 0 AND -sx < sy THEN 2
-                  WHEN sy > 0 THEN 3
-                  WHEN sy <= 0 AND sx < 0 AND -sy < -sx THEN 4
-                  WHEN sy < 0 AND sx < 0 THEN 5
-                  WHEN sy < 0 AND sx >= 0 AND sx < -sy THEN 6
-                  ELSE 7 END AS oct
-      FROM sagr
-    ),
-    sat AS (
-      SELECT tile,
-             CAST(SUM(CASE WHEN slope2 > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS sa_nonflat,
-             CAST(SUM(CASE WHEN slope2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS sa_flat0,
-             CAST(SUM(slope2) AS BIGINT) AS sa_ssum,
-             CAST(MAX(slope2) AS BIGINT) AS sa_smax,
-             {" || ',' || ".join(
-                 f"CAST(COALESCE(SUM(CASE WHEN oct = {k} THEN 1 END), 0)"
-                 " AS VARCHAR)"
-                 for k in range(8))} AS sa_oct_sig,
-             CAST(COALESCE(SUM((oct + 1) * (py * {enpx} + px + 1)), 0)
-                  AS BIGINT) AS sa_wsum
-      FROM saoct GROUP BY tile
-    ),
-    -- marching-squares census at density threshold 2 (raster.
-    -- marching_squares): 4-bit case per fully-inside 2x2 window with
-    -- >= 1 occupied corner, bits b0=SW b1=SE b2=NW b3=NE; diagonal
-    -- saddles (6, 9) emit 2 segments, empty/full 0, others 1
-    msw AS (
-      SELECT (g.gy // {enpx}) * {ys} + (g.gx // {enpx}) AS tile,
-             (g.gx % {enpx}) - c.cx AS wx,
-             (g.gy % {enpx}) - c.cy AS wy,
-             SUM(CASE WHEN g.n >= 2 THEN
-                   CASE c.cx + 2 * c.cy
-                     WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END
-                 ELSE 0 END) AS mcase
-      FROM gpx g CROSS JOIN (VALUES (0, 0), (1, 0), (0, 1), (1, 1)) c(cx, cy)
-      WHERE (g.gx % {enpx}) - c.cx BETWEEN 0 AND {enpx - 2}
-        AND (g.gy % {enpx}) - c.cy BETWEEN 0 AND {enpx - 2}
-      GROUP BY 1, 2, 3
-      HAVING SUM(CASE WHEN g.n >= 2 THEN
-                   CASE c.cx + 2 * c.cy
-                     WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END
-                 ELSE 0 END) > 0
-    ),
-    mstile AS (
-      SELECT tile,
-             CAST(SUM(CASE WHEN mcase BETWEEN 1 AND 14 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS ms_cells,
-             CAST(SUM(CASE WHEN mcase = 15 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS ms_full,
-             CAST(SUM(CASE WHEN mcase IN (6, 9) THEN 2
-                           WHEN mcase = 15 THEN 0 ELSE 1 END)
-                  AS BIGINT) AS ms_segs,
-             CAST(SUM(mcase * (wy * {enpx - 1} + wx + 1))
-                  AS BIGINT) AS ms_wsum
-      FROM msw GROUP BY tile
-    )
-    SELECT * FROM (
-      SELECT 'poly' AS leg,
-             x0 * {pxe} - {C.LON_OFFSET}       AS min_lon,
-             y0 * {pxe} - {C.LAT_OFFSET}       AS min_lat,
-             (x1 + 1) * {pxe} - {C.LON_OFFSET} AS max_lon,
-             (y1 + 1) * {pxe} - {C.LAT_OFFSET} AS max_lat,
-             (x1 - x0 + 1) * (y1 - y0 + 1)     AS n_pixels,
-             CAST(NULL AS BIGINT) AS blob, CAST(NULL AS BIGINT) AS blob_px,
-             CAST(NULL AS BIGINT) AS focal_total,
-             CAST(NULL AS BIGINT) AS focal_max,
-             CAST(NULL AS BIGINT) AS n_core,
-             CAST(NULL AS BIGINT) AS n_hot,
-             CAST(NULL AS DOUBLE) AS z_max,
-             CAST(NULL AS BIGINT) AS mi_w,
-             CAST(NULL AS DOUBLE) AS moran_i,
-             CAST(NULL AS DOUBLE) AS geary_c,
-             CAST(NULL AS BIGINT) AS jc_bb,
-             CAST(NULL AS BIGINT) AS jc_ww,
-             CAST(NULL AS BIGINT) AS jc_bw,
-             CAST(NULL AS BIGINT) AS lq_n,
-             CAST(NULL AS BIGINT) AS lq_hh,
-             CAST(NULL AS BIGINT) AS lq_ll,
-             CAST(NULL AS BIGINT) AS lq_hl,
-             CAST(NULL AS BIGINT) AS lq_lh,
-             CAST(NULL AS BIGINT) AS lq_iso,
-             CAST(NULL AS VARCHAR) AS lisa_num_str,
-             CAST(NULL AS BIGINT) AS vs_opx,
-             CAST(NULL AS BIGINT) AS vs_opy,
-             CAST(NULL AS BIGINT) AS vs_ntot,
-             CAST(NULL AS BIGINT) AS vs_n,
-             CAST(NULL AS BIGINT) AS vs_mass,
-             CAST(NULL AS BIGINT) AS gini_mass,
-             CAST(NULL AS DOUBLE) AS gini,
-             CAST(NULL AS BIGINT) AS dt_sum,
-             CAST(NULL AS BIGINT) AS dt_max,
-             CAST(NULL AS BIGINT) AS dt_zeros,
-             CAST(NULL AS BIGINT) AS d8_flows,
-             CAST(NULL AS BIGINT) AS d8_pits,
-             CAST(NULL AS BIGINT) AS d8_dirw,
-             CAST(NULL AS BIGINT) AS d8_acc_sum,
-             CAST(NULL AS BIGINT) AS d8_acc_max,
-             CAST(NULL AS BIGINT) AS wb_nbas,
-             CAST(NULL AS BIGINT) AS wb_max,
-             CAST(NULL AS BIGINT) AS wb_wsum,
-             CAST(NULL AS BIGINT) AS eh_n,
-             CAST(NULL AS BIGINT) AS eh_s,
-             CAST(NULL AS VARCHAR) AS eh_var18_str,
-             CAST(NULL AS DOUBLE) AS eh_z,
-             CAST(NULL AS BIGINT) AS sa_nonflat,
-             CAST(NULL AS BIGINT) AS sa_flat0,
-             CAST(NULL AS BIGINT) AS sa_ssum,
-             CAST(NULL AS BIGINT) AS sa_smax,
-             CAST(NULL AS VARCHAR) AS sa_oct_sig,
-             CAST(NULL AS BIGINT) AS sa_wsum,
-             CAST(NULL AS BIGINT) AS ms_cells,
-             CAST(NULL AS BIGINT) AS ms_full,
-             CAST(NULL AS BIGINT) AS ms_segs,
-             CAST(NULL AS BIGINT) AS ms_wsum
-      FROM rects
-      UNION ALL
-      SELECT 'events' AS leg,
-             e.x0 * {epxe} - {C.LON_OFFSET}       AS min_lon,
-             e.y0 * {epxe} - {C.LAT_OFFSET}       AS min_lat,
-             (e.x1 + 1) * {epxe} - {C.LON_OFFSET} AS max_lon,
-             (e.y1 + 1) * {epxe} - {C.LAT_OFFSET} AS max_lat,
-             (e.x1 - e.x0 + 1) * (e.y1 - e.y0 + 1) AS n_pixels,
-             l.blob AS blob, b.blob_px AS blob_px,
-             ft.focal_total, ft.focal_max, ft.n_core, ft.n_hot, ft.z_max,
-             mi.mi_w, mi.moran_i, mi.geary_c, mi.jc_bb, mi.jc_ww, mi.jc_bw,
-             lq.lq_n, lq.lq_hh, lq.lq_ll, lq.lq_hl, lq.lq_lh, lq.lq_iso,
-             lq.lisa_num_str,
-             vs.vs_opx, vs.vs_opy, vs.vs_ntot, vs.vs_n, vs.vs_mass,
-             gini.gini_mass, gini.gini,
-             dtile.dt_sum, dtile.dt_max, dtile.dt_zeros,
-             d8t.d8_flows, d8t.d8_pits, d8t.d8_dirw,
-             d8t.d8_acc_sum, d8t.d8_acc_max,
-             wbt.wb_nbas, wbt.wb_max, wbt.wb_wsum,
-             ehf.eh_n, ehf.eh_s, ehf.eh_var18_str, ehf.eh_z,
-             COALESCE(sat.sa_nonflat, 0) AS sa_nonflat,
-             COALESCE(sat.sa_flat0, 0) AS sa_flat0,
-             COALESCE(sat.sa_ssum, 0) AS sa_ssum,
-             COALESCE(sat.sa_smax, 0) AS sa_smax,
-             COALESCE(sat.sa_oct_sig, '0,0,0,0,0,0,0,0') AS sa_oct_sig,
-             COALESCE(sat.sa_wsum, 0) AS sa_wsum,
-             COALESCE(mstile.ms_cells, 0) AS ms_cells,
-             COALESCE(mstile.ms_full, 0) AS ms_full,
-             COALESCE(mstile.ms_segs, 0) AS ms_segs,
-             COALESCE(mstile.ms_wsum, 0) AS ms_wsum
-      FROM erects e
-      JOIN lab l ON l.gx = e.x0 AND l.gy = e.y0
-      JOIN bsz b USING (blob)
-      JOIN ftile ft ON ft.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN mi ON mi.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN lq ON lq.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN vs ON vs.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN gini ON gini.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN dtile ON dtile.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN d8t ON d8t.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN wbt ON wbt.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      JOIN ehf ON ehf.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      LEFT JOIN sat ON sat.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-      LEFT JOIN mstile
-             ON mstile.tile = (e.y0 // {enpx}) * {ys} + (e.x0 // {enpx})
-    )
-    ORDER BY leg, min_lon, min_lat
-    """
-
-
-@register("raster_vectorize", _sql_raster_vectorize())
-def raster_vectorize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full raster<->vector loop, two legs. 'poly': the pentagon
-    fixture is rasterized (pixel-center PIP via the compiled ray-cast
-    expression over a distributed spark.range grid), then vectorized
-    back into maximal pixel-aligned rectangles
-    (operators/raster.vectorize_raster); the oracle recomputes both
-    halves in SQL over the identical grid and edges. 'events': the
-    events density mask vectorized the same way, each rectangle
-    annotated with its 4-adjacency connected component
-    (raster.blob_labels over graph.components_pointer_jump — O(log
-    blob-diameter) rounds, the Shiloach-Vishkin shape; a rectangle is
-    connected, so its SW pixel's label IS its label) plus the GLOBAL
-    blob pixel count, vs the oracle's recursive-CTE reachability
-    closure (min reachable pixel key == the component min).
-
-    PLUS the spatial-statistics folds over the SAME pixel frame
-    (relocated from the benched rasterize_density row — gate value,
-    not bench value): per-tile focal statistics (raster.focal_sum, the
-    GIS moving-window convolution primitive — sum/max of every
-    occupied pixel's 3x3 focal sum and the count of erosion
-    survivors), Getis-Ord Gi* hotspot z-scores (raster.gi_star over
-    the same focal frame; per-tile hot-pixel count at z > 2.576 and
-    max z), and per-tile Moran's I with within-tile rook weights
-    (raster.morans_i — exact decimal(38,0)/HUGEINT moments, ONE shared
-    division), PLUS the remaining ESDA pair on the same adjacency
-    (raster.geary_join_stats, sharing _rook_pairs so ReuseExchange
-    collapses the scatter/join): Geary's C (n(n−1)D / 2W(nQ−S²), one
-    divide of exact ints) and the parity join-count statistics
-    jc_bb/jc_ww/jc_bw (exact ordered-pair longs), and the exact L1
-    distance transform
-    (raster.distance_transform_l1 — the two-pass min-plus
-    factorization as four running-min windows over each occupied
-    tile's dense grid; per-tile dt_sum/dt_max/dt_zeros pin the whole
-    proximity field, since a single shifted pixel changes dt_sum).
-    Every events-leg rectangle carries ITS tile's statistics
-    (rectangles never cross tiles, so the tile key is derivable from
-    the rect corner on both engines); the poly leg is NULL. The float
-    trees and windows are spelled identically in the SQL twin."""
-    from ..operators.raster import (
-        blob_labels,
-        d8_basins,
-        d8_flow,
-        distance_transform_l1,
-        focal_sum,
-        marching_squares,
-        slope_aspect,
-        geary_join_stats,
-        gi_star,
-        gini_tile,
-        local_moran,
-        morans_i,
-        pixels_to_tiles,
-        point_pixel_counts,
-        rasterize_polygon,
-        vectorize_raster,
-        viewshed,
-    )
-
-    mp = fixture_regions()[5]
-    r = rasterize_polygon(spark, mp, tile_res=_RAS_TILE_RES, px_res=18)
-    poly = vectorize_raster(r, tile_res=_RAS_TILE_RES, px_res=18).select(
-        F.lit("poly").alias("leg"),
-        "min_lon",
-        "min_lat",
-        "max_lon",
-        "max_lat",
-        "n_pixels",
-        F.lit(None).cast("long").alias("blob"),
-        F.lit(None).cast("long").alias("blob_px"),
-        F.lit(None).cast("long").alias("focal_total"),
-        F.lit(None).cast("long").alias("focal_max"),
-        F.lit(None).cast("long").alias("n_core"),
-        F.lit(None).cast("long").alias("n_hot"),
-        F.lit(None).cast("double").alias("z_max"),
-        F.lit(None).cast("long").alias("mi_w"),
-        F.lit(None).cast("double").alias("moran_i"),
-        F.lit(None).cast("double").alias("geary_c"),
-        F.lit(None).cast("long").alias("jc_bb"),
-        F.lit(None).cast("long").alias("jc_ww"),
-        F.lit(None).cast("long").alias("jc_bw"),
-        F.lit(None).cast("long").alias("lq_n"),
-        F.lit(None).cast("long").alias("lq_hh"),
-        F.lit(None).cast("long").alias("lq_ll"),
-        F.lit(None).cast("long").alias("lq_hl"),
-        F.lit(None).cast("long").alias("lq_lh"),
-        F.lit(None).cast("long").alias("lq_iso"),
-        F.lit(None).cast("string").alias("lisa_num_str"),
-        F.lit(None).cast("long").alias("vs_opx"),
-        F.lit(None).cast("long").alias("vs_opy"),
-        F.lit(None).cast("long").alias("vs_ntot"),
-        F.lit(None).cast("long").alias("vs_n"),
-        F.lit(None).cast("long").alias("vs_mass"),
-        F.lit(None).cast("long").alias("gini_mass"),
-        F.lit(None).cast("double").alias("gini"),
-        F.lit(None).cast("long").alias("dt_sum"),
-        F.lit(None).cast("long").alias("dt_max"),
-        F.lit(None).cast("long").alias("dt_zeros"),
-        F.lit(None).cast("long").alias("d8_flows"),
-        F.lit(None).cast("long").alias("d8_pits"),
-        F.lit(None).cast("long").alias("d8_dirw"),
-        F.lit(None).cast("long").alias("d8_acc_sum"),
-        F.lit(None).cast("long").alias("d8_acc_max"),
-        F.lit(None).cast("long").alias("wb_nbas"),
-        F.lit(None).cast("long").alias("wb_max"),
-        F.lit(None).cast("long").alias("wb_wsum"),
-        F.lit(None).cast("long").alias("eh_n"),
-        F.lit(None).cast("long").alias("eh_s"),
-        F.lit(None).cast("string").alias("eh_var18_str"),
-        F.lit(None).cast("double").alias("eh_z"),
-        F.lit(None).cast("long").alias("sa_nonflat"),
-        F.lit(None).cast("long").alias("sa_flat0"),
-        F.lit(None).cast("long").alias("sa_ssum"),
-        F.lit(None).cast("long").alias("sa_smax"),
-        F.lit(None).cast("string").alias("sa_oct_sig"),
-        F.lit(None).cast("long").alias("sa_wsum"),
-        F.lit(None).cast("long").alias("ms_cells"),
-        F.lit(None).cast("long").alias("ms_full"),
-        F.lit(None).cast("long").alias("ms_segs"),
-        F.lit(None).cast("long").alias("ms_wsum"),
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    pix = point_pixel_counts(ev, px_res=_RAS_PX_RES)
-    er = pixels_to_tiles(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-    erects = vectorize_raster(er, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-    lab = blob_labels(pix)
-    sizes = lab.groupBy("blob").agg(F.count(F.lit(1)).alias("blob_px"))
-    corner = lab.join(sizes, "blob").select(
-        (F.shiftleft("gx", _RAS_PX_RES) - C.LON_OFFSET).alias("min_lon"),
-        (F.shiftleft("gy", _RAS_PX_RES) - C.LAT_OFFSET).alias("min_lat"),
-        "blob",
-        "blob_px",
-    )
-    # ONE pixel aggregation feeds the rasters, the focal convolution,
-    # Gi* (reusing the focal frame via foc=) and the Moran pair join
-    # (identical subplans let ReuseExchange collapse the physical agg)
-    shift = _RAS_TILE_RES - _RAS_PX_RES
-    g = gi_star(pix, foc=focal_sum(pix))
-    ftile = (
-        g.groupBy(
-            (
-                F.shiftright("gy", shift) * C.Y_STRIDE + F.shiftright("gx", shift)
-            ).alias("tile")
-        )
-        .agg(
-            F.sum("focal").cast("long").alias("focal_total"),
-            F.max("focal").cast("long").alias("focal_max"),
-            F.coalesce(F.sum(F.when(F.col("n_nbrs") == 9, 1)), F.lit(0))
-            .cast("long")
-            .alias("n_core"),
-            F.coalesce(F.sum(F.when(F.col("gi_z") > 2.576, 1)), F.lit(0))
-            .cast("long")
-            .alias("n_hot"),
-            F.max("gi_z").alias("z_max"),
-        )
-    )
-    mi = morans_i(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES).select(
-        "tile", "mi_w", "moran_i"
-    )
-    # Geary's C + parity join counts share _rook_pairs with morans_i —
-    # identical scatter/join subplans, so ReuseExchange collapses them
-    gj = geary_join_stats(
-        pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES
-    ).select("tile", "geary_c", "jc_bb", "jc_ww", "jc_bw")
-    # LISA quadrant census — the per-cell decomposition of moran_i on
-    # the same shared pairs (the scatter/join collapses again)
-    lm = local_moran(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-    # viewshed over the same pixel frame: the density surface is the
-    # elevation model, the tile's mega-cell is the observer
-    vsd = viewshed(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-    # Gini of the value mass across each tile's occupied pixels — the
-    # mega-cell concentration statistic on the same shared pixel frame
-    gin = gini_tile(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES).select(
-        "tile", "gini_mass", "gini"
-    )
-    dtile = (
-        distance_transform_l1(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-        .groupBy("tile")
-        .agg(
-            F.sum("dt").cast("long").alias("dt_sum"),
-            F.max("dt").cast("long").alias("dt_max"),
-            F.sum(F.when(F.col("dt") == 0, 1).otherwise(0))
-            .cast("long")
-            .alias("dt_zeros"),
-        )
-    )
-    # D8 flow direction + accumulation over the same density surface
-    # (raster.d8_flow — hydrology's FlowDirection/FlowAccumulation
-    # pair, integer-exact via the cross-multiplied √2 compare); the
-    # per-tile direction-weighted sum pins every pixel's direction and
-    # acc_sum pins every flow path node-by-node
-    d8t = (
-        d8_flow(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-        .groupBy("tile")
-        .agg(
-            F.count("d8_dir").cast("long").alias("d8_flows"),
-            (F.count(F.lit(1)) - F.count("d8_dir"))
-            .cast("long")
-            .alias("d8_pits"),
-            F.coalesce(
-                F.sum(
-                    (F.col("d8_dir") + 1)
-                    * (F.col("py") * _RAS_NPX + F.col("px") + 1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("d8_dirw"),
-            F.sum("acc").cast("long").alias("d8_acc_sum"),
-            F.max("acc").cast("long").alias("d8_acc_max"),
-        )
-    )
-    # watershed basins over the same D8 flow graph (raster.d8_basins —
-    # pointer doubling, O(log path) rounds): wb_wsum pins every
-    # pixel's basin label, wb_nbas == pit count by construction
-    wbg = (
-        d8_basins(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-        .groupBy("tile", "basin")
-        .agg(
-            F.count(F.lit(1)).alias("_bn"),
-            F.sum(
-                (F.col("basin") + 1)
-                * (F.col("py") * _RAS_NPX + F.col("px") + 1)
-            ).alias("_bw"),
-        )
-    )
-    wbt = wbg.groupBy("tile").agg(
-        F.count(F.lit(1)).cast("long").alias("wb_nbas"),
-        F.max("_bn").cast("long").alias("wb_max"),
-        F.sum("_bw").cast("long").alias("wb_wsum"),
-    )
-    # emerging-hotspot trend (the ArcGIS space-time-pattern-mining
-    # shape): per-tile Mann-Kendall over the DENSIFIED daily count
-    # series of the space-time cube — zero-bins included, so the tie
-    # correction genuinely bites; composes relational.mann_kendall
-    # with the raster tile key (same derivation as the pixel frame)
-    from ..operators.relational import mann_kendall
-
-    ev2 = _t(spark, sf_dir, "events").select(
-        (
-            F.shiftright(
-                C.derived_lat(F.col("event_id")) + C.LAT_OFFSET, _RAS_TILE_RES
-            )
-            * C.Y_STRIDE
-            + F.shiftright(
-                C.derived_lon(F.col("event_id")) + C.LON_OFFSET, _RAS_TILE_RES
-            )
-        ).alias("tile"),
-        F.expr("CAST(CAST(ts AS TIMESTAMP) AS LONG) DIV 86400").alias("day"),
-    )
-    ehd = ev2.groupBy("tile", "day").agg(F.count(F.lit(1)).alias("n"))
-    _b = ehd.agg(F.min("day").alias("d0"), F.max("day").alias("d1")).first()
-    cube = (
-        ehd.select("tile")
-        .distinct()
-        .crossJoin(
-            spark.range(int(_b["d0"]), int(_b["d1"]) + 1).select(
-                F.col("id").alias("day")
-            )
-        )
-        .join(ehd, ["tile", "day"], "left")
-        .select(
-            "tile", "day", F.coalesce("n", F.lit(0)).cast("long").alias("n")
-        )
-    )
-    eh = mann_kendall(cube, key="tile", ts="day", v="n", id_col="day").select(
-        "tile",
-        F.col("mk_n").alias("eh_n"),
-        F.col("mk_s").alias("eh_s"),
-        F.col("mk_var18_str").alias("eh_var18_str"),
-        F.col("mk_z").alias("eh_z"),
-    )
-    # Horn slope/aspect octant census (raster.slope_aspect): exact
-    # gradient numerators per interior pixel; sa_wsum pins every
-    # pixel's octant, the sig pins the per-octant counts
-    sat = (
-        slope_aspect(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-        .groupBy("tile")
-        .agg(
-            F.sum(F.when(F.col("slope2") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias("sa_nonflat"),
-            F.sum(F.when(F.col("slope2") == 0, 1).otherwise(0))
-            .cast("long")
-            .alias("sa_flat0"),
-            F.sum("slope2").cast("long").alias("sa_ssum"),
-            F.max("slope2").cast("long").alias("sa_smax"),
-            F.concat_ws(
-                ",",
-                *[
-                    F.coalesce(
-                        F.sum(F.when(F.col("oct") == k, 1)), F.lit(0)
-                    ).cast("string")
-                    for k in range(8)
-                ],
-            ).alias("sa_oct_sig"),
-            F.coalesce(
-                F.sum(
-                    (F.col("oct") + 1)
-                    * (F.col("py") * _RAS_NPX + F.col("px") + 1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("sa_wsum"),
-        )
-    )
-    # marching-squares contour census at density threshold 2 (thr=1
-    # would equal the occupancy mask the rectangles already pin);
-    # LEFT-joined because a tile may have no >=thr window at all
-    mst = (
-        marching_squares(pix, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES, thr=2)
-        .groupBy("tile")
-        .agg(
-            F.sum(F.when(F.col("mcase") <= 14, 1).otherwise(0))
-            .cast("long")
-            .alias("ms_cells"),
-            F.sum(F.when(F.col("mcase") == 15, 1).otherwise(0))
-            .cast("long")
-            .alias("ms_full"),
-            F.sum("segs").cast("long").alias("ms_segs"),
-            F.sum(
-                F.col("mcase")
-                * (F.col("wy") * (_RAS_NPX - 1) + F.col("wx") + 1)
-            )
-            .cast("long")
-            .alias("ms_wsum"),
-        )
-    )
-    events_leg = (
-        erects.join(corner, ["min_lon", "min_lat"], "inner")
-        .withColumn(
-            "tile",
-            F.shiftright(F.col("min_lat") + C.LAT_OFFSET, _RAS_TILE_RES)
-            * C.Y_STRIDE
-            + F.shiftright(F.col("min_lon") + C.LON_OFFSET, _RAS_TILE_RES),
-        )
-        .join(ftile, "tile")
-        .join(mi, "tile")
-        .join(gj, "tile")
-        .join(lm, "tile")
-        .join(vsd, "tile")
-        .join(gin, "tile")
-        .join(dtile, "tile")
-        .join(d8t, "tile")
-        .join(wbt, "tile")
-        .join(eh, "tile")
-        .join(sat, "tile", "left")
-        .withColumn("sa_nonflat", F.coalesce("sa_nonflat", F.lit(0).cast("long")))
-        .withColumn("sa_flat0", F.coalesce("sa_flat0", F.lit(0).cast("long")))
-        .withColumn("sa_ssum", F.coalesce("sa_ssum", F.lit(0).cast("long")))
-        .withColumn("sa_smax", F.coalesce("sa_smax", F.lit(0).cast("long")))
-        .withColumn(
-            "sa_oct_sig", F.coalesce("sa_oct_sig", F.lit("0,0,0,0,0,0,0,0"))
-        )
-        .withColumn("sa_wsum", F.coalesce("sa_wsum", F.lit(0).cast("long")))
-        .join(mst, "tile", "left")
-        .withColumn("ms_cells", F.coalesce("ms_cells", F.lit(0).cast("long")))
-        .withColumn("ms_full", F.coalesce("ms_full", F.lit(0).cast("long")))
-        .withColumn("ms_segs", F.coalesce("ms_segs", F.lit(0).cast("long")))
-        .withColumn("ms_wsum", F.coalesce("ms_wsum", F.lit(0).cast("long")))
-        .select(
-            F.lit("events").alias("leg"),
-            "min_lon",
-            "min_lat",
-            "max_lon",
-            "max_lat",
-            "n_pixels",
-            "blob",
-            "blob_px",
-            "focal_total",
-            "focal_max",
-            "n_core",
-            "n_hot",
-            "z_max",
-            "mi_w",
-            "moran_i",
-            "geary_c",
-            "jc_bb",
-            "jc_ww",
-            "jc_bw",
-            "lq_n",
-            "lq_hh",
-            "lq_ll",
-            "lq_hl",
-            "lq_lh",
-            "lq_iso",
-            "lisa_num_str",
-            "vs_opx",
-            "vs_opy",
-            "vs_ntot",
-            "vs_n",
-            "vs_mass",
-            "gini_mass",
-            "gini",
-            "dt_sum",
-            "dt_max",
-            "dt_zeros",
-            "d8_flows",
-            "d8_pits",
-            "d8_dirw",
-            "d8_acc_sum",
-            "d8_acc_max",
-            "wb_nbas",
-            "wb_max",
-            "wb_wsum",
-            "eh_n",
-            "eh_s",
-            "eh_var18_str",
-            "eh_z",
-            "sa_nonflat",
-            "sa_flat0",
-            "sa_ssum",
-            "sa_smax",
-            "sa_oct_sig",
-            "sa_wsum",
-            "ms_cells",
-            "ms_full",
-            "ms_segs",
-            "ms_wsum",
-        )
-    )
-    return poly.unionByName(events_leg).orderBy("leg", "min_lon", "min_lat")
-
-
-# ---------------------------------------------------------------------------
-# image perceptual-hash near-dup (input-hint phash column; dedup tier)
-# ---------------------------------------------------------------------------
-
-def _sql_phash_near_dup() -> str:
-    ph = (
-        f"(({_EV_LAT}) + {C.LAT_OFFSET}) * {C.PHASH_LON_BASE}"
-        f" + (({_EV_LON}) + {C.LON_OFFSET})"
-    )
-    return f"""
-    WITH base AS (
-      SELECT event_id AS id, {ph} AS phash FROM events WHERE event_id < 2000
-    ),
-    u AS (
-      SELECT id, phash FROM base
-      UNION ALL
-      SELECT id + 1000000 AS id, xor(phash, 34) AS phash
-      FROM base WHERE id % 20 = 0
-    )
-    SELECT a.id AS id_a, b.id AS id_b,
-           CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
-    FROM u a JOIN u b ON a.id < b.id
-    WHERE bit_count(xor(a.phash, b.phash)) <= 3
-    ORDER BY id_a, id_b
-    """
-
-
-@register("phash_near_dup", _sql_phash_near_dup())
-def phash_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs by perceptual-hash Hamming distance
-    (the input hint's ``phash:int64`` column) via the generic
-    pigeonhole-banded ``hamming_near_pairs`` — the image-payload
-    sibling of SimHash text dedup. Duplicates are planted as bit-2/
-    bit-5 flips (hamming 2); the banding is a lossless prefilter, so
-    the oracle computes the spec directly (all-pairs at gate scale)."""
-    from ..operators.dedup import hamming_near_pairs
-
-    base = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000).select(
-        F.col("event_id").alias("id"),
-        C.pack_footprint(
-            C.derived_lat(F.col("event_id")), C.derived_lon(F.col("event_id"))
-        ).alias("phash"),
-    )
-    planted = base.filter(F.col("id") % 20 == 0).select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.col("phash").bitwiseXOR(F.lit(34)).alias("phash"),
-    )
-    u = base.unionByName(planted)
-    return (
-        hamming_near_pairs(u, "phash", "id", max_hamming=3)
-        .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _sql_stream_rasterize() -> str:
-    npx, pxe = _RAS_NPX, _RAS_PXE
-    return f"""
-    WITH px AS (
-      SELECT time_bucket(INTERVAL '5 minutes', ts) AS win_start,
-             (({_EV_LON}) + {C.LON_OFFSET}) // {pxe} AS gx,
-             (({_EV_LAT}) + {C.LAT_OFFSET}) // {pxe} AS gy
-      FROM events
-    )
-    SELECT win_start,
-           (gy // {npx}) * {C.Y_STRIDE} + (gx // {npx}) AS tile,
-           (gy % {npx}) * {npx} + (gx % {npx})          AS idx,
-           count(*) AS n
-    FROM px GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-    """
-
-
-@register("stream_rasterize", _sql_stream_rasterize())
-def stream_rasterize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 x raster: watermarked tumbling-window per-tile sparse
-    raster (streaming/incremental.streaming_rasterize — same plan batch
-    and streaming; the streamed variant is pytest-asserted equal)."""
-    from ..streaming.incremental import streaming_rasterize
-
-    ev = _t(spark, sf_dir, "events").select(
-        "ts",
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    return streaming_rasterize(
-        ev, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES
-    ).orderBy("win_start", "tile", "idx")
-
-
-def _sql_image_ahash() -> str:
-    """DuckDB twin of multimodal.ahash_stage + dhash_stage over the
-    deterministic fake-codec pixels (the same LCG first-principles
-    reconstruction as _multimodal_oracle): 8x8 nearest-neighbor samples
-    with a strict integer mean threshold (aHash) and 9x8 samples with
-    adjacent-column compares (dHash), both signed 64-bit packs."""
-    from ..datagen.synth import gen_images
-    from ..operators.multimodal import dct_basis
-
-    images = gen_images(500, seed=42)
-    meta = ",\n      ".join(
-        f"('{r.image_id}', {r.w}, {r.h}, {i})"
-        for i, r in enumerate(images.itertuples())
-    )
-    px = "CAST((k * 1103515245 + i * 12345 + 7) % 251 AS BIGINT)"
-    dctb_vals = ",\n      ".join(
-        f"({k}, {n}, {v})"
-        for k, row in enumerate(dct_basis())
-        for n, v in enumerate(row)
-    )
-    px32 = px.replace("k", "((r * h) // 32 * w + (c * w) // 32)")
-    pack = " + ".join(
-        f"(CASE WHEN 64 * s{b} > tot THEN {(1 << b) if b < 63 else -(1 << 63)} ELSE 0 END)"
-        for b in range(64)
-    )
-    sample_cols = ",\n           ".join(
-        f"max(CASE WHEN b = {b} THEN px END) AS s{b}" for b in range(64)
-    )
-    dk1 = "(((b // 8) * h) // 8 * w + ((b % 8) * w) // 9)"
-    dk2 = "(((b // 8) * h) // 8 * w + (((b % 8) + 1) * w) // 9)"
-    dbit = (
-        f"CASE WHEN {px.replace('k', dk1)} > {px.replace('k', dk2)} "
-        f"THEN CASE WHEN b = 63 THEN {-(1 << 63)} ELSE (1::BIGINT << b) END "
-        "ELSE 0 END"
-    )
-    return f"""
-    WITH meta(image_id, w, h, i) AS (VALUES
-      {meta}
-    ),
-    smp AS (
-      SELECT image_id,
-             b,
-             {px.replace('k', '(((b // 8) * h) // 8 * w + ((b % 8) * w) // 8)')} AS px
-      FROM meta, UNNEST(generate_series(0, 63)) AS t(b)
-    ),
-    wide AS (
-      SELECT image_id, sum(px) AS tot,
-           {sample_cols}
-      FROM smp GROUP BY image_id
-    ),
-    dh AS (
-      SELECT image_id, CAST(SUM({dbit}) AS BIGINT) AS dhash
-      FROM meta, UNNEST(generate_series(0, 63)) AS t(b)
-      GROUP BY image_id
-    ),
-    dctb(k, n, v) AS (VALUES
-      {dctb_vals}
-    ),
-    g32 AS (
-      SELECT image_id, rr.r AS r, cc.c AS c, {px32} AS px
-      FROM meta,
-           UNNEST(generate_series(0, 31)) AS rr(r),
-           UNNEST(generate_series(0, 31)) AS cc(c)
-    ),
-    dx AS (
-      -- first matmul C·P, restricted to the 8 low-frequency rows
-      SELECT g.image_id, d.k AS k, g.c AS c, SUM(d.v * g.px) AS v
-      FROM g32 g JOIN dctb d ON d.n = g.r
-      WHERE d.k < 8 GROUP BY 1, 2, 3
-    ),
-    dd AS (
-      -- second matmul (C·P)·Cᵀ, low-frequency columns only
-      SELECT x.image_id, x.k AS k, d.k AS l, SUM(x.v * d.v) AS v
-      FROM dx x JOIN dctb d ON d.n = x.c
-      WHERE d.k < 8 GROUP BY 1, 2, 3
-    ),
-    ac AS (
-      SELECT image_id, k * 8 + l AS b, v,
-             row_number() OVER (PARTITION BY image_id ORDER BY v) AS rn
-      FROM dd WHERE NOT (k = 0 AND l = 0)
-    ),
-    pmed AS (
-      SELECT image_id, max(CASE WHEN rn = 32 THEN v END) AS med
-      FROM ac GROUP BY image_id
-    ),
-    pdct AS (
-      SELECT ac.image_id,
-             CAST(COALESCE(SUM(CASE WHEN ac.v > pmed.med THEN
-                  CASE WHEN b = 63 THEN {-(1 << 63)}
-                       ELSE (1::BIGINT << b) END ELSE 0 END), 0) AS BIGINT)
-               AS phash_dct
-      FROM ac JOIN pmed USING (image_id) GROUP BY ac.image_id
-    )
-    SELECT wide.image_id, CAST({pack} AS BIGINT) AS ahash, dh.dhash AS dhash,
-           pdct.phash_dct AS phash_dct
-    FROM wide JOIN dh ON dh.image_id = wide.image_id
-    JOIN pdct ON pdct.image_id = wide.image_id
-    ORDER BY wide.image_id
-    """
-
-
-@register("image_ahash", _sql_image_ahash())
-def image_ahash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image perceptual hashes computed FROM PIXELS (decode -> 8x8
-    aHash + 9x8 dHash; multimodal.ahash_stage / dhash_stage) — the
-    producer end of the image-dedup chain (hash ->
-    hamming_near_pairs). Round 5 adds the frequency-domain member:
-    the DCT pHash (multimodal.phash_dct_stage — 32x32 grid,
-    fixed-point 2-D DCT-II over the SHARED integer basis, 8x8
-    low-frequency block, lower-median threshold; the producer of the
-    input-hint's phash:int64 column). Oracle rebuilds the fake-codec
-    pixels and ALL THREE hashes bit-for-bit in SQL — the DCT as two
-    matmul join-aggregates over the same basis VALUES."""
-    from ..datagen.synth import gen_images
-    from ..operators.multimodal import ahash_stage, dhash_stage, phash_dct_stage
-
-    imgs = spark.createDataFrame(gen_images(500, seed=42))
-    return (
-        phash_dct_stage(dhash_stage(ahash_stage(imgs)))
-        .select("image_id", "ahash", "dhash", "phash_dct")
-        .orderBy("image_id")
-    )
-
-
-def _sql_zonal_stats() -> str:
-    npx, pxe = _RAS_NPX, _RAS_PXE
-    half = pxe // 2
-    arms = []
-    for mp in fixture_regions():
-        ray = sql_raycast(mp, "lon", "lat")
-        arms.append(f"""
-        SELECT '{mp.region_id}' AS region_id,
-               CAST(count(*) AS BIGINT) AS n_pixels,
-               CAST(sum(v) AS BIGINT)   AS total,
-               min(lon) AS min_lon, min(lat) AS min_lat,
-               max(lon) AS max_lon, max(lat) AS max_lat
-        FROM ctr WHERE {ray}""")
-    body = "\n        UNION ALL\n".join(arms)
-    return f"""
-    WITH px AS (
-      SELECT (({_EV_LON}) + {C.LON_OFFSET}) // {pxe} AS gx,
-             (({_EV_LAT}) + {C.LAT_OFFSET}) // {pxe} AS gy,
-             count(*) AS v
-      FROM events GROUP BY 1, 2
-    ),
-    ctr AS (
-      SELECT gx * {pxe} + {half} - {C.LON_OFFSET} AS lon,
-             gy * {pxe} + {half} - {C.LAT_OFFSET} AS lat, v
-      FROM px
-    )
-    SELECT * FROM ({body})
-    WHERE n_pixels > 0
-    ORDER BY region_id
-    """
-
-
-@register("zonal_stats", _sql_zonal_stats())
-def zonal_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raster x vector zonal statistics: the events density raster fed
-    through the cell-prefilter spatial join, aggregated per fixture
-    region (operators/raster.zonal_stats — composition of the raster
-    grid and the broadcast cover join). Oracle re-bins the pixels and
-    ray-casts every pixel center against every region in SQL."""
-    from ..operators.raster import rasterize_points, zonal_stats
-
-    ev = _t(spark, sf_dir, "events").select(
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    r = rasterize_points(ev, tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES)
-    return zonal_stats(
-        r, fixture_regions(), tile_res=_RAS_TILE_RES, px_res=_RAS_PX_RES, buffer=0
-    ).orderBy("region_id")
-
-
-@register(
-    "dedup_keeper_quality",
-    f"""
-    WITH RECURSIVE und AS (
-      SELECT id_a AS a, id_b AS b FROM (
-        {_sql_jaccard_pairs(_sql_doc_union(100), 0.5, "id_a, id_b")}
-      )
-      UNION ALL
-      SELECT id_b, id_a FROM (
-        {_sql_jaccard_pairs(_sql_doc_union(100), 0.5, "id_a, id_b")}
-      )
-    ),
-    reach(id, r) AS (
-      SELECT a, a FROM und
-      UNION
-      SELECT u.a, r.r FROM und u JOIN reach r ON r.id = u.b
-    ),
-    comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-    sc AS (SELECT id, (id * 2654435761) % 1000003 AS score FROM comp),
-    k AS (
-      SELECT comp.c, sc.id,
-             row_number() OVER (PARTITION BY comp.c
-                                ORDER BY sc.score DESC, sc.id) AS rn
-      FROM comp JOIN sc USING (id)
-    )
-    SELECT comp.id, k.id AS keeper_id
-    FROM comp JOIN k ON k.c = comp.c AND k.rn = 1
-    ORDER BY comp.id
-    """,
-)
-def dedup_keeper_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted dedup keeper resolution: components over the
-    exact near-dup graph, keeper = argmax of a deterministic per-doc
-    score (id-derived so both engines compute it bit-identically; a
-    real pipeline passes its quality score column instead)."""
-    from ..operators.dedup import dedup_keepers_by_score, ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    u = d.select("doc_id", "text").unionByName(
-        d.filter(F.col("doc_id") % 7 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    pairs = ngram_jaccard_pairs(u, "text", "doc_id", n=3, threshold=0.5)
-    scores = u.select(
-        F.col("doc_id").alias("id"),
-        ((F.col("doc_id") * 2654435761) % 1000003).alias("score"),
-    )
-    return dedup_keepers_by_score(pairs, scores).orderBy("id")
-
-
-# NOTE (round 5): the former `quadkey_encode`, `cell_encode` and
-# `shard_path` queries were folded into `footprint_roundtrip` (every
-# scalar geo codec checked per row, one scan — the freed slot registers
-# `clip_to_tiles`); `token_count`/`text_quality`/
-# `lang_id`/`doc_fingerprint` into `text_features`. The driver gate
-# records at most 50 catalog rows (r04 captured exactly the first 50 of
-# 53 registered queries), so the catalog must stay <= 50 entries for
-# every operator to keep a driver-verified row.

@@ -546,20 +546,3 @@ def pbf_to_engine(
         ).alias("members"),
     )
     return base, ways.unionByName(rels)
-
-
-def read_pbf_tables(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(nodes, ways, relations) DataFrames in the reference projection
-    (/root/reference/src/osmpbf.rs:13-17): nodes (element_id, lat, lon);
-    ways (element_id, refs); relations (element_id, members, tags)."""
-    from pyspark.sql import functions as F
-
-    el = read_pbf_elements(spark, path)
-    nodes = el.filter(F.col("kind") == "node").select("element_id", "lat", "lon")
-    ways = el.filter(F.col("kind") == "way").select("element_id", "refs")
-    rels = el.filter(F.col("kind") == "relation").select(
-        "element_id", "members", "tags"
-    )
-    return nodes, ways, rels

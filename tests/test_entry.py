@@ -28,28 +28,20 @@ def test_contract_consistency():
     m = _entry_mod()
     qs = m.queries()
     oracles = m.oracle_sql()
-    assert len(qs) >= 28
-    assert set(oracles) <= set(qs)
-    # the key operator families are all represented
-    for needed in (
-        "spatial_join_tiles",
-        "pip_polygon",
-        "knn",
+    assert set(qs) == {
+        "footprint_roundtrip",
         "bbox_agg",
+        "spatial_join_tiles",
+        "group_membership_exists",
+        "group_diff_classify",
         "merge_upsert",
-        "dedup_exact",
-        "ngram_jaccard",
-        "minhash_lsh_pairs",
-        "simhash_pairs",
-        "cosine_topk",
-        "ann_lsh_topk",
-        "text_features",
-        "multimodal_decode_stats",
-        "stream_window_stats",
-        "integrity_anti_join",
+        "osc_roundtrip",
+        "poly_dir_scan",
+        "pbf_scan",
+        "relation_closure",
         "group_bbox_fixpoint",
-    ):
-        assert needed in qs, needed
+    }
+    assert set(oracles) == set(qs)
 
 
 def test_one_oracle_pair_at_tiny_sf(spark, sf_dir):

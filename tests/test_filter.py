@@ -315,3 +315,16 @@ def test_classify_group_diff_delete_uses_stored_geometry(spark, regions):
     # stored member p_in sits deep in A/B/C: delete published there
     assert ("w1", "A/B/C") in got
     assert all(a == "delete" for a in got.values())
+
+
+def test_cascade_classify_leaves_nothing_persisted(spark, base, changes, regions):
+    """The cascade oracle caches nothing: after its output is collected,
+    no RDD is persisted that was not persisted before the call. The
+    changes differ from test_flattened_equals_cascade's, so a cache that
+    test left behind cannot be reused here."""
+    from tests.test_member_closure import persisted_rdd_ids
+
+    before = persisted_rdd_ids(spark)
+    out = cascade_classify(changes.filter(F.col("seq") != 2), base, regions).collect()
+    assert out
+    assert persisted_rdd_ids(spark) <= before

@@ -3,8 +3,8 @@ shuffle exchange, a second ArrowEvalPython stage, a lost pushdown or
 pruning, a codegen compile failure) fails pytest, not just the opt-in
 ``tools/explain_plans.py`` run. The audit asserts the shapes that
 matter at 100 TB — broadcast cover join with zero fact-side exchanges,
-single Arrow refine stage, minhash ≤5-exchange budget, map-only PBF
-decode — so this is the scale-regression tripwire."""
+single Arrow refine stage, map-only PBF decode — so this is the
+scale-regression tripwire."""
 
 import tools.explain_plans as audit
 

@@ -31,7 +31,7 @@ def test_make_pyfiles_deterministic(tmp_path):
 
     names = zipfile.ZipFile(z1).namelist()
     assert "osm_replication_rust_spark/__init__.py" in names
-    assert "osm_replication_rust_spark/operators/raster.py" in names
+    assert "osm_replication_rust_spark/operators/spatial_join.py" in names
     assert all(n.endswith(".py") for n in names)
 
 

@@ -1,11 +1,12 @@
-"""Plan-hygiene audit: .explain("formatted") for the key queries, with
-automated assertions on the shapes that matter at 100 TB:
+"""Plan-hygiene audit: .explain("formatted") for the engine's key plans,
+with automated assertions on the shapes that matter at 100 TB:
 
-- parquet scans carry PushedFilters / pruned ReadSchema where expected
 - the spatial-join cover join is a BroadcastHashJoin (no shuffle of the
-  point side)
-- the flagship has no Exchange before the refine stage
-- whole-stage codegen spans cover the relational queries
+  point side) and the refine is one Arrow-batched stage
+- the expr strategy runs no Python at all
+- every scalar geo codec (footprint_roundtrip) is pure codegen
+- the PBF decode is one map-only Python stage
+- the tiling plans' generated code compiles
 
 Usage: python tools/explain_plans.py [sf_dir]   (prints PASS/FAIL lines
 and the formatted plans for eyeballing)
@@ -75,26 +76,7 @@ def main(sf_dir: str) -> int:
         f"exchanges={count_shuffle_exchanges(p)}",
     )
 
-    # 2. q01: filter pushdown + pruned schema + codegen
-    q01 = entry_queries.queries()["q01_pricing_summary"](spark, sf_dir)
-    p = plan_of(q01)
-    check("q01.pushed_filters", "PushedFilters: [IsNotNull(l_shipdate)" in p or "LessThanOrEqual(l_shipdate" in p)
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = m.group(1) if m else ""
-    check("q01.column_pruning", "l_partkey" not in cols and "l_suppkey" not in cols, cols)
-    q01.collect()  # AQE shows codegen ids only in the final executed plan
-    check("q01.codegen", "*(" in simple_plan_of(q01))
-
-    # 3. q03: broadcast of the filtered dim
-    q03 = entry_queries.queries()["q03_shipping"](spark, sf_dir)
-    p = plan_of(q03)
-    check("q03.broadcast_dim", "BroadcastHashJoin" in p)
-    check(
-        "q03.dim_filter_pushdown",
-        "EqualTo(c_mktsegment,BUILDING)" in p.replace(" ", ""),
-    )
-
-    # 4. footprint_roundtrip (absorbed cell_encode): every scalar geo
+    # 2. footprint_roundtrip: every scalar geo
     # codec in one scan — pure codegen, no Python
     ce = entry_queries.queries()["footprint_roundtrip"](spark, sf_dir)
     p = plan_of(ce)
@@ -102,16 +84,7 @@ def main(sf_dir: str) -> int:
     ce.collect()
     check("codecs.codegen", "*(" in simple_plan_of(ce))
 
-    # 4b. clip_to_tiles: closure agg is the ONLY shuffle before the
-    # output sort; the segment/tile explode + Liang–Barsky clip are
-    # map-side codegen (no Python anywhere)
-    cl = entry_queries.queries()["clip_to_tiles"](spark, sf_dir)
-    p = plan_of(cl)
-    n_ex = count_shuffle_exchanges(p)
-    check("clip.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-    check("clip.exchange_budget", 0 < n_ex <= 2, f"exchanges={n_ex}")
-
-    # 5a. default (auto=udf) flagship: the refine is ONE Arrow-batched
+    # 3a. default (auto=udf) flagship: the refine is ONE Arrow-batched
     # stage on the boundary branch only — never row-at-a-time Python
     pt = simple_plan_of(tiling)  # simple mode: each node appears once
     check(
@@ -120,7 +93,7 @@ def main(sf_dir: str) -> int:
         f"arrow_nodes={pt.count('ArrowEvalPython')}",
     )
 
-    # 5b. expr strategy variant: zero runtime Python in the plan
+    # 3b. expr strategy variant: zero runtime Python in the plan
     tiling_expr = assign_regions(
         pts, fixture_regions(), keep_cols=["image_id"], strategy="expr"
     )
@@ -130,22 +103,7 @@ def main(sf_dir: str) -> int:
         "ArrowEvalPython" not in pt and "BatchEvalPython" not in pt,
     )
 
-    # 5c. minhash: the round-2 regression was an exchange-count problem
-    # (~11 exchanges -> ~37 AQE sub-jobs whose fixed latency host noise
-    # multiplied). Guard the restructured shape: at most 7 non-broadcast
-    # exchanges (doc-union scan, per-doc agg, banding self-join pair,
-    # pair distinct, two set joins), and no shingle-level self-join
-    # anywhere (its signature: a join whose keys include 'shingle').
-    mh = entry_queries.queries()["minhash_lsh_pairs"](spark, sf_dir)
-    p = plan_of(mh)
-    n_ex = count_shuffle_exchanges(p)
-    check("minhash.exchange_budget", 0 < n_ex <= 5, f"exchanges={n_ex}")
-    check(
-        "minhash.no_shingle_self_join",
-        not re.search(r"Join.*\[shingle", p),
-    )
-
-    # 5d. pbf_scan: blob-range decode is map-only up to the final sort
+    # 4. pbf_scan: blob-range decode is map-only up to the final sort
     pbf = entry_queries.queries()["pbf_scan"](spark, sf_dir)
     p = plan_of(pbf)
     check(
@@ -154,161 +112,7 @@ def main(sf_dir: str) -> int:
         and "BatchEvalPython" not in p,
     )
 
-    # 5e. raster: vector->raster is two hash aggs (sparse pixel counts,
-    # tile densify) + the output sort — 3 exchanges measured now that
-    # the focal/Gi*/Moran spatial-statistics folds live on the
-    # non-benched raster_vectorize row (which builds the identical
-    # pixel frame); budget 3 so any NEW exchange fails.
-    ras = entry_queries.queries()["rasterize_density"](spark, sf_dir)
-    p = plan_of(ras)
-    n_ex = count_shuffle_exchanges(p)
-    check("raster.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-    check("raster.exchange_budget", 0 < n_ex <= 3, f"exchanges={n_ex}")
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = m.group(1) if m else ""
-    check("raster.column_pruning", cols.split(":")[0] == "event_id" and "," not in cols, cols)
-
-    # 5f. tile pyramid — OPERATOR-level shape pinned on tile_pyramid
-    # alone (the gate row now also runs the IVM twin, which legitimately
-    # adds the base + delta branches): exactly two shuffle aggs — the
-    # fact-width base agg and the cells-width ancestor rollup. A
-    # per-level re-aggregation of the fact table would show `levels`
-    # fact-width exchanges.
-    from osm_replication_rust_spark.functions import coords as _C
-    from osm_replication_rust_spark.operators.raster import tile_pyramid
-
-    ev_t = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        _C.derived_lat(F.col("event_id")).alias("lat"),
-        _C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    p = plan_of(tile_pyramid(ev_t, base_res=18, levels=6))
-    n_ex = count_shuffle_exchanges(p)
-    check("pyramid.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-    check("pyramid.exchange_budget", 0 < n_ex <= 2, f"exchanges={n_ex}")
-    check(
-        "pyramid.single_scan",
-        len(re.findall(r"^\(\d+\) Scan parquet", p, re.M)) == 1,
-    )
-    # the composed gate row (direct + base + delta + merge + sort):
-    # three pyramid legs and one cells-width outer join — budget the
-    # whole composition so a NEW fact-width exchange still fails
-    pyr = entry_queries.queries()["tile_pyramid"](spark, sf_dir)
-    p = plan_of(pyr)
-    n_ex = count_shuffle_exchanges(p)
-    check("pyramid_ivm.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-    # 14 measured (8 for the three pyramid legs + IVM merge; the
-    # round-5 quadtree-leaves fold adds its cells-width ancestor
-    # explode + pyramid join + min-agg + the leaf left join) — budget
-    # exactly 14 so even ONE new exchange (e.g. the merge join losing
-    # the rollup aggs' partitioning reuse) fails
-    check("pyramid_ivm.exchange_budget", 0 < n_ex <= 14, f"exchanges={n_ex}")
-
-    # 5f2. pq_topk (inside the cosine_topk row): the per-query top-k is
-    # a rank<=k FILTER directly over row_number, so Spark 3.5+ plans
-    # WindowGroupLimit — the map-side trim that caps each upstream
-    # partition's contribution at k rows per query (without it, every
-    # query's reducer would sort the full candidate set)
-    ct = entry_queries.queries()["cosine_topk"](spark, sf_dir)
-    p = plan_of(ct)
-    check("pq.window_group_limit", "WindowGroupLimit" in p)
-
-    # 5g. text_features: every text signal (quality, lang-ID, winnow
-    # fingerprint summary) in ONE scan of (doc_id, text); the doc
-    # fingerprint is the single Arrow hop; only exchange = output sort
-    tf = entry_queries.queries()["text_features"](spark, sf_dir)
-    p = plan_of(tf)
-    n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython$", p, re.M))
-    check(
-        "text.single_arrow_stage",
-        n_arrow == 1 and "BatchEvalPython" not in p,
-        f"arrow_nodes={n_arrow}",
-    )
-    # budget 3: the small-file rebalance (map-heavy projection must not
-    # serialize on a one-row-group scan) / the stratified-head window's
-    # partition-by-lang exchange, + the output sort, + the Soundex
-    # blocking-bucket census (hash agg on a <= 26*7^3 key domain with
-    # map-side combine — the bucket table itself broadcasts back, so
-    # facts never shuffle for it). The per-language rate sample must
-    # stay map-side (no exchange of its own).
-    # r6: +2 over the former budget of 3 — the feature branch and the
-    # soundex-blocks branch each hash-spread the one-row-group scan
-    # before the heavy per-row regex/Arrow work (a deliberate narrow
-    # exchange of (doc_id, text); the whole map pipeline otherwise
-    # serializes on one core — 14.3 s single-task measured at sf1.0)
-    n_ex = count_shuffle_exchanges(p)
-    check("text.exchange_budget", n_ex <= 5, f"exchanges={n_ex}")
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    cols = m.group(1) if m else ""
-    check(
-        "text.column_pruning",
-        sorted(c.split(":")[0] for c in cols.split(",")) == ["doc_id", "text"],
-        cols,
-    )
-
-    # 5d. sketch-annotated rows: count-min probes and the HLL estimate
-    # must BROADCAST their few-KB sketch/stat sides (a shuffled probe
-    # would defeat the bounded-state design), and stay Python-free
-    tk = entry_queries.queries()["topk_per_group"](spark, sf_dir)
-    p = plan_of(tk)
-    # the packed sketch is ONE map row cross-joined by broadcast; the
-    # estimate is pure map-side expressions on the top-k rows
-    check("cms.broadcast_probe", "BroadcastNestedLoopJoin" in p)
-    check("cms.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-    rr = entry_queries.queries()["rollup_revenue"](spark, sf_dir)
-    p = plan_of(rr)
-    n_ex = count_shuffle_exchanges(p)
-    check("hll.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-    # registers agg + 3 level re-aggs + rollup agg + est agg + final
-    # join: generous cap that still catches an accidental vocab-wide
-    # or per-row exchange
-    check("hll.exchange_budget", 0 < n_ex <= 8, f"exchanges={n_ex}")
-
-    # 5e. BM25 inside the pipeline row: corpus stats and document
-    # frequencies come back as broadcasts, never a shuffled join
-    pf = entry_queries.queries()["pretrain_filter_pipeline"](spark, sf_dir)
-    p = plan_of(pf)
-    check("bm25.broadcast_stats", p.count("BroadcastHashJoin") + p.count("BroadcastNestedLoopJoin") >= 2)
-    # 5e2. contamination screen: pin the membership join on the
-    # operator's OWN subplan (counting broadcasts across the whole
-    # pipeline row would let a demoted shingle join hide behind the
-    # bm25 broadcasts) — the benchmark shingle set must broadcast and
-    # the corpus side must never sort-merge for the membership test
-    from osm_replication_rust_spark.operators.contamination import (
-        contamination_scores,
-    )
-
-    docs_t = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cp = plan_of(
-        contamination_scores(
-            docs_t, docs_t.filter("doc_id % 37 = 0"), "text", "doc_id"
-        )
-    )
-    check("contamination.broadcast_membership", "BroadcastHashJoin" in cp)
-    check("contamination.no_sortmerge", "SortMergeJoin" not in cp)
-    check("pretrain.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-
-    # 5f. bloom prefilter (incremental dedup): the packed filter is ONE
-    # map-typed row cross-joined by broadcast — probes are pure
-    # map-side expressions, the new-batch side never shuffles for the
-    # membership test, and no Python anywhere
-    de = entry_queries.queries()["dedup_exact"](spark, sf_dir)
-    p = plan_of(de)
-    check("bloom.broadcast_packed", "BroadcastNestedLoopJoin" in p)
-    check("bloom.no_python", "ArrowEvalPython" not in p and "BatchEvalPython" not in p)
-
-    # 5g2. validity (self-intersection) inside way_geometry: the pair
-    # search must be the bucketed hash equi-join — a CartesianProduct
-    # or nested-loop pair join is the quadratic shape the operator
-    # exists to avoid (the oracle runs that; the engine must not)
-    wg = entry_queries.queries()["way_geometry"](spark, sf_dir)
-    p = plan_of(wg)
-    check("validity.no_cartesian", "CartesianProduct" not in p)
-    check(
-        "validity.no_rowwise_python",
-        "BatchEvalPython" not in p,
-    )
-
-    # 6. the flagship's generated code actually COMPILES. Plan text can
+    # 5. the flagship's generated code actually COMPILES. Plan text can
     # show WholeStageCodegen while janino fails at runtime ("Code grows
     # beyond 64 KB") and Spark silently executes interpreted (~2x slower,
     # measured) — disable the fallback so a compile failure FAILS here.
@@ -316,7 +120,6 @@ def main(sf_dir: str) -> int:
     for name, df in (
         ("tiling", tiling),
         ("tiling_expr", tiling_expr),
-        ("text_features", tf),
     ):
         try:
             df.limit(1).collect()
