@@ -113,9 +113,13 @@ def resolve_way_full(
     groups: DataFrame,
     points: DataFrame,
     point_id: str = "image_id",
+    keep_pos: bool = False,
 ) -> DataFrame:
     """(group_id, coords) with coords = ordered array<struct<lat,lon>>
-    of resolved member points (ways only). Order = member position."""
+    of resolved member points (ways only). Order = member position.
+    ``keep_pos=True`` keeps the original member position in each
+    element (struct<pos,lat,lon>) so downstream operators can refer
+    back to source members even when missing refs drop out."""
     edges = (
         groups.filter(F.col("kind") == "way")
         .select("group_id", F.posexplode("members").alias("pos", "m"))
@@ -133,10 +137,15 @@ def resolve_way_full(
     # one hash-agg instead of two window passes: collect (pos, pt)
     # pairs, sort by position, strip the position — order preserved,
     # one shuffle, map-side partial agg applies
+    elem = (
+        (lambda s: F.struct(s["pos"].alias("pos"), s["pt"]["lat"].alias("lat"), s["pt"]["lon"].alias("lon")))
+        if keep_pos
+        else (lambda s: s["pt"])
+    )
     return joined.groupBy("group_id").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("pos", "pt"))),
-            lambda s: s["pt"],
+            elem,
         ).alias("coords")
     )
 

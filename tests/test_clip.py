@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 from osm_replication_rust_spark.functions import coords as C
-from osm_replication_rust_spark.operators.clip import (
+from extra_ops.clip import (
     clip_ways_to_tiles,
     densify_segments,
     way_segments,
@@ -305,7 +305,7 @@ def test_tpa_matches_python_reference(spark):
         LAT_OFFSET,
         LON_OFFSET,
     )
-    from osm_replication_rust_spark.operators.clip import tile_polygon_areas
+    from extra_ops.clip import tile_polygon_areas
 
     rng = random.Random(9)
     rings = {}
@@ -353,7 +353,7 @@ def test_tpa_lattice_exact_partition_and_orientation(spark):
     """Crossings of axis-aligned rings land EXACTLY on the lattice, so
     the tile areas partition the ring area with zero error; reversing
     the ring negates every tile."""
-    from osm_replication_rust_spark.operators.clip import tile_polygon_areas
+    from extra_ops.clip import tile_polygon_areas
 
     e = 1 << _TPA_RES
     # CCW staircase spanning a 2x2 tile block, vertices at half-tile
@@ -381,7 +381,7 @@ def test_tpa_containment_cases(spark):
         LAT_OFFSET,
         LON_OFFSET,
     )
-    from osm_replication_rust_spark.operators.clip import tile_polygon_areas
+    from extra_ops.clip import tile_polygon_areas
 
     e = 1 << _TPA_RES
     q2 = (1 << _TPA_Q) ** 2
@@ -416,7 +416,7 @@ def test_tpa_containment_cases(spark):
 
 
 def test_tpa_guards(spark):
-    from osm_replication_rust_spark.operators.clip import tile_polygon_areas
+    from extra_ops.clip import tile_polygon_areas
 
     segs = _tpa_segs(spark, {"g": [(0, 0), (10, 0), (10, 10)]})
     with pytest.raises(ValueError, match="qshift"):
@@ -426,7 +426,7 @@ def test_tpa_guards(spark):
 
 
 def test_areal_transfer_exact_and_conserving(spark):
-    from osm_replication_rust_spark.operators.clip import (
+    from extra_ops.clip import (
         AREAL_K,
         areal_transfer,
         tile_polygon_areas,
@@ -469,7 +469,7 @@ def test_bearing_histogram_vs_atan2_reference(spark):
     import math
     import random
 
-    from osm_replication_rust_spark.operators.clip import bearing_histogram
+    from extra_ops.clip import bearing_histogram
 
     rng = random.Random(31)
     rows = []

@@ -1,15 +1,58 @@
-"""Codec tests: property-based (hypothesis, no Spark) checks that the
-geohash integer-bisection twin and the Hilbert automaton agree with
-independent scalar references on arbitrary inputs, plus Spark-form
-pins of the Hilbert column chain and its bound range-cover predicate."""
+"""Property-based codec tests (hypothesis, no Spark): the winnowing
+kernel chunker and the geohash integer-bisection twin must agree with
+independent scalar references on arbitrary inputs."""
 
+import numpy as np
+import pandas as pd
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from osm_replication_rust_spark.functions.coords import (
     GEOHASH_ALPHABET,
     py_geohash,
 )
+from extra_ops.dedup import (
+    WINNOW_BASE,
+    WINNOW_MOD,
+    WINNOW_PACK,
+    _winnow_chunks,
+)
+
+
+def _ref_winnow(text, k=5, w=4):
+    if len(text) < k:
+        return []
+    hs = []
+    for i in range(len(text) - k + 1):
+        h = ord(text[i])
+        for j in range(1, k):
+            h = (h * WINNOW_BASE + ord(text[i + j])) % WINNOW_MOD
+        hs.append(h)
+    out = set()
+    for p in range(1, max(len(hs) - w + 1, 1) + 1):
+        sl = hs[p - 1 : p - 1 + w]
+        m = min(sl)
+        j = p + len(sl) - 1 - sl[::-1].index(m)
+        out.add(j * WINNOW_PACK + m)
+    return sorted(out)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.text(
+            alphabet=st.characters(min_codepoint=1, max_codepoint=0x2FFF),
+            max_size=120,
+        ),
+        max_size=12,
+    )
+)
+def test_winnow_kernel_property(texts):
+    got = {}
+    for idx, S, keep in _winnow_chunks(pd.Series(texts, dtype=object), 5, 4):
+        for r, i in enumerate(idx):
+            got[int(i)] = sorted(S[r, keep[r]].tolist()) if S.shape[1] else []
+    for i, t in enumerate(texts):
+        assert got.get(i, []) == _ref_winnow(t), (i, t)
 
 
 def _float_bisect_geohash(lon_deg, lat_deg, chars=8):
@@ -181,56 +224,3 @@ def test_hilbert_ranges_cover_exactly(lon0, lat0, w_cells, h_cells):
     for lo, hi in budgeted:
         got_b.update(range(lo, hi + 1))
     assert got_b >= want
-
-
-def test_bound_cover_predicate_matches_plain(spark):
-    from osm_replication_rust_spark.functions.coords import (
-        hilbert_range_predicate,
-        hilbert_range_predicate_bound,
-    )
-
-    ranges = [(0, 4), (10, 10), (100, 199), (1 << 40, (1 << 40) + 7)]
-    probe = sorted(
-        {v for lo, hi in ranges for v in (lo - 1, lo, lo + 1, hi - 1, hi, hi + 1)}
-        | {0, 5, 50, 1 << 50}
-    )
-    df = spark.createDataFrame([(v,) for v in probe], "hil: long")
-    got = df.select(
-        "hil",
-        hilbert_range_predicate(F.col("hil"), ranges).alias("plain"),
-        hilbert_range_predicate_bound(F.col("hil"), ranges).alias("bound"),
-    ).collect()
-    for r in got:
-        assert r.plain == r.bound, f"hil={r.hil}: {r.plain} != {r.bound}"
-    assert any(r.plain for r in got) and not all(r.plain for r in got)
-
-
-def test_bound_cover_predicate_empty_ranges(spark):
-    from osm_replication_rust_spark.functions.coords import (
-        hilbert_range_predicate_bound,
-    )
-
-    df = spark.range(3).select(F.col("id").alias("hil"))
-    rows = df.select(
-        hilbert_range_predicate_bound(F.col("hil"), []).alias("b")
-    ).collect()
-    assert [r.b for r in rows] == [False, False, False]
-
-
-def test_with_hilbert_matches_reference_recurrence(spark):
-    from osm_replication_rust_spark.functions.coords import (
-        DEFAULT_RES,
-        HILBERT_LEVELS,
-        LAT_OFFSET,
-        LON_OFFSET,
-        with_hilbert,
-    )
-
-    pts = [(i, (i * 48271) % 44000001 - 22000000, (i * 69621) % 44000001 - 22000000)
-           for i in range(64)]
-    df = spark.createDataFrame(pts, "id: long, lat: long, lon: long")
-    out = with_hilbert(df, F.col("lon"), F.col("lat"), out="hil").collect()
-    for r in out:
-        x = (r.lon + LON_OFFSET) >> DEFAULT_RES
-        y = (r.lat + LAT_OFFSET) >> DEFAULT_RES
-        assert r.hil == _classic_xy2d(x, y, HILBERT_LEVELS), r.id

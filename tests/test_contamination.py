@@ -4,7 +4,7 @@ import re
 
 import pandas as pd
 
-from osm_replication_rust_spark.operators.contamination import contamination_scores
+from extra_ops.contamination import contamination_scores
 
 _WS = re.compile(r"\s+", re.ASCII)
 

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.dedup import (
+from extra_ops.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -117,7 +117,7 @@ def test_dedup_components_chain(spark):
     keeper = min id, across >1 propagation round (chain diameter 4)."""
     import pandas as pd
 
-    from osm_replication_rust_spark.operators.dedup import dedup_components
+    from extra_ops.dedup import dedup_components
 
     pairs = spark.createDataFrame(
         pd.DataFrame({"id_a": [10, 20, 30, 40, 100], "id_b": [20, 30, 40, 50, 101]})
@@ -146,7 +146,7 @@ def test_minhash_verify_modes_identical(spark, docs):
 def test_hamming_near_pairs_generic(spark):
     """hamming_near_pairs over a raw int64 column (image phash use):
     pigeonhole banding finds exactly the <=budget pairs."""
-    from osm_replication_rust_spark.operators.dedup import hamming_near_pairs
+    from extra_ops.dedup import hamming_near_pairs
 
     rows = [
         {"pid": 1, "ph": 0x0F0F0F0F0F0F0F0F},
@@ -167,7 +167,7 @@ def test_hamming_near_pairs_generic(spark):
 def test_dedup_keepers_by_score(spark):
     """Quality-weighted keeper: argmax score per component, ties by
     min id; every member of a component maps to the same keeper."""
-    from osm_replication_rust_spark.operators.dedup import dedup_keepers_by_score
+    from extra_ops.dedup import dedup_keepers_by_score
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
@@ -187,7 +187,7 @@ def test_dedup_keepers_by_score(spark):
 # winnowing fingerprints (MOSS)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.dedup import (  # noqa: E402
+from extra_ops.dedup import (  # noqa: E402
     WINNOW_BASE,
     WINNOW_MOD,
     WINNOW_PACK,
@@ -294,7 +294,7 @@ def test_winnow_hot_fp_cap(spark):
 def test_winnow_kernel_equals_hof(spark):
     """The Arrow-batched numpy kernel and the HOF-expression spelling
     (the DuckDB-oracle-grade form) select identical fingerprints."""
-    from osm_replication_rust_spark.operators.dedup import winnow_fps_udf
+    from extra_ops.dedup import winnow_fps_udf
 
     texts = _winnow_texts()
     df = spark.createDataFrame(list(enumerate(texts)), "id INT, txt STRING")
@@ -310,6 +310,19 @@ def test_winnow_kernel_equals_hof(spark):
     assert kern == hof
 
 
+#: JSONL round-trip hazard suffix: quote, backslash, newline, tab,
+#: BMP unicode (ü é €), an astral pair (𝄞 -> surrogate escaping), and a
+#: control byte — everything a JSON writer must escape and a reader
+#: must recover.
+_JSONL_SPECIALS = ' "\\\n\tüé€\U0001d11e\x01'
+
+#: CSV round-trip hazard suffix: comma, RFC-doubled quotes, newline,
+#: tab, semicolon, BMP unicode, and EDGE SPACES (the classic CSV
+#: reader trim hazard — Spark's read-side ignore*WhiteSpace must be
+#: disabled to round-trip).
+_CSV_SPECIALS = ' ,"q"\n\t;é€ '
+
+
 def test_jsonl_roundtrip_duckdb_parses_spark_bytes(spark, tmp_path):
     """Spark writes JSONL with every escaping hazard planted; DuckDB
     parses the SAME file bytes and lands on identical (doc_id, text)
@@ -318,8 +331,6 @@ def test_jsonl_roundtrip_duckdb_parses_spark_bytes(spark, tmp_path):
 
     duckdb = pytest.importorskip("duckdb")
     from pyspark.sql import functions as F
-
-    from osm_replication_rust_spark.plans.entry_queries import _JSONL_SPECIALS
 
     rows = [
         (1, "plain ascii"),
@@ -359,8 +370,6 @@ def test_csv_roundtrip_duckdb_parses_spark_bytes(spark, tmp_path):
     import glob
 
     duckdb = pytest.importorskip("duckdb")
-
-    from osm_replication_rust_spark.plans.entry_queries import _CSV_SPECIALS
 
     rows = [
         (1, "plain ascii"),

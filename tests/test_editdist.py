@@ -3,7 +3,7 @@ vs brute-force Levenshtein, short-pool routing, skew valve."""
 
 import pytest
 
-from osm_replication_rust_spark.operators.dedup import edit_distance_pairs
+from extra_ops.dedup import edit_distance_pairs
 
 
 def _lev(a, b):
@@ -101,7 +101,7 @@ def test_param_validation(spark):
 
 def test_duckdb_twin_parity(spark):
     duckdb = pytest.importorskip("duckdb")
-    from osm_replication_rust_spark.operators.dedup import (
+    from extra_ops.dedup import (
         sql_edit_distance_pairs,
     )
 

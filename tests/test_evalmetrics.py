@@ -5,7 +5,7 @@ from fractions import Fraction
 
 import pytest
 
-from osm_replication_rust_spark.operators.evalmetrics import chi2_2x2, roc_auc
+from extra_ops.evalmetrics import chi2_2x2, roc_auc
 
 
 def _ref_auc(pairs):
@@ -116,7 +116,7 @@ def test_auc_duckdb_twin_parity(spark):
     """The generated CTE chain must be valid DuckDB and bit-match the
     Spark columns (digit strings AND the float)."""
     duckdb = pytest.importorskip("duckdb")
-    from osm_replication_rust_spark.operators.evalmetrics import (
+    from extra_ops.evalmetrics import (
         sql_chi2_2x2,
         sql_roc_auc_ctes,
     )
@@ -175,7 +175,7 @@ def _ref_ks(pairs):
 
 
 def test_ks_matches_bruteforce(spark):
-    from osm_replication_rust_spark.operators.evalmetrics import ks_2samp
+    from extra_ops.evalmetrics import ks_2samp
     from pyspark.sql import functions as F
 
     g = _lcg(31)
@@ -194,7 +194,7 @@ def test_ks_matches_bruteforce(spark):
 
 
 def test_ks_identical_and_disjoint_and_empty(spark):
-    from osm_replication_rust_spark.operators.evalmetrics import ks_2samp
+    from extra_ops.evalmetrics import ks_2samp
     from pyspark.sql import functions as F
 
     same = [(v % 7, t == 1) for v in range(70) for t in (0, 1)]
@@ -213,7 +213,7 @@ def test_ks_identical_and_disjoint_and_empty(spark):
 
 def test_ks_duckdb_twin_parity(spark):
     duckdb = pytest.importorskip("duckdb")
-    from osm_replication_rust_spark.operators.evalmetrics import (
+    from extra_ops.evalmetrics import (
         ks_2samp,
         sql_ks_2samp_ctes,
     )
@@ -250,7 +250,7 @@ def test_first_digit_screen_matches_reference(spark):
 
     import numpy as np
 
-    from osm_replication_rust_spark.operators.evalmetrics import (
+    from extra_ops.evalmetrics import (
         first_digit_screen,
     )
 
@@ -273,7 +273,7 @@ def test_first_digit_screen_contracts(spark):
     """A perfectly digit-uniform population scores exactly 0; a
     single-digit pile scores the closed form; an empty population
     gives NULL chi-square and zero counts."""
-    from osm_replication_rust_spark.operators.evalmetrics import (
+    from extra_ops.evalmetrics import (
         first_digit_screen,
     )
 
@@ -313,7 +313,7 @@ def _ref_spearman(pairs):
 
 
 def test_spearman_matches_bruteforce_with_ties(spark):
-    from osm_replication_rust_spark.operators.evalmetrics import spearman
+    from extra_ops.evalmetrics import spearman
 
     g = _lcg(31)
     # tiny domains so midrank ties are heavy on both sides
@@ -333,7 +333,7 @@ def test_spearman_matches_bruteforce_with_ties(spark):
 
 
 def test_spearman_contracts(spark):
-    from osm_replication_rust_spark.operators.evalmetrics import spearman
+    from extra_ops.evalmetrics import spearman
 
     # perfect monotone (with ties broken consistently) => rho = 1
     inc = [(i, i * i) for i in range(50)]
@@ -356,7 +356,7 @@ def test_spearman_contracts(spark):
 
 
 def test_spearman_grouped(spark):
-    from osm_replication_rust_spark.operators.evalmetrics import spearman
+    from extra_ops.evalmetrics import spearman
 
     g = _lcg(37)
     rows = []
@@ -380,7 +380,7 @@ def test_spearman_grouped(spark):
 
 def test_spearman_duckdb_twin_parity(spark):
     duckdb = pytest.importorskip("duckdb")
-    from osm_replication_rust_spark.operators.evalmetrics import (
+    from extra_ops.evalmetrics import (
         spearman,
         sql_spearman_ctes,
     )
@@ -421,7 +421,7 @@ def test_spearman_duckdb_twin_parity(spark):
 
 from fractions import Fraction
 
-from osm_replication_rust_spark.operators.evalmetrics import average_precision
+from extra_ops.evalmetrics import average_precision
 
 
 def _ap_python(gts, dets, thr_num=1, thr_den=2):
@@ -539,7 +539,7 @@ def test_ap_random_matches_python(spark):
 # expected calibration error (evalmetrics.ece_quantized)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.evalmetrics import (
+from extra_ops.evalmetrics import (
     ece_quantized,
     sql_ece_ctes,
 )

@@ -5,7 +5,7 @@ from collections import deque
 import numpy as np
 import pytest
 
-from osm_replication_rust_spark.operators.graph import hop_distances
+from extra_ops.graph import hop_distances
 
 
 def _dfs(spark, edges, sources):
@@ -115,8 +115,8 @@ def _cc_ref(edges, nodes):
 
 
 def test_pointer_jump_matches_dedup_components_random(spark):
-    from osm_replication_rust_spark.operators.dedup import dedup_components
-    from osm_replication_rust_spark.operators.graph import components_pointer_jump
+    from extra_ops.dedup import dedup_components
+    from extra_ops.graph import components_pointer_jump
 
     rng = np.random.default_rng(7)
     for trial in range(3):
@@ -141,7 +141,7 @@ def test_pointer_jump_matches_dedup_components_random(spark):
 def test_pointer_jump_long_path_log_rounds(spark):
     """A 200-node path has diameter 199: plain propagation needs ~200
     rounds, pointer jumping must finish well inside 16."""
-    from osm_replication_rust_spark.operators.graph import components_pointer_jump
+    from extra_ops.graph import components_pointer_jump
 
     edges = [(i, i + 1) for i in range(200)]
     e = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -150,7 +150,7 @@ def test_pointer_jump_long_path_log_rounds(spark):
 
 
 def test_pointer_jump_nonconvergence_raises(spark):
-    from osm_replication_rust_spark.operators.graph import components_pointer_jump
+    from extra_ops.graph import components_pointer_jump
 
     edges = [(i, i + 1) for i in range(40)]
     e = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -186,7 +186,7 @@ def _dijkstra(edges, sources):
 
 
 def test_weighted_distances_shapes(spark):
-    from osm_replication_rust_spark.operators.graph import weighted_distances
+    from extra_ops.graph import weighted_distances
 
     # weighted shortcut: a-b-c each weight 1 beats the direct a-c of 5
     edges = [("a", "b", 1), ("b", "c", 1), ("a", "c", 5)]
@@ -206,7 +206,7 @@ def test_weighted_distances_shapes(spark):
 def test_weighted_distances_random_dijkstra_parity(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.graph import weighted_distances
+    from extra_ops.graph import weighted_distances
 
     rng = np.random.default_rng(11)
     n = 40
@@ -225,7 +225,7 @@ def test_weighted_distances_random_dijkstra_parity(spark):
 
 
 def test_weighted_distances_guards(spark):
-    from osm_replication_rust_spark.operators.graph import weighted_distances
+    from extra_ops.graph import weighted_distances
 
     e = spark.createDataFrame([("a", "b", -1)], "a string, b string, w long")
     s = spark.createDataFrame([("a",)], "node_id string")
@@ -241,7 +241,7 @@ def test_weighted_distances_guards(spark):
 
 
 def test_weighted_distances_null_weight_raises(spark):
-    from osm_replication_rust_spark.operators.graph import weighted_distances
+    from extra_ops.graph import weighted_distances
 
     e = spark.createDataFrame(
         [("a", "b", 1), ("b", "c", None)], "a string, b string, w long"
@@ -282,7 +282,7 @@ def _kruskal(edges):
 
 
 def test_msf_matches_kruskal_random(spark):
-    from osm_replication_rust_spark.operators.graph import minimum_spanning_forest
+    from extra_ops.graph import minimum_spanning_forest
 
     rng = np.random.default_rng(23)
     for trial in range(3):
@@ -301,7 +301,7 @@ def test_msf_matches_kruskal_random(spark):
 
 
 def test_msf_shapes_and_disconnected(spark):
-    from osm_replication_rust_spark.operators.graph import minimum_spanning_forest
+    from extra_ops.graph import minimum_spanning_forest
 
     # triangle with a heavy edge + an island pair + self loop + dup edge
     edges = [
@@ -348,7 +348,7 @@ def _tri_ref(edges):
 
 
 def test_triangle_counts_shapes(spark):
-    from osm_replication_rust_spark.operators.graph import triangle_counts
+    from extra_ops.graph import triangle_counts
 
     # triangle + pendant + island edge + self loop + duplicate edge
     edges = [
@@ -366,7 +366,7 @@ def test_triangle_counts_shapes(spark):
 
 
 def test_triangle_counts_k4_and_two_triangles_sharing_edge(spark):
-    from osm_replication_rust_spark.operators.graph import triangle_counts
+    from extra_ops.graph import triangle_counts
 
     # K4: every vertex in C(3,2)=3 triangles, 4 triangles total
     k4 = [(a, b) for i, a in enumerate("pqrs") for b in "pqrs"[i + 1:]]
@@ -382,7 +382,7 @@ def test_triangle_counts_k4_and_two_triangles_sharing_edge(spark):
 
 
 def test_triangle_counts_random_matches_reference(spark):
-    from osm_replication_rust_spark.operators.graph import triangle_counts
+    from extra_ops.graph import triangle_counts
 
     rng = np.random.default_rng(31)
     for trial in range(3):
@@ -419,7 +419,7 @@ def _pr_ref(edges, iters, scale=10**12, num=85, den=100):
 
 
 def test_pagerank_star_sink_and_dangling(spark):
-    from osm_replication_rust_spark.operators.graph import pagerank
+    from extra_ops.graph import pagerank
 
     # all points into "hub": hub accumulates, spokes keep teleport-only
     edges = [(f"s{i}", "hub") for i in range(5)]
@@ -433,7 +433,7 @@ def test_pagerank_star_sink_and_dangling(spark):
 
 
 def test_pagerank_cycle_uniform_and_selfloop_dup(spark):
-    from osm_replication_rust_spark.operators.graph import pagerank
+    from extra_ops.graph import pagerank
 
     # directed 4-cycle is rank-symmetric: all equal at every iteration
     cyc = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")]
@@ -450,7 +450,7 @@ def test_pagerank_cycle_uniform_and_selfloop_dup(spark):
 
 
 def test_pagerank_random_matches_reference(spark):
-    from osm_replication_rust_spark.operators.graph import pagerank
+    from extra_ops.graph import pagerank
 
     rng = np.random.default_rng(37)
     for iters in (1, 3):
@@ -465,7 +465,7 @@ def test_pagerank_random_matches_reference(spark):
 def test_pagerank_guards(spark):
     import pytest
 
-    from osm_replication_rust_spark.operators.graph import pagerank
+    from extra_ops.graph import pagerank
 
     e = spark.createDataFrame([("a", "b")], "a string, b string")
     with pytest.raises(ValueError, match="iters"):
@@ -500,7 +500,7 @@ def _kcore_ref(edges, k):
 
 
 def test_k_core_shapes(spark):
-    from osm_replication_rust_spark.operators.graph import k_core
+    from extra_ops.graph import k_core
 
     # K4 with a pendant chain: 3-core = the K4, chain peels away
     edges = [(a, b) for i, a in enumerate("pqrs") for b in "pqrs"[i + 1:]]
@@ -521,7 +521,7 @@ def test_k_core_shapes(spark):
 
 
 def test_k_core_onion_layers_random(spark):
-    from osm_replication_rust_spark.operators.graph import k_core
+    from extra_ops.graph import k_core
 
     rng = np.random.default_rng(41)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 50, size=(220, 2))]
@@ -532,7 +532,7 @@ def test_k_core_onion_layers_random(spark):
 
 
 def test_k_core_guards(spark):
-    from osm_replication_rust_spark.operators.graph import k_core
+    from extra_ops.graph import k_core
 
     e = spark.createDataFrame([("a", "b")], "a string, b string")
     with pytest.raises(ValueError, match="k >= 1"):
@@ -569,7 +569,7 @@ def _ktruss_ref(edges, k):
 
 
 def test_k_truss_shapes(spark):
-    from osm_replication_rust_spark.operators.graph import k_truss
+    from extra_ops.graph import k_truss
 
     # K5: every edge sits in 3 triangles -> survives k <= 5, dies at 6
     k5 = [(a, b) for i, a in enumerate("pqrst") for b in "pqrst"[i + 1:]]
@@ -599,7 +599,7 @@ def test_k_truss_shapes(spark):
 
 
 def test_k_truss_random_matches_reference(spark):
-    from osm_replication_rust_spark.operators.graph import k_truss
+    from extra_ops.graph import k_truss
 
     rng = np.random.default_rng(47)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 30, size=(160, 2))]
@@ -610,7 +610,7 @@ def test_k_truss_random_matches_reference(spark):
 
 
 def test_k_truss_guards(spark):
-    from osm_replication_rust_spark.operators.graph import k_truss
+    from extra_ops.graph import k_truss
 
     e = spark.createDataFrame([("a", "b")], "a string, b string")
     with pytest.raises(ValueError, match="k >= 2"):
@@ -652,7 +652,7 @@ def _assort_ref(edges):
 def test_assortativity_star_cycle_random(spark):
     from fractions import Fraction
 
-    from osm_replication_rust_spark.operators.graph import assortativity
+    from extra_ops.graph import assortativity
 
     # star K1,5: perfectly disassortative, r = -1 exactly
     star = [("hub", f"s{i}") for i in range(5)]
@@ -711,7 +711,7 @@ def _lp_ref(edges):
 
 
 def test_link_prediction_shapes(spark):
-    from osm_replication_rust_spark.operators.graph import link_prediction
+    from extra_ops.graph import link_prediction
 
     # path a-b-c: one candidate (a, c) via center b; N(a)=N(c)={b}
     e = spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string")
@@ -739,7 +739,7 @@ def test_link_prediction_shapes(spark):
 
 
 def test_link_prediction_random_matches_reference(spark):
-    from osm_replication_rust_spark.operators.graph import link_prediction
+    from extra_ops.graph import link_prediction
 
     rng = np.random.default_rng(7)
     n, m = 30, 120
@@ -753,7 +753,7 @@ def test_link_prediction_random_matches_reference(spark):
 
 
 def test_link_prediction_max_degree_cap(spark):
-    from osm_replication_rust_spark.operators.graph import link_prediction
+    from extra_ops.graph import link_prediction
 
     # star hub h with leaves l0..l4 plus a path l0-p-l1: uncapped, the
     # hub is a center connecting every leaf pair; capped below the
@@ -777,7 +777,7 @@ def test_link_prediction_max_degree_cap(spark):
 def test_transitivity_known_shapes(spark):
     from fractions import Fraction
 
-    from osm_replication_rust_spark.operators.graph import (
+    from extra_ops.graph import (
         transitivity_stats,
         triangle_counts,
     )
@@ -856,7 +856,7 @@ def _kosaraju(edges):
 def test_scc_matches_kosaraju_on_random_digraphs(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.graph import scc
+    from extra_ops.graph import scc
 
     rng = np.random.default_rng(101)
     for n, m in ((30, 45), (40, 90), (25, 20)):
@@ -873,7 +873,7 @@ def test_scc_matches_kosaraju_on_random_digraphs(spark):
 
 
 def test_scc_planted_structures(spark):
-    from osm_replication_rust_spark.operators.graph import scc
+    from extra_ops.graph import scc
 
     # two directed cycles bridged one-way + a tail: SCCs {0,1,2},
     # {10,11}, {20}, {21}

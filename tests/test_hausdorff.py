@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.hausdorff import (
+from extra_ops.hausdorff import (
     chain_hausdorff_d2,
     chain_segments,
     directed_hausdorff_d2,
@@ -105,10 +105,8 @@ def test_dp_error_bound_property(spark):
     # within eps of the SIMPLIFIED polyline -> chain Hausdorff <= eps^2
     from osm_replication_rust_spark.datagen.synth import gen_groups, gen_images
     from osm_replication_rust_spark.functions import coords as C
-    from osm_replication_rust_spark.operators.resolve import (
-        resolve_way_full,
-        simplify_ways,
-    )
+    from extra_ops.way_geometry import simplify_ways
+    from osm_replication_rust_spark.operators.resolve import resolve_way_full
 
     images = gen_images(120, seed=11)
     base = spark.createDataFrame(images[["image_id", "phash"]]).select(

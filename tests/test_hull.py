@@ -11,7 +11,7 @@ from fractions import Fraction
 
 import pytest
 
-from osm_replication_rust_spark.operators.hull import (
+from extra_ops.hull import (
     global_hull,
     hull_area2,
     hull_ccw,
@@ -154,7 +154,7 @@ def test_hull_centroid_invariance_under_translation():
 def test_convex_hull_stats_spark(spark):
     """Distributed per-way hulls == driver-side kernel on the resolved
     chains; zero-coordinate ways drop (inner-join semantics)."""
-    from osm_replication_rust_spark.operators.hull import convex_hull_stats
+    from extra_ops.hull import convex_hull_stats
 
     groups = spark.createDataFrame(
         [
@@ -210,7 +210,7 @@ def test_hull_diam2_matches_brute_all_pairs():
     collinear and duplicate-heavy ones; values past 2^63 stay exact."""
     import numpy as np
 
-    from osm_replication_rust_spark.operators.hull import hull_ccw, hull_diam2
+    from extra_ops.hull import hull_ccw, hull_diam2
 
     rng = np.random.default_rng(7)
     for trial in range(5):
@@ -237,7 +237,7 @@ def test_hull_diam2_matches_brute_all_pairs():
 
 
 def test_hull_mbr_area_known_shapes():
-    from osm_replication_rust_spark.operators.hull import hull_ccw, hull_mbr_area
+    from extra_ops.hull import hull_ccw, hull_mbr_area
 
     # axis-aligned unit square: MBR is the square itself
     sq = hull_ccw([(0, 0), (10, 0), (10, 10), (0, 10)])
@@ -258,7 +258,7 @@ def test_hull_mbr_area_is_min_over_rotations():
     import math
     import random
 
-    from osm_replication_rust_spark.operators.hull import hull_ccw, hull_mbr_area
+    from extra_ops.hull import hull_ccw, hull_mbr_area
 
     rng = random.Random(5)
     pts = [(rng.randrange(-1000, 1000), rng.randrange(-1000, 1000))

@@ -8,7 +8,7 @@ from fractions import Fraction
 
 import pytest
 
-from osm_replication_rust_spark.operators.iou import iou_match, iou_pairs
+from extra_ops.iou import iou_match, iou_pairs
 
 
 def _boxes_df(spark, rows):

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.similarity import (
+from extra_ops.similarity import (
     cosine_topk_bruteforce,
     embedding_near_dup_pairs,
     ivf_topk,
@@ -88,7 +88,7 @@ def test_lloyd_refine_matches_numpy_and_improves_cost(spark, clustered_items):
     reference (assignment by exact int L2, floor-divided integer means,
     empty clusters keep their seed), and must not increase quantization
     cost on the clustered fixture (Lloyd's monotonicity)."""
-    from osm_replication_rust_spark.operators.similarity import (
+    from extra_ops.similarity import (
         _emb_matrix,
         _quantize,
         lloyd_refine_centroids,

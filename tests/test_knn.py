@@ -4,7 +4,7 @@ import pandas as pd
 import numpy as np
 import pytest
 
-from osm_replication_rust_spark.operators.knn import knn_bruteforce, knn_cell_ring
+from extra_ops.knn import knn_bruteforce, knn_cell_ring
 
 M = 1_000_000
 
@@ -107,7 +107,7 @@ def _brute_counts(qdf, pdf, eps):
     (3_000_000, 23),  # same eps, coarser grid: 3x3 disk
 ])
 def test_eps_counts_match_bruteforce(spark, pts, qry, eps, res):
-    from osm_replication_rust_spark.operators.knn import eps_neighbor_counts
+    from extra_ops.knn import eps_neighbor_counts
 
     got = {
         int(r.query_id): r.n_eps
@@ -117,7 +117,7 @@ def test_eps_counts_match_bruteforce(spark, pts, qry, eps, res):
 
 
 def test_eps_counts_zero_and_boundary(spark):
-    from osm_replication_rust_spark.operators.knn import eps_neighbor_counts
+    from extra_ops.knn import eps_neighbor_counts
 
     p = spark.createDataFrame(
         [(1, 0, 0), (2, 0, 1000), (3, 700, 700)],
@@ -134,7 +134,7 @@ def test_eps_counts_zero_and_boundary(spark):
 
 
 def test_eps_counts_fanout_guard(spark, pts, qry):
-    from osm_replication_rust_spark.operators.knn import eps_neighbor_counts
+    from extra_ops.knn import eps_neighbor_counts
 
     with pytest.raises(ValueError):
         eps_neighbor_counts(qry, pts, eps=100 * M, res=10)
@@ -143,7 +143,7 @@ def test_eps_counts_fanout_guard(spark, pts, qry):
 
 
 def test_eps_counts_overflow_guard(spark, pts, qry):
-    from osm_replication_rust_spark.operators.knn import eps_neighbor_counts
+    from extra_ops.knn import eps_neighbor_counts
 
     # passes the fan-out guard (s=6 -> 169 cells) but a joined pair can
     # be 7 cells ~ 3.7e9 apart per axis: dist2 would wrap int64
@@ -157,7 +157,7 @@ def test_idw_matches_integer_reference(spark):
     import numpy as np
     from fractions import Fraction
 
-    from osm_replication_rust_spark.operators.knn import IDW_SCALE_K, idw_interpolate
+    from extra_ops.knn import IDW_SCALE_K, idw_interpolate
 
     rng = np.random.default_rng(5)
     pts = [
@@ -201,7 +201,7 @@ def test_idw_matches_integer_reference(spark):
 
 
 def test_idw_empty_disk_null(spark):
-    from osm_replication_rust_spark.operators.knn import idw_interpolate
+    from extra_ops.knn import idw_interpolate
 
     p = spark.createDataFrame([(0, 0, 7)], "lat long, lon long, v long")
     q = spark.createDataFrame([(1, 40_000_000, 40_000_000)],
@@ -258,7 +258,7 @@ def _ref_dbscan(pts, eps, min_pts):
 def test_dbscan_matches_reference_across_regimes(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.knn import dbscan
+    from extra_ops.knn import dbscan
 
     rng = np.random.default_rng(17)
     # clustered blobs + scattered noise
@@ -286,7 +286,7 @@ def test_dbscan_matches_reference_across_regimes(spark):
 
 
 def test_dbscan_all_noise_and_validation(spark):
-    from osm_replication_rust_spark.operators.knn import dbscan
+    from extra_ops.knn import dbscan
 
     df = spark.createDataFrame(
         [(1, 0, 0), (2, 20_000_000, 20_000_000)],
@@ -303,7 +303,7 @@ def test_dbscan_all_noise_and_validation(spark):
 def test_ripley_k_matches_bruteforce(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.knn import ripley_k
+    from extra_ops.knn import ripley_k
 
     rng = np.random.default_rng(7)
     pts = [
@@ -335,7 +335,7 @@ def test_ripley_k_matches_bruteforce(spark):
 def test_semivariogram_matches_bruteforce(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.knn import semivariogram
+    from extra_ops.knn import semivariogram
 
     rng = np.random.default_rng(11)
     pts = [

@@ -5,7 +5,7 @@ import itertools
 
 import pytest
 
-from osm_replication_rust_spark.operators.mapmatch import (
+from extra_ops.mapmatch import (
     hmm_candidates,
     hmm_map_match,
     sql_hmm_ctes,
@@ -202,38 +202,6 @@ def test_duckdb_twin_parity(spark):
             way, pos, rnk, e,
         )
         assert (r["mm_cost"], r["mm_switches"]) == (cost, sw)
-
-
-def test_oracle_segment_values_match_way_segments(spark):
-    """Drift guard: the pandas VALUES twin the sessionize oracle embeds
-    must equal clip.way_segments over the same raw closure fixture."""
-    import re
-
-    from osm_replication_rust_spark.datagen.synth import gen_groups, gen_images
-    from osm_replication_rust_spark.functions import coords as C
-    from osm_replication_rust_spark.operators.clip import way_segments
-    from osm_replication_rust_spark.plans.entry_queries import (
-        _mm_segments_values,
-    )
-    from pyspark.sql import functions as F
-
-    images = gen_images(300, seed=42)
-    base = spark.createDataFrame(images[["image_id", "phash"]]).select(
-        "image_id",
-        C.unpack_lat(F.col("phash")).alias("lat"),
-        C.unpack_lon(F.col("phash")).alias("lon"),
-    )
-    segs = way_segments(spark.createDataFrame(gen_groups(images)), base)
-    got = {
-        (r["group_id"], r["pos"], r["x1"], r["y1"], r["x2"], r["y2"])
-        for r in segs.collect()
-    }
-    pat = re.compile(r"\('([^']+)', (-?\d+), (-?\d+), (-?\d+), (-?\d+), (-?\d+)\)")
-    want = {
-        (m[0], int(m[1]), int(m[2]), int(m[3]), int(m[4]), int(m[5]))
-        for m in pat.findall(_mm_segments_values())
-    }
-    assert want == got and len(want) > 30
 
 
 def test_second_best_cost_matches_enumeration(spark):

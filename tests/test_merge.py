@@ -384,19 +384,3 @@ def test_remove_orphans_reclaims_unpublished_snapshots_only(spark, tmp_path):
     assert {r.image_id for r in store.current().collect()} == {
         f"k{i:02d}" for i in range(20)
     }
-
-
-def test_time_travel(spark, tmp_path):
-    base = spark.createDataFrame(pd.DataFrame({"image_id": ["a"], "caption": ["c0"], "phash": [1]}))
-    store = TableStore(spark, str(tmp_path / "t"))
-    store.init(base)
-    ch = spark.createDataFrame(
-        pd.DataFrame({"image_id": ["a"], "action": ["modify"], "seq": [0], "new_caption": ["c1"], "new_phash": [None]}).astype({"new_phash": "object"})
-    )
-    store.apply_batch(3, ch)
-    assert store.as_of(0).collect()[0].caption == "c0"
-    assert store.as_of(2).collect()[0].caption == "c0"  # newest <= 2 is v0
-    assert store.as_of(3).collect()[0].caption == "c1"
-    assert store.as_of(99).collect()[0].caption == "c1"
-    with pytest.raises(ValueError):
-        store.as_of(-1)

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.multimodal import (
+from extra_ops.multimodal import (
     decode_image,
     decode_stats,
     fake_decode,
@@ -86,7 +86,7 @@ def test_frame_sample(spark):
     import numpy as np
     import pandas as pd
 
-    from osm_replication_rust_spark.operators.multimodal import frame_sample
+    from extra_ops.multimodal import frame_sample
 
     w, h, n_frames = 4, 2, 10
     fsize = w * h
@@ -114,7 +114,7 @@ def test_shape_grouped_decode_equals_per_row(spark):
     import numpy as np
     import pandas as pd
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         decode_stats,
         fake_decode,
         resize_stage,
@@ -154,7 +154,7 @@ def test_shape_grouped_decode_equals_per_row(spark):
 def test_ahash_resize_invariant(spark, imgs):
     """aHash samples with the same nearest-neighbor formula as
     resize_stage, so hash(resize(img, 16, 16)) == hash(img) exactly."""
-    from osm_replication_rust_spark.operators.multimodal import ahash_stage, resize_stage
+    from extra_ops.multimodal import ahash_stage, resize_stage
 
     orig = {
         r.image_id: r.ahash
@@ -175,8 +175,8 @@ def test_image_dedup_chain(spark, imgs):
     finds every original<->resized-copy pair at distance 0."""
     from pyspark.sql import functions as F
 
-    from osm_replication_rust_spark.operators.dedup import hamming_near_pairs
-    from osm_replication_rust_spark.operators.multimodal import ahash_stage, resize_stage
+    from extra_ops.dedup import hamming_near_pairs
+    from extra_ops.multimodal import ahash_stage, resize_stage
 
     copies = resize_stage(imgs, 16, 16).withColumn(
         "image_id", F.concat(F.col("image_id"), F.lit("_copy"))
@@ -201,7 +201,7 @@ def test_dhash_matches_reference_and_resize_invariant(spark, imgs):
     """dHash == a straight per-image numpy reference, and is exactly
     invariant under the engine's own resize to (18, 16) (sampling
     composes: floor(c*18/9)=2c -> floor(2c*w/18)=floor(c*w/9))."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         dhash_stage,
         fake_decode,
         resize_stage,
@@ -237,7 +237,7 @@ def test_dhash_matches_reference_and_resize_invariant(spark, imgs):
 def test_patchify_matches_numpy_reference(spark, imgs):
     """Every patch row's bytes, position and stats equal the direct
     numpy tiling of the fake-decoded image."""
-    from osm_replication_rust_spark.operators.multimodal import patchify_stage
+    from extra_ops.multimodal import patchify_stage
 
     sample = imgs.select("image_id", "bytes", "w", "h").limit(40)
     meta = {r.image_id: (bytes(r.bytes), r.w, r.h) for r in sample.collect()}
@@ -269,7 +269,7 @@ def test_patchify_crops_and_reassembles(spark):
     """Non-divisible dims crop to the largest patch multiple; stitching
     the patches back in (patch_row, patch_col) order reproduces exactly
     the cropped image. Images smaller than one patch emit no rows."""
-    from osm_replication_rust_spark.operators.multimodal import patchify_stage
+    from extra_ops.multimodal import patchify_stage
 
     rows = [
         ("a", bytes(range(11 * 7)), 11, 7),   # crops to 8x4 with p=4
@@ -298,7 +298,7 @@ def test_patchify_crops_and_reassembles(spark):
 
 
 def test_sharpness_matches_numpy_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         sharpness_stage,
     )
@@ -334,7 +334,7 @@ def test_sharpness_detects_blur(spark):
     """The statistic must DISCRIMINATE: a box-blurred copy of a noisy
     image scores strictly lower variance-of-Laplacian — the property a
     pipeline's blur filter relies on."""
-    from osm_replication_rust_spark.operators.multimodal import sharpness_stage
+    from extra_ops.multimodal import sharpness_stage
 
     rng = np.random.default_rng(3)
     sharp_px = rng.integers(0, 251, size=(24, 24)).astype(np.float64)
@@ -359,7 +359,7 @@ def test_sharpness_detects_blur(spark):
 
 
 def test_scene_cut_matches_numpy_and_contract(spark):
-    from osm_replication_rust_spark.operators.multimodal import scene_cut_stage
+    from extra_ops.multimodal import scene_cut_stage
 
     rng = np.random.default_rng(7)
     w, h = 6, 4
@@ -389,7 +389,7 @@ def test_gen_videos_have_exactly_one_cut_at_frame_two(spark):
     """The fixture's planted scene change: shifts (0,2,91,93) -> every
     video's only cut is the 2->91 transition (frame_idx 2)."""
     from osm_replication_rust_spark.datagen.synth import gen_videos
-    from osm_replication_rust_spark.operators.multimodal import scene_cut_stage
+    from extra_ops.multimodal import scene_cut_stage
 
     vids = spark.createDataFrame(gen_videos(60, seed=42))
     out = scene_cut_stage(vids, threshold_millis=20_000)
@@ -404,7 +404,7 @@ def test_gen_videos_have_exactly_one_cut_at_frame_two(spark):
 
 
 def test_audio_stats_matches_numpy_and_silence_trim(spark):
-    from osm_replication_rust_spark.operators.multimodal import audio_stats_stage
+    from extra_ops.multimodal import audio_stats_stage
 
     loud = bytes([128, 129, 200, 128, 50, 128, 127, 130])  # loud at 2 and 4
     silent = bytes([128, 127, 129, 120, 136, 128])          # all |s-128| < 16
@@ -430,7 +430,7 @@ def test_audio_stats_matches_numpy_and_silence_trim(spark):
 
 
 def test_sobel_matches_numpy_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         sobel_stage,
     )
@@ -476,7 +476,7 @@ def test_sobel_matches_numpy_reference(spark):
 def test_sobel_detects_edge_orientation(spark):
     """A pure horizontal step edge must be all-gy (gx == 0), a vertical
     step all-gx — the axis separation the two kernels exist for."""
-    from osm_replication_rust_spark.operators.multimodal import sobel_stage
+    from extra_ops.multimodal import sobel_stage
 
     horiz = np.zeros((16, 16), dtype=np.uint8)
     horiz[8:, :] = 200  # step across rows -> vertical gradient (gy)
@@ -494,7 +494,7 @@ def test_sobel_detects_edge_orientation(spark):
 def test_otsu_matches_reference_and_contract(spark):
     """Kernel == brute-force shared-double reference on mixed shapes;
     constant image -> NULL triple; bimodal image separates exactly."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         otsu_stage,
     )
@@ -543,7 +543,7 @@ def test_otsu_matches_reference_and_contract(spark):
 def test_otsu_pixel_guard(spark):
     """Images past the float-exactness bound must raise, not silently
     break the shared-double contract."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         OTSU_MAX_PIXELS,
         otsu_stage,
     )
@@ -561,7 +561,7 @@ def test_otsu_pixel_guard(spark):
 def test_hist_eq_matches_reference_and_contract(spark):
     """Kernel == per-image integer reference on mixed shapes; constant
     and empty images NULL; uniform ramp equalizes to ~identity."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         hist_eq_stage,
     )
@@ -596,7 +596,7 @@ def test_hist_eq_matches_reference_and_contract(spark):
 
 
 def test_bilinear_resize_exact_reference_and_identity(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         bilinear_resize_stage,
         fake_decode,
     )
@@ -650,7 +650,7 @@ def test_bilinear_resize_exact_reference_and_identity(spark):
 
 
 def test_template_match_matches_numpy_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         template_match_stage,
     )
@@ -684,7 +684,7 @@ def test_template_match_matches_numpy_reference(spark):
 
 
 def test_template_match_planted_exact_and_ties(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         template_match_stage,
     )
 
@@ -716,7 +716,7 @@ def test_template_match_planted_exact_and_ties(spark):
 def test_template_match_guards(spark):
     import pytest
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         template_match_stage,
     )
 
@@ -732,7 +732,7 @@ def test_template_match_guards(spark):
 def test_orientation_hist_matches_reference(spark):
     import math
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         orientation_hist_stage,
     )
@@ -786,7 +786,7 @@ def test_orientation_hist_matches_reference(spark):
 def test_orientation_hist_pure_directions(spark):
     """Vertical / horizontal / diagonal ramps land ALL their non-flat
     energy in the expected single sector, boundary angles included."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         orientation_hist_stage,
     )
 
@@ -811,7 +811,7 @@ def test_orientation_hist_pure_directions(spark):
 def test_harris_matches_numpy_reference(spark):
     """Kernel == brute per-pixel structure-tensor reference on mixed
     shapes; undersized images get the NULL/zero contract."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         harris_stage,
     )
@@ -868,7 +868,7 @@ def test_harris_detects_planted_corner(spark):
     response must sit within 1 px of the rectangle's corner, and a
     pure straight edge must score far lower than the corner (the
     det-vs-trace discrimination Harris exists for)."""
-    from osm_replication_rust_spark.operators.multimodal import harris_stage
+    from extra_ops.multimodal import harris_stage
 
     corner = np.zeros((24, 24), dtype=np.uint8)
     corner[12:, 12:] = 200          # one L-corner at (12, 12)
@@ -894,7 +894,7 @@ def test_harris_detects_planted_corner(spark):
 
 
 def test_median_filter_matches_numpy_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         median_filter_stage,
     )
@@ -931,7 +931,7 @@ def test_median_filter_kills_impulse_noise(spark):
     """Salt-and-pepper: isolated impulses vanish from the median field
     (med_sum equals the clean image's) and the impulse mass counts
     exactly the planted outliers."""
-    from osm_replication_rust_spark.operators.multimodal import median_filter_stage
+    from extra_ops.multimodal import median_filter_stage
 
     clean = np.full((16, 16), 100, dtype=np.uint8)
     noisy = clean.copy()
@@ -949,7 +949,7 @@ def test_median_filter_kills_impulse_noise(spark):
 
 
 def test_morphology_matches_numpy_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         morphology_stage,
     )
@@ -989,7 +989,7 @@ def test_morphology_flat_and_impulse(spark):
     """Constant image: erosion == dilation everywhere (mg_nz == 0).
     One isolated impulse dilates to its full 3x3 neighborhood and
     erodes away entirely."""
-    from osm_replication_rust_spark.operators.multimodal import morphology_stage
+    from extra_ops.multimodal import morphology_stage
 
     flat = np.full((10, 10), 7, dtype=np.uint8)
     imp = flat.copy()
@@ -1010,7 +1010,7 @@ def test_morphology_flat_and_impulse(spark):
 
 
 def test_lbp_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         LBP_RING,
         fake_decode,
         lbp_stage,
@@ -1049,7 +1049,7 @@ def test_lbp_flat_edge_and_saw(spark):
     pixel's ring alternates (8 transitions, non-uniform) while every
     valley ties with its whole ring (code 255, uniform) — so exactly
     the 25 valleys of the 7x7 interior count."""
-    from osm_replication_rust_spark.operators.multimodal import lbp_stage
+    from extra_ops.multimodal import lbp_stage
 
     flat = np.full((8, 8), 9, dtype=np.uint8)
     edge = np.zeros((8, 8), dtype=np.uint8)
@@ -1073,7 +1073,7 @@ def test_lbp_flat_edge_and_saw(spark):
 
 
 def test_glcm_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         GLCM_HOMOG_K,
         fake_decode,
         glcm_stage,
@@ -1117,7 +1117,7 @@ def test_glcm_constant_ramp_and_checker(spark):
     cross-level pair per row sits at |i-j| = 5. A 1px vertical-stripe
     checkerboard between levels 0 and 15: EVERY horizontal pair crosses
     15 levels -> maximal contrast 225 per pair, two occupied cells."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         GLCM_HOMOG_K,
         glcm_stage,
     )
@@ -1156,7 +1156,7 @@ def test_glcm_constant_ramp_and_checker(spark):
 
 
 def test_moments_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         moments_stage,
     )
@@ -1190,7 +1190,7 @@ def test_moments_orientation_and_symmetry_contracts(spark):
     every central numerator is exactly 0. A horizontal bar: mu20n > 0
     while mu02n = 0 (no vertical spread) and mu11n = 0. A diagonal
     line y = x: mu11n > 0 (positive principal-axis correlation)."""
-    from osm_replication_rust_spark.operators.multimodal import moments_stage
+    from extra_ops.multimodal import moments_stage
 
     dot = np.zeros((8, 8), dtype=np.uint8)
     dot[3, 5] = 200
@@ -1222,7 +1222,7 @@ def test_moments_orientation_and_symmetry_contracts(spark):
 
 
 def test_moments_dim_guard(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         MOMENTS_MAX_DIM,
         moments_stage,
     )
@@ -1272,7 +1272,7 @@ def _ref_nms(px, thr):
 
 
 def test_nms_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         nms_stage,
     )
@@ -1298,7 +1298,7 @@ def test_nms_thins_a_soft_vertical_edge(spark):
     """A horizontal intensity ramp concentrated over two columns: the
     gradient is horizontal everywhere, and NMS keeps exactly the
     single column where |gx| peaks — the classic thinning contract."""
-    from osm_replication_rust_spark.operators.multimodal import nms_stage
+    from extra_ops.multimodal import nms_stage
 
     img = np.zeros((8, 10), dtype=np.uint8)
     img[:, 5] = 60          # soft shoulder
@@ -1367,7 +1367,7 @@ def _count_components(mask, conn8=False):
 
 
 def test_euler_matches_census_and_topology(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         euler_stage,
         fake_decode,
     )
@@ -1398,7 +1398,7 @@ def test_euler_matches_census_and_topology(spark):
 
 
 def test_euler_planted_shapes(spark):
-    from osm_replication_rust_spark.operators.multimodal import euler_stage
+    from extra_ops.multimodal import euler_stage
 
     disk = np.zeros((9, 9), dtype=np.uint8)
     disk[2:7, 2:7] = 200                      # one solid blob: chi = 1
@@ -1425,7 +1425,7 @@ def test_phash_dct_reference_parity(spark, imgs):
     """Brute triple-loop DCT reference over the fake-codec pixels."""
     import numpy as np
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         dct_basis,
         fake_decode,
         phash_dct_stage,
@@ -1467,7 +1467,7 @@ def test_phash_dct_reference_parity(spark, imgs):
 
 
 def test_phash_dct_resize_invariant_and_degenerate(spark, imgs):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         phash_dct_stage,
         resize_stage,
     )
@@ -1502,7 +1502,7 @@ def test_hough_matches_loop_reference(spark):
     """Brute-force Python vote accumulator on mixed shapes: every edge
     pixel votes at four orientations, winner by (votes DESC, theta,
     rho) — exactly the kernel's C-order argmax contract."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         hough_stage,
     )
@@ -1551,7 +1551,7 @@ def test_hough_planted_lines_and_flat(spark):
     (tie among its four gradient columns breaks to the smallest rho);
     a bright main diagonal wins at theta 3 with rho near 0; a constant
     image casts no votes."""
-    from osm_replication_rust_spark.operators.multimodal import hough_stage
+    from extra_ops.multimodal import hough_stage
 
     h = w = 32
     bg = np.full((h, w), 10, dtype=np.uint8)
@@ -1584,7 +1584,7 @@ def test_emd_matches_reference_and_contracts(spark):
     (256*npx*scipy-style CDF-L1), plus the closed-form contracts: a
     constant image transports everything (known closed form), a
     perfectly uniform 0..255 ramp scores 0."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         emd_stage,
         fake_decode,
     )
@@ -1619,7 +1619,7 @@ def test_emd_matches_reference_and_contracts(spark):
 def test_fast_matches_loop_reference(spark):
     """FAST-9 kernel == brute per-pixel segment-test loop on mixed
     shapes; undersized images get the all-zero contract."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         FAST_OFFSETS,
         fake_decode,
         fast_stage,
@@ -1666,7 +1666,7 @@ def test_fast_detects_planted_blob_and_rejects_edge(spark):
     contiguous darker arc); a straight edge's pixels never do (the arc
     through an edge is split 8/8 at best) — the discrimination the
     segment test exists for."""
-    from osm_replication_rust_spark.operators.multimodal import fast_stage
+    from extra_ops.multimodal import fast_stage
 
     disc = np.zeros((24, 24), dtype=np.uint8)
     yy, xx = np.mgrid[0:24, 0:24]
@@ -1689,7 +1689,7 @@ def test_fast_detects_planted_blob_and_rejects_edge(spark):
 def test_wavelet_matches_loop_reference(spark):
     """2-level Haar energies == brute per-block loop on mixed shapes,
     incl. odd dimensions (cropped) and undersized images."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         wavelet_stage,
     )
@@ -1747,7 +1747,7 @@ def test_wavelet_band_selectivity(spark):
     (horizontal detail) and NOTHING in HL/HH; a horizontal-stripe
     texture mirrors into HL — the orientation selectivity subband
     coding exists for."""
-    from osm_replication_rust_spark.operators.multimodal import wavelet_stage
+    from extra_ops.multimodal import wavelet_stage
 
     v = np.zeros((16, 16), dtype=np.uint8)
     v[:, 0::2] = 100                        # width-1 vertical stripes
@@ -1805,7 +1805,7 @@ def _ref_motion(frames, B=8, R=2):
 
 
 def test_motion_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import motion_stage
+    from extra_ops.multimodal import motion_stage
 
     rng = np.random.default_rng(59)
     rows, refs = [], {}
@@ -1834,7 +1834,7 @@ def test_motion_matches_loop_reference(spark):
 def test_motion_recovers_planted_shift(spark):
     """cur = prev shifted by (dy0, dx0): every interior block's best
     vector is exactly (dy0, dx0) with ZERO residual."""
-    from osm_replication_rust_spark.operators.multimodal import motion_stage
+    from extra_ops.multimodal import motion_stage
 
     rng = np.random.default_rng(61)
     h = w = 24
@@ -1863,7 +1863,7 @@ def test_motion_recovers_planted_shift(spark):
 def test_wht_matches_popcount_reference(spark):
     """Butterfly == direct popcount-sign sum (two different algorithms),
     plus the Parseval identity sum c² == N · sum s²."""
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         WHT_N,
         audio_wht_stage,
     )
@@ -1894,7 +1894,7 @@ def test_wht_matches_popcount_reference(spark):
 
 
 def test_wht_impulse_and_constant(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         WHT_N,
         audio_wht_stage,
     )
@@ -1922,7 +1922,7 @@ def test_wht_impulse_and_constant(spark):
 
 
 def test_bitplane_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         bitplane_stage,
         fake_decode,
     )
@@ -1948,7 +1948,7 @@ def test_bitplane_matches_loop_reference(spark):
 
 
 def test_seam_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         seam_stage,
     )
@@ -1999,7 +1999,7 @@ def test_seam_matches_loop_reference(spark):
 
 
 def test_acf_matches_loop_reference(spark):
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         ACF_LAGS,
         audio_acf_stage,
         fake_decode,
@@ -2029,7 +2029,7 @@ def test_acf_matches_loop_reference(spark):
 def test_acf_periodicity_contract(spark):
     """A pure period-4 square wave: acf4 == acf0 (perfect positive),
     acf2 == -acf0 (anti-phase), acf8/acf16 == acf0."""
-    from osm_replication_rust_spark.operators.multimodal import audio_acf_stage
+    from extra_ops.multimodal import audio_acf_stage
 
     wave = bytes([128 + 50, 128 + 50, 128 - 50, 128 - 50] * 64)
     df = spark.createDataFrame(
@@ -2046,7 +2046,7 @@ def test_acf_periodicity_contract(spark):
 def test_dither_matches_loop_reference(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         BAYER4,
         dither_stage,
         fake_decode,
@@ -2086,7 +2086,7 @@ def test_dither_matches_loop_reference(spark):
 def test_segmetrics_matches_loop_reference(spark):
     from fractions import Fraction
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         segmetrics_stage,
     )
@@ -2129,7 +2129,7 @@ def test_ssim_stage_and_shared_tree(spark):
     import numpy as np
     import pyspark.sql.functions as F
 
-    from osm_replication_rust_spark.operators.multimodal import (
+    from extra_ops.multimodal import (
         fake_decode,
         sql_ssim_expr,
         ssim_expr,
@@ -2184,7 +2184,7 @@ def test_ssim_stage_and_shared_tree(spark):
 def test_psnr_check_caption_equality(spark, imgs):
     import pyspark.sql.functions as F
 
-    from osm_replication_rust_spark.operators.multimodal import psnr_check
+    from extra_ops.multimodal import psnr_check
 
     # the full BASELINE invariant: pixels allclose AND caption equal
     res = {

@@ -9,7 +9,6 @@ an operator's internals is asserted equal to the shape it replaced.
   two-agg operator;
 - grouping-sets HLL registers (rollup_revenue's one-pass build) ==
   build-lvl0-then-re-aggregate (the shape it replaced);
-- _rg_count reads real row-group counts (the rebalance trigger);
 - with_hilbert (one withColumns per level) still matches the
   per-level reference recurrence computed in Python.
 """
@@ -64,7 +63,7 @@ def test_pyramid_rollup_composes_to_tile_pyramid(spark):
         LON_OFFSET,
         Y_STRIDE,
     )
-    from osm_replication_rust_spark.operators.raster import (
+    from extra_ops.raster import (
         pyramid_rollup,
         tile_pyramid,
     )
@@ -88,7 +87,7 @@ def test_pyramid_rollup_composes_to_tile_pyramid(spark):
 
 
 def test_grouping_sets_registers_match_reaggregation(spark):
-    from osm_replication_rust_spark.operators.sketch import hll_rank_cols
+    from extra_ops.sketch import hll_rank_cols
 
     df = spark.range(2000).select(
         (F.col("id") % 97).alias("k"),
@@ -131,22 +130,6 @@ def test_grouping_sets_registers_match_reaggregation(spark):
     a = {(r.g1, r.g2, r.bucket): r.reg for r in one_pass.collect()}
     b = {(r.g1, r.g2, r.bucket): r.reg for r in ref.collect()}
     assert a == b and len(a) > 20
-
-
-def test_rg_count_reads_row_groups(tmp_path):
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from osm_replication_rust_spark.plans.entry_queries import _rg_count
-
-    t = pa.Table.from_pandas(pd.DataFrame({"x": range(100)}))
-    pq.write_table(t, tmp_path / "one.parquet", row_group_size=100)
-    pq.write_table(t, tmp_path / "five.parquet", row_group_size=20)
-    assert _rg_count(str(tmp_path), "one") == 1
-    assert _rg_count(str(tmp_path), "five") == 5
-    # missing/unreadable: assume a fine layout (never force an exchange)
-    assert _rg_count(str(tmp_path), "missing") >= 1 << 20
 
 
 def _hilbert_ref(x: int, y: int, levels: int) -> int:

@@ -1,4 +1,4 @@
-"""Raster <-> vector operator tests (operators/raster.py).
+"""Raster <-> vector operator tests (extra_ops/raster.py).
 
 Property checks against driver-side numpy recomputation; the DuckDB
 gate rows rasterize_density / raster_vectorize cover the SQL twins.
@@ -9,7 +9,7 @@ import pytest
 
 from osm_replication_rust_spark.functions.coords import LAT_OFFSET, LON_OFFSET, Y_STRIDE
 from osm_replication_rust_spark.functions.geometry import points_in_polygon
-from osm_replication_rust_spark.operators.raster import (
+from extra_ops.raster import (
     rasterize_points,
     rasterize_polygon,
     vectorize_raster,
@@ -173,7 +173,7 @@ def test_vectorize_random_masks_reconstruct(spark):
 def test_zonal_stats_matches_numpy(spark, regions):
     """zonal_stats == direct numpy recomputation (bin events-like points,
     ray-cast every occupied pixel center against every region)."""
-    from osm_replication_rust_spark.operators.raster import zonal_stats
+    from extra_ops.raster import zonal_stats
 
     rng = np.random.default_rng(11)
     lat = rng.integers(-22_000_000, 22_000_001, size=3000)
@@ -211,7 +211,7 @@ def test_tile_pyramid_rollup_properties(spark):
     """Pyramid invariants on random points: every level's total equals
     the input row count; each parent's n is the sum of its children;
     each level equals a direct groupBy at that res."""
-    from osm_replication_rust_spark.operators.raster import tile_pyramid
+    from extra_ops.raster import tile_pyramid
 
     rng = np.random.default_rng(11)
     n = 4000
@@ -245,7 +245,7 @@ def test_tile_pyramid_rollup_properties(spark):
 
 
 def test_tile_pyramid_validation(spark):
-    from osm_replication_rust_spark.operators.raster import tile_pyramid
+    from extra_ops.raster import tile_pyramid
 
     df = spark.createDataFrame([{"lon": 0, "lat": 0}])
     with pytest.raises(ValueError):
@@ -257,7 +257,7 @@ def test_tile_pyramid_validation(spark):
 def test_focal_sum_matches_numpy(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import focal_sum
+    from extra_ops.raster import focal_sum
 
     rng = np.random.default_rng(9)
     W = 12
@@ -287,7 +287,7 @@ def test_focal_sum_matches_numpy(spark):
 def test_focal_sum_radius2_and_morphology(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import focal_sum
+    from extra_ops.raster import focal_sum
 
     # solid 5x5 block: interior pixel of the 3x3 erosion is only (2,2);
     # radius=2 erosion survivor count is also exactly the center
@@ -313,7 +313,7 @@ def test_pyramid_ivm_equals_recompute(spark):
     import numpy as np
     import pandas as pd
 
-    from osm_replication_rust_spark.operators.raster import (
+    from extra_ops.raster import (
         merge_pyramids,
         tile_pyramid,
     )
@@ -352,7 +352,7 @@ def test_pyramid_ivm_equals_recompute(spark):
 
 
 def test_merge_pyramids_drops_cancelled_cells(spark):
-    from osm_replication_rust_spark.operators.raster import merge_pyramids
+    from extra_ops.raster import merge_pyramids
 
     a = spark.createDataFrame(
         [(20, 100, 3), (20, 101, 1), (21, 50, 2)], "res int, cell long, n long"
@@ -365,7 +365,7 @@ def test_merge_pyramids_drops_cancelled_cells(spark):
 
 
 def test_merge_pyramids_rejects_incompatible_levels(spark):
-    from osm_replication_rust_spark.operators.raster import merge_pyramids
+    from extra_ops.raster import merge_pyramids
 
     a = spark.createDataFrame(
         [(20, 1, 1), (21, 1, 1), (22, 1, 1)], "res int, cell long, n long"
@@ -386,7 +386,7 @@ def test_blob_labels_match_python_bfs(spark):
     from collections import deque
 
     from osm_replication_rust_spark.functions.coords import Y_STRIDE
-    from osm_replication_rust_spark.operators.raster import blob_labels
+    from extra_ops.raster import blob_labels
 
     rng = np.random.default_rng(21)
     W = 16
@@ -424,7 +424,7 @@ def test_blob_labels_snake_diameter(spark):
     """A boustrophedon snake: one component with diameter ~ size —
     exactly the shape plain propagation is too slow for."""
     from osm_replication_rust_spark.functions.coords import Y_STRIDE
-    from osm_replication_rust_spark.operators.raster import blob_labels
+    from extra_ops.raster import blob_labels
 
     pts = []
     for y in range(8):
@@ -441,7 +441,7 @@ def test_morans_i_matches_fraction_reference(spark):
     import numpy as np
     from fractions import Fraction
 
-    from osm_replication_rust_spark.operators.raster import morans_i
+    from extra_ops.raster import morans_i
 
     rng = np.random.default_rng(33)
     # one tile at tile_res=20/px_res=16 -> npx=16; keep all pixels in
@@ -478,7 +478,7 @@ def test_morans_i_matches_fraction_reference(spark):
 
 
 def test_morans_i_null_and_multi_tile(spark):
-    from osm_replication_rust_spark.operators.raster import morans_i
+    from extra_ops.raster import morans_i
 
     # tile A: constant values (den=0 -> NULL); tile B: an isolated
     # pixel pair in separate tiles (W=0 -> NULL); cross-tile adjacency
@@ -499,7 +499,7 @@ def test_gi_star_matches_float_reference(spark):
 
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import gi_star
+    from extra_ops.raster import gi_star
 
     rng = np.random.default_rng(41)
     W = 10
@@ -538,7 +538,7 @@ def test_gi_star_matches_float_reference(spark):
 
 
 def test_gi_star_constant_raster_null(spark):
-    from osm_replication_rust_spark.operators.raster import gi_star
+    from extra_ops.raster import gi_star
 
     pix = spark.createDataFrame(
         [(x, 0, 3) for x in range(5)], "gx long, gy long, n long"
@@ -552,7 +552,7 @@ def test_quadtree_leaves_partition_property(spark):
     import numpy as np
 
     from osm_replication_rust_spark.functions.coords import Y_STRIDE
-    from osm_replication_rust_spark.operators.raster import (
+    from extra_ops.raster import (
         quadtree_leaves,
         tile_pyramid,
     )
@@ -595,7 +595,7 @@ def test_quadtree_leaves_partition_property(spark):
 
 
 def test_quadtree_leaves_validation(spark):
-    from osm_replication_rust_spark.operators.raster import (
+    from extra_ops.raster import (
         quadtree_leaves,
         tile_pyramid,
     )
@@ -613,7 +613,7 @@ def test_quadtree_leaves_validation(spark):
 
 def test_blob_labels_packing_range_guard(spark):
     from osm_replication_rust_spark.functions.coords import Y_STRIDE
-    from osm_replication_rust_spark.operators.raster import blob_labels
+    from extra_ops.raster import blob_labels
 
     pix = spark.createDataFrame(
         [(Y_STRIDE, 5, 1)], "gx long, gy long, n long"
@@ -623,7 +623,7 @@ def test_blob_labels_packing_range_guard(spark):
 
 
 def test_quadtree_level_mismatch_raises(spark):
-    from osm_replication_rust_spark.operators.raster import (
+    from extra_ops.raster import (
         quadtree_leaves,
         tile_pyramid,
     )
@@ -660,7 +660,7 @@ def test_rasterize_line_matches_reference_all_octants(spark):
         LAT_OFFSET,
         LON_OFFSET,
     )
-    from osm_replication_rust_spark.operators.raster import rasterize_line
+    from extra_ops.raster import rasterize_line
 
     res = 19
     edge = 1 << res
@@ -696,7 +696,7 @@ def test_rasterize_line_matches_reference_all_octants(spark):
 
 
 def test_rasterize_line_res_guard(spark):
-    from osm_replication_rust_spark.operators.raster import rasterize_line
+    from extra_ops.raster import rasterize_line
 
     segs = spark.createDataFrame(
         [("g", 0, 0, 0, 1, 1)],
@@ -718,7 +718,7 @@ def _dt_ref(mask):
 
 
 def _dt_run(spark, pts):
-    from osm_replication_rust_spark.operators.raster import distance_transform_l1
+    from extra_ops.raster import distance_transform_l1
 
     df = spark.createDataFrame([{"gx": int(a), "gy": int(b)} for a, b in pts])
     return distance_transform_l1(df, tile_res=TILE_RES, px_res=PX_RES).collect()
@@ -773,7 +773,7 @@ def test_geary_join_stats_matches_fraction_reference(spark):
 
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import geary_join_stats
+    from extra_ops.raster import geary_join_stats
 
     rng = np.random.default_rng(41)
     W = 16
@@ -814,7 +814,7 @@ def test_geary_join_stats_matches_fraction_reference(spark):
 
 
 def test_geary_join_stats_nulls(spark):
-    from osm_replication_rust_spark.operators.raster import geary_join_stats
+    from extra_ops.raster import geary_join_stats
 
     rows = [
         (0, 0, 5), (1, 0, 5),        # constant tile -> geary NULL, joins count
@@ -836,7 +836,7 @@ def test_gini_tile_matches_fraction_reference(spark):
 
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import gini_tile
+    from extra_ops.raster import gini_tile
 
     rng = np.random.default_rng(43)
     W = 32  # two 16px tiles wide at tile_res 20 / px_res 16
@@ -876,7 +876,7 @@ def test_gini_tile_contracts(spark):
     """Constant tile -> exactly 0; one pixel holding all extra mass ->
     the closed-form (n-1)/n * (m-1)*... check via direct formula; a
     single-pixel tile is 0 by the rank identity."""
-    from osm_replication_rust_spark.operators.raster import gini_tile
+    from extra_ops.raster import gini_tile
 
     rows = [
         (0, 0, 5), (1, 0, 5), (2, 0, 5),     # constant tile 0
@@ -895,7 +895,7 @@ def test_gini_tile_contracts(spark):
 def test_local_moran_matches_fraction_reference(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import local_moran
+    from extra_ops.raster import local_moran
 
     rng = np.random.default_rng(47)
     W = 16
@@ -955,7 +955,7 @@ def test_local_moran_matches_fraction_reference(spark):
 
 
 def test_local_moran_contracts(spark):
-    from osm_replication_rust_spark.operators.raster import local_moran
+    from extra_ops.raster import local_moran
 
     # a 3-pixel line of (1, 9, 1): the 9 is an HL outlier (high amid
     # low), its flanks are LH; nothing is HH/LL
@@ -1008,7 +1008,7 @@ def _ref_viewshed(pts, tower=2):
 def test_viewshed_matches_loop_reference(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.raster import viewshed
+    from extra_ops.raster import viewshed
 
     rng = np.random.default_rng(83)
     W = 16
@@ -1031,7 +1031,7 @@ def test_viewshed_matches_loop_reference(spark):
 
 
 def test_viewshed_ridge_contract(spark):
-    from osm_replication_rust_spark.operators.raster import viewshed
+    from extra_ops.raster import viewshed
 
     # observer (peak 30) at x=0; a ridge of height 20 at x=4 hides the
     # LOW target at x=8 (elev 1) but not the TALL one at x=12 (elev 25)
@@ -1052,7 +1052,7 @@ def test_viewshed_ridge_contract(spark):
 # D8 flow direction + accumulation (raster.d8_flow)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.raster import (  # noqa: E402
+from extra_ops.raster import (  # noqa: E402
     D8_OFFSETS,
     MS_SEGMENTS,
     d8_flow,
@@ -1217,7 +1217,7 @@ def test_marching_squares_random_matches_python(spark):
 # watershed basins (raster.d8_basins)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.raster import d8_basins  # noqa: E402
+from extra_ops.raster import d8_basins  # noqa: E402
 
 
 def _basin_python(cells):
@@ -1277,7 +1277,7 @@ def test_d8_basins_random_matches_python(spark):
 # Horn slope/aspect (raster.slope_aspect)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.raster import (  # noqa: E402
+from extra_ops.raster import (  # noqa: E402
     HORN_WEIGHTS,
     slope_aspect,
 )

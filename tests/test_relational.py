@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.relational import asof_join, sessionize
+from extra_ops.relational import asof_join, sessionize
 
 
 def ts(m):
@@ -70,7 +70,7 @@ def _mk(spark, rows):
 def test_range_join_matches_bruteforce(spark):
     import random
 
-    from osm_replication_rust_spark.operators.relational import range_join
+    from extra_ops.relational import range_join
 
     rng = random.Random(7)
     lrows = [
@@ -98,7 +98,7 @@ def test_range_join_matches_bruteforce(spark):
 
 
 def test_range_join_boundary_and_keyless(spark):
-    from osm_replication_rust_spark.operators.relational import range_join
+    from extra_ops.relational import range_join
 
     l = [{"id": 0, "s": 0, "e": 10}, {"id": 1, "s": 20, "e": 20}]
     r = [
@@ -119,7 +119,7 @@ def test_range_join_boundary_and_keyless(spark):
 
 
 def test_range_join_validation(spark):
-    from osm_replication_rust_spark.operators.relational import range_join
+    from extra_ops.relational import range_join
 
     with pytest.raises(ValueError):
         range_join(
@@ -132,7 +132,7 @@ def test_range_join_plan_no_cartesian(spark):
     """The physical plan must be ONE equi-join (hash/sort-merge), never
     BroadcastNestedLoop/Cartesian — the whole point of the bucket
     fan-out."""
-    from osm_replication_rust_spark.operators.relational import range_join
+    from extra_ops.relational import range_join
 
     l = _mk(spark, [{"id": 0, "k": 0, "s": 0, "e": 10}])
     r = _mk(spark, [{"id": 1, "k": 0, "s": 5, "e": 6}])
@@ -147,7 +147,7 @@ def test_group_trend_matches_fraction_reference(spark):
 
     import numpy as np
 
-    from osm_replication_rust_spark.operators.relational import group_trend
+    from extra_ops.relational import group_trend
 
     rng = np.random.default_rng(3)
     rows = []
@@ -176,7 +176,7 @@ def test_group_trend_matches_fraction_reference(spark):
 
 
 def test_trajectory_segments_reference(spark):
-    from osm_replication_rust_spark.operators.relational import trajectory_segments
+    from extra_ops.relational import trajectory_segments
 
     # user u: 3 tight points (stay), jump, 2 tight points; user v: 1 point
     rows = [
@@ -203,7 +203,7 @@ def test_trajectory_segments_reference(spark):
 
 
 def test_scd2_intervals_reference(spark):
-    from osm_replication_rust_spark.operators.relational import scd2_intervals
+    from extra_ops.relational import scd2_intervals
 
     # key a: three revisions (one at a tied timestamp — eid breaks the
     # tie); key b: a single revision (current from birth)
@@ -277,7 +277,7 @@ def _funnel_ref(rows, steps, horizon_s):
 def _funnel_run(spark, rows, steps, horizon_s):
     import datetime as dt
 
-    from osm_replication_rust_spark.operators.relational import funnel_levels
+    from extra_ops.relational import funnel_levels
 
     data = [
         {
@@ -365,7 +365,7 @@ def test_funnel_random_matches_reference(spark):
 
 
 def test_funnel_guards(spark):
-    from osm_replication_rust_spark.operators.relational import funnel_levels
+    from extra_ops.relational import funnel_levels
 
     df = spark.createDataFrame([], "user_id long, ts timestamp, event_id long, event_type string")
     with pytest.raises(ValueError):
@@ -379,7 +379,7 @@ def test_funnel_guards(spark):
 def _retention_run(spark, rows, period_s):
     import datetime as dt
 
-    from osm_replication_rust_spark.operators.relational import cohort_retention
+    from extra_ops.relational import cohort_retention
 
     data = [
         {"user_id": u, "ts": dt.datetime(2024, 1, 1) + dt.timedelta(seconds=t)}
@@ -431,7 +431,7 @@ def test_cohort_retention_random_matches_reference(spark):
 
 
 def test_cohort_retention_guard(spark):
-    from osm_replication_rust_spark.operators.relational import cohort_retention
+    from extra_ops.relational import cohort_retention
 
     df = spark.createDataFrame([], "user_id long, ts timestamp")
     with pytest.raises(ValueError):
@@ -451,7 +451,7 @@ def _sky_ref(pts):
 def test_pareto_frontier_matches_bruteforce(spark):
     import random
 
-    from osm_replication_rust_spark.operators.relational import pareto_frontier
+    from extra_ops.relational import pareto_frontier
 
     rng = random.Random(13)
     pts = [(rng.randrange(-500, 500), rng.randrange(-500, 500)) for _ in range(300)]
@@ -466,7 +466,7 @@ def test_pareto_frontier_matches_bruteforce(spark):
 
 
 def test_pareto_frontier_shapes(spark):
-    from osm_replication_rust_spark.operators.relational import pareto_frontier
+    from extra_ops.relational import pareto_frontier
 
     # anti-diagonal: every point is on the frontier
     diag = [{"i": i, "x": i, "y": 10 - i} for i in range(11)]
@@ -515,7 +515,7 @@ def _mk_ref(series):
 def test_mann_kendall_matches_bruteforce(spark):
     import random
 
-    from osm_replication_rust_spark.operators.relational import mann_kendall
+    from extra_ops.relational import mann_kendall
 
     rng = random.Random(23)
     rows = []
@@ -551,7 +551,7 @@ def test_robust_outliers_matches_reference(spark):
     with ties, singletons, and an even-sized group."""
     import numpy as np
 
-    from osm_replication_rust_spark.operators.relational import robust_outliers
+    from extra_ops.relational import robust_outliers
 
     rng = np.random.default_rng(7)
     rows = []
@@ -587,7 +587,7 @@ def test_robust_outliers_contracts(spark):
     off-median values; k validation."""
     import pytest
 
-    from osm_replication_rust_spark.operators.relational import robust_outliers
+    from extra_ops.relational import robust_outliers
 
     rows = [
         ("s", 0, 7),
@@ -625,7 +625,7 @@ def _ref_pava_fitq(y):
 
 
 def test_isotonic_matches_minimax_reference(spark):
-    from osm_replication_rust_spark.operators.relational import isotonic_fit
+    from extra_ops.relational import isotonic_fit
 
     rng = __import__("numpy").random.default_rng(71)
     rows = []
@@ -651,7 +651,7 @@ def test_isotonic_matches_minimax_reference(spark):
 
 
 def test_isotonic_contracts(spark):
-    from osm_replication_rust_spark.operators.relational import isotonic_fit
+    from extra_ops.relational import isotonic_fit
 
     # already monotone: fit == 2n²·y exactly; fit is non-decreasing
     rows = [(1, i, i, v) for i, v in enumerate([1, 3, 3, 7])]
@@ -703,7 +703,7 @@ def _ref_allen(ivals):
 
 
 def test_allen_census_all_seven_relations(spark):
-    from osm_replication_rust_spark.operators.relational import (
+    from extra_ops.relational import (
         ALLEN_COLS,
         allen_census,
     )
@@ -729,7 +729,7 @@ def test_allen_census_all_seven_relations(spark):
 def test_allen_census_random_parity(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.relational import (
+    from extra_ops.relational import (
         ALLEN_COLS,
         allen_census,
     )
@@ -755,7 +755,7 @@ def test_allen_census_random_parity(spark):
 # CUSUM changepoint screen (relational.cusum_changepoint)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.relational import (  # noqa: E402
+from extra_ops.relational import (  # noqa: E402
     cusum_changepoint,
 )
 
@@ -827,7 +827,7 @@ def test_cusum_random_matches_python(spark):
 # trajectory speed screen (relational.speed_screen)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.relational import speed_screen  # noqa: E402
+from extra_ops.relational import speed_screen  # noqa: E402
 import datetime as _dt  # noqa: E402
 
 
@@ -920,7 +920,7 @@ def test_speed_screen_random_matches_python(spark):
 # Theil-Sen robust slope (relational.theil_sen)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.relational import theil_sen  # noqa: E402
+from extra_ops.relational import theil_sen  # noqa: E402
 
 
 def _ts_python(pts, max_n=12):
@@ -996,7 +996,7 @@ def test_theil_sen_random_and_cap(spark):
 # k-anonymity / l-diversity census (relational.k_anonymity_census)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.relational import (  # noqa: E402
+from extra_ops.relational import (  # noqa: E402
     k_anonymity_census,
 )
 
@@ -1049,7 +1049,7 @@ def test_k_anonymity_census_random_matches_python(spark):
 # classical seasonal decomposition (relational.seasonal_decompose)
 # ---------------------------------------------------------------------------
 
-from osm_replication_rust_spark.operators.relational import seasonal_decompose
+from extra_ops.relational import seasonal_decompose
 
 
 def _decomp_python(vals, p):

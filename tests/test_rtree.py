@@ -13,7 +13,7 @@ from osm_replication_rust_spark.functions.geometry import (
     points_in_buffered_polygon,
     points_in_polygon,
 )
-from osm_replication_rust_spark.operators.rtree import (
+from extra_ops.rtree import (
     StrTree,
     assign_regions_rtree,
     build_str_tree,

@@ -5,7 +5,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.sampling import (
+from extra_ops.sampling import (
     TICKET_BITS,
     hash_rate_sample,
     rate_threshold,

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.similarity import (
+from extra_ops.similarity import (
     ann_lsh_topk,
     cosine_topk_bruteforce,
 )
@@ -99,7 +99,7 @@ def _pq_ref(items_v, queries_v, cb):
 
 
 def test_pq_topk_matches_numpy_and_self_zero(spark):
-    from osm_replication_rust_spark.operators.similarity import pq_topk
+    from extra_ops.similarity import pq_topk
 
     m, ksub, dsub = 4, 8, 4
     dim = m * dsub
@@ -131,7 +131,7 @@ def test_pq_topk_matches_numpy_and_self_zero(spark):
 
 
 def test_pq_codebook_validation(spark):
-    from osm_replication_rust_spark.operators.similarity import pq_topk
+    from extra_ops.similarity import pq_topk
 
     items = spark.createDataFrame(
         pd.DataFrame({"vec_id": [0], "embedding": [[0.0] * 16]})
@@ -147,7 +147,7 @@ def test_pca_power_top_matches_numpy_and_duckdb(spark):
     import duckdb
     import numpy as np
 
-    from osm_replication_rust_spark.operators.similarity import (
+    from extra_ops.similarity import (
         _quantize,
         pca_gram,
         pca_power_top,
@@ -208,7 +208,7 @@ def test_kcenter_greedy_matches_bruteforce(spark):
     cluster, radii are non-increasing."""
     import numpy as np
 
-    from osm_replication_rust_spark.operators.similarity import kcenter_greedy
+    from extra_ops.similarity import kcenter_greedy
 
     rng = np.random.default_rng(97)
     centers = np.array([[0.0] * 8, [10.0] * 8, [-10.0] * 8])
@@ -261,7 +261,7 @@ def test_multiprobe_improves_recall_and_twin_matches(spark):
     import numpy as np
     import pyspark.sql.functions as F
 
-    from osm_replication_rust_spark.operators.similarity import (
+    from extra_ops.similarity import (
         _emb_matrix,
         _hyperplanes,
         _quantize,
@@ -322,7 +322,7 @@ def test_multiprobe_improves_recall_and_twin_matches(spark):
 
 
 def test_ivfpq_equals_pq_on_probed_lists_and_recall_tunes(spark):
-    from osm_replication_rust_spark.operators.similarity import (
+    from extra_ops.similarity import (
         _quantize,
         ivfpq_topk,
         pq_topk,

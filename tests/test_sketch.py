@@ -5,7 +5,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.sketch import (
+from extra_ops.sketch import (
     cms_build,
     cms_estimate,
     heavy_hitters,
@@ -118,7 +118,7 @@ def hll_df(spark):
 
 
 def test_hll_estimate_accuracy_and_state_bound(spark, hll_df):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         hll_estimate,
         hll_registers,
     )
@@ -142,7 +142,7 @@ def test_hll_estimate_accuracy_and_state_bound(spark, hll_df):
 def test_hll_register_union_property(spark, hll_df):
     """Registers of a union == MAX-merge of the parts' registers —
     the property that lets a cube (or day+day) reuse fine registers."""
-    from osm_replication_rust_spark.operators.sketch import hll_registers
+    from extra_ops.sketch import hll_registers
 
     fine = hll_registers(hll_df, "k", p=8, group_cols=["g"])
     merged = {
@@ -156,7 +156,7 @@ def test_hll_register_union_property(spark, hll_df):
 
 
 def test_hll_estimate_parity_with_duckdb(spark, hll_df):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         hll_estimate,
         hll_registers,
         sql_hll_estimate,
@@ -180,7 +180,7 @@ def test_hll_estimate_parity_with_duckdb(spark, hll_df):
 
 
 def test_hll_p_validation(spark, hll_df):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         hll_registers,
         sql_hll_estimate,
     )
@@ -207,7 +207,7 @@ def bloom_corpus(spark):
 
 
 def test_bloom_state_bounded_and_no_false_negatives(spark, bloom_corpus):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         bloom_pack,
         bloom_probe,
         bloom_words,
@@ -229,7 +229,7 @@ def test_bloom_state_bounded_and_no_false_negatives(spark, bloom_corpus):
 
 
 def test_bloom_cross_engine_bit_parity(spark, bloom_corpus):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         bloom_pack,
         bloom_probe,
         bloom_words,
@@ -258,62 +258,8 @@ def test_bloom_cross_engine_bit_parity(spark, bloom_corpus):
     assert got_p == duck_p
 
 
-def test_bloom_split_plan_equals_plain_left_join(spark, sf_dir):
-    """The materialized-pipeline plan (bloom-negatives BYPASS the exact
-    join, only positives shuffle) must equal the plain left join the
-    gated dedup_exact row and its DuckDB oracle run — which holds iff
-    the filter has no false negatives."""
-    from osm_replication_rust_spark.plans import entry_queries
-    from pyspark.sql import functions as F
-
-    out = entry_queries.queries()["dedup_exact"](spark, sf_dir)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from osm_replication_rust_spark.operators.sketch import (
-        bloom_pack,
-        bloom_probe,
-        bloom_words,
-    )
-
-    hist = d.select("doc_id", "text")
-    nid = (F.col("doc_id") + 2_000_000).cast("long")
-    newb = d.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    ).unionByName(
-        d.filter(F.col("doc_id") % 3 == 1).select(
-            nid.alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" <novel:"), nid.cast("string"), F.lit(">")).alias("text"),
-        )
-    )
-    packed = bloom_pack(bloom_words(hist, "text", 4096, 3))
-    probed = bloom_probe(newb, packed, "text", 4096, 3)
-    keepers = hist.groupBy("text").agg(F.min("doc_id").alias("keeper_id"))
-    pos = probed.filter(F.col("bloom_hit")).join(keepers, "text", "left")
-    neg = probed.filter(~F.col("bloom_hit")).withColumn(
-        "keeper_id", F.lit(None).cast("long")
-    )
-    split = pos.unionByName(neg).select(
-        "doc_id", "bloom_hit", F.col("keeper_id").isNotNull().alias("is_dup"), "keeper_id"
-    )
-    # the gated row also carries the JSONL round-trip globals; compare
-    # the dedup columns only
-    a = sorted(
-        map(
-            tuple,
-            out.select("doc_id", "bloom_hit", "is_dup", "keeper_id").collect(),
-        )
-    )
-    b = sorted(map(tuple, split.collect()))
-    assert a == b
-    # one-sided guarantee as seen through the gated row
-    for doc_id, bloom_hit, is_dup, keeper in a:
-        if is_dup:
-            assert bloom_hit, doc_id
-        if not bloom_hit:
-            assert not is_dup and keeper is None, doc_id
-
-
 def test_bloom_validation(spark, bloom_corpus):
-    from osm_replication_rust_spark.operators.sketch import bloom_words, sql_bloom_words
+    from extra_ops.sketch import bloom_words, sql_bloom_words
 
     mem, _ = bloom_corpus
     with pytest.raises(ValueError, match="power of two"):
@@ -328,7 +274,7 @@ def test_cms_probe_equals_estimate(spark, keyed):
     """The map-side packed probe must give the SAME estimates as the
     aggregating estimate path for every key (same min-over-depth, same
     unseen-is-zero)."""
-    from osm_replication_rust_spark.operators.sketch import cms_pack, cms_probe
+    from extra_ops.sketch import cms_pack, cms_probe
 
     depth, width = 4, 256
     sk = cms_build(keyed, "k", depth, width)
@@ -355,7 +301,7 @@ def test_null_keys_build_and_probe(spark):
     countDistinct rule, mirrored in every SQL twin); probes of NULL
     keys give est=0 (CMS, coalesced lookups) / bloom_hit NULL (kept by
     callers, as dedup_exact's plain-join shape does)."""
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         bloom_pack,
         bloom_probe,
         bloom_words,
@@ -401,7 +347,7 @@ def hist_df(spark):
 def test_hist_quantile_accuracy_and_state_bound(spark, hist_df):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.sketch import hist_bins, hist_quantile
+    from extra_ops.sketch import hist_bins, hist_quantile
 
     lo, hi, nb = 0, 10240, 256  # width 40
     bins = hist_bins(hist_df, "v", lo, hi, nb, group_cols=["g"]).persist()
@@ -422,7 +368,7 @@ def test_hist_quantile_accuracy_and_state_bound(spark, hist_df):
 
 
 def test_hist_quantile_parity_with_duckdb(spark, hist_df):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         hist_bins,
         hist_quantile,
         sql_hist_quantile,
@@ -447,7 +393,7 @@ def test_hist_quantile_parity_with_duckdb(spark, hist_df):
 
 
 def test_hist_validation(spark, hist_df):
-    from osm_replication_rust_spark.operators.sketch import (
+    from extra_ops.sketch import (
         hist_bins,
         hist_quantile,
         sql_hist_quantile,
@@ -475,7 +421,7 @@ def test_equi_depth_bins_exact(spark):
     import numpy as np
     import pytest
 
-    from osm_replication_rust_spark.operators.sketch import equi_depth_bins
+    from extra_ops.sketch import equi_depth_bins
 
     rng = np.random.default_rng(139)
     # heavy ties: half the rows share 10 hot values

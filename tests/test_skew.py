@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.skew import (
+from extra_ops.skew import (
     hot_keys,
     salted_join,
     split_hot_cells,
@@ -78,7 +78,7 @@ def test_hrw_minimal_disruption_and_duckdb_twin(spark):
 
     from pyspark.sql import functions as F
 
-    from osm_replication_rust_spark.operators.skew import (
+    from extra_ops.skew import (
         hrw_assign,
         sql_hrw_assign,
     )

@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.snap import snap_points_to_segments
+from extra_ops.snap import snap_points_to_segments
 
 
 @pytest.fixture(scope="module")

@@ -217,38 +217,3 @@ def test_repeated_calls_reuse_one_broadcast(spark, regions, images_pdf, monkeypa
         assert assign_regions(df, regions, keep_cols=["image_id"], buffer=BUF).count() == n
     assert len(made) <= 1
     assert len(os.listdir(sc._temp_dir)) == files
-
-
-def test_streaming_spatial_join_matches_batch(spark, sf_dir, tmp_path, regions):
-    """The flagship cell-prefilter spatial join is STATELESS (map-side
-    encode + broadcast join + refine), so the identical plan runs on a
-    stream in append mode — streamed assignments == batch assignments."""
-    from osm_replication_rust_spark.functions import coords as C
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id",
-        C.derived_lat(F.col("event_id")).alias("lat"),
-        C.derived_lon(F.col("event_id")).alias("lon"),
-    )
-    batch = {
-        (r.event_id, r.region_id): (r.in_poly, r.in_buffer)
-        for r in assign_regions(ev, regions, keep_cols=["event_id"]).collect()
-    }
-    src = tmp_path / "sj_src"
-    ev.write.parquet(str(src))
-    stream = spark.readStream.schema(ev.schema).parquet(str(src))
-    out = assign_regions(stream, regions, keep_cols=["event_id"])
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sj_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.event_id, r.region_id): (r.in_poly, r.in_buffer)
-        for r in spark.sql("SELECT * FROM sj_stream").collect()
-    }
-    assert got == batch
-    assert len(batch) > 0

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 def test_windowed_stats_stream_matches_batch(spark, sf_dir, tmp_path):
     import shutil
 
-    from osm_replication_rust_spark.streaming.incremental import windowed_change_stats
+    from extra_ops.incremental import windowed_change_stats
 
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     want = {
@@ -46,7 +46,7 @@ def test_stateful_sessions(spark, tmp_path):
     either in-stream (gap inside a later batch) or via event-time
     timeout; closed sessions must equal the batch-computed ones."""
     import pandas as pd
-    from osm_replication_rust_spark.streaming.incremental import stateful_sessions
+    from extra_ops.incremental import stateful_sessions
 
     t0 = 1_600_000_000
     batch1 = pd.DataFrame(
@@ -117,7 +117,7 @@ def test_stateful_sessions_late_events(spark, tmp_path):
     regress session_end or re-split: a late event inside the carried
     interval and one before its start both fold in."""
     import pandas as pd
-    from osm_replication_rust_spark.streaming.incremental import stateful_sessions
+    from extra_ops.incremental import stateful_sessions
 
     t0 = 1_600_000_000
     batch1 = pd.DataFrame(
@@ -183,7 +183,7 @@ def test_streaming_rasterize_matches_batch(spark, sf_dir, tmp_path):
     """stream == batch for the windowed raster aggregation (the
     streaming face of rasterize_points)."""
     from osm_replication_rust_spark.functions import coords as C
-    from osm_replication_rust_spark.streaming.incremental import streaming_rasterize
+    from extra_ops.incremental import streaming_rasterize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "ts",
@@ -257,7 +257,7 @@ def test_streaming_dedup_exact(spark, tmp_path):
 
     import pandas as pd
 
-    from osm_replication_rust_spark.streaming.incremental import (
+    from extra_ops.incremental import (
         streaming_dedup_exact,
     )
 
@@ -312,10 +312,10 @@ def test_stateful_trajectory_segments_stream_equals_batch(spark, tmp_path):
     the horizon, and timeout close) equal the batch twin
     (relational.trajectory_segments with the same eps + gap rules)."""
     import pandas as pd
-    from osm_replication_rust_spark.operators.relational import (
+    from extra_ops.relational import (
         trajectory_segments,
     )
-    from osm_replication_rust_spark.streaming.incremental import (
+    from extra_ops.incremental import (
         stateful_trajectory_segments,
     )
 
@@ -409,7 +409,7 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
     arrivals, compared pair-for-pair against the batch twin."""
     from datetime import datetime
 
-    from osm_replication_rust_spark.streaming.incremental import (
+    from extra_ops.incremental import (
         stream_interval_join,
     )
 
@@ -472,7 +472,7 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
 def test_stream_interval_join_guards(spark):
     import pytest
 
-    from osm_replication_rust_spark.streaming.incremental import (
+    from extra_ops.incremental import (
         stream_interval_join,
     )
 
@@ -492,7 +492,7 @@ def test_stream_interval_join_drops_late_rows(spark, tmp_path):
     bound is real, not decorative."""
     from datetime import datetime, timedelta
 
-    from osm_replication_rust_spark.streaming.incremental import (
+    from extra_ops.incremental import (
         stream_interval_join,
     )
 
@@ -548,8 +548,8 @@ def test_stateful_speed_screen_stream_equals_batch(spark, tmp_path):
     flush) equal the batch twin (relational.speed_screen) per user."""
     import pandas as pd
     import pyspark.sql.functions as F
-    from osm_replication_rust_spark.operators.relational import speed_screen
-    from osm_replication_rust_spark.streaming.incremental import (
+    from extra_ops.relational import speed_screen
+    from extra_ops.incremental import (
         stateful_speed_screen,
     )
 

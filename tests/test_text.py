@@ -4,7 +4,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.text import (
+from extra_ops.text import (
     STOPWORDS,
     fingerprint_udf,
     lang_score,
@@ -60,7 +60,7 @@ def test_fingerprint_deterministic(spark, docs):
 
 
 def test_dup_trigram_frac(spark):
-    from osm_replication_rust_spark.operators.text import dup_trigram_frac
+    from extra_ops.text import dup_trigram_frac
 
     docs = DOCS + [
         (7, "spam spam spam spam spam spam"),
@@ -88,7 +88,7 @@ def test_dup_trigram_frac(spark):
 
 
 def test_dup_trigram_udf_equals_hof(spark):
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         dup_trigram_frac,
         dup_trigram_frac_udf,
     )
@@ -119,7 +119,7 @@ def test_dup_trigram_whitespace_and_null_parity(spark):
     0.0 in ALL spellings (UDF, HOF Column, DuckDB oracle)."""
     import duckdb
 
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         dup_trigram_frac,
         dup_trigram_frac_udf,
         sql_dup_trigram_frac,
@@ -165,7 +165,7 @@ def test_winnow_chunking_with_outlier_doc(spark, monkeypatch):
     """Review regression: one huge document must not blow up the whole
     batch matrix — the kernel chunks by sorted length. Force tiny
     chunks and assert results still match the HOF spelling."""
-    from osm_replication_rust_spark.operators import dedup as D
+    from extra_ops import dedup as D
 
     monkeypatch.setattr(D, "_W_CHUNK_BUDGET", 500)
     texts = ["short one", "tiny", "x" * 2000, "medium sized text here", ""]
@@ -191,7 +191,7 @@ def test_bm25_matches_python_reference(spark):
     docs without any query term produce no row."""
     import math
 
-    from osm_replication_rust_spark.operators.text import bm25_scores
+    from extra_ops.text import bm25_scores
 
     corpus = [
         (0, "fast scan fast merge table"),
@@ -232,7 +232,7 @@ def test_pii_counts_and_redaction_three_way_parity(spark):
 
     import duckdb
 
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         PII_REDACTION,
         PII_EMAIL,
         PII_PHONE,
@@ -286,7 +286,7 @@ def test_pii_counts_and_redaction_three_way_parity(spark):
 def test_dup_line_frac_three_way_parity(spark):
     import duckdb
 
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         dup_line_frac,
         sql_dup_line_frac,
     )
@@ -336,7 +336,7 @@ def test_bpe_token_count_three_way_parity(spark):
 
     import duckdb
 
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         BPE_SEGMENT_RE,
         bpe_token_count,
         sql_bpe_token_count,
@@ -396,7 +396,7 @@ def test_bigram_lm_scores_matches_python_and_duckdb(spark):
 
     import duckdb
 
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         bigram_lm_scores,
         sql_bigram_lm,
     )
@@ -485,7 +485,7 @@ def _bpe_ref(texts, n_merges):
 def test_bpe_train_matches_reference_and_duckdb(spark):
     import duckdb
 
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         bpe_train,
         sql_bpe_ctes,
     )
@@ -530,7 +530,7 @@ def test_bpe_train_matches_reference_and_duckdb(spark):
 
 
 def test_soundex_published_vectors(spark):
-    from osm_replication_rust_spark.operators.text import soundex_expr
+    from extra_ops.text import soundex_expr
 
     vectors = [
         ("Robert", "R163"), ("Rupert", "R163"),
@@ -550,7 +550,7 @@ def test_soundex_published_vectors(spark):
 
 def test_soundex_duckdb_twin_parity(spark):
     duckdb = pytest.importorskip("duckdb")
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         soundex_expr,
         sql_soundex,
     )
@@ -577,7 +577,7 @@ def test_soundex_duckdb_twin_parity(spark):
 
 
 def test_url_canonicalize_vectors(spark):
-    from osm_replication_rust_spark.operators.text import url_canonicalize
+    from extra_ops.text import url_canonicalize
 
     vectors = [
         ("HTTP://Example.COM/Path/a?x=1#frag", "http://example.com/Path/a?x=1"),
@@ -599,7 +599,7 @@ def test_url_canonicalize_vectors(spark):
 
 def test_url_canonicalize_duckdb_twin_parity(spark):
     duckdb = pytest.importorskip("duckdb")
-    from osm_replication_rust_spark.operators.text import (
+    from extra_ops.text import (
         sql_url_canonicalize,
         url_canonicalize,
     )
@@ -633,7 +633,7 @@ def test_url_canonicalize_duckdb_twin_parity(spark):
 
 import math
 
-from osm_replication_rust_spark.operators.text import (  # noqa: E402
+from extra_ops.text import (  # noqa: E402
     ENTROPY_ALPHABET,
     char_entropy_cols,
     sql_char_entropy,

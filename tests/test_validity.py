@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from osm_replication_rust_spark.operators.validity import (
+from extra_ops.validity import (
     self_intersection_counts,
     self_intersection_pairs,
     sql_proper_cross_expr,
@@ -183,7 +183,7 @@ def _brute_cross(chains_a, chains_b):
 
 
 def test_cross_layer_planted_and_touches(spark):
-    from osm_replication_rust_spark.operators.validity import (
+    from extra_ops.validity import (
         cross_intersection_pairs,
     )
 
@@ -208,7 +208,7 @@ def test_cross_layer_bucketed_equals_brute_random(spark):
     equal the brute-force cross join pair-for-pair (exactly once)."""
     import numpy as np
 
-    from osm_replication_rust_spark.operators.validity import (
+    from extra_ops.validity import (
         cross_intersection_pairs,
     )
 
@@ -256,7 +256,7 @@ def _ref_point(a1, a2, b1, b2):
 
 
 def test_cross_points_planted_rational(spark):
-    from osm_replication_rust_spark.operators.validity import (
+    from extra_ops.validity import (
         cross_intersection_points,
     )
 
@@ -276,7 +276,7 @@ def test_cross_points_planted_rational(spark):
 def test_cross_points_bucketed_equals_brute_bitwise(spark):
     import numpy as np
 
-    from osm_replication_rust_spark.operators.validity import (
+    from extra_ops.validity import (
         cross_intersection_points,
     )
 
