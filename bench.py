@@ -12,6 +12,7 @@ Flags: --tiling-only (scaling runs), --rows N (tiling table size).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -79,10 +80,16 @@ def run_tiling(
 
 
 def main() -> None:
-    tiling_only = "--tiling-only" in sys.argv
-    n_rows = int(os.environ.get("SPARK_GRAFT_TILING_ROWS", "50000000"))
-    if "--rows" in sys.argv:
-        n_rows = int(sys.argv[sys.argv.index("--rows") + 1])
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--tiling-only", action="store_true", help="skip the catalog queries")
+    p.add_argument(
+        "--rows",
+        type=int,
+        default=int(os.environ.get("SPARK_GRAFT_TILING_ROWS", "50000000")),
+        help="tiling table size",
+    )
+    args = p.parse_args()
+    tiling_only, n_rows = args.tiling_only, args.rows
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("bench", cpus=cpus)

@@ -16,11 +16,13 @@ of the reference can run the same operations against this engine:
                                     src/osmxml/bbox.rs: store-resolved
                                     bbox-annotated copy of a diff)
 
-Store layout (one directory):
-  <store>/points/        TableStore (hash-bucketed snapshots + manifest;
-                         footprint packed in phash per FIXTURES.md §1;
-                         the manifest's groups_state is the diff cursor)
-  <store>/groups.parquet ways/relations (group_id, kind, members)
+Store layout (one directory, two TableStores: hash-bucketed snapshots
++ manifest, each state applied once):
+  <store>/points/  nodes (image_id, caption, phash; footprint packed in
+                   phash per FIXTURES.md §1)
+  <store>/groups/  ways/relations (group_id, kind, members); its
+                   last_state is the diff cursor (the points table's on
+                   a store without groups)
 
 The ``filter`` extract collects the (small) single-region result to
 write one .osc file like the reference does; the distributed many-
@@ -34,105 +36,52 @@ import argparse
 import glob
 import gzip
 import os
+import shutil
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.coords import pack_footprint, unpack_lat, unpack_lon
+from .functions.coords import pack_footprint
+from .operators.merge import TableStore
+from .plans.pipeline import base_points as _base_points
+from .plans.pipeline import wrote_rows
+
+# ways/relations of a store written before they became a TableStore
+_OLD_GROUPS = "groups.parquet*"
 
 
 def _store(spark: SparkSession, store_dir: str):
-    from .operators.merge import TableStore
-
+    if glob.glob(os.path.join(store_dir, _OLD_GROUPS)):
+        raise SystemExit(
+            f"store at {store_dir} keeps ways/relations in the old "
+            "groups.parquet layout; re-import it (`import <pbf> --store "
+            f"{store_dir}`)"
+        )
     return TableStore(spark, os.path.join(store_dir, "points"))
 
 
-def _groups_path(store_dir: str) -> str:
-    return os.path.join(store_dir, "groups.parquet")
-
-
-def _heal_groups_link(store_dir: str) -> None:
-    """If a crash landed between the legacy-dir rename and the symlink
-    swap in _publish_groups, groups.parquet is missing but a versioned
-    sibling exists — re-point the link at the newest version so no
-    merge output is ever silently lost."""
-    dst = _groups_path(store_dir)
-    if os.path.lexists(dst):
-        return
-    versions = sorted(
-        (
-            p
-            for p in glob.glob(dst + ".v*")
-            if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ),
-        key=lambda p: int(p.rsplit(".v", 1)[1]),
-    )
-    if versions:
-        tmp = dst + ".lnk-tmp"
-        if os.path.lexists(tmp):
-            os.remove(tmp)
-        os.symlink(os.path.basename(versions[-1]), tmp)
-        os.replace(tmp, dst)
-
-
-def _publish_groups(spark: SparkSession, store_dir: str, groups: DataFrame) -> None:
-    """Atomically publish a new groups table: write a fresh versioned
-    directory, then swap a relative symlink over groups.parquet
-    (os.replace of a symlink is atomic). Never overwrites the live
-    directory in place — a crash mid-write leaves the old version
-    intact and readable, same manifest-pointer discipline as
-    TableStore."""
-    import shutil
-
-    dst = _groups_path(store_dir)
-    versions = [int(p.rsplit(".v", 1)[1]) for p in glob.glob(dst + ".v*")]
-    next_v = max(versions, default=-1) + 1
-    legacy_is_dir = os.path.isdir(dst) and not os.path.islink(dst)
-    # The legacy real-directory copy (if any) must be parked under a
-    # LOWER version than the new write: _heal_groups_link resolves a
-    # crash window by picking the HIGHEST complete version, which must
-    # always be the new merge output, never the pre-publish data.
-    new_dir = f"{dst}.v{next_v + 1}" if legacy_is_dir else f"{dst}.v{next_v}"
-    groups.write.mode("overwrite").parquet(new_dir)
-    tmp = dst + ".lnk-tmp"
-    if os.path.lexists(tmp):
-        os.remove(tmp)
-    os.symlink(os.path.basename(new_dir), tmp)
-    if legacy_is_dir:
-        # legacy store with a real directory: move it aside under the
-        # reserved lower version (atomic rename; _read_groups heals the
-        # brief dst-missing window via _heal_groups_link)
-        os.rename(dst, f"{dst}.v{next_v}")
-    os.replace(tmp, dst)
-    live = os.readlink(dst)
-    for p in glob.glob(dst + ".v*"):
-        if os.path.basename(p) != live:
-            shutil.rmtree(p, ignore_errors=True)
+def _group_store(spark: SparkSession, store_dir: str):
+    """The ways/relations table, or None on a points-only store."""
+    path = os.path.join(store_dir, "groups")
+    if not os.path.exists(os.path.join(path, "manifest.json")):
+        return None
+    return TableStore(spark, path, key="group_id")
 
 
 def _read_groups(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    _heal_groups_link(store_dir)
-    p = _groups_path(store_dir)
-    return spark.read.parquet(p) if os.path.exists(p) else None
+    gs = _group_store(spark, store_dir)
+    return gs.current() if gs is not None else None
 
 
 def _require_groups(spark: SparkSession, store_dir: str) -> DataFrame:
     g = _read_groups(spark, store_dir)
     if g is None:
         raise SystemExit(
-            f"store at {store_dir} has no groups.parquet (points-only "
+            f"store at {store_dir} has no ways/relations (points-only "
             "store) — run `import` on a .osm.pbf to populate it"
         )
     return g
-
-
-def _base_points(store) -> DataFrame:
-    return store.current().select(
-        "image_id",
-        unpack_lat(F.col("phash")).alias("lat"),
-        unpack_lon(F.col("phash")).alias("lon"),
-    )
 
 
 def _read_elements_file(spark: SparkSession, path: str) -> DataFrame:
@@ -193,11 +142,15 @@ def cmd_import(spark: SparkSession, args) -> int:
             F.lit(None).cast("string").alias("caption"),
             pack_footprint(F.col("lat"), F.col("lon")).alias("phash"),
         )
+    # a re-import replaces a store of the old layout
+    for p in glob.glob(os.path.join(args.store, _OLD_GROUPS)):
+        (os.remove if os.path.islink(p) else shutil.rmtree)(p)
     store = _store(spark, args.store)
     store.init(init)
-    _publish_groups(spark, args.store, groups)
+    gstore = TableStore(spark, os.path.join(args.store, "groups"), key="group_id")
+    gstore.init(groups)
     n = store.current().count()
-    g = _read_groups(spark, args.store).count()
+    g = gstore.current().count()
     print(f"imported {n} points, {g} groups from {args.pbf}")
     return 0
 
@@ -224,13 +177,13 @@ def _acquire_update_lock(store_dir: str):
 
 
 def cmd_update(spark: SparkSession, args) -> int:
-    """Apply the diffs the store has not consumed yet. The manifest's
-    ``groups_state`` is the one cursor: the scan opens only files above
-    it, and it advances once the call's group merge has published. A
-    crash between the point commit and the group merge leaves the
-    cursor behind ``last_state``; the next call re-reads that window,
-    ``run_update`` skips its committed states, and the group merge
-    heals them."""
+    """Apply the diffs the store has not consumed yet. The group
+    table's ``last_state`` is the one cursor: the scan opens only files
+    above it, and it advances as each state's group changes apply. A
+    crash between the point commit and the group apply leaves it behind
+    the points table; the next call re-reads that window,
+    ``run_update`` skips its committed states, and the group apply
+    heals them (both tables apply a state once)."""
     from .plans.pipeline import run_update
     from .sources.osc import elements_to_engine, read_osc_elements_dir
     from .sources.poly import regions_from_dir
@@ -239,6 +192,7 @@ def cmd_update(spark: SparkSession, args) -> int:
     with _acquire_update_lock(args.store):
         regions = regions_from_dir(args.polygons)
         store = _store(spark, args.store)
+        gstore = _group_store(spark, args.store)
 
         if args.diffs_url:
             # S12: fetch the replication window (store state -> remote
@@ -253,28 +207,24 @@ def cmd_update(spark: SparkSession, args) -> int:
             )
             print(f"fetched {len(fetched)} diff(s) from {args.diffs_url}")
 
-        after = store.groups_state()
+        after = (gstore or store).last_state() or 0
         elements = read_osc_elements_dir(spark, args.diffs, after=after).persist()
         # released on every exit: a later in-process update would otherwise
         # be served this stale scan
         try:
             points, gch = elements_to_engine(elements, namespace_ids=True)
-            groups = _read_groups(spark, args.store)
             applied = run_update(
                 store,
                 points,
                 regions,
                 args.out,
-                groups=groups,
-                group_diffs=gch if groups is not None else None,
+                groups=gstore.current() if gstore is not None else None,
+                group_diffs=gch if gstore is not None else None,
             )
             if args.osc_tree and applied:
                 _publish_osc_tree(spark, elements, applied, args.out, args.osc_tree)
-            # the window may hold states whose points a crashed call already
-            # committed (cursor < last_state): merging them again heals it
-            if groups is not None and (applied or after < (store.last_state() or 0)):
-                _merge_group_store(spark, args.store, groups, gch)
-            store.set_groups_state(store.last_state() or 0)
+            if gstore is not None:
+                _merge_group_store(gstore, elements, gch)
             print(f"applied states: {applied}")
             return 0
         finally:
@@ -303,9 +253,7 @@ def _publish_osc_tree(
         for kind_dir, idc in (("tiles", "image_id"), ("tiles_groups", "group_id"))
         for s in applied
         for p in [os.path.join(out_dir, f"{kind_dir}/state={s}")]
-        # a state that classified to zero rows leaves only _SUCCESS
-        # (no region_id= partition): nothing to read
-        if glob.glob(os.path.join(p, "region_id=*"))
+        if wrote_rows(p)
     ]
     if not frames:
         return
@@ -320,28 +268,16 @@ def _publish_osc_tree(
     print(f"published {len(written)} region diff file(s) under {tree}")
 
 
-def _merge_group_store(
-    spark: SparkSession, store_dir: str, groups: DataFrame, gch: DataFrame
-) -> None:
-    """Merge way/relation changes into <store>/groups.parquet.
-
-    ``gch`` is the group changes of the call's diff window. The winner
-    per group is picked across ALL states in the window:
-    ``seq`` restarts at 0 in every diff file, so ordering by seq alone
-    would let an older state's change beat a newer one — the order key
-    is (state, seq) packed into one column."""
-    from .operators.merge import merge_changes
-
-    ordered = gch.withColumn(
-        "_ord", F.col("state") * F.lit(1_000_000_000) + F.col("seq")
-    )
-    new_groups = merge_changes(
-        groups,
-        ordered.withColumnRenamed("kind", "new_kind"),
-        key="group_id",
-        order="_ord",
-    )
-    _publish_groups(spark, store_dir, new_groups)
+def _merge_group_store(gstore, elements: DataFrame, gch: DataFrame) -> None:
+    """Apply the way/relation changes of every state in the scanned
+    window that the group table has not applied yet, in state order
+    (``seq`` orders the changes within a state). A state without group
+    changes gets an empty apply, so the table's ``last_state`` still
+    advances with the points table's."""
+    states = sorted(r["state"] for r in elements.select("state").distinct().collect())
+    changes = gch.withColumnRenamed("kind", "new_kind")
+    for state in states:
+        gstore.apply_batch(state, changes.filter(F.col("state") == state))
 
 
 def cmd_read(spark: SparkSession, args) -> int:
@@ -497,23 +433,27 @@ def cmd_bbox(spark: SparkSession, args) -> int:
 
 def cmd_maintain(spark: SparkSession, args) -> int:
     """Store maintenance (the Iceberg expire_snapshots /
-    remove_orphan_files pair over <store>/points): bound the snapshot
-    log's disk and manifest, reclaim written-but-unpublished snapshot
-    dirs a killed update left. Takes the same advisory lock as
-    ``update`` — expiring a snapshot while an update publishes would
-    race the manifest."""
+    remove_orphan_files pair over both tables, <store>/points and
+    <store>/groups): bound the snapshot logs' disk and manifests,
+    reclaim written-but-unpublished snapshot dirs a killed update left.
+    Takes the same advisory lock as ``update`` — expiring a snapshot
+    while an update publishes would race the manifest."""
     lock = _acquire_update_lock(args.store)
     try:
-        store = _store(spark, args.store)
-        if args.keep_last is not None:
-            res = store.expire_snapshots(keep_last=args.keep_last)
-            print(
-                f"expired {len(res['expired'])} snapshot(s) "
-                f"{res['expired']}; kept {res['kept']}"
-            )
-        if args.remove_orphans:
-            removed = store.remove_orphans()
-            print(f"removed {len(removed)} orphan snapshot dir(s)")
+        tables = {"points": _store(spark, args.store)}
+        gstore = _group_store(spark, args.store)
+        if gstore is not None:
+            tables["groups"] = gstore
+        for name, table in tables.items():
+            if args.keep_last is not None:
+                res = table.expire_snapshots(keep_last=args.keep_last)
+                print(
+                    f"{name}: expired {len(res['expired'])} snapshot(s) "
+                    f"{res['expired']}; kept {res['kept']}"
+                )
+            if args.remove_orphans:
+                removed = table.remove_orphans()
+                print(f"{name}: removed {len(removed)} orphan snapshot dir(s)")
     finally:
         lock.close()
     return 0

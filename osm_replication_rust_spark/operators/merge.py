@@ -15,9 +15,10 @@ on Spark terms:
   directory plus a manifest JSON (state seq, snapshot path, row count,
   per-partition lineage counts), published with tmp + atomic rename.
   ``apply_batch`` is a no-op for already-applied states, so a killed and
-  restarted job never double-applies (exactly-once-ish, reference
-  /root/reference/src/update.rs:40-47). The manifest's ``groups_state``
-  is ``update``'s diff cursor (the reference's local state.txt).
+  restarted job never double-applies (exactly-once-ish, the reference's
+  src/update.rs:40-47). A store keeps two such tables, points and
+  ways/relations; the latter's ``last_state`` is ``update``'s diff
+  cursor (the reference's local state.txt).
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def latest_per_key(changes: DataFrame, key: str = "image_id", order: str = "seq") -> DataFrame:
@@ -159,17 +161,6 @@ class TableStore:
     def last_state(self) -> int | None:
         return self.manifest()["last_state"]
 
-    def groups_state(self) -> int:
-        """The diff cursor: the newest state whose group changes are
-        merged too (0 on a store that never recorded one). ``update``
-        reads only the diffs above it."""
-        return self.manifest().get("groups_state", 0)
-
-    def set_groups_state(self, state: int) -> None:
-        man = self.manifest()
-        man["groups_state"] = state
-        self._publish_manifest(man)
-
     def _publish_manifest(self, man: dict) -> None:
         # tmp + atomic rename, the reference's publish pattern
         # (/root/reference/src/diffs.rs:146-149)
@@ -180,27 +171,26 @@ class TableStore:
 
     def init(self, df: DataFrame) -> None:
         snap = os.path.join(self.path, "v0")
+        bucketed = df.withColumn("_bucket", self._bucket_col())
         (
-            df.withColumn("_bucket", self._bucket_col())
-            .repartition("_bucket")
+            bucketed.repartition("_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(snap)
         )
-        written = self.spark.read.parquet(snap)
-        self._publish_manifest(
+        # the schema is recorded, not inferred: an empty table (a store
+        # without ways) writes no parquet footer to infer it from
+        man = {"last_state": 0, "schema": bucketed.schema.jsonValue(), "snapshots": []}
+        written = self._read_snapshot(man, snap)
+        man["snapshots"].append(
             {
-                "last_state": 0,
-                "snapshots": [
-                    {
-                        "state": 0,
-                        "path": snap,
-                        "rows": written.count(),
-                        "lineage": self._bucket_lineage(written),
-                    }
-                ],
+                "state": 0,
+                "path": snap,
+                "rows": written.count(),
+                "lineage": self._bucket_lineage(written),
             }
         )
+        self._publish_manifest(man)
 
     def _bucket_lineage(self, df: DataFrame) -> dict:
         return {
@@ -208,12 +198,15 @@ class TableStore:
             for r in df.groupBy("_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
         }
 
-    def _read_snapshot(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+    def _read_snapshot(self, man: dict, path: str) -> DataFrame:
+        reader = self.spark.read
+        if "schema" in man:
+            reader = reader.schema(StructType.fromJson(man["schema"]))
+        return reader.parquet(path)
 
     def current(self) -> DataFrame:
         man = self.manifest()
-        return self._read_snapshot(man["snapshots"][-1]["path"]).drop("_bucket")
+        return self._read_snapshot(man, man["snapshots"][-1]["path"]).drop("_bucket")
 
     def as_of(self, state: int) -> DataFrame:
         """Time travel: the table exactly as of ``state`` (the newest
@@ -222,7 +215,7 @@ class TableStore:
         eligible = [s for s in man["snapshots"] if s["state"] <= state]
         if not eligible:
             raise ValueError(f"no snapshot at or before state {state}")
-        return self._read_snapshot(eligible[-1]["path"]).drop("_bucket")
+        return self._read_snapshot(man, eligible[-1]["path"]).drop("_bucket")
 
     def apply_batch(self, state: int, changes: DataFrame) -> bool:
         """Idempotent, bucket-pruned MERGE of one diff batch. Returns
@@ -248,7 +241,7 @@ class TableStore:
             .distinct()
             .collect()
         )
-        prev_raw = self._read_snapshot(prev_path)
+        prev_raw = self._read_snapshot(man, prev_path)
         # partition pruning: only the changed buckets are scanned
         prev_changed = prev_raw.filter(F.col("_bucket").isin(ch_buckets)).drop("_bucket")
         merged = merge_changes(prev_changed, changes, self.key)
@@ -272,7 +265,7 @@ class TableStore:
                 if not os.path.exists(dst):
                     os.link(os.path.join(src_dir, fn), dst)
 
-        written = self._read_snapshot(snap)
+        written = self._read_snapshot(man, snap)
         man["snapshots"].append(
             {
                 "state": state,

@@ -21,6 +21,7 @@ rewritten atomically (overwrite of the state=N partition).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -32,6 +33,23 @@ from ..functions.geometry import BUFFER_DECIMICRO, MultiPolygon
 from ..operators.bbox import coord_bboxes, group_bboxes, point_bboxes
 from ..operators.filter import classify_diff, classify_group_diff
 from ..operators.merge import TableStore
+
+
+def base_points(store: TableStore) -> DataFrame:
+    """The store's points with the footprint, packed in phash
+    (FIXTURES.md §1), unpacked to the lat/lon the geometry stages read."""
+    return store.current().select(
+        "image_id",
+        unpack_lat(F.col("phash")).alias("lat"),
+        unpack_lon(F.col("phash")).alias("lon"),
+    )
+
+
+def wrote_rows(tiles_dir: str) -> bool:
+    """Whether a partitioned tiles write emitted rows: a state that
+    classified to zero rows leaves only _SUCCESS, no region_id=
+    partition."""
+    return bool(glob.glob(os.path.join(tiles_dir, "region_id=*")))
 
 
 def run_update(
@@ -66,16 +84,10 @@ def run_update(
         if state <= last:
             continue  # resume: already committed
         batch = diffs.filter(F.col("state") == state)
-        # the base table stores the footprint packed in phash
-        # (FIXTURES.md §1); unpack once for the geometry stages
         # persist: the resolved-footprint frame feeds both the bbox and
         # filter stages (the reference's cache handoff bbox→filter,
         # /root/reference/src/update.rs:124-131)
-        base = store.current().select(
-            "image_id",
-            unpack_lat(F.col("phash")).alias("lat"),
-            unpack_lon(F.col("phash")).alias("lon"),
-        ).persist()
+        base = base_points(store).persist()
 
         # a. bbox stage (annotation output kept alongside the tiles)
         bbox = point_bboxes(base, batch)
@@ -137,11 +149,12 @@ def run_update(
             ),
             F.approx_count_distinct("image_id").alias("distinct_elements"),
         )
+        tiles_dir = os.path.join(out_dir, f"tiles/state={state}")
         (
             tiles.repartition("region_id")
             .write.mode("overwrite")
             .partitionBy("region_id")
-            .parquet(os.path.join(out_dir, f"tiles/state={state}"))
+            .parquet(tiles_dir)
         )
         try:
             raw = obs.get
@@ -150,18 +163,10 @@ def run_update(
             # minutely diff touching no region): AQE's empty-relation
             # propagation elides the observe node under
             # repartition(col) + partitionBy, and Observation.get then
-            # raises on the schemaless result row. Confirm that is what
-            # happened — if the write actually emitted rows, the
-            # exception is a REAL failure and zeroed metrics would lie.
-            try:
-                empty = diffs.sparkSession.read.parquet(
-                    os.path.join(out_dir, f"tiles/state={state}")
-                ).isEmpty()
-            except Exception:
-                # an empty partitioned write leaves only _SUCCESS — no
-                # footer to infer a schema from: that IS the empty case
-                empty = True
-            if not empty:
+            # raises on the schemaless result row. If the write actually
+            # emitted rows, the exception is a REAL failure and zeroed
+            # metrics would lie.
+            if wrote_rows(tiles_dir):
                 raise
             raw = {"tile_rows": 0, "kept": 0, "forced_delete": 0, "distinct_elements": 0}
         metrics = {k: (v if not hasattr(v, "item") else v.item()) for k, v in raw.items()}

@@ -1,9 +1,9 @@
 """CLI end-to-end: import an .osm.pbf, replay diffs through `update`
 (including `--osc-tree`, the store cursor that keeps applied diffs
-unread, and the group-merge crash heal), `read`, `check`, a
-single-region `filter` extract, `bbox`, `maintain` and the groups
-publish/heal path (the reference's src/bin/{osmbin,update,osmxml}.rs
-surfaces).
+unread, the group-apply crash heal and the bucketed group table),
+`read`, `check`, a single-region `filter` extract, `bbox`, `maintain`
+and the refusal of an old-layout store (the reference's
+src/bin/{osmbin,update,osmxml}.rs surfaces).
 
 The `inputs` fixture hands the tests the reference's Saint-Barthelemy
 extract, its .poly and its two diffs when those fixture files exist.
@@ -34,8 +34,8 @@ needs_ref = pytest.mark.skipif(
 )
 
 # Stand-in store: the ids the `read` tests name (n2619283351,
-# n2619283352, w255316725), 4 ways + 3 relations (more groups than the 5
-# the publish tests republish), and relation 1002's admin_centre
+# n2619283352, w255316725), 4 ways + 3 relations, and relation 1002's
+# admin_centre
 # n2619283399, which is not in the store, so `check` finds a dangling
 # reference as it does on the regional extract.
 # (id, decimicro lat, decimicro lon); n2619283357 lies outside the poly.
@@ -311,8 +311,8 @@ def _group_rows(spark, store):
 
 def test_cli_update_heals_group_merge_crash(spark, inputs, tmp_path, monkeypatch):
     """A call that dies after its point commit but before its group
-    merge publishes leaves the cursor behind: the next call re-reads
-    that state and merges its group changes."""
+    apply leaves the cursor (the group table's last state) behind: the
+    next call re-reads that state and applies its group changes."""
     from osm_replication_rust_spark.sources.osc import parse_osc_elements
 
     store = str(tmp_path / "store")
@@ -335,7 +335,7 @@ def test_cli_update_heals_group_merge_crash(spark, inputs, tmp_path, monkeypatch
 
     assert cli.main(argv) == 0
     st = cli._store(spark, store)
-    assert st.last_state() == 1 and st.groups_state() == 1
+    assert st.last_state() == 1 and cli._group_store(spark, store).last_state() == 1
     # the group store now holds the diff's last word on every way/relation
     with open(inputs["osc1"], "rb") as f:
         rows = parse_osc_elements(f.read(), state=1)
@@ -350,6 +350,66 @@ def test_cli_update_heals_group_merge_crash(spark, inputs, tmp_path, monkeypatch
     assert want
     got = _group_rows(spark, store)
     assert {g: got.get(g) for g in want} == want
+
+
+STANDIN_OSC_ONE_WAY = b"""<?xml version="1.0" encoding="UTF-8"?>
+<osmChange version="0.6">
+<modify>
+  <way id="255316725" version="9"><nd ref="2619283351"/><nd ref="2619283352"/></way>
+</modify>
+</osmChange>
+"""
+
+
+def test_cli_update_rewrites_only_the_changed_group_bucket(spark, inputs, tmp_path):
+    """An `update` whose diff changes one way rewrites only that way's
+    bucket of the group table: every other bucket of the new snapshot
+    holds hard links to the previous snapshot's files."""
+    store = str(tmp_path / "store")
+    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
+    argv = _update_argv(tmp_path, inputs, store)
+    with gzip.open(tmp_path / "minute" / "000" / "000" / "001.osc.gz", "wb") as f:
+        f.write(STANDIN_OSC_ONE_WAY)
+    assert cli.main(argv) == 0
+
+    assert _group_rows(spark, store)["w255316725"] == ["n2619283351", "n2619283352"]
+    v0, v1 = cli._group_store(spark, store).manifest()["snapshots"]
+    assert v1["state"] == 1 and len(v1["rewritten_buckets"]) == 1
+    changed = f"_bucket={v1['rewritten_buckets'][0]}"
+    buckets = sorted(e for e in os.listdir(v0["path"]) if e.startswith("_bucket="))
+    assert buckets == sorted(e for e in os.listdir(v1["path"]) if e.startswith("_bucket="))
+    assert changed in buckets
+    for b in buckets:
+        old = [os.path.join(v0["path"], b, f) for f in os.listdir(os.path.join(v0["path"], b))]
+        new = [os.path.join(v1["path"], b, f) for f in os.listdir(os.path.join(v1["path"], b))]
+        linked = [any(os.path.samefile(n, o) for o in old) for n in new]
+        if b == changed:
+            assert not any(linked)
+        else:
+            assert len(new) == len(old) and all(linked)
+
+
+def test_cli_refuses_old_layout_store(spark, inputs, tmp_path):
+    """A store that still keeps its ways/relations in the old
+    groups.parquet layout makes `update` and `read` exit with a message
+    that names re-import, instead of passing as a points-only store;
+    re-importing replaces that layout."""
+    from osm_replication_rust_spark.operators.merge import TableStore
+
+    store = str(tmp_path / "store")
+    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
+    cli._read_groups(spark, store).write.parquet(os.path.join(store, "groups.parquet"))
+    shutil.rmtree(os.path.join(store, "groups"))
+    argv = _update_argv(tmp_path, inputs, store)
+    shutil.copy(inputs["osc1"], tmp_path / "minute" / "000" / "000" / "001.osc.gz")
+    for cmd in (argv, ["read", "way_full", "w255316725", "--store", store]):
+        with pytest.raises(SystemExit, match="re-import"):
+            cli.main(cmd)
+    assert TableStore(spark, os.path.join(store, "points")).last_state() == 0
+
+    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
+    assert not os.path.exists(os.path.join(store, "groups.parquet"))
+    assert cli.main(["read", "way_full", "w255316725", "--store", store]) == 0
 
 
 def test_cli_read_bare_numeric_id(spark, store_dir, capsys):
@@ -460,78 +520,6 @@ def test_cli_import_osm_gz_equals_pbf(spark, tmp_path):
         return pts, grp
 
     assert snap(s1) == snap(s2)
-
-
-def test_cli_groups_publish_atomic_and_heals(spark, inputs, tmp_path):
-    """groups.parquet is published by versioned-dir + symlink swap: the
-    live directory is never deleted before its replacement is complete,
-    and a crash between rename and swap heals on the next read."""
-    store = str(tmp_path / "store")
-    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
-    gpath = cli._groups_path(store)
-    assert os.path.islink(gpath)
-    n0 = cli._read_groups(spark, store).count()
-    assert n0 > 0
-
-    # crash window: link removed, versioned dir intact -> read heals
-    live = os.readlink(gpath)
-    os.remove(gpath)
-    assert cli._read_groups(spark, store).count() == n0
-    assert os.path.islink(gpath) and os.readlink(gpath) == live
-
-    # republish: new version becomes live, stale versions pruned
-    g = cli._read_groups(spark, store)
-    cli._publish_groups(spark, store, g.limit(5))
-    assert cli._read_groups(spark, store).count() == 5
-    import glob
-
-    versions = glob.glob(gpath + ".v*")
-    assert len(versions) == 1
-    assert os.readlink(gpath) == os.path.basename(versions[0])
-
-
-def test_cli_legacy_publish_crash_heals_to_new_data(spark, inputs, tmp_path, monkeypatch):
-    """Publishing over a LEGACY store (groups.parquet is a real
-    directory, not a symlink) that crashes between the legacy-dir
-    rename and the symlink swap must heal to the NEW merge output, not
-    resurrect the pre-publish data — the legacy copy is parked under a
-    LOWER version than the new write so pick-highest cannot go stale."""
-    store = str(tmp_path / "store")
-    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
-    gpath = cli._groups_path(store)
-    g_old = cli._read_groups(spark, store)
-    n_old = g_old.count()
-    g_new = g_old.limit(5)
-    g_new.count()  # materialize the plan before the dirs move
-
-    # convert to the legacy layout: real directory, no versions
-    import glob
-
-    live = os.path.join(store, os.readlink(gpath))
-    os.remove(gpath)
-    os.rename(live, gpath)
-    for p in glob.glob(gpath + ".v*"):
-        shutil.rmtree(p)
-    assert os.path.isdir(gpath) and not os.path.islink(gpath)
-
-    # inject a crash at the final symlink swap
-    real_replace = os.replace
-
-    def boom(src, dst_, *a, **kw):
-        if dst_ == gpath:
-            raise RuntimeError("injected crash before symlink swap")
-        return real_replace(src, dst_, *a, **kw)
-
-    monkeypatch.setattr(cli.os, "replace", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        cli._publish_groups(spark, store, g_new)
-    monkeypatch.undo()
-
-    # crash window: gpath missing, two versioned dirs on disk
-    assert not os.path.lexists(gpath)
-    healed = cli._read_groups(spark, store)
-    assert healed.count() == 5, "heal must pick the new publish, not the legacy dir"
-    assert n_old > 5  # the stale data was genuinely different
 
 
 @needs_ref
@@ -676,6 +664,26 @@ def test_cli_maintain_expire_and_orphans(spark, inputs, tmp_path, capsys):
         got.filter(F.col("image_id") == some_id).collect()[0]["caption"]
         == f"cap2-{some_id}"
     )
+
+
+def test_cli_maintain_expires_group_snapshots(spark, inputs, tmp_path, capsys):
+    """`maintain --keep-last 1` expires the group table's snapshots too,
+    and its current snapshot stays readable."""
+    store = str(tmp_path / "gstore")
+    assert cli.main(["import", inputs["pbf"], "--store", store]) == 0
+    gs = cli._group_store(spark, store)
+    cur = gs.current()
+    n0 = cur.count()
+    gid = cur.select("group_id").limit(1).collect()[0][0]
+    ch = cur.filter(F.col("group_id") == gid).select(
+        "group_id", F.lit("modify").alias("action"), F.lit(0).cast("long").alias("seq")
+    )
+    assert gs.apply_batch(1, ch) is True
+    capsys.readouterr()
+    assert cli.main(["maintain", "--store", store, "--keep-last", "1"]) == 0
+    assert "groups: expired 1 snapshot(s) [0]; kept [1]" in capsys.readouterr().out
+    assert not os.path.exists(os.path.join(store, "groups", "v0"))
+    assert cli._read_groups(spark, store).count() == n0
 
 
 @needs_ref

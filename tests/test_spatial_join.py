@@ -120,7 +120,7 @@ def test_hilbert_prefilter_is_lossless_and_prunes(spark, regions, images_pdf):
         unpack_lat(F.col("phash")).alias("lat"),
         unpack_lon(F.col("phash")).alias("lon"),
     )
-    df = with_hilbert(df, F.col("lon"), F.col("lat"), out="hil").localCheckpoint()
+    df = with_hilbert(df, F.col("lon"), F.col("lat"), out="hil")
 
     pruned = hilbert_prefilter(df, regions, hil_col="hil", buffer=BUF)
     n_all, n_kept = df.count(), pruned.count()

@@ -88,7 +88,7 @@ def test_second_update_in_process_applies_new_diff(spark, tmp_path):
     # state 2's changed groups were annotated and published too
     bb = spark.read.parquet(os.path.join(out, "bbox_groups", "state=2"))
     assert {r.group_id for r in bb.collect()} >= {"w10"}
-    groups = spark.read.parquet(os.path.join(store, "groups.parquet"))
+    groups = cli._read_groups(spark, store)
     w10 = groups.filter(F.col("group_id") == "w10").collect()[0]
     assert [m.ref for m in w10.members] == ["n1", "n2", "n5"]
 
@@ -157,6 +157,6 @@ def test_relation_only_diff_applies_its_state(spark, tmp_path):
     assert cli._store(spark, store).last_state() == 1
     bb = spark.read.parquet(os.path.join(out, "bbox_groups", "state=1"))
     assert {r.group_id for r in bb.collect()} == {"r20"}
-    groups = spark.read.parquet(os.path.join(store, "groups.parquet"))
+    groups = cli._read_groups(spark, store)
     r20 = groups.filter(F.col("group_id") == "r20").collect()[0]
     assert [m.ref for m in r20.members] == ["w10", "n3", "n2"]

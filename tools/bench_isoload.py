@@ -30,6 +30,7 @@ Usage: python tools/bench_isoload.py [rows_per_executor] [--refine expr|udf|auto
 
 from __future__ import annotations
 
+import argparse
 import json
 import multiprocessing as mp
 import os
@@ -98,12 +99,12 @@ def _parse(out: str) -> dict:
 
 
 def main() -> None:
-    refine = "expr"
-    argv = sys.argv[1:]
-    if "--refine" in argv:
-        refine = argv[argv.index("--refine") + 1]
-        del argv[argv.index("--refine") : argv.index("--refine") + 2]
-    rows_per_exec = int(argv[0]) if argv else 100_000_000
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("rows_per_executor", nargs="?", type=int, default=100_000_000)
+    p.add_argument("--refine", choices=("expr", "udf", "auto"), default="expr")
+    args = p.parse_args()
+    refine = args.refine
+    rows_per_exec = args.rows_per_executor
 
     ctl = _freq_control()
     for l in ctl:

@@ -19,6 +19,7 @@ Usage: python tools/bench_scaling.py [rows] [lo_executors] [hi_executors]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -101,16 +102,16 @@ def run_level(level: int, rows: int, local: bool, refine: str = "auto") -> dict:
 
 
 def main() -> None:
-    local = "--local" in sys.argv
-    refine = "auto"
-    argv = sys.argv[1:]
-    if "--refine" in argv:
-        refine = argv[argv.index("--refine") + 1]
-        del argv[argv.index("--refine") : argv.index("--refine") + 2]
-    args = [a for a in argv if a != "--local"]
-    rows = int(args[0]) if len(args) > 0 else 150_000_000
-    lo = int(args[1]) if len(args) > 1 else (8 if local else 1)
-    hi = int(args[2]) if len(args) > 2 else 4 * lo
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("rows", nargs="?", type=int, default=150_000_000)
+    p.add_argument("lo_executors", nargs="?", type=int, help="default 1 (8 with --local)")
+    p.add_argument("hi_executors", nargs="?", type=int, help="default 4 x lo_executors")
+    p.add_argument("--local", action="store_true", help="in-process local[N] levels")
+    p.add_argument("--refine", choices=("expr", "udf", "auto"), default="auto")
+    args = p.parse_args()
+    local, refine, rows = args.local, args.refine, args.rows
+    lo = args.lo_executors or (8 if local else 1)
+    hi = args.hi_executors or 4 * lo
 
     accepted: dict[int, list[dict]] = {lo: [], hi: []}
     t_start = time.time()

@@ -9,6 +9,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -97,6 +98,12 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
+    # usage check: --help and unknown flags exit here, before Spark
+    # starts; the arguments themselves are read positionally below
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("sf_dir", nargs="?", help="parquet tables (default: the sf0.01 set)")
+    p.add_argument("query", nargs="*", help="check only these queries")
+    p.parse_args()
     sys.exit(
         main(
             sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01",

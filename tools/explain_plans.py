@@ -14,6 +14,7 @@ and the formatted plans for eyeballing)
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -133,4 +134,9 @@ def main(sf_dir: str) -> int:
 
 
 if __name__ == "__main__":
+    # usage check: --help and unknown flags exit here, before Spark
+    # starts; the argument itself is read positionally below
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("sf_dir", nargs="?", help="parquet tables (default: the sf0.01 set)")
+    p.parse_args()
     sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"))
