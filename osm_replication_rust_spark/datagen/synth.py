@@ -69,27 +69,6 @@ def fixture_regions() -> list[MultiPolygon]:
     ]
 
 
-def regions_to_rows(regions: list[MultiPolygon]) -> list[dict]:
-    """Rows for a regions DataFrame per FIXTURES.md §2."""
-    return [
-        {
-            "region_id": mp.region_id,
-            "parent_id": mp.parent_id,
-            "hier_path": mp.region_id,
-            "rings": [
-                {
-                    "hole": r.hole,
-                    "coords": [
-                        {"lon": int(c[0]), "lat": int(c[1])} for c in r.coords
-                    ],
-                }
-                for r in mp.rings
-            ],
-        }
-        for mp in regions
-    ]
-
-
 _WORDS = (
     "harbor meadow granite lantern orchid falcon timber velvet casket ember "
     "prairie copper willow summit garnet breeze mosaic tundra saffron quartz"

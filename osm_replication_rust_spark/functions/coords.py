@@ -64,10 +64,6 @@ def coord_to_decimicro_py(x: float) -> int:
     return f + 1 if v >= 0 else f
 
 
-def decimicro_to_coord(col: Column) -> Column:
-    return col.cast("double") / DECIMICRO
-
-
 # ---------------------------------------------------------------------------
 # phash <-> footprint (lat, lon)
 # ---------------------------------------------------------------------------
@@ -89,10 +85,6 @@ def unpack_lon(phash: Column) -> Column:
 
 def sql_unpack_lat(phash: str) -> str:
     return f"(({phash}) // {PHASH_LON_BASE} - {LAT_OFFSET})"
-
-
-def sql_unpack_lon(phash: str) -> str:
-    return f"(({phash}) % {PHASH_LON_BASE} - {LON_OFFSET})"
 
 
 # ---------------------------------------------------------------------------
@@ -669,14 +661,3 @@ def sql_hex_cell(lon: str, lat: str, size: float) -> tuple[str, str]:
     hq = f"(CASE WHEN {fix_q} THEN -{ry} - {rr} ELSE {rq} END)"
     hr = f"(CASE WHEN {fix_r} THEN -{rq} - {ry} ELSE {rr} END)"
     return hq, hr
-
-
-def hex_center(hq: Column, hr: Column, size: float) -> tuple[Column, Column]:
-    """(x, y) doubles of an axial hex id's center — the inverse map
-    (exact up to the shared spelling): x = s*sqrt(3)*(q + r/2),
-    y = s*3/2*r."""
-    s = float(size)
-    sq3 = 1.7320508075688772  # sqrt(3)
-    x = (hq.cast("double") + hr.cast("double") * 0.5) * (s * sq3)
-    y = hr.cast("double") * (s * 1.5)
-    return x, y

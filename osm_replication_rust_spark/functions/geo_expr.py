@@ -130,7 +130,3 @@ def membership_exprs(
             else in_buf.when(region_idx == i, bpred)
         )
     return in_poly.otherwise(F.lit(False)), in_buf.otherwise(F.lit(False))
-
-
-def total_edges(regions: list[MultiPolygon]) -> int:
-    return sum(len(r.closed()) - 1 for mp in regions for r in mp.rings)

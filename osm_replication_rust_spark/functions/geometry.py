@@ -434,52 +434,10 @@ def bbox_intersects_polygon(
     return out
 
 
-def segments_intersect_rect(
-    x1: np.ndarray,
-    y1: np.ndarray,
-    x2: np.ndarray,
-    y2: np.ndarray,
-    rx0: float,
-    ry0: float,
-    rx1: float,
-    ry1: float,
-) -> np.ndarray:
-    """True per segment if it touches the axis-aligned rect [rx0,rx1]x[ry0,ry1].
-
-    Liang-Barsky style clip test in float64 (used for conservative cell
-    cover classification, not for exact membership)."""
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    dx = x2 - x1
-    dy = y2 - y1
-    t0 = np.zeros_like(x1)
-    t1 = np.ones_like(x1)
-    ok = np.ones(x1.shape, dtype=bool)
-    for p, q in (
-        (-dx, x1 - rx0),
-        (dx, rx1 - x1),
-        (-dy, y1 - ry0),
-        (dy, ry1 - y1),
-    ):
-        para = p == 0
-        ok &= ~(para & (q < 0))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            r = np.where(para, 0.0, q / np.where(p == 0, 1.0, p))
-        ent = ~para & (p < 0)
-        ext = ~para & (p > 0)
-        t0 = np.where(ent, np.maximum(t0, r), t0)
-        t1 = np.where(ext, np.minimum(t1, r), t1)
-    return ok & (t0 <= t1)
-
-
 # ---------------------------------------------------------------------------
-# geodesic distance (haversine) — twin-form like functions/coords: the
-# PySpark Column and the DuckDB SQL fragment are generated from the SAME
-# IEEE expression tree (explicit pi/180 literal, half-angle sines squared
-# by self-multiplication, sqrt clamped into asin's domain), so both
-# engines agree far below the oracle's 9-significant-digit compare.
+# geodesic distance (haversine) as one fixed IEEE expression tree
+# (explicit pi/180 literal, half-angle sines squared by
+# self-multiplication, sqrt clamped into asin's domain).
 # ---------------------------------------------------------------------------
 
 EARTH_RADIUS_KM = 6371.0088  # IUGG mean Earth radius
@@ -503,13 +461,3 @@ def haversine_km(lat1, lon1, lat2, lon2):
     sdl = F.sin((lon2 - lon1) * _DECIMICRO_TO_RAD * 0.5)
     a = sdp * sdp + F.cos(p1) * F.cos(p2) * (sdl * sdl)
     return (2.0 * EARTH_RADIUS_KM) * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
-
-
-def sql_haversine_km(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """DuckDB twin of haversine_km — identical operation order."""
-    p1 = f"(({lat1}) * {_DECIMICRO_TO_RAD!r})"
-    p2 = f"(({lat2}) * {_DECIMICRO_TO_RAD!r})"
-    sdp = f"sin(({p2} - {p1}) * 0.5)"
-    sdl = f"sin((({lon2}) - ({lon1})) * {_DECIMICRO_TO_RAD!r} * 0.5)"
-    a = f"({sdp} * {sdp} + cos({p1}) * cos({p2}) * ({sdl} * {sdl}))"
-    return f"((2.0 * {EARTH_RADIUS_KM!r}) * asin(LEAST(1.0, sqrt({a}))))"

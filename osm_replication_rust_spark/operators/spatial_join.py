@@ -15,10 +15,14 @@ the reference's per-element polygon filter
    the join;
 3. rows landing in ``full`` or ``buffer_only`` cells are decided by the
    join alone (``in_poly`` from the cover, ``in_buffer`` true);
-4. rows landing in ``straddling`` cells go through ONE Arrow-batched
-   numpy kernel (or, with strategy='expr', compiled JVM expressions)
-   that computes exact int64 point-in-polygon and buffered membership
-   per region.
+4. rows landing in ``straddling`` cells are refined with exact int64
+   point-in-polygon and buffered membership per region. With
+   strategy='udf' every joined row goes through ONE Arrow-native numpy
+   kernel: decided rows carry region index -1, which the kernel skips,
+   so the points are scanned and probed once and only straddling rows
+   pay for geometry. With strategy='expr' the straddling rows take
+   compiled JVM expressions on a second branch of a union, which
+   scans the points a second time.
 
 Probe level: ``assign_regions`` joins at the finest level from ``res``
 down to ``cells.PROBE_FINEST_RES`` whose cover fits
@@ -33,7 +37,8 @@ are built once and reused by every later call — see ``_JoinCache``.
 
 Scale notes (100 TB / 1000 executors):
 - the big side is never shuffled: cell encode is a map, the join is
-  broadcast, the refine is a map. The whole operator is one stage.
+  broadcast, the refine is a map. The whole operator is one stage
+  (with strategy='udf' also one scan of the points).
 - region skew is irrelevant (broadcast side); *point* skew (mega-cells)
   doesn't matter either because there is no shuffle by cell — cells are
   only a join key into the broadcast table.
@@ -50,6 +55,7 @@ from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -188,10 +194,16 @@ def cover_df(
 
 
 def _membership_udf(geo_bc, buffer: int, buffer_mode: str = "exact"):
-    """Arrow-batched membership kernel. The region geometries ride the
-    Spark broadcast ``geo_bc`` (pickled once per executor, not per
-    task); the batch is grouped by the dense integer region index (numpy
-    sort-based grouping — no python string comparisons in the hot path).
+    """Arrow-native membership kernel (``pyarrow`` arrays in, a
+    ``pa.StructArray`` of (in_poly, in_buffer) out; no pandas). The
+    region geometries ride the Spark broadcast ``geo_bc`` (pickled once
+    per executor, not per task); the batch is grouped by the dense
+    integer region index (numpy sort-based grouping — no python string
+    comparisons in the hot path).
+
+    Rows whose region index is ``-1`` were decided by the cover join:
+    the kernel skips them and returns (False, False), which the caller
+    ignores, so only straddling rows pay for the geometry tests.
 
     ``buffer_mode``: 'exact' tests distance <= buffer (the default);
     '8seg' reproduces the reference's GEOS buffer(d, quad_segs=8)
@@ -205,30 +217,32 @@ def _membership_udf(geo_bc, buffer: int, buffer_mode: str = "exact"):
         if buffer_mode == "exact"
         else points_in_buffered_polygon_8seg
     )
-
-    schema = T.StructType(
-        [
-            T.StructField("in_poly", T.BooleanType(), False),
-            T.StructField("in_buffer", T.BooleanType(), False),
-        ]
+    out_type = pa.struct(
+        [pa.field("in_poly", pa.bool_(), False), pa.field("in_buffer", pa.bool_(), False)]
     )
 
-    @F.pandas_udf(schema)
-    def member(region_idx: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        geos = geo_bc.value
-        ridx = region_idx.to_numpy("int64")
-        lon_np = lon.to_numpy("int64")
-        lat_np = lat.to_numpy("int64")
+    @F.arrow_udf("in_poly boolean not null, in_buffer boolean not null")
+    def member(region_idx: pa.Array, lon: pa.Array, lat: pa.Array) -> pa.Array:
+        ridx = region_idx.to_numpy()
         out_poly = np.zeros(len(ridx), dtype=bool)
         out_buf = np.zeros(len(ridx), dtype=bool)
-        for rix in np.unique(ridx):
-            mp = geos[rix]
-            ii = np.nonzero(ridx == rix)[0]
-            x, y = lon_np[ii], lat_np[ii]
-            inp = points_in_polygon(x, y, mp)
-            out_poly[ii] = inp
-            out_buf[ii] = buffered_fn(x, y, mp, buffer, inside=inp) if buffer else inp
-        return pd.DataFrame({"in_poly": out_poly, "in_buffer": out_buf})
+        live = np.flatnonzero(ridx >= 0)
+        if len(live):
+            geos = geo_bc.value
+            lon_np = lon.to_numpy()[live]
+            lat_np = lat.to_numpy()[live]
+            live_ridx = ridx[live]
+            for rix in np.unique(live_ridx):
+                mp = geos[rix]
+                jj = np.flatnonzero(live_ridx == rix)
+                x, y = lon_np[jj], lat_np[jj]
+                inp = points_in_polygon(x, y, mp)
+                ii = live[jj]
+                out_poly[ii] = inp
+                out_buf[ii] = buffered_fn(x, y, mp, buffer, inside=inp) if buffer else inp
+        return pa.StructArray.from_arrays(
+            [pa.array(out_poly), pa.array(out_buf)], fields=list(out_type)
+        )
 
     # deterministic in truth, but marked nondeterministic ON PURPOSE:
     # otherwise Catalyst substitutes the UDF into every expression that
@@ -332,41 +346,41 @@ def assign_regions(
     # the 8seg buffer is a little smaller than the exact one near convex
     # corners, so under it buffer-only cells still go through refine
     decided = F.col("full") if buffer_mode == "exact" else F.col("in_poly")
-    full = joined.filter(decided).select(
-        *keep_cols,
-        F.col("region_id"),
-        F.col("in_poly"),
-        F.lit(True).alias("in_buffer"),
-    )
-
-    boundary = joined.filter(~decided)
     if strategy == "expr" and buffer_mode != "exact":
         raise ValueError("buffer_mode='8seg' requires the 'udf' strategy")
     if strategy == "expr":
+        full = joined.filter(decided).select(
+            *keep_cols,
+            F.col("region_id"),
+            F.col("in_poly"),
+            F.lit(True).alias("in_buffer"),
+        )
         in_poly, in_buf = membership_exprs(
             regions, F.col("region_idx"), F.col("_lon"), F.col("_lat"), buffer
         )
         partial = (
-            boundary.withColumn("in_poly", in_poly)
+            joined.filter(~decided)
+            .withColumn("in_poly", in_poly)
             .withColumn("in_buffer", in_buf)
             .filter(F.col("in_buffer"))
             .select(*keep_cols, F.col("region_id"), "in_poly", "in_buffer")
         )
-    else:
-        member = _CACHE.membership_udf(spark, regions, buffer, buffer_mode)
-        partial = (
-            boundary.withColumn(
-                "_m", member(F.col("region_idx"), F.col("_lon"), F.col("_lat"))
-            )
-            .filter(F.col("_m.in_buffer"))
-            .select(
-                *keep_cols,
-                F.col("region_id"),
-                F.col("_m.in_poly").alias("in_poly"),
-                F.col("_m.in_buffer").alias("in_buffer"),
-            )
+        return full.unionByName(partial)
+
+    # one pipeline over every joined row: decided rows reach the kernel
+    # with region index -1 and pass through it untouched
+    member = _CACHE.membership_udf(spark, regions, buffer, buffer_mode)
+    ridx = F.when(decided, F.lit(-1)).otherwise(F.col("region_idx"))
+    return (
+        joined.withColumn("_m", member(ridx, F.col("_lon"), F.col("_lat")))
+        .filter(decided | F.col("_m.in_buffer"))
+        .select(
+            *keep_cols,
+            F.col("region_id"),
+            F.when(decided, F.col("in_poly")).otherwise(F.col("_m.in_poly")).alias("in_poly"),
+            F.lit(True).alias("in_buffer"),
         )
-    return full.unionByName(partial)
+    )
 
 
 def hilbert_region_ranges(

@@ -100,7 +100,11 @@ def get_spark(
         # big Arrow batches: the geometry kernels are O(rows) numpy with
         # per-batch fixed cost — 256k batches measured 29M rows/s vs
         # 22M at 64k vs ~6M at the 10k default (flagship refine, 32
-        # threads; BENCH.md)
+        # threads; BENCH.md). Re-measured on perfbench tile_regional
+        # with the one-scan refine (4 CPUs, seeds 301-304): 64k batches
+        # gave the same work per CPU-s (1.47M vs 1.44M items/cpu-s) and
+        # a higher median peak RSS (2636 vs 2453 MB); 16k cost 10% more
+        # CPU per count
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
         # the JVM-wide generated-class cache defaults to 100 entries; a
         # workload cycling through ~24 distinct queries (the bench, the

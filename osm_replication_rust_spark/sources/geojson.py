@@ -40,15 +40,6 @@ from ..functions.geometry import MultiPolygon, Ring
 _SCALE = 10_000_000
 
 
-def _render_coord(v: int) -> float:
-    """Exact decimal rendering of a decimicro int as a JSON number.
-
-    Returned as a float ONLY for json.dumps plumbing — the VALUE is
-    produced via the exact string path in :func:`_coord_str` when
-    serializing; this helper exists for tests."""
-    return float(_coord_str(int(v)))
-
-
 def _coord_str(v: int) -> str:
     """Decimicro int -> exact 7-digit decimal string ('-0.0000005')."""
     sign = "-" if v < 0 else ""

@@ -32,7 +32,10 @@ import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions.coords import coord_to_decimicro_py, pack_footprint
 
@@ -260,11 +263,15 @@ def format_osc_elements(rows: list[dict]) -> str:
 
 
 def elements_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Parsed element rows -> DataFrame, built STRAIGHT from the list
-    of dicts: a pandas detour coerces int-or-None columns (coords,
-    version/uid/changeset) to float64, which a bare non-Arrow session
-    rejects for LongType — this constructor is safe in ANY session."""
-    return spark.createDataFrame(rows, schema=ELEMENT_SCHEMA)
+    """Parsed element rows -> DataFrame through an Arrow table typed by
+    ELEMENT_SCHEMA: nullable int64 columns keep int-or-None values
+    exact (a pandas detour would coerce them to float64), and the
+    result is a columnar local relation, so building it starts no
+    Python worker (a list-built frame is serialized through a pool of
+    plain Python workers). Works with Arrow execution on or off."""
+    schema = StructType.fromDDL(ELEMENT_SCHEMA)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def tag_value(tags_col, key: str):

@@ -423,6 +423,35 @@ def test_cli_read_bare_numeric_id(spark, store_dir, capsys):
         cli.main(["read", "node", "x123", "--store", store_dir])
 
 
+def test_elements_df_arrow_equals_list_rows(spark):
+    """`elements_df` builds its frame through an Arrow table: a local
+    relation whose rows equal the list-built frame's on the stand-in
+    diffs and on an annotated way (null coordinates, metadata, tag
+    order with a repeated key, members, the bbox struct)."""
+    from osm_replication_rust_spark.sources.osc import (
+        ELEMENT_SCHEMA,
+        elements_df,
+        parse_osc_elements,
+    )
+
+    annotated = b"""<osmChange version="0.6"><modify>
+<way id="5" version="3" timestamp="2020-01-01T00:00:00Z" uid="7" user="a&amp;b" changeset="9">
+<nd ref="1"/><nd ref="2"/><tag k="z" v="1"/><tag k="a" v="2"/><tag k="z" v="3"/>
+<bbox minlat="17.9000000" maxlat="17.9500000" minlon="-62.9000000" maxlon="-62.8000000"/>
+</way></modify></osmChange>"""
+    for payload in (STANDIN_OSC_1, STANDIN_OSC_2, annotated):
+        rows = parse_osc_elements(payload, state=1)
+        df = elements_df(spark, rows)
+        assert "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+        want = spark.createDataFrame(rows, schema=ELEMENT_SCHEMA)
+        assert df.schema == want.schema
+        assert df.collect() == want.collect()
+    (way,) = df.collect()
+    assert way.new_lat is None and way.uid == 7
+    assert [(t.k, t.v) for t in way.tags] == [("z", "1"), ("a", "2"), ("z", "3")]
+    assert way.bbox.minlon == -629_000_000
+
+
 @needs_ref
 def test_cli_bbox_matches_reference_golden(spark, tmp_path, capsys):
     """`bbox` subcommand (reference osmxml --bbox): the annotated copy

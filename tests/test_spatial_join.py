@@ -217,3 +217,81 @@ def test_repeated_calls_reuse_one_broadcast(spark, regions, images_pdf, monkeypa
         assert assign_regions(df, regions, keep_cols=["image_id"], buffer=BUF).count() == n
     assert len(made) <= 1
     assert len(os.listdir(sc._temp_dir)) == files
+
+
+def test_udf_strategy_scans_the_points_once(spark, regions):
+    """The 'udf' strategy is one pipeline: the executed plan of one call
+    over a spark.range point source has one Range scan, one broadcast
+    hash join and no Union (join-decided rows pass through the refine
+    instead of being scanned again on a second branch)."""
+    pts = spark.range(20_000).select(
+        F.col("id").alias("pid"),
+        ((F.col("id") * 48271) % 44000001 - 22000000).alias("lat"),
+        ((F.col("id") * 69621) % 44000001 - 22000000).alias("lon"),
+    )
+    df = assign_regions(pts, regions, keep_cols=["pid"], buffer=BUF, strategy="udf")
+    assert df.collect()
+    # the adaptive plan's final physical plan, without the initial one
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("Range (") == 1, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "Union" not in plan, plan
+
+
+def _cell_points(regions, buffer, mode, kind, n=600, seed=11):
+    """``n`` points inside probe-level cover cells where every cover row
+    is join-decided (``kind='decided'``) or none is (``'straddling'``);
+    'decided' means ``full`` under the exact buffer and ``in_poly``
+    under the 8-segment one, as in assign_regions."""
+    from osm_replication_rust_spark.functions.coords import LAT_OFFSET, LON_OFFSET, Y_STRIDE
+    from osm_replication_rust_spark.operators.cells import PROBE_FINEST_RES, build_cover
+
+    level, cover = build_cover(regions, 20, buffer, PROBE_FINEST_RES)
+    decided = cover["full"] if mode == "exact" else cover["in_poly"]
+    per_cell = decided.groupby(cover["cell"]).agg(["all", "any"])
+    pick = per_cell["all"] if kind == "decided" else ~per_cell["any"]
+    cells = per_cell.index[pick].to_numpy()
+    rng = np.random.default_rng(seed)
+    cell = cells[rng.integers(0, len(cells), n)]
+    lon = (cell % Y_STRIDE << level) - LON_OFFSET + rng.integers(0, 1 << level, n)
+    lat = (cell // Y_STRIDE << level) - LAT_OFFSET + rng.integers(0, 1 << level, n)
+    return lon, lat
+
+
+def test_refine_sentinel_batches_match_numpy(spark, regions):
+    """Batches whose rows are all join-decided, all straddling, or
+    mixed give the numpy oracle's rows under both buffer modes and with
+    no buffer: decided rows reach the refine kernel as region -1 and
+    must come out with the cover's in_poly, untouched by the kernel."""
+    import pandas as pd
+
+    from osm_replication_rust_spark.functions.geometry import (
+        points_in_buffered_polygon_8seg,
+    )
+
+    kernels = {"exact": points_in_buffered_polygon, "8seg": points_in_buffered_polygon_8seg}
+    for mode, buffer in (("exact", BUF), ("8seg", BUF), ("exact", 0)):
+        dec = _cell_points(regions, buffer, mode, "decided")
+        strad = _cell_points(regions, buffer, mode, "straddling")
+        mixed = tuple(np.concatenate([a, b]) for a, b in zip(dec, strad))
+        for name, (lon, lat) in (("decided", dec), ("straddling", strad), ("mixed", mixed)):
+            want = {}
+            for mp in regions:
+                inp = points_in_polygon(lon, lat, mp)
+                inb = inp | kernels[mode](lon, lat, mp, buffer) if buffer else inp
+                for i in np.nonzero(inb)[0]:
+                    want[(int(i), mp.region_id)] = (bool(inp[i]), True)
+            pdf = pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat})
+            got_rows = assign_regions(
+                spark.createDataFrame(pdf).coalesce(1),
+                regions,
+                keep_cols=["pid"],
+                buffer=buffer,
+                strategy="udf",
+                buffer_mode=mode,
+            ).collect()
+            got = {(r.pid, r.region_id): (r.in_poly, r.in_buffer) for r in got_rows}
+            assert len(got) == len(got_rows), (mode, buffer, name)
+            assert got == want, (mode, buffer, name)
+            # the sets exercise what they are named after
+            assert want and any(v[0] for v in want.values()), (mode, buffer, name)

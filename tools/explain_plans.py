@@ -2,7 +2,8 @@
 with automated assertions on the shapes that matter at 100 TB:
 
 - the spatial-join cover join is a BroadcastHashJoin (no shuffle of the
-  point side) and the refine is one Arrow-batched stage
+  point side), the point source is scanned once (no Union) and the
+  refine is one Arrow-batched stage
 - the expr strategy runs no Python at all
 - every scalar geo codec (footprint_roundtrip) is pure codegen
 - the PBF decode is one map-only Python stage
@@ -68,7 +69,7 @@ def main(sf_dir: str) -> int:
     tiling = assign_regions(pts, fixture_regions(), keep_cols=["image_id"])
     p = plan_of(tiling)
     check("tiling.broadcast_join", "BroadcastHashJoin" in p)
-    # the only exchanges allowed are broadcast exchanges + the union.
+    # the only exchanges allowed are broadcast exchanges.
     # Formatted mode names nodes "(N) Exchange" with the partitioning
     # under Arguments — count the numbered node list, not the tree.
     check(
@@ -85,13 +86,19 @@ def main(sf_dir: str) -> int:
     ce.collect()
     check("codecs.codegen", "*(" in simple_plan_of(ce))
 
-    # 3a. default (auto=udf) flagship: the refine is ONE Arrow-batched
-    # stage on the boundary branch only — never row-at-a-time Python
+    # 3a. default (auto=udf) flagship: ONE Arrow-batched refine stage
+    # over every joined row (join-decided rows pass through it) — never
+    # row-at-a-time Python — and one scan of the points, no Union
     pt = simple_plan_of(tiling)  # simple mode: each node appears once
     check(
         "tiling.arrow_refine_single_stage",
         pt.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in pt,
         f"arrow_nodes={pt.count('ArrowEvalPython')}",
+    )
+    check(
+        "tiling.single_scan",
+        pt.count("Range (") == 1 and "Union" not in pt,
+        f"scans={pt.count('Range (')} unions={pt.count('Union')}",
     )
 
     # 3b. expr strategy variant: zero runtime Python in the plan
